@@ -187,18 +187,25 @@ object Main {
       println(s"""{"executed": $executed}""")
     case "work" =>
       // continuous streaming worker over a CONNECTOR queue (--table): each
-      // micro-batch's todo items are claimed (--claims ledger | locks),
-      // executed, and committed to --results exactly once (batch-tagged).
-      // `ledger` (default) claims in wave commits — O(triggers) filesystem
-      // objects, the data-pipeline scale path, with opt-in
-      // --takeover-after MILLIS crashed-dispatcher recovery on a
-      // heartbeat bound; `locks` claims per-item lock files with optional
-      // --lease-ms takeover (the long-running-script deployment). --once
+      // micro-batch's todo items are claimed in one ledger wave commit
+      // (O(triggers) filesystem objects), executed, and committed to
+      // --results exactly once (batch-tagged). --takeover-after MILLIS
+      // reclaims a crashed contender's waves on a heartbeat bound. --once
       // drains the queue and exits (the CI / cron shape); otherwise the
       // reference's poll loop (code/runner.py:144-238) runs as a live
       // streaming query. --budget SECONDS caps wall time per micro-batch:
       // items the budget skips stay todo, out of the done set, and
       // claimable by a later drain.
+      // unknown flags fail loudly — among them the retired claim-mode and
+      // lease flags, which would otherwise silently run ledger mode
+      val workFlags = Set("table", "results", "checkpoint", "instance",
+        "files-per-trigger", "state", "budget", "parallelism",
+        "takeover-after", "ledger", "done", "once")
+      val unknown = (flags.keySet -- workFlags).toSeq.sorted
+      require(unknown.isEmpty,
+        s"work does not take ${unknown.map("--" + _).mkString(", ")}: claims " +
+          "always go through the ledger, and a crashed worker's items are " +
+          "reclaimed with --takeover-after MILLIS (or the work-release verb)")
       val results = flags.getOrElse("results", sys.error("--results is required"))
       val ckpt = flags.getOrElse("checkpoint", sys.error("--checkpoint is required"))
       // the claim identity MUST be stable across restarts of the same
@@ -216,43 +223,33 @@ object Main {
       val config = graft.exec.Runner.RunConfig(
         budgetSeconds = flags.get("budget").map(_.toDouble),
         parallelism = flags.get("parallelism").map(_.toInt).getOrElse(0))
-      // --takeover-after MILLIS (ledger mode): release any OTHER
-      // instance's in-flight waves once its heartbeat goes stale — the
-      // opt-in automation of `work-release` for crashed dispatchers.
-      // Pick a bound in minutes: every ledger worker beats per batch AND
-      // from the daemon below, so only a truly dead process goes stale.
+      // --takeover-after MILLIS: release any OTHER instance's in-flight
+      // waves once its heartbeat goes stale — the opt-in automation of
+      // `work-release` for crashed dispatchers. Pick a bound in minutes:
+      // every worker beats per batch AND from the daemon below, so only a
+      // truly dead process goes stale.
       val takeover = flags.get("takeover-after").map(_.toLong)
       val ledgerDir = flags.getOrElse("ledger", s"$table/_ledger")
-      // daemon beat (ledger mode, unconditional): a slow batch must never
-      // read as dead to a takeover-enabled contender, and the beat must
-      // exist even when THIS worker doesn't use the knob itself
-      val beater = if (flags.getOrElse("claims", "ledger") == "ledger") {
-        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-          val t = new Thread(r, s"graft-beat-$instance"); t.setDaemon(true); t
-        }
-        val period = graft.exec.StreamingRunner.HeartbeatPeriodMillis
-        ex.scheduleAtFixedRate(() =>
-          try graft.store.connector.WorkQueueLedger.beat(spark, ledgerDir, instance)
-          catch { case scala.util.control.NonFatal(_) => () },
-          0L, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-        Some(ex)
-      } else None
-      val writer = flags.getOrElse("claims", "ledger") match {
-        case "ledger" =>
-          graft.exec.StreamingRunner.ledgerDispatcher(stream, results,
-            ledgerDir, instance, config, flags.get("done"), takeover)
-        case "locks" =>
-          graft.exec.StreamingRunner.claimedDispatcher(stream, results,
-            table, instance, config, flags.get("lease-ms").map(_.toLong))
-        case other => sys.error(s"--claims must be ledger|locks, got $other")
+      // daemon beat: a slow batch must never read as dead to a
+      // takeover-enabled contender, and the beat must exist even when THIS
+      // worker doesn't use the knob itself
+      val beater = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
+        val t = new Thread(r, s"graft-beat-$instance"); t.setDaemon(true); t
       }
+      beater.scheduleAtFixedRate(() =>
+        try graft.store.connector.WorkQueueLedger.beat(spark, ledgerDir, instance)
+        catch { case scala.util.control.NonFatal(_) => () },
+        0L, graft.exec.StreamingRunner.HeartbeatPeriodMillis,
+        java.util.concurrent.TimeUnit.MILLISECONDS)
+      val writer = graft.exec.StreamingRunner.ledgerDispatcher(stream, results,
+        ledgerDir, instance, config, flags.get("done"), takeover)
       try {
         val q = writer.option("checkpointLocation", ckpt).start()
         if (flags.contains("once")) {
           try q.processAllAvailable() finally q.stop()
           println(s"""{"results": ${ItemStore.load(spark, results).count()}}""")
         } else q.awaitTermination()
-      } finally beater.foreach(_.shutdownNow())
+      } finally { beater.shutdownNow(); () }
     case "queue-claims" =>
       // operability: what does the ledger think is IN FLIGHT, and how many
       // items are durably done? A healthy steady-state worker shows claims
@@ -276,10 +273,10 @@ object Main {
         WorkQueueLedger.doneEntries(spark, done).count()}}""")
     case "work-release" =>
       // crashed-dispatcher recovery: hand a wedged wave (--tag) or every
-      // wave of a dead worker (--instance) back to the queue. Contract vs
-      // the lock path's leases: ledger claims never expire on their own —
-      // takeover is an OPERATOR action (this verb; `work --takeover-after`
-      // automates it on a heartbeat bound), deliberate because an
+      // wave of a dead worker (--instance) back to the queue. Ledger
+      // claims never expire on their own — takeover is an OPERATOR action
+      // (this verb; `work --takeover-after` automates it on a heartbeat
+      // bound), deliberate because an
       // unconditional expiry could steal a slow-but-alive wave. Release
       // only waves whose worker is STOPPED: a released wave belongs to
       // whichever worker claims it next (the MainSpec e2e shape: release,
@@ -425,8 +422,8 @@ object Main {
     case "queue-compact" =>
       // rewrite a connector queue dir's data files in --format (parquet by
       // default): the migration path from the CSV demo layout to the
-      // column-pruned/footer-stat layout without downtime — locks and
-      // _claims are untouched, only itemState=<s>/ data files rewrite. The
+      // column-pruned/footer-stat layout without downtime — only the
+      // itemState=<s>/ data files rewrite (the ledger is untouched). The
       // new layout BUILDS inside the queue dir under a staging subdir
       // (invisible to the source, which only lists itemState= dirs) and
       // PUBLISHES by directory rename: any failure before the swap leaves
@@ -471,13 +468,9 @@ object Main {
               s"survives as parquet at $stagedRows")
           throw e
       }
-      // one-shot escape-format migration: legacy lock filenames / state
-      // dir names rename to the current escapeToken form
-      val renamed = graft.store.connector.WorkQueueSource
-        .renormalizeEscaping(table)
       val n = spark.read.format("graft.store.connector.WorkQueueSource")
         .option("path", table).load().count()
-      println(s"""{"rows": $n, "format": "$fmt", "renormalized": $renamed}""")
+      println(s"""{"rows": $n, "format": "$fmt"}""")
     case "dedup-index-build" =>
       // build + persist a near-dup corpus index (VersionedTable-backed):
       // --table the corpus parquet, --index the index dir, --kind

@@ -1,7 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.model.WorkItem
@@ -82,20 +82,16 @@ object StreamingRunner {
       }
     }
 
-  /** [[claimedDispatcher]]'s claim step at LEDGER granularity — the
-    * data-pipeline-scale variant (SCALE_PROBE.md round 14): claims are
-    * wave-atomic [[graft.store.connector.WorkQueueLedger]] commits (one
-    * VersionedTable commit per micro-batch, O(triggers) filesystem
-    * objects) instead of one lock file per item (O(items) inodes + blocks
-    * — the measured ceiling: ~4.7k claims/s and ~60 GB of lock metadata
-    * at the 15M-item probe). Exactly-once across contending dispatchers
-    * holds through the ledger's read-validate-commit loop; replayed
-    * micro-batches re-use their wave tag and win the SAME items.
-    * Per-item leases are not part of this mode — a crashed dispatcher's
-    * in-flight wave stays claimed until `work-release` hands it back or
-    * a `takeoverMillis`-armed contender's heartbeat scan reclaims it;
-    * use [[claimedDispatcher]] where PER-ITEM takeover matters more
-    * than claim throughput.
+  /** The worker's claim → execute → commit loop over a micro-batch
+    * stream — the reference's `lockItem`/`verifyItem` loop
+    * (`code/modifier.py:71-125`) made race-free. Claims are wave-atomic
+    * [[graft.store.connector.WorkQueueLedger]] commits: one VersionedTable
+    * commit per micro-batch, O(triggers) filesystem objects. Exactly-once
+    * across contending dispatchers holds through the ledger's
+    * read-validate-commit loop; replayed micro-batches re-use their wave
+    * tag and win the SAME items. A crashed dispatcher's in-flight wave
+    * stays claimed until `work-release` hands it back or a
+    * `takeoverMillis`-armed contender's heartbeat scan reclaims it.
     *
     * State lifecycle per batch (round 15 — the ledger tracks IN-FLIGHT
     * items, not lifetime throughput): filter the batch's todo ids
@@ -145,7 +141,7 @@ object StreamingRunner {
     * VM freeze) can be taken over while alive, in which case its own
     * commit is suppressed by the pre-commit ownership check below but
     * its already-forked scripts may have run twice — the classic lease
-    * trade-off, same as the lock-file path's `leaseMillis`.
+    * trade-off.
     */
   def ledgerDispatcher(
       items: DataFrame,
@@ -295,129 +291,4 @@ object StreamingRunner {
     * dispatcher's in-flight wave write racing our tick, not a leak.
     */
   val LeakGraceMillis: Long = 600000L
-
-  /** Dispatcher that COEXISTS with external workers: before executing, the
-    * batch's todo items are claimed through the connector's conditional
-    * write path against a shared lock registry — an item some other worker
-    * already holds is skipped (it stays theirs), and items this dispatcher
-    * wins are executed exactly once across the fleet. This is the
-    * reference's lockItem/verifyItem loop (`code/modifier.py:71-125`) made
-    * race-free AND cross-process: any process that speaks the registry
-    * protocol (atomic lock-file claims) can share the queue.
-    *
-    * `leaseMillis` bounds every claim's lifetime: a dispatcher that crashes
-    * mid-batch stops renewing and its items become re-claimable one lease
-    * later (by anyone — the expired-takeover path in
-    * [[graft.store.connector.WorkQueueClaimWrite]]); while the batch runs,
-    * a heartbeat thread renews the batch's locks at lease/3 cadence so slow
-    * scripts aren't stolen mid-execution. `None` keeps the old non-expiring
-    * behavior (and its wedge-until-manual-reset failure mode).
-    */
-  def claimedDispatcher(
-      items: DataFrame,
-      resultPath: String,
-      registryPath: String,
-      instanceId: String,
-      config: Runner.RunConfig = Runner.RunConfig(),
-      leaseMillis: Option[Long] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      // outcome-commit key scoped by claim identity (see ledgerDispatcher):
-      // lock-mode workers share one results store the same way
-      val batchKey = s"$instanceId-$batchId"
-      // replay of a fully committed batch: its outcomes are already in the
-      // result table exactly once — skip claiming and execution entirely
-      if (!ItemStore.batchCommitted(spark, resultPath, batchKey)) {
-      val lockPrefix = s"lock-$instanceId-$batchId-"
-      // claim every todo item of the batch via the conditional write path
-      batch.filter(col("itemState") === "todo")
-        .select(col("itemID"),
-          concat(lit(lockPrefix), col("itemID")).as("lockID"),
-          lit(instanceId).as("instanceID"),
-          lit(null).cast("string").as("expectedLockID"),
-          lit(leaseMillis.getOrElse(0L)).as("leaseMillis"))
-        .write.format("graft.store.connector.WorkQueueSource")
-        .option("path", registryPath).mode("append").save()
-      // execute only the items THIS batch won (deterministic lock prefix)
-      val won = graft.store.connector.WorkQueueSource.claimResults(spark, registryPath)
-        .filter(col("status") === "accepted" &&
-          col("lockID").startsWith(lockPrefix))
-        .select("itemID")
-      val claimed = batch.join(won, Seq("itemID"), "left_semi")
-      // the batch's own wins, collected once — bounded by the micro-batch
-      // size, not the table; drives the heartbeat AND the terminal-aware
-      // pin/release below
-      val wonIds = won.collect().map(_.getString(0))
-      // heartbeat: keep this batch's leases alive while its scripts run
-      val renewer = leaseMillis.map { lease =>
-        val ids = wonIds
-        // leases the heartbeat failed to renew: another worker took the item
-        // over (contract of WorkQueueClaimWrite.renew — the holder must stop
-        // working on it), so its results are suppressed below and renewal
-        // stops; the new holder produces the item's outcome
-        val lost = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-          val t = new Thread(r, s"graft-lease-$instanceId"); t.setDaemon(true); t
-        }
-        val period = math.max(1L, lease / 3)
-        ex.scheduleAtFixedRate(() => ids.foreach { id =>
-          if (!lost.contains(id) && !graft.store.connector.WorkQueueClaimWrite.renew(
-              registryPath, id, s"$lockPrefix$id", instanceId, lease))
-            lost.add(id)
-        }, period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-        (ex, ids, lost)
-      }
-      // the heartbeat must die on ANY exit path — a renewer outliving a
-      // failed batch would keep the crashed items' locks alive forever,
-      // exactly the wedge the lease feature exists to prevent
-      try {
-        val (updated, outcomes) = Runner.processItems(claimed, config)
-        // force the script runs NOW (outcomes is a lazy cache): the lost set
-        // only means something once every task has actually executed —
-        // snapshotting before materialization would always see an empty set
-        // and never suppress a taken-over item's results
-        outcomes.count()
-        val lostIds = renewer.map(_._3.toArray(Array.empty[String]).toSeq)
-          .getOrElse(Seq.empty)
-        val keep =
-          if (lostIds.isEmpty) updated
-          else updated.filter(!col("itemID").isin(lostIds: _*))
-        // the ids with claimable work STILL PENDING after this run,
-        // snapshotted while the task cache is live (post-unpersist it
-        // would re-fork scripts): budget-skipped items keep itemState
-        // `todo` with their script intact and must return to claimable,
-        // not wedge behind this worker's locks (r15 VERDICT #1,
-        // locks-mode twin; same todoTasks-based rule as ledger retire)
-        val pending = Runner.todoTasks(keep).toDF
-          .select("itemID").distinct().collect().map(_.getString(0)).toSet
-        // batchId-idempotent commit: a replayed batch (post-append crash)
-        // publishes the same deterministic file names, never a second copy
-        try ItemStore.commitBatch(
-          keep.select(WorkItem.schema.fieldNames.map(col): _*), resultPath, batchKey)
-        finally { outcomes.unpersist(); () }
-        // stop the heartbeat BEFORE the pin/release pass (a late renew
-        // would re-arm an expiry), then per surviving win: a COMPLETED
-        // item's lock converts to non-expiring — finished work must look
-        // finished, not crashed, or a replayed claim takes it over after
-        // one lease and re-executes it. A budget-skipped (non-terminal)
-        // item's lock is RELEASED outright: it was never run, and holding
-        // it (non-expiring without a lease, one lease longer with one)
-        // wedges exactly the remainder the budget knob deferred.
-        renewer.foreach { case (ex, _, _) =>
-          ex.shutdownNow()
-          ex.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS)
-        }
-        val lost = renewer.map(_._3.toArray(Array.empty[String]).toSet)
-          .getOrElse(Set.empty[String])
-        wonIds.filterNot(lost.contains).foreach { id =>
-          if (pending(id))
-            graft.store.connector.WorkQueueClaimWrite.release(
-              registryPath, id, s"$lockPrefix$id")
-          else
-            graft.store.connector.WorkQueueClaimWrite.renew(
-              registryPath, id, s"$lockPrefix$id", instanceId, 0L)
-        }
-      } finally renewer.foreach(_._1.shutdownNow())
-      }
-    }
 }

@@ -6,40 +6,38 @@ import org.apache.spark.sql.functions._
 import graft.exec.StreamingRunner
 import graft.model.WorkItem
 import graft.store.ItemStore
-import graft.store.connector.WorkQueueSource
+import graft.store.connector.{WorkQueueLedger, WorkQueueSource}
 
 /** Scale probe for the connector STREAMING read + claim path (SCALE_PROBE
-  * cadence, round 14): drive [[StreamingRunner.claimedDispatcher]] itself
-  * over a large work queue — the r11/r13 probes covered the batch connector
-  * and spec'd the `MicroBatchStream`, but the streaming dispatcher's
-  * end-to-end volume (admission → per-item conditional claim → idempotent
-  * outcome commit) had only ridden gate-scale runs.
+  * cadence): drive [[StreamingRunner.ledgerDispatcher]] itself over a large
+  * work queue — micro-batch file admission → ledger wave claim →
+  * idempotent outcome commit → wave retirement, at volumes the gate-scale
+  * specs never reach.
   *
   * Items carry NO scripts (`taskScript` null, no nested tasks): the probe
   * measures the CONNECTOR machinery — micro-batch file admission, the
-  * lock-file claim protocol, claim-result materialization, outcome commit —
-  * not subprocess forks, which belong to the workload, not the engine.
+  * ledger claim protocol, outcome commit — not subprocess forks, which
+  * belong to the workload, not the engine.
   *
   * Usage:
-  *   runMain graft.probe.ConnectorStreamProbe [nItems] [files] [mfpt] [mode]
-  * mode = `locks` (per-item lock files, [[StreamingRunner.claimedDispatcher]])
-  *      | `ledger` (wave commits, [[StreamingRunner.ledgerDispatcher]] —
-  *        O(triggers) filesystem objects, the data-pipeline scale path)
+  *   runMain graft.probe.ConnectorStreamProbe [nItems] [files] [mfpt]
   * Prints one JSON line:
   *   items, wall_s, items_per_sec, triggers,
   *   accepted (must == items), accepted_distinct (must == items),
   *   result_rows (must == items — exactly-once outcome commit),
-  *   lock_files (locks mode: == items — itself the measured finding;
-  *   ledger mode: 0), ckpt_bytes (source/commit log growth — bounded by
-  *   O(files) entries, not items).
+  *   ledger_left (must == 0 — finished waves are released),
+  *   ckpt_bytes (source/commit log growth — bounded by O(files) entries,
+  *   not items).
   */
 object ConnectorStreamProbe {
 
   def main(args: Array[String]): Unit = {
+    require(args.length <= 3,
+      "usage: ConnectorStreamProbe [nItems] [files] [mfpt] (claims always " +
+        "go through the ledger; there is no claim-mode argument)")
     val n = args.lift(0).map(_.toLong).getOrElse(15000000L)
     val files = args.lift(1).map(_.toInt).getOrElse(8)
     val mfpt = args.lift(2).map(_.toInt).getOrElse(2)
-    val mode = args.lift(3).getOrElse("ledger")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -76,42 +74,27 @@ object ConnectorStreamProbe {
     WorkQueueSource.append(items, queue, "parquet")
     val buildS = (System.nanoTime() - t0) / 1e9
 
-    // 2. the streaming dispatcher with claim semantics ON (shared-registry
-    // conditional writes; leases off — a clean run, no takeover churn)
+    // 2. the streaming dispatcher with ledger claims (no takeover: a clean
+    // run, no takeover churn)
     val t1 = System.nanoTime()
     val stream = StreamingRunner.queueWorkItems(
       StreamingRunner.queueStream(spark, queue, Some(mfpt)))
     val ledgerPath = s"$base/ledger"
-    val writer = mode match {
-      case "locks" =>
-        StreamingRunner.claimedDispatcher(stream, results, queue, "probe-1")
-      case _ =>
-        StreamingRunner.ledgerDispatcher(stream, results, ledgerPath, "probe-1")
-    }
-    val q = writer.option("checkpointLocation", ckpt).start()
+    val q = StreamingRunner.ledgerDispatcher(stream, results, ledgerPath, "probe-1")
+      .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
     val wallS = (System.nanoTime() - t1) / 1e9
 
-    // 3. accounting — every bound here is an exactly-once claim. Ledger
-    // mode (round 15): finished waves are RELEASED and their ids live in
-    // the compact done set, so the durable claim record is `_done`, and
-    // the ledger itself must be EMPTY after a clean drain (asserted via
-    // ledger_left below).
-    val claims =
-      if (mode == "locks")
-        WorkQueueSource.claimResults(spark, queue)
-          .filter(col("status") === "accepted").select("itemID")
-      else graft.store.connector.WorkQueueLedger
-        .doneEntries(spark, s"${ledgerPath}_done").select("itemID")
-    val ledgerLeft =
-      if (mode == "locks") 0L
-      else graft.store.connector.WorkQueueLedger.entries(spark, ledgerPath)
-        .count()
+    // 3. accounting — every bound here is an exactly-once claim: finished
+    // waves are RELEASED and their ids live in the compact done set, so
+    // the durable claim record is `_done`, and the ledger itself must be
+    // EMPTY after a clean drain (ledger_left)
+    val claims = WorkQueueLedger.doneEntries(spark, s"${ledgerPath}_done")
+      .select("itemID")
+    val ledgerLeft = WorkQueueLedger.entries(spark, ledgerPath).count()
     val accepted = claims.count()
     val acceptedDistinct = claims.distinct().count()
     val resultRows = ItemStore.load(spark, results).count()
-    val lockFiles = Option(new java.io.File(s"$queue/locks").list())
-      .map(_.length.toLong).getOrElse(0L)
     def du(f: java.io.File): Long =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
@@ -121,11 +104,11 @@ object ConnectorStreamProbe {
       .map(_.count(!_.startsWith("."))).getOrElse(0)
 
     println(
-      s"""{"items": $n, "files": $files, "mfpt": $mfpt, "mode": "$mode", """ +
+      s"""{"items": $n, "files": $files, "mfpt": $mfpt, """ +
       s""""build_s": ${f"$buildS%.1f"}, "wall_s": ${f"$wallS%.1f"}, """ +
       s""""items_per_sec": ${(n / wallS).toLong}, "triggers": $triggers, """ +
       s""""accepted": $accepted, "accepted_distinct": $acceptedDistinct, """ +
-      s""""result_rows": $resultRows, "lock_files": $lockFiles, """ +
+      s""""result_rows": $resultRows, """ +
       s""""ledger_left": $ledgerLeft, "ckpt_bytes": $ckptBytes}""")
     spark.stop()
   }

@@ -151,11 +151,11 @@ class ItemWriter(path: String, schema: StructType, queryId: String,
     val state = str(row, "itemState")
     require(state != null, "itemState must not be null in a queue row")
     val sf = open.getOrElseUpdate(state, {
-      val dir = Paths.get(path, "itemState=" + WorkQueueClaimWrite.escapeToken(state))
+      val dir = Paths.get(path, "itemState=" + WorkQueueSource.escapeToken(state))
       Files.createDirectories(dir)
       val base = s"$queryId-$partitionId-$taskId-$attempt"
       val tmp = dir.resolve(s".inprogress-$base").toString
-      val fin = s"part-$base-${WorkQueueClaimWrite.escapeToken(state)}.$format"
+      val fin = s"part-$base-${WorkQueueSource.escapeToken(state)}.$format"
       if (format == "parquet") new ParquetStateFile(tmp, fin)
       else new CsvStateFile(tmp, fin)
     })

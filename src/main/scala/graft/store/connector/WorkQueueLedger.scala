@@ -5,23 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.store.VersionedTable
 
-/** Claim LEDGER — the work-queue claim protocol at COMMIT granularity
-  * instead of lock-file-per-item granularity.
+/** Claim LEDGER — the work-queue claim protocol at COMMIT granularity:
+  * the reference's `lockItem`/`verifyItem` loop (`code/modifier.py:71-125`)
+  * without its race window, and without one filesystem object per item.
   *
-  * Why this exists (round-14 scale probe, SCALE_PROBE.md): the lock-file
-  * registry ([[WorkQueueClaimWrite]]) pays one filesystem object per item —
-  * one inode + one block (~4 KB) of pure claim metadata, created serially
-  * per item inside each write task. At the reference's real operating
-  * scale (thousands of long-running jobs) that is the right shape: leases,
-  * renewal and per-item takeover need per-item files. At data-pipeline
-  * scale it is a measured ceiling: the 15M-item probe ran its claims at
-  * ~4.7k items/s and would have written ~60 GB / 15M inodes of lock
-  * metadata — more filesystem objects than the data files themselves by
-  * four orders of magnitude.
-  *
-  * The ledger replaces per-item files with claim WAVES: one
-  * [[VersionedTable]] commit per micro-batch, holding one row per claimed
-  * item `(itemID, instanceID, lockID, tag)`. Exactly-once across
+  * Claims are WAVES: one [[VersionedTable]] commit per micro-batch,
+  * holding one row per claimed item `(itemID, instanceID, lockID, tag)`,
+  * so claim metadata grows with triggers, not items. Exactly-once across
   * contending dispatchers comes from read-validate-commit on the table
   * version ([[VersionedTable.appendIfVersion]]): a claimer reads the
   * ledger at version v, anti-joins the items already claimed, and commits
@@ -44,16 +34,13 @@ import graft.store.VersionedTable
   * whose id range/bloom can overlap the wave — with time-ordered ids
   * that is a wave-sized slice of a lifetime-sized table.
   *
-  * Trade-offs vs the lock-file path, stated honestly: claims are
-  * wave-atomic, so contending claimers serialize on the table CAS (fine
-  * for dispatcher-per-queue deployments, the streaming shape; the
-  * lock-file path remains the right tool for many independent workers
-  * claiming single items — `LedgerContentionProbe` puts numbers on the
-  * contention curve). Per-ITEM leases are not implemented here; crashed-
+  * Trade-offs, stated honestly: claims are wave-atomic, so contending
+  * claimers serialize on the table CAS (fine for dispatcher-per-queue
+  * deployments, the streaming shape; `LedgerContentionProbe` puts numbers
+  * on the contention curve). There are no per-ITEM leases; crashed-
   * dispatcher recovery is per-WAVE: operator-driven [[release]] (the
   * `work-release` CLI verb) or the opt-in heartbeat [[takeoverStale]]
-  * (`work --takeover-after`). The lock-file path's per-item lease
-  * takeover still covers the long-running-script deployment.
+  * (`work --takeover-after`).
   */
 object WorkQueueLedger {
 
@@ -387,14 +374,13 @@ object WorkQueueLedger {
   // ----------------------------------------------------------- takeover
 
   /** Heartbeat + stale-instance takeover for LEDGER claims: each
-    * dispatcher [[beat]]s `<root>/_heartbeats/<instance>` (content = epoch
-    * millis — object-store mtimes are not trustworthy) once per batch,
-    * plus a daemon beat from the `work` verb so slow batches never read
-    * as dead. [[takeoverStale]] releases every wave of any OTHER instance
-    * whose beat is older than `boundMillis` (or that never beat at all —
-    * a claim row with no heartbeat predates its holder's first batch only
-    * transiently). The release tag carries the caller's wave tag as
-    * epoch, so a replayed batch re-issuing the same takeover is a no-op.
+    * dispatcher [[beat]]s once per batch, plus a daemon beat from the
+    * `work` verb so slow batches never read as dead. [[takeoverStale]]
+    * releases every wave of any OTHER instance whose beat is older than
+    * `boundMillis` (or that never beat at all — a claim row with no
+    * heartbeat predates its holder's first batch only transiently). The
+    * release tag carries the caller's wave tag as epoch, so a replayed
+    * batch re-issuing the same takeover is a no-op.
     */
   def beat(spark: SparkSession, root: String, instanceId: String): Unit = {
     // WRITE-NEW-THEN-DELETE-OLD (r16 VERDICT #1): the old create(p, true)
@@ -407,8 +393,10 @@ object WorkQueueLedger {
     // Beats are immutable `<instance>.<millis>` files: a new beat is
     // created (never truncating anything a reader may hold), and only
     // after it is closed are the instance's OLDER beat files deleted —
-    // at every instant a reader either parses a complete beat or sees a
-    // not-yet-flushed sibling, which [[lastBeat]] treats as fresh.
+    // at every instant the instance has at least one stamped beat file.
+    // The name stamp IS the beat time ([[lastBeat]] never reads content,
+    // which repeats the stamp for operators; object-store mtimes are not
+    // trustworthy).
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(s"$root/_heartbeats")
     val f = dir.getFileSystem(conf)
@@ -418,70 +406,45 @@ object WorkQueueLedger {
     try out.write(String.valueOf(now)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // prune superseded beats (and any legacy suffix-less file)
+    // prune superseded beats
     try f.listStatus(dir, (pp: org.apache.hadoop.fs.Path) =>
-        pp.getName != p.getName && isBeatOf(pp.getName, instanceId))
+        pp.getName != p.getName && beatStamp(pp.getName, instanceId).isDefined)
       .foreach(s => try f.delete(s.getPath, false)
         catch { case scala.util.control.NonFatal(_) => () })
     catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Is `name` a beat file OF `instanceId`? Either the legacy suffix-less
-    * form (`name == instanceId`) or `<instanceId>.<digits>`. The
-    * digits-only suffix check is what keeps dot-nested instance ids apart
-    * (r17 ADVICE): with a bare `startsWith(id + ".")`, instance "host.a"
-    * would match (and its beat() would DELETE) the live
-    * `host.a.b.<millis>` beats of sibling instance "host.a.b" — the
-    * sibling then lists as never-beat and its healthy waves get stolen.
-    * Residual edge, documented: an all-digit instance id that extends a
-    * sibling id (`host.1` vs `host`) still collides through the sibling's
-    * LEGACY suffix-less file — new beats are always millis-suffixed, so
-    * the window closes at the sibling's first post-upgrade beat.
+  /** The millis stamp of `name` if it is a beat file OF `instanceId`
+    * (`<instanceId>.<digits>`). The digits-only suffix check is what keeps
+    * dot-nested instance ids apart (r17 ADVICE): with a bare
+    * `startsWith(id + ".")`, instance "host.a" would match (and its beat()
+    * would DELETE) the live `host.a.b.<millis>` beats of sibling instance
+    * "host.a.b" — the sibling then lists as never-beat and its healthy
+    * waves get stolen.
     */
-  private def isBeatOf(name: String, instanceId: String): Boolean =
-    name == instanceId || {
-      name.length > instanceId.length + 1 &&
-      name.startsWith(instanceId + ".") &&
-      name.substring(instanceId.length + 1).forall(_.isDigit)
-    }
+  private def beatStamp(name: String, instanceId: String): Option[Long] = {
+    val suffix = name.drop(instanceId.length + 1)
+    if (name.startsWith(instanceId + ".") && suffix.nonEmpty &&
+        suffix.length < 19 && suffix.forall(_.isDigit)) Some(suffix.toLong)
+    else None
+  }
 
+  /** The instance's newest beat stamp, or None if it never beat. Freshness
+    * comes from the NAME stamp only, which [[beat]] fixes before any byte
+    * is written: a torn beat (a writer mid-flight, or a crash between
+    * create and write) reads fresh exactly until the staleness bound
+    * elapses, then converges — never stale-since-epoch (r16: double-
+    * executed live waves), never fresh-forever (r17: a permanent queue
+    * stall), and an older complete beat can never hide a newer torn one.
+    */
   private def lastBeat(spark: SparkSession, root: String,
       instanceId: String): Option[Long] = {
     val dir = new org.apache.hadoop.fs.Path(s"$root/_heartbeats")
     val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      try f.listStatus(dir, (pp: org.apache.hadoop.fs.Path) =>
-        isBeatOf(pp.getName, instanceId))
-      catch { case scala.util.control.NonFatal(_) =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
-    if (files.isEmpty) return None // never beat at all → takeover-eligible
-    val parsed = files.flatMap { s =>
-      try {
-        val in = f.open(s.getPath)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-        finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-    // beats exist but none parsed: a WRITER may be mid-flight (or the
-    // bytes transiently garbled) — read as fresh-as-of-the-file-stamp and
-    // let the bound decide. The pre-r17 code mapped this to Some(0L) =
-    // "stale since epoch" and double-executed live waves; r17's first fix
-    // read Some(Long.MaxValue) = fresh FOREVER, which turned a dispatcher
-    // crashing between beat-file create and write into a PERMANENT
-    // work-queue stall (r17 ADVICE — the exact crash takeover exists
-    // for). The epoch-millis embedded in the `<instance>.<millis>` name
-    // is stamped before any byte is written; legacy suffix-less files
-    // fall back to the filesystem mtime. A torn beat therefore reads
-    // fresh exactly until the staleness bound elapses, then converges.
-    if (parsed.nonEmpty) Some(parsed.max)
-    else Some(files.map { s =>
-      val name = s.getPath.getName
-      val suffix = name.drop(instanceId.length + 1)
-      if (name.startsWith(instanceId + ".") && suffix.nonEmpty &&
-          suffix.length < 19 && suffix.forall(_.isDigit)) suffix.toLong
-      else s.getModificationTime
-    }.max)
+    val stamps =
+      try f.listStatus(dir).flatMap(s => beatStamp(s.getPath.getName, instanceId))
+      catch { case scala.util.control.NonFatal(_) => Array.empty[Long] }
+    stamps.maxOption
   }
 
   /** Release every in-flight wave of instances whose heartbeat is stale

@@ -38,9 +38,7 @@ class WorkQueueMicroBatchStream(path: String, state: Option[String],
     val base = new java.io.File(path)
     Option(base.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      .filter(f => state.forall(s =>
-        WorkQueueSource.unescapePartitionValue(
-          f.getName.stripPrefix("itemState=")) == s))
+      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
       .flatMap { dir =>
         Option(dir.listFiles()).getOrElse(Array.empty)
           .filter(f => f.isFile &&
@@ -75,8 +73,7 @@ class WorkQueueMicroBatchStream(path: String, state: Option[String],
     WorkQueueOffset.of(end).files.filterNot(from).map { rel =>
       val stateDir = rel.substring(0, rel.indexOf('/'))
       WorkQueuePartition(s"$path/$rel",
-        WorkQueueSource.unescapePartitionValue(
-          stateDir.stripPrefix("itemState="))): InputPartition
+        WorkQueueSource.stateOf(new java.io.File(path, stateDir))): InputPartition
     }.toArray
   }
 

@@ -35,9 +35,9 @@ class WorkQueueSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     WorkQueueSource.schema
 
-  // writes carry the claim-request schema (WorkQueueClaimWrite.schema), not
-  // the monitoring read schema — accept the query's own schema so AppendData
-  // resolves; reads without a user schema still get inferSchema's shape
+  // writes may carry any item-shaped schema (itemID, itemState and a subset
+  // of the rest) — accept the query's own schema so AppendData resolves;
+  // reads without a user schema still get inferSchema's shape
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(
@@ -87,32 +87,39 @@ object WorkQueueSource {
       .write.format("graft.store.connector.WorkQueueSource")
       .option("path", path).option("format", format).mode("append").save()
 
-  /** Claim outcomes written by the conditional-claim write path
-    * ([[WorkQueueClaimWrite]]): one row per claim request —
-    * `(itemID, status ∈ {accepted, rejected}, lockID)` where `lockID` is the
-    * winning lock for accepts and the CURRENT holder for rejects (the
-    * reference's `verifyItem` return, but race-free).
+  /** Percent-escape an itemState for its `itemState=<escaped>` directory
+    * name, one `%XX` per UTF-8 byte ([[unescapePartitionValue]] decodes
+    * it). Only ASCII letters/digits/`_-.` pass through raw: raw non-ASCII
+    * in a filename is subject to filesystem Unicode normalization (macOS
+    * stores NFD), which would break the byte-equality round-trip that maps
+    * one state to exactly one directory.
     */
-  def claimResults(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.spark.sql.DataFrame =
-    spark.read
-      .schema("itemID STRING, status STRING, lockID STRING")
-      .json(new java.io.File(path, "_claims").getAbsolutePath)
-      .select("itemID", "status", "lockID")
+  def escapeToken(s: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      val n = Character.charCount(cp)
+      val c = s.charAt(i)
+      if (n == 1 && c < 0x80 && (c.isLetterOrDigit || c == '_' || c == '-' || c == '.'))
+        sb.append(c)
+      else
+        new String(Character.toChars(cp))
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          .foreach(b => sb.append(f"%%${b & 0xFF}%02X"))
+      i += n
+    }
+    sb.result()
+  }
 
   /** Undo percent-escaping of partition directory values — both Spark's
-    * own (ASCII specials, one %XX per char) and
-    * [[WorkQueueClaimWrite.escapeToken]]'s (one %XX per UTF-8 byte): runs
-    * of consecutive %XX groups collect into a byte buffer and decode as
-    * UTF-8, so multi-byte escapes reassemble into their original code
-    * points. A '%' not followed by two hex digits passes through verbatim.
-    *
-    * A byte run that is NOT valid UTF-8 decodes as Latin-1 instead: the
-    * legacy (v1) escape format wrote chars 0x80–0xFF as one %XX each, and
-    * those lone high bytes would otherwise collapse to U+FFFD — the
-    * fallback keeps pre-existing queue dirs and lock files readable. (New
-    * writes always escape whole UTF-8 sequences, which the strict decode
-    * accepts, so the fallback never fires on current-format data.)
+    * own (ASCII specials, one %XX per char) and [[escapeToken]]'s (one %XX
+    * per UTF-8 byte): runs of consecutive %XX groups collect into a byte
+    * buffer and decode as UTF-8, so multi-byte escapes reassemble into
+    * their original code points. A '%' not followed by two hex digits
+    * passes through verbatim. A byte run that is not valid UTF-8 is a
+    * name no writer produced: it fails loudly instead of decoding to
+    * different text.
     */
   def unescapePartitionValue(s: String): String = {
     def hex(c: Char): Boolean =
@@ -120,15 +127,14 @@ object WorkQueueSource {
     val out = new StringBuilder
     val bytes = new java.io.ByteArrayOutputStream
     def flush(): Unit = if (bytes.size > 0) {
-      val arr = bytes.toByteArray
       val strict = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
         .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
         .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
-      try out.append(strict.decode(java.nio.ByteBuffer.wrap(arr)).toString)
+      try out.append(strict.decode(java.nio.ByteBuffer.wrap(bytes.toByteArray)).toString)
       catch {
-        case _: java.nio.charset.CharacterCodingException =>
-          out.append(new String(arr,
-            java.nio.charset.StandardCharsets.ISO_8859_1))
+        case e: java.nio.charset.CharacterCodingException =>
+          throw new IllegalArgumentException(
+            s"malformed escape in '$s': a %XX run is not valid UTF-8", e)
       }
       bytes.reset()
     }
@@ -144,57 +150,16 @@ object WorkQueueSource {
     out.result()
   }
 
-  /** One-shot migration of legacy escape forms to the current
-    * [[WorkQueueClaimWrite.escapeToken]] encoding: lock filenames and
-    * `itemState=` directory names are decoded (the decoder accepts all
-    * historical forms) and re-encoded; entries whose canonical name differs
-    * are renamed in place. Lock CONTENT needs no rewrite — it is decoded on
-    * every read. If both a legacy and a current-format lock file exist for
-    * the same itemID, the claim with the later lease expiry wins (a
-    * non-expiring lock ranks last; ties keep the canonical). Returns the
-    * number of renamed/dropped entries. Run via `Main queue-compact`.
+  /** The itemState a queue state directory (`itemState=<escaped>`) holds;
+    * a name that does not decode fails with the directory's path.
     */
-  def renormalizeEscaping(path: String): Int = {
-    var changed = 0
-    def canonicalOf(stem: String): String =
-      WorkQueueClaimWrite.escapeToken(unescapePartitionValue(stem))
-    val locks = new java.io.File(path, "locks")
-    for (f <- Option(locks.listFiles()).getOrElse(Array.empty)
-         if f.isFile && f.getName.endsWith(".lock")) {
-      val stem = f.getName.stripSuffix(".lock")
-      val canonical = canonicalOf(stem)
-      if (canonical != stem) {
-        // reconcile, don't drop: if a canonical twin exists the claim with
-        // the LATER lease expiry survives (the legacy file may hold the only
-        // live pre-upgrade claim; discarding it silently would break mutual
-        // exclusion for its holder)
-        val dest = new java.io.File(locks, canonical + ".lock")
-        WorkQueueClaimWrite.migrateLegacyLock(f.toPath, dest.toPath)
-        require(!f.exists(), s"failed to migrate ${f.getPath}")
-        changed += 1
-      }
+  def stateOf(dir: java.io.File): String =
+    try unescapePartitionValue(dir.getName.stripPrefix("itemState="))
+    catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"queue state directory ${dir.getPath}: ${e.getMessage}", e)
     }
-    for (d <- Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-         if d.isDirectory && d.getName.startsWith("itemState=")) {
-      val stem = d.getName.stripPrefix("itemState=")
-      val canonical = canonicalOf(stem)
-      if (canonical != stem) {
-        val dest = new java.io.File(path, "itemState=" + canonical)
-        if (dest.exists()) {
-          // both escape forms of the same state exist: MERGE the legacy
-          // dir's data files into the canonical dir (names are unique —
-          // they carry query/task/attempt ids), never drop rows
-          for (f <- Option(d.listFiles()).getOrElse(Array.empty))
-            require(f.renameTo(new java.io.File(dest, f.getName)),
-              s"failed to merge ${f.getPath} into ${dest.getPath}")
-          require(d.delete(), s"failed to drop emptied ${d.getPath}")
-        } else require(d.renameTo(dest),
-          s"failed to rename ${d.getPath} to its canonical escape form")
-        changed += 1
-      }
-    }
-    changed
-  }
 }
 
 /** Parquet shape of a queue data file (the `format=parquet` write option):
@@ -274,21 +239,17 @@ class WorkQueueTable(path: String, tableSchema: StructType = WorkQueueSource.sch
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
       Option(options.get("itemState")),
       Option(options.get("itemID")))
-  // writes are schema-dispatched: a claim-shaped frame (has lockID) runs
-  // the conditional-claim protocol; an item-shaped frame (has itemState)
-  // appends queue rows — the connector is a full source/sink pair, the
-  // import slot of the reference's batch writer (`code/manager.py:278-358`)
+  // the sink half of the source/sink pair: item rows append into the state
+  // layout — the import slot of the reference's batch writer
+  // (`code/manager.py:278-358`)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     val fields = info.schema().fieldNames.toSet
-    if (fields.contains("lockID"))
-      new WorkQueueClaimWrite(path, info.schema(), info.queryId())
-    else if (fields.contains("itemID") && fields.contains("itemState"))
-      new WorkQueueItemWrite(path, info.schema(), info.queryId(),
-        info.options().getOrDefault("format", "csv"))
-    else throw new IllegalArgumentException(
-      s"workqueue write needs a claim (lockID...) or item (itemID, itemState...) schema, got: ${fields.mkString(",")}")
+    require(fields.contains("itemID") && fields.contains("itemState"),
+      s"workqueue write needs an item (itemID, itemState...) schema, got: ${fields.mkString(",")}")
+    new WorkQueueItemWrite(path, info.schema(), info.queryId(),
+      info.options().getOrDefault("format", "csv"))
   }
 }
 
@@ -410,11 +371,9 @@ class WorkQueueCountScan(path: String, state: Option[String],
     val base = new java.io.File(path)
     Option(base.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      .filter(f => state.forall(s =>
-        WorkQueueSource.unescapePartitionValue(f.getName.stripPrefix("itemState=")) == s))
+      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
       .map(dir => WorkQueueStatePartition(dir.getAbsolutePath,
-        WorkQueueSource.unescapePartitionValue(dir.getName.stripPrefix("itemState=")))
-        : InputPartition)
+        WorkQueueSource.stateOf(dir)): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -544,10 +503,9 @@ class WorkQueueScan(path: String, state: Option[String], id: Option[String],
       .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
       // compare against the UNESCAPED directory value, so pushed filters on
       // states containing escaped chars still prune correctly
-      .filter(f => state.forall(s =>
-        WorkQueueSource.unescapePartitionValue(f.getName.stripPrefix("itemState=")) == s))
+      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
     stateDirs.flatMap { dir =>
-      val st = WorkQueueSource.unescapePartitionValue(dir.getName.stripPrefix("itemState="))
+      val st = WorkQueueSource.stateOf(dir)
       Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile &&
           (f.getName.endsWith(".csv") || f.getName.endsWith(".parquet")))

@@ -70,7 +70,7 @@ class MainSpec extends SparkSpec {
     assert(leftovers.isEmpty, leftovers.mkString(","))
 
     // queue-compact migrates the data files to parquet with identical rows
-    // (locks/_claims untouched, no downtime — the CSV->columnar path)
+    // (no downtime — the CSV->columnar path)
     Main.run(spark, "queue-compact", qdir, Map("format" -> "parquet"))
     val migrated = spark.read.format("graft.store.connector.WorkQueueSource")
       .option("path", qdir).load()
@@ -106,12 +106,13 @@ class MainSpec extends SparkSpec {
     assert(out.count() === 3)
     assert(out.select("itemID").as[String].collect().toSet === Set("W1", "W2", "W3"))
     // finished waves are RELEASED (the ledger holds in-flight items only);
-    // the compact done set is the durable record — and no lock files
+    // the compact done set is the durable record — and no per-item claim
+    // files or claim-result logs anywhere
     assert(WorkQueueLedger.entries(spark, s"$qdir/_ledger").count() === 0)
     assert(WorkQueueLedger.doneEntries(spark, s"$qdir/_ledger_done")
       .select("itemID").as[String].collect().toSet === Set("W1", "W2", "W3"))
-    assert(!new java.io.File(s"$qdir/locks").exists() ||
-      new java.io.File(s"$qdir/locks").list().isEmpty)
+    assert(!new java.io.File(s"$qdir/locks").exists())
+    assert(!new java.io.File(s"$qdir/_claims").exists())
     // a fresh worker over the same queue (new checkpoint) re-reads the
     // files but wins nothing — the done set remembers across processes
     Main.run(spark, "work", qdir, Map(
@@ -119,6 +120,21 @@ class MainSpec extends SparkSpec {
       "instance" -> "w2", "once" -> "1"))
     assert(store.ItemStore.load(spark, s"$base/results2").count() === 0)
     assert(WorkQueueLedger.entries(spark, s"$qdir/_ledger").count() === 0)
+  }
+
+  test("work verb: the retired --claims / --lease-ms flags fail loudly and " +
+      "point at --takeover-after") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cli-retired").toString
+    Seq("claims" -> "locks", "lease-ms" -> "60000").foreach { case (k, v) =>
+      val e = intercept[RuntimeException](Main.run(spark, "work", s"$base/q",
+        Map("results" -> s"$base/results", "checkpoint" -> s"$base/ckpt",
+          "once" -> "1", k -> v)))
+      assert(e.getMessage.contains(s"--$k") &&
+        e.getMessage.contains("--takeover-after"), e.getMessage)
+    }
+    // nothing ran: no results, no ledger
+    assert(!new java.io.File(s"$base/results").exists())
+    assert(!new java.io.File(s"$base/q/_ledger").exists())
   }
 
   test("work verb: DEFAULT-flag restart after a claim-then-crash drains the " +

@@ -608,10 +608,12 @@ class WorkQueueLedgerSpec extends SparkSpec {
       "(r16 VERDICT #1: torn read must not steal a live wave)") {
     val root = tmp()
     WorkQueueLedger.claim(spark, root, ids("G1"), "garbled", "g-batch-0")
-    // simulate a torn/garbled beat: the file EXISTS but does not parse
+    // simulate a torn/garbled beat: the stamped file EXISTS but its
+    // content does not parse
     val hb = new java.io.File(new java.io.File(root), "_heartbeats")
     hb.mkdirs()
-    java.nio.file.Files.write(new java.io.File(hb, "garbled").toPath,
+    java.nio.file.Files.write(
+      new java.io.File(hb, s"garbled.${System.currentTimeMillis()}").toPath,
       "not-a-timestamp".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
       "torn-1").isEmpty,
@@ -623,5 +625,28 @@ class WorkQueueLedgerSpec extends SparkSpec {
     WorkQueueLedger.claim(spark, root, ids("D1"), "dead", "d-batch-0")
     assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
       "torn-2") === Seq("dead"))
+  }
+
+  test("a newer torn beat is not hidden by an older complete one: the " +
+      "instance reads fresh inside the bound") {
+    val root = tmp()
+    WorkQueueLedger.claim(spark, root, ids("N1"), "torn", "n-batch-0")
+    val hb = new java.io.File(new java.io.File(root), "_heartbeats")
+    hb.mkdirs()
+    // an old complete beat (120 s ago, parses) and a NEWER beat whose
+    // writer crashed mid-flight (1 s ago, empty) — the live dispatcher
+    // last beat 1 s ago, well inside a 60 s bound
+    val now = System.currentTimeMillis()
+    java.nio.file.Files.write(
+      new java.io.File(hb, s"torn.${now - 120000L}").toPath,
+      String.valueOf(now - 120000L)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(
+      new java.io.File(hb, s"torn.${now - 1000L}").toPath, Array.empty[Byte])
+    assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
+      "newer-torn-0").isEmpty,
+      "the newest beat stamp is 1 s old: the instance must not be taken over")
+    assert(won(WorkQueueLedger.entries(spark, root).select("itemID")) ===
+      Set("N1"))
   }
 }

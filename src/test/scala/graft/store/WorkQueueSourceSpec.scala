@@ -3,7 +3,7 @@ package graft.store
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.store.connector.{WorkQueueClaimWrite, WorkQueueSource}
+import graft.store.connector.WorkQueueSource
 
 class WorkQueueSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -204,140 +204,53 @@ class WorkQueueSourceSpec extends SparkSpec {
     assert(roundTrip("parquet") === roundTrip("csv"))
   }
 
-  private def claim(dir: String, rows: Seq[(String, String, String, String)]): Unit =
-    rows.toDF("itemID", "lockID", "instanceID", "expectedLockID")
-      .write.format("graft.store.connector.WorkQueueSource")
-      .option("path", dir).mode("append").save()
-
-  private def results(dir: String): Set[(String, String, String)] =
-    WorkQueueSource.claimResults(spark, dir)
-      .as[(String, String, String)].collect().toSet
-
-  test("concurrent claims: exactly one winner per item, loser surfaces the holder") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-claims").toString
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val items = (0 until 8).map(i => s"item_$i")
-    val a = Future(claim(dir, items.map(id => (id, "lockA", "worker-a", null))))
-    val b = Future(claim(dir, items.map(id => (id, "lockB", "worker-b", null))))
-    Await.result(a, 2.minutes)
-    Await.result(b, 2.minutes)
-
-    val res = WorkQueueSource.claimResults(spark, dir)
-      .as[(String, String, String)].collect()
-    // every item appears exactly twice: one accepted claim, one rejected
-    for (id <- items) {
-      val byStatus = res.filter(_._1 == id).groupBy(_._2)
-      assert(byStatus("accepted").length === 1, s"$id: ${byStatus.mkString}")
-      assert(byStatus("rejected").length === 1, s"$id: ${byStatus.mkString}")
-      val winner = byStatus("accepted").head._3
-      // the loser is told the CURRENT holder — race-free verifyItem
-      assert(byStatus("rejected").head._3 === winner)
-      assert(Set("lockA", "lockB").contains(winner))
+  test("escapeToken/unescapePartitionValue round-trip any value, including non-Latin-1") {
+    val cases = Seq(
+      "plain-id_1.2",
+      "a,b c%d=e",                  // ASCII specials: one %XX per char
+      "中文状态",                    // CJK letters: escaped per UTF-8 byte
+      "done→next",                  // U+2192: 3 UTF-8 bytes, was corrupted pre-fix
+      "emoji😀state",     // surrogate pair (4 UTF-8 bytes)
+      "nl\nand,comma",              // control chars
+      "café ß €",    // Latin-1 letters + 3-byte symbol
+      "%41 literal-ish",            // raw '%' must survive its own escape
+      "")
+    cases.foreach { s =>
+      val esc = WorkQueueSource.escapeToken(s)
+      // escaped form is filesystem-safe AND pure ASCII: raw non-ASCII in a
+      // directory name is subject to FS Unicode normalization (macOS NFD),
+      // which would break the one-state-one-directory byte equality
+      assert(esc.forall(c => c < 0x80 && c != '/' && c != '\n' && c != ','), esc)
+      assert(WorkQueueSource.unescapePartitionValue(esc) === s, s"via $esc")
     }
+    // Spark-style single-byte ASCII escapes still decode (the other producer
+    // of partition-dir names this decoder must understand)
+    assert(WorkQueueSource.unescapePartitionValue("a%20b%2Cc") === "a b,c")
+    // a '%' not followed by two hex digits is literal, not an escape
+    assert(WorkQueueSource.unescapePartitionValue("100%zz%4") === "100%zz%4")
+    // unescaped characters pass through verbatim
+    assert(WorkQueueSource.unescapePartitionValue("café") === "café")
   }
 
-  test("conditional re-claim: matching expectation swaps, stale expectation rejects") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-claims2").toString
-    claim(dir, Seq(("item_x", "lock1", "w1", null)))
-    // stale expectation loses and learns the holder
-    claim(dir, Seq(("item_x", "lock9", "w9", "nope")))
-    // matching expectation renews the lock
-    claim(dir, Seq(("item_x", "lock2", "w2", "lock1")))
-    // claim of a never-locked item with an expectation is rejected
-    claim(dir, Seq(("item_y", "lock3", "w3", "lock1")))
-    val res = results(dir)
-    assert(res.contains(("item_x", "accepted", "lock1"))) // initial claim
-    assert(res.contains(("item_x", "rejected", "lock1"))) // stale reclaim told the holder
-    assert(res.contains(("item_x", "accepted", "lock2"))) // matching reclaim swapped
-    assert(res.contains(("item_y", "rejected", ""))) // no current holder
-
-    // ids and lock tokens with separators survive the whole round trip
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-claims3").toString
-    claim(dir2, Seq(("it,em\nx", "lo,ck\"1", "w,1", null)))
-    claim(dir2, Seq(("it,em\nx", "lock2", "w2", "lo,ck\"1")))
-    val r2 = results(dir2)
-    assert(r2.contains(("it,em\nx", "accepted", "lo,ck\"1")))
-    assert(r2.contains(("it,em\nx", "accepted", "lock2"))) // comma-lock reclaim matched
-    val lockFile = java.nio.file.Paths.get(dir, "locks", "item_x.lock")
-    val content = new String(java.nio.file.Files.readAllBytes(lockFile), "UTF-8")
-    assert(content === "lock2,w2,0") // no lease column -> non-expiring (0)
-  }
-
-  private def claimLeased(dir: String,
-      rows: Seq[(String, String, String, String, Long)]): Unit =
-    rows.toDF("itemID", "lockID", "instanceID", "expectedLockID", "leaseMillis")
-      .write.format("graft.store.connector.WorkQueueSource")
-      .option("path", dir).mode("append").save()
-
-  test("lease expiry: a dead holder's lock is taken over, a live one is not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lease").toString
-    // live-lease rejection on its own item with a lease far longer than any
-    // suite-load scheduling delay (a short lease here flakes: if the second
-    // claim's job launches late, the lease has already expired and the
-    // takeover is legitimately accepted)
-    claimLeased(dir, Seq(("item_live", "lockLive", "w1", null, 600000L)))
-    claimLeased(dir, Seq(("item_live", "lockEarly", "w2", null, 60000L)))
-    // expiry takeover on a separate item: holder claims with a short lease,
-    // then "crashes" (never renews); the sleep only makes it MORE expired,
-    // so this direction cannot flake under load
-    claimLeased(dir, Seq(("item_l", "lockOld", "dead-worker", null, 400L)))
-    Thread.sleep(900)
-    claimLeased(dir, Seq(("item_l", "lockNew", "w3", null, 60000L)))
-    val res = results(dir)
-    assert(res.contains(("item_live", "accepted", "lockLive")))
-    assert(res.contains(("item_live", "rejected", "lockLive"))) // live -> told holder
-    assert(res.contains(("item_l", "accepted", "lockOld")))
-    assert(res.contains(("item_l", "accepted", "lockNew"))) // expired takeover
-    val st = WorkQueueClaimWrite.lockState(dir, "item_l")
-    assert(st.map(_._1) === Some("lockNew"))
-    // a non-expiring lock (no lease) is NEVER taken over by expiry
-    claimLeased(dir, Seq(("item_p", "lockP", "w1", null, 0L)))
-    Thread.sleep(50)
-    claimLeased(dir, Seq(("item_p", "lockQ", "w2", null, 60000L)))
-    assert(results(dir).contains(("item_p", "rejected", "lockP")))
-  }
-
-  test("lease renewal extends expiry; a lost lock refuses to renew") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-renew").toString
-    claimLeased(dir, Seq(("item_r", "lockR", "w1", null, 60000L)))
-    val e1 = WorkQueueClaimWrite.lockState(dir, "item_r").get._3
-    assert(e1 > 0)
-    Thread.sleep(30)
-    // heartbeat: same holder pushes expiry strictly out
-    assert(WorkQueueClaimWrite.renew(dir, "item_r", "lockR", "w1", 60000L))
-    val e2 = WorkQueueClaimWrite.lockState(dir, "item_r").get._3
-    assert(e2 > e1, s"renewal must extend: $e2 <= $e1")
-    // a non-holder cannot renew
-    assert(!WorkQueueClaimWrite.renew(dir, "item_r", "lockStale", "w9", 60000L))
-    assert(WorkQueueClaimWrite.lockState(dir, "item_r").get._1 === "lockR")
-    // renewal of a never-claimed item is a no-op false
-    assert(!WorkQueueClaimWrite.renew(dir, "item_missing", "x", "w", 1000L))
-  }
-
-  test("expired-takeover race: exactly one of two concurrent claimants wins") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lease-race").toString
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val items = (0 until 6).map(i => s"exp_$i")
-    claimLeased(dir, items.map(id => (id, "lockDead", "dead", null, 300L)))
-    Thread.sleep(800)
-    // two workers race for the expired locks through the CAS takeover path
-    val a = Future(claimLeased(dir, items.map(id => (id, "lockA", "wa", null, 60000L))))
-    val b = Future(claimLeased(dir, items.map(id => (id, "lockB", "wb", null, 60000L))))
-    Await.result(a, 2.minutes)
-    Await.result(b, 2.minutes)
-    val res = WorkQueueSource.claimResults(spark, dir)
-      .as[(String, String, String)].collect()
-    for (id <- items) {
-      val after = res.filter(r => r._1 == id && r._3 != "lockDead")
-      assert(after.count(_._2 == "accepted") === 1, s"$id: ${after.mkString}")
-      assert(after.count(_._2 == "rejected") === 1, s"$id: ${after.mkString}")
-      // the loser is told the WINNER (not the dead holder)
-      val winner = after.find(_._2 == "accepted").get._3
-      assert(after.find(_._2 == "rejected").get._3 === winner)
-    }
+  test("a %XX run that is not valid UTF-8 fails loudly, naming the state directory") {
+    // a lone Latin-1 byte (0xE9) is no UTF-8 sequence: decoding it as
+    // anything (U+FFFD, Latin-1 'é') would silently rename the state
+    intercept[IllegalArgumentException](
+      WorkQueueSource.unescapePartitionValue("caf%E9"))
+    intercept[IllegalArgumentException](
+      WorkQueueSource.unescapePartitionValue("%E9%20%FC"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-q-badesc").toString + "/q"
+    WorkQueueSource.write(Seq(("i1", "t1", "todo", 0L, Option.empty[Long]))
+      .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount"), dir)
+    val bad = new java.io.File(dir, "itemState=caf%E9")
+    bad.mkdirs()
+    java.nio.file.Files.write(new java.io.File(bad, "part-x.csv").toPath,
+      "i2,t2,0,\n".getBytes("UTF-8"))
+    val e = intercept[Exception](spark.read
+      .format("graft.store.connector.WorkQueueSource")
+      .option("path", dir).load().collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(bad.getPath)), messages.mkString(" | "))
   }
 }
