@@ -756,14 +756,16 @@ object Main {
         case "substring" =>
           // exact substring dedup: pairs sharing a verbatim >= --length
           // char normalized run; --index-dir switches to incremental mode
-          // (build-or-load a gram index, pair only the batch against it);
-          // --hashed uses the 8-byte-key candidate join (same results)
+          // (build-or-load a gram index, pair only the batch against it).
+          // The retired --hashed switch fails loudly rather than silently
+          // running the raw-gram join it used to bypass
+          require(!flags.contains("hashed"), "corpus --op substring no " +
+            "longer takes --hashed: substringPairs is the one batch form " +
+            "(same pair set as the retired hash-keyed join)")
           val l = flags.getOrElse("length", "40").toInt
           flags.get("index-dir") match {
             case None =>
-              if (flags.contains("hashed"))
-                graft.dedup.Dedup.substringPairsHashed(docs, idCol, textCol, l)
-              else graft.dedup.Dedup.substringPairs(docs, idCol, textCol, l)
+              graft.dedup.Dedup.substringPairs(docs, idCol, textCol, l)
             case Some(dir) =>
               // publication is atomic: build under a temp sibling, rename
               // into place. A directory is trusted as a complete index only

@@ -45,17 +45,6 @@ object Theta {
     conv(substring(md5(c.cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
 
-  /** JVM twin of [[h60]] — bit-identical (md5 of UTF-8, first 15 lowercase
-    * hex chars, base-16), used by the streaming sketch maintainer and
-    * driver-side spec re-derivations.
-    */
-  def h60Jvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = d.map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   /** KMV sketch rows per set: the k smallest DISTINCT element hashes with
     * their rank. Distinct-first matters: KMV ranks hash VALUES, and a
     * duplicate inside the heap would shift every rank after it.

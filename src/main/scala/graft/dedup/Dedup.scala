@@ -974,13 +974,10 @@ object Dedup {
     * Shape: per-doc distinct char `l`-grams via the JVM window kernel
     * ([[charGramsUdf]]), then ONE exchange on the gram
     * and in-bucket pair expansion (the [[graft.analytics.Graph]] groupPairs
-    * shape) + a pair-count aggregate. At 100 TB the gram strings dominate
-    * shuffle bytes — the deployment variant keys the exchange on
-    * `xxhash64(gram)` (8 bytes vs `l`) and verifies survivors against the
-    * text, and caps pathological buckets (a boilerplate gram shared by
-    * millions of docs is exactly the skew-capped bucket-kernel case,
-    * [[cappedBucketPairs]]); the gate joins on the raw gram because the
-    * oracle must compute the identical pair set with no hash to mirror.
+    * shape) + a pair-count aggregate. This is the one batch form: it joins
+    * on the raw gram, so the oracle computes the identical pair set with
+    * no hash to mirror, and it shares the [[substringIndex]] layout with
+    * [[substringAgainst]] and the streaming operator.
     */
   /** JVM kernel for the distinct char `l`-gram windows of a normalized
     * text (stride 1) — same rationale as [[distinctNgramsUdf]]: Spark's
@@ -1034,73 +1031,6 @@ object Dedup {
     // sides; hashing the build side instead measured 3.1 s -> 2.2 s at sf0.1
     a.hint("SHUFFLE_HASH").join(b, Seq("gram"))
       .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** The hash-keyed deployment form of [[substringPairs]]: candidates
-    * join on `xxhash64(gram)` — 8 bytes through the exchange instead of
-    * `l` chars — and survivors verify EXACTLY against the per-doc gram
-    * sets (`n_shared = |ga ∩ gb|`), so a 2^-64 hash collision can inflate
-    * a candidate but never a result: a pair with no truly shared gram
-    * verifies to 0 and is dropped. Shuffle bytes: O(grams·8) for the
-    * candidate stage + O(pairs·|doc grams|) for the verify — at 100 TB
-    * the first term is 5× smaller than the raw-gram join's and the second
-    * is proportional to OUTPUT, the property every verified-candidate
-    * operator in this file is built around. Result-identical to
-    * [[substringPairs]] (spec-asserted).
-    */
-  def substringPairsHashed(docs: DataFrame, idCol: String, textCol: String,
-      l: Int): DataFrame = {
-    val gramSets = docs
-      .select(col(idCol).cast("long").as("id"),
-        charGramsUdf(l)(TextAnalysis.normalized(col(textCol))).as("grams"))
-      .filter(size(col("grams")) > 0)
-      .transform(graft.plans.Lineage.cut)
-    val hashed = gramSets
-      .select(col("id"), explode(col("grams")).as("gram"))
-      .select(col("id"), xxhash64(col("gram")).as("h"))
-    val cand = hashed.select(col("id").as("doc_a"), col("h"))
-      .hint("SHUFFLE_HASH")
-      .join(hashed.select(col("id").as("doc_b"), col("h")), Seq("h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(gramSets.select(col("id").as("doc_a"), col("grams").as("ga")),
-        Seq("doc_a"))
-      .join(gramSets.select(col("id").as("doc_b"), col("grams").as("gb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("ga"), col("gb"))).cast("long").as("n_shared"))
-      .filter(col("n_shared") > 0)
-  }
-
-  /** [[substringPairs]] through the skew-capped bucket kernel — the
-    * deployment form the join version's Scaladoc promises: a boilerplate
-    * gram shared by millions of docs turns the gram-join into one giant
-    * task, while [[cappedBucketPairs]] sub-splits any bucket past
-    * `bucketCap` into bounded salt cells and enumerates the SAME pair set
-    * across diagonal + cross cells — result-identical (spec-asserted),
-    * task sizes bounded. The pair-per-shared-gram stream then aggregates
-    * to `n_shared` exactly as in the join form.
-    */
-  def substringPairsCapped(docs: DataFrame, idCol: String, textCol: String,
-      l: Int, bucketCap: Int = DefaultBucketCap,
-      skewSampleRate: Double = DefaultSkewSampleRate): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    def gramRows(d: DataFrame): Dataset[(Long, String)] =
-      substringIndex(d, idCol, textCol, l).as[(Long, String)]
-    val sampled =
-      if (skewSampleRate >= 1.0) docs
-      else docs.sample(withReplacement = false, skewSampleRate, seed = 421L)
-    cappedBucketPairs[(Long, String), String, (Long, Long)](
-      gramRows(docs), gramRows(sampled), skewSampleRate,
-      _._2, _._1, bucketCap) { (a, b) =>
-      if (a._1 < b._1) Some((a._1, b._1))
-      else if (b._1 < a._1) Some((b._1, a._1))
-      else None
-    }
-      .toDF("doc_a", "doc_b")
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
   }
 
@@ -1567,198 +1497,7 @@ object Dedup {
     docs.join(surv, docs(idCol).cast("long") === surv("doc_id"), "left_semi")
   }
 
-  /** Plan (bands, rowsPerBand) for a target Jaccard threshold under a
-    * signature budget: minimize `fnWeight·FN + (1-fnWeight)·FP` where
-    * `FN = ∫_t^1 (1 - P(s)) ds`, `FP = ∫_0^t P(s) ds` and
-    * `P(s) = 1 - (1 - s^r)^b` is the banding S-curve (Mining of Massive
-    * Datasets §3.4; the same objective as the public datasketch
-    * `_optimal_param`). Choosing (b, r) by hand is the #1 LSH cost lever at
-    * scale — too many bands explodes candidate pairs (FP → wasted verify
-    * compute), too many rows drops true near-dups (FN).
-    *
-    * Deterministic by construction: fixed 1e-3 midpoint integration grid;
-    * ties break toward the smaller signature (fewer hashes per row), then
-    * toward more bands (recall).
-    */
-  def planBands(threshold: Double, maxHashes: Int,
-      fnWeight: Double = 0.5): (Int, Int) = {
-    require(threshold > 0.0 && threshold < 1.0,
-      s"threshold must be in (0,1), got $threshold")
-    require(maxHashes >= 1, s"maxHashes must be >= 1, got $maxHashes")
-    require(fnWeight >= 0.0 && fnWeight <= 1.0,
-      s"fnWeight must be in [0,1], got $fnWeight")
-    val step = 1e-3
-    var best = (1, 1)
-    var bestCost = Double.MaxValue
-    for (b <- 1 to maxHashes; r <- 1 to maxHashes / b) {
-      var fp = 0.0
-      var fn = 0.0
-      var s = step / 2
-      while (s < 1.0) {
-        val p = 1.0 - math.pow(1.0 - math.pow(s, r), b)
-        if (s < threshold) fp += p * step else fn += (1.0 - p) * step
-        s += step
-      }
-      val cost = (1.0 - fnWeight) * fp + fnWeight * fn
-      val (bb, br) = best
-      val better = cost < bestCost - 1e-12 ||
-        (cost <= bestCost + 1e-12 &&
-          (b * r < bb * br || (b * r == bb * br && b > bb)))
-      if (better) { best = (b, r); bestCost = math.min(cost, bestCost) }
-    }
-    best
-  }
-
-  /** [[lshVerifiedPairs]] with (bands, rowsPerBand) chosen by [[planBands]]
-    * for the requested threshold and signature budget.
-    */
-  def lshVerifiedPairsPlanned(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxHashes: Int = 12,
-      fnWeight: Double = 0.5): DataFrame = {
-    val (b, r) = planBands(threshold, maxHashes, fnWeight)
-    lshVerifiedPairs(docs, idCol, textCol, threshold, b, r)
-  }
-
   val HashMod = 2147483647L // 2^31 - 1
-
-  /** Portable token hash: left fold (acc*31 + codepoint) % (2^31-1). */
-  def tokenHash(token: Column): Column =
-    aggregate(transform(split(token, ""), c => ascii(c)),
-      lit(0L), (acc, x) => (acc * 31 + x) % HashMod)
-
-  /** 16-bit SimHash: per-bit majority vote over token hashes. Bits are
-    * extracted arithmetically (floor-div + mod) for engine portability.
-    * Production note: one explode+groupBy pass computes all bits in a
-    * single aggregation; the 16 array folds here keep it shuffle-free and
-    * oracle-parallel.
-    */
-  def simhash16(text: Column): Column = {
-    val tokens = array_distinct(split(TextAnalysis.normalized(text), " "))
-    (0 until 16).map { bit =>
-      // shiftright = floor-div by 2^bit on the nonnegative hash (== the
-      // oracle's integer `//`)
-      val vote = aggregate(tokens, lit(0L),
-        (acc, t) => acc + shiftright(tokenHash(t), bit) % 2 * 2 - 1)
-      when(vote > 0, lit(1L << bit)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** JVM fast path for [[simhash16]]: hashes each token ONCE (the expression
-    * form re-folds the token hash per bit), identical arithmetic.
-    */
-  def charHashJvm(s: String): Long = {
-    var acc = 0L
-    val it = s.codePoints().iterator()
-    while (it.hasNext) acc = (acc * 31 + it.next()) % HashMod
-    acc
-  }
-
-  val simhash16Udf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { tokens: Seq[String] =>
-      val votes = new Array[Long](16)
-      val in = if (tokens == null) Seq.empty[String] else tokens
-      in.foreach { t =>
-        val h = charHashJvm(t)
-        var b = 0
-        while (b < 16) { votes(b) += ((h >> b) & 1L) * 2 - 1; b += 1 }
-      }
-      var sh = 0L
-      var b = 0
-      while (b < 16) { if (votes(b) > 0) sh |= 1L << b; b += 1 }
-      sh
-    }
-
-  /** Bit-extracted hamming distance between two 16-bit simhash columns —
-    * identical arithmetic (floor-div + mod) to the DuckDB oracle mirror.
-    */
-  private def hamming16(a: Column, b: Column): Column =
-    (0 until 16).map { bit =>
-      abs(shiftright(a, bit) % 2 - shiftright(b, bit) % 2)
-    }.reduce(_ + _)
-
-  /** SimHash near-dup pairs within a block: hamming(simhash) ≤ maxDist.
-    * Quadratic in the block size — unit-test / small-block tool; the scale
-    * path is [[simhashBandPairs]] (identical results by pigeonhole).
-    */
-  def simhashPairs(
-      docs: DataFrame, idCol: String, textCol: String, blockCol: String,
-      maxDist: Int): DataFrame = {
-    val g = docs.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      simhash16Udf(array_distinct(split(TextAnalysis.normalized(col(textCol)), " ")))
-        .as("sh")).cache()
-    val a = g.alias("a")
-    val b = g.alias("b")
-    a.join(b, col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .withColumn("hamming", hamming16(col("a.sh"), col("b.sh")))
-      .filter(col("hamming") <= maxDist)
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"), col("hamming"))
-  }
-
-  /** Scale-path SimHash near-dup: hamming-band bucketing. The `bits`-wide
-    * hash is split into (maxDist+1) contiguous segments; by pigeonhole any
-    * pair within hamming ≤ maxDist agrees on at least one whole segment, so
-    * an equi-join on (block, segment-index, segment-value) produces a
-    * candidate superset with recall exactly 1.0 — but the join key-space is
-    * blocks × segments × 2^segBits instead of blocks, so no per-block
-    * quadratic blow-up at scale. `blockCol` stays as the *semantic* scope of
-    * the dedup (same-language), not the thing bounding the join.
-    */
-  private def bandPairs(g: DataFrame, maxDist: Int, bits: Int,
-      hammingOf: (Column, Column) => Column): DataFrame = {
-    val segs = maxDist + 1
-    require(segs <= bits, s"maxDist $maxDist leaves no bits per segment")
-    // near-equal contiguous bit segments: first (bits % segs) get an extra bit
-    val base = bits / segs
-    val extra = bits % segs
-    val bounds = (0 until segs).map { i =>
-      val off = i * base + math.min(i, extra)
-      val width = base + (if (i < extra) 1 else 0)
-      (i, off, width)
-    }
-    val segStructs = bounds.map { case (i, off, width) =>
-      struct(lit(i).as("si"),
-        shiftright(col("sh"), off).bitwiseAND(lit((1L << width) - 1)).as("sv"))
-    }
-    val banded = g.select(col("id"), col("blk"), col("sh"),
-        explode(array(segStructs: _*)).as("seg"))
-      .select(col("id"), col("blk"), col("sh"),
-        col("seg.si").as("si"), col("seg.sv").as("sv"))
-    // first-match-segment dedup: a pair is emitted only by its FIRST
-    // matching segment (all earlier segments must differ) — replaces the
-    // global distinct() with a cheap local bit-arithmetic filter
-    val noEarlierMatch = bounds.map { case (i, off, width) =>
-      val mask = (1L << width) - 1
-      lit(i) >= col("a.si") ||
-        shiftright(col("a.sh"), off).bitwiseAND(lit(mask)) =!=
-          shiftright(col("b.sh"), off).bitwiseAND(lit(mask))
-    }.reduce(_ && _)
-    banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.blk") === col("b.blk") && col("a.si") === col("b.si") &&
-          col("a.sv") === col("b.sv") && col("a.id") < col("b.id"))
-      .filter(noEarlierMatch)
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-        col("a.sh").as("sha"), col("b.sh").as("shb"))
-      .withColumn("hamming", hammingOf(col("sha"), col("shb")))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
-  /** 16-bit banded variant — results identical to [[simhashPairs]]
-    * (spec-asserted). Kept for parity with the token-hash simhash; the GATE
-    * runs the 48-bit [[simhashBandPairs48]], because 2^16 hash values make
-    * buckets grow linearly with any large corpus (quadratic candidates — a
-    * 60× blow-up in the 10× scale probe), while 2^48 keeps collisions ∝
-    * true near-dup clusters.
-    */
-  def simhashBandPairs(
-      docs: DataFrame, idCol: String, textCol: String, blockCol: String,
-      maxDist: Int): DataFrame = {
-    val g = docs.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      simhash16Udf(array_distinct(split(TextAnalysis.normalized(col(textCol)), " ")))
-        .as("sh")).cache()
-    bandPairs(g, maxDist, 16, hamming16)
-  }
 
   val Simhash48Bits = 48
 
@@ -1958,68 +1697,6 @@ object Dedup {
       while (t < n) { acc = acc + va(t) * vb(t); t += 1 }
       val cos = acc / (a._3 * b._3)
       if (cos >= thr) Some((a._1, b._1, cos)) else None
-    }
-      .toDF("vec_a", "vec_b", "cos")
-  }
-
-  /** Multi-probe [[lshCosinePairs]]: every vector ships to its home bucket
-    * PLUS `probes` hamming-1 buckets on its lowest-|margin| planes
-    * ([[graft.sim.Similarity.probeBuckets]]), so near-dup pairs that
-    * straddle a hyperplane — the recall gap of the single-probe form, whose
-    * guarantee covers only exact/scaled duplicates — still co-bucket:
-    * a pair split on plane p has small margins on p for BOTH vectors, so
-    * one of them probes across it (and two-plane splits meet when each
-    * vector flips a different split plane). Shuffle volume grows by the
-    * probe factor (O((1+probes)·n·d)), never by pairs. A pair sharing
-    * several buckets is emitted only in its SMALLEST shared bucket (rows
-    * carry their bucket sets) — the multi-probe analog of the
-    * first-match-band rule; no global distinct.
-    */
-  def lshCosinePairsMultiProbe(vecs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, planes: Int, dims: Int, probes: Int,
-      bucketCap: Int = DefaultBucketCap,
-      skewSampleRate: Double = DefaultSkewSampleRate): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val thr = threshold
-    def rowsOf(d: DataFrame): Dataset[(Long, Array[Double], Double, Long, Array[Long])] = d
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("v"),
-        sqrt(dotUdf(col(vecCol), col(vecCol))).as("nrm"),
-        graft.sim.Similarity.probeBuckets(col(vecCol), planes, dims, probes).as("bks"))
-      .select(col("id"), col("v"), col("nrm"),
-        explode(col("bks")).as("bucket"), col("bks"))
-      .as[(Long, Array[Double], Double, Long, Array[Long])]
-    val sampledVecs =
-      if (skewSampleRate >= 1.0) vecs
-      else vecs.sample(withReplacement = false, skewSampleRate, seed = 421L)
-    cappedBucketPairs[(Long, Array[Double], Double, Long, Array[Long]), Long,
-        (Long, Long, Double)](
-      rowsOf(vecs), rowsOf(sampledVecs), skewSampleRate,
-      t => t._4, t => t._1, bucketCap) { (a, b) =>
-      // emit only in the smallest shared bucket
-      var minShared = Long.MaxValue
-      var i = 0
-      while (i < a._5.length) {
-        val x = a._5(i)
-        var j = 0
-        while (j < b._5.length) {
-          if (b._5(j) == x && x < minShared) minShared = x
-          j += 1
-        }
-        i += 1
-      }
-      if (a._4 != minShared) None
-      else {
-        val va = a._2
-        val vb = b._2
-        var acc = 0.0
-        var t = 0
-        val n = math.min(va.length, vb.length)
-        while (t < n) { acc = acc + va(t) * vb(t); t += 1 }
-        val cos = acc / (a._3 * b._3)
-        if (cos >= thr) Some((a._1, b._1, cos)) else None
-      }
     }
       .toDF("vec_a", "vec_b", "cos")
   }

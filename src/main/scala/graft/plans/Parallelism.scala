@@ -1,6 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 /** Scale-adaptive parallelism widening (optimization guide §2: make
   * partitioning scale-adaptive, never a constant tuned for one shape).
@@ -16,7 +20,9 @@ import org.apache.spark.sql.DataFrame
   * Input contract: BATCH, scan-rooted frames (every call site passes a
   * parquet scan or a checkpointed leaf). Guards for everything else:
   *  - streaming frames pass through untouched (`.rdd` would throw);
-  *  - plans already containing an Exchange pass through untouched — their
+  *  - plans already containing a shuffle or broadcast exchange (found by
+  *    a walk of the prepared physical plan, never by matching its rendered
+  *    text, which also names scan paths) pass through untouched — their
   *    downstream parallelism is the session shuffle width already, and
   *    probing them via `.rdd` would FINALIZE the adaptive plan and execute
   *    its shuffle stages just to read a partition count. For an
@@ -27,17 +33,22 @@ object Parallelism {
 
   def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    // the guard reads the RENDERED initial plan, not sparkPlan: under AQE
-    // exchanges are inserted by the preparation rules (EnsureRequirements
-    // runs inside AdaptiveSparkPlanExec), so sparkPlan never shows them —
-    // while explainString renders the prepared initial plan WITHOUT
-    // finalizing or executing anything. Matching the substring also
-    // catches BroadcastExchange: any joined/aggregated input is beyond
-    // widen's scan-rooted contract and passes through conservatively.
-    val shape = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    if (shape.contains("Exchange")) return df
+    if (hasExchange(df.queryExecution.executedPlan)) return df
     val dp = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < dp) df.repartition(dp) else df
+  }
+
+  /** Whether the prepared physical plan holds a shuffle or broadcast
+    * exchange. Under AQE exchanges are inserted by the preparation rules
+    * inside `AdaptiveSparkPlanExec`, so the walk reads its `initialPlan`
+    * (built at planning time, no job runs) rather than the unfinalized
+    * root. Cached relations and subqueries are walked too: `.rdd` would
+    * execute their shuffle stages just as well.
+    */
+  private def hasExchange(plan: SparkPlan): Boolean = plan.exists {
+    case _: ShuffleExchangeLike | _: BroadcastExchangeLike => true
+    case a: AdaptiveSparkPlanExec => hasExchange(a.initialPlan)
+    case m: InMemoryTableScanExec => hasExchange(m.relation.cachedPlan)
+    case p => p.subqueries.exists(hasExchange)
   }
 }

@@ -32,11 +32,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * re-join to recover payload columns.
   *
   * VARIABLE k ([[TopKPerKey.topKBounded]]): k may instead come from an
-  * integer column that is CONSTANT PER KEY (evaluated on the first row
-  * seen for the key, each phase). This is the PPJoin prefix shape — every
-  * doc keeps its first `L(doc) ≈ (1−τ)·|doc|+1` grams of a global
-  * frequency order — which the window form could only express as a full
-  * per-doc sort followed by a rank filter.
+  * integer column that is CONSTANT PER KEY (checked on every row, each
+  * phase; a NULL, < 1 or disagreeing value fails the job). This is the
+  * PPJoin prefix shape — every doc keeps its first `L(doc) ≈ (1−τ)·|doc|+1`
+  * grams of a global frequency order — which the window form could only
+  * express as a full per-doc sort followed by a rank filter.
   *
   * The reference has no analog (its "top" queries are client-side Python
   * sorts); this is the billion-row-group form the 100 TB target needs.
@@ -55,11 +55,11 @@ object TopKPerKey {
   }
 
   /** Top-k-per-key with PER-KEY k read from integer column `kCol`, which
-    * must be ≥ 1 and CONSTANT within each key group (it is evaluated on
-    * the first row seen for the key in each phase; a NULL or < 1 value
-    * reads as 1). Appends `rank` (1-based, LongType). The caller keeps any
-    * exact rank predicate as a filter over `rank` — the column only needs
-    * to UPPER-BOUND the ranks the caller will keep.
+    * must be ≥ 1 and CONSTANT within each key group: a NULL or < 1 value,
+    * or two rows of one key with different values, fails the job. Appends
+    * `rank` (1-based, LongType). The caller keeps any exact rank predicate
+    * as a filter over `rank` — the column only needs to UPPER-BOUND the
+    * ranks the caller will keep.
     */
   def topKBounded(df: DataFrame, keys: Seq[String],
       orderBy: Seq[(String, Boolean)], kCol: String): DataFrame =
@@ -127,8 +127,9 @@ object TopKPerKeyStrategy extends SparkStrategy {
 /** Shared per-partition heap pass: retain at most k(key) rows per key,
   * ordered by `sortOrder`. The heap is a max-heap on the WORST retained row
   * (reverse of the ranking order), so eviction is O(log k) and a full group
-  * never materializes. `kFor` reads the per-key capacity from the FIRST row
-  * seen for the key (static k = a constant function).
+  * never materializes. `kFor` reads the per-key capacity from every row;
+  * a row whose capacity differs from the one its key's heap was opened
+  * with fails the task (static k = a constant function).
   */
 private[plans] object TopKHeaps {
 
@@ -157,12 +158,15 @@ private[plans] object TopKHeaps {
     while (it.hasNext) {
       val row = it.next()
       val key = keyProj(row)
+      val cap = kFor(row)
       var slot = heaps.get(key)
       if (slot == null) {
-        slot = new Slot(math.max(1, kFor(row)),
+        slot = new Slot(cap,
           new java.util.PriorityQueue[InternalRow](16, reverse))
         heaps.put(key.copy(), slot)
-      }
+      } else if (cap != slot.cap) throw new IllegalArgumentException(
+        s"per-key k disagrees within one key ($cap vs ${slot.cap}): the k " +
+          "column must be constant per key")
       if (slot.heap.size() < slot.cap) { slot.heap.add(row.copy()); held += 1 }
       else if (ordering.compare(row, slot.heap.peek()) < 0) {
         slot.heap.poll()
@@ -188,8 +192,8 @@ private[plans] object TopKHeaps {
     arr
   }
 
-  /** Per-key capacity reader: the bound column on the first row of the
-    * key, clamped to ≥ 1 (NULL reads as 1); static k otherwise.
+  /** Per-key capacity reader: the bound column, which must be non-NULL
+    * and ≥ 1 (anything else fails the task); static k otherwise.
     */
   def capReader(kExpr: Option[Attribute], childOutput: Seq[Attribute],
       k: Int): InternalRow => Int = kExpr match {
@@ -197,7 +201,12 @@ private[plans] object TopKHeaps {
       val proj = UnsafeProjection.create(Seq(e), childOutput)
       row => {
         val r = proj(row)
-        if (r.isNullAt(0)) 1 else math.max(1, r.getInt(0))
+        if (r.isNullAt(0)) throw new IllegalArgumentException(
+          s"per-key k column ${e.name} is NULL: it must be an INT >= 1")
+        val cap = r.getInt(0)
+        if (cap < 1) throw new IllegalArgumentException(
+          s"per-key k column ${e.name} is $cap: it must be an INT >= 1")
+        cap
       }
     case None => _ => k
   }

@@ -17,14 +17,16 @@ import graft.dedup.Dedup
   *  - [[lshTopK]]: random-hyperplane LSH. Signature = sign pattern of dot
   *    products with P fixed hyperplanes → bucket id; candidates are
   *    bucket-equal rows, ranked by true cosine. Sub-linear candidate sets,
-  *    equi-join shuffle keys, tunable recall via P / multi-probe. The
-  *    hyperplanes are derived from a portable arithmetic hash so the DuckDB
-  *    oracle reproduces the *same* planes — the ANN result is approximate
-  *    w.r.t. ground truth but exactly deterministic.
+  *    equi-join shuffle keys, tunable recall via P. The hyperplanes are
+  *    derived from a portable arithmetic hash so the DuckDB oracle
+  *    reproduces the *same* planes — the ANN result is approximate w.r.t.
+  *    ground truth but exactly deterministic.
   */
 object Similarity {
 
-  /** Same fold as `Dedup.tokenHash`, computed driver-side for plane seeds. */
+  /** Portable char hash: left fold (acc*31 + codepoint) % (2^31-1) — the
+    * plane-seed and MinHash-seed hash, mirrored by the DuckDB oracle.
+    */
   def charHash(s: String): Long =
     s.codePoints.toArray.foldLeft(0L)((acc, cp) => (acc * 31 + cp) % Dedup.HashMod)
 
@@ -360,26 +362,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("idot"))
   }
 
-  /** Multi-probe bucket set: the home bucket plus `probes` hamming-1
-    * neighbors obtained by flipping the sign bit of the LOWEST-|margin|
-    * planes — the planes the vector sits closest to, i.e. exactly the ones
-    * a true near-neighbor most plausibly landed on the other side of
-    * (standard multi-probe LSH, public technique). All buckets in the array
-    * are distinct (each flip differs in one bit), so downstream equi-joins
-    * see each (vector, bucket) pair once.
-    */
-  def probeBuckets(v: Column, planes: Int, dims: Int, probes: Int): Column = {
-    require(probes >= 0 && probes < planes, s"probes $probes out of range")
-    val home = lshBucket(v, planes, dims)
-    // (|margin|, plane) sorted ascending: struct order = field order
-    val ranked = array_sort(array((0 until planes).map { p =>
-      struct(abs(planeDot(v, p, dims)).as("m"), lit(p).as("p"))
-    }: _*))
-    val flips = transform(slice(ranked, 1, probes),
-      s => home.bitwiseXOR(pow(lit(2.0), s.getField("p")).cast("long")))
-    concat(array(home), flips)
-  }
-
   /** ANN top-k: candidates restricted to the query's LSH bucket. */
   def lshTopK(
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
@@ -396,30 +378,5 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("bucket"), col("rank"), col("cos"))
-  }
-
-  /** Multi-probe [[lshTopK]]: the corpus stays in home buckets (scanned and
-    * bucketed ONCE — the big side never replicates); each QUERY explodes to
-    * its home bucket plus `probes` hamming-1 buckets on its lowest-|margin|
-    * planes, recovering neighbors that landed just across a hyperplane. A
-    * corpus vector lives in exactly one bucket and a query's probe set is
-    * distinct, so no (query, neighbor) pair can arise twice — no dedup
-    * shuffle. Costs ~(1+probes)× the broadcast query table, nothing more.
-    */
-  def lshTopKMultiProbe(
-      queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, planes: Int, dims: Int, probes: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeBuckets(col(vecCol), planes, dims, probes)).as("bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
-      lshBucket(col(vecCol), planes, dims).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", graft.functions.CosineSimilarity.cosineSim(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
   }
 }

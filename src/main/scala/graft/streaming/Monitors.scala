@@ -118,37 +118,6 @@ object Monitors {
     streamingExactDedup(scrubbed, tsCol, textCol, lateness)
   }
 
-  /** Approximate streaming NEAR-dedup (the streaming face of
-    * `Dedup.lshCandidates`): each incoming doc claims its MinHash band
-    * buckets; `dropDuplicatesWithinWatermark` keeps only the FIRST claim of
-    * each bucket, with state bounded by the watermark horizon. A doc that
-    * claims strictly fewer buckets than it has bands collided with an
-    * earlier doc in ≥1 band — the LSH near-dup signal. Identical docs share
-    * every band key, so exactly one member of an exact-dup cluster claims
-    * all its buckets (spec-asserted); near-dups are flagged with the same
-    * band-collision probability as the batch pipeline. Returns the claim
-    * stream `(doc id, ts, bandKey)`; per-doc verdicts aggregate downstream
-    * (claims == bands → novel).
-    */
-  def streamingBandClaims(
-      docsStream: DataFrame, tsCol: String, idCol: String, textCol: String,
-      bands: Int = 6, rowsPerBand: Int = 2,
-      lateness: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.functions.{array, concat_ws, explode, lit, slice}
-    val sigs = graft.dedup.Dedup.minhashSigsUdf(bands * rowsPerBand)(
-      graft.dedup.Dedup.distinctNgramsUdf(3)(
-        graft.text.TextAnalysis.normalized(col(textCol))))
-    val bandKeys = (0 until bands).map { j =>
-      concat_ws(":", lit(j) +: (0 until rowsPerBand).map(r =>
-        element_at(col("__sigs"), j * rowsPerBand + r + 1)): _*)
-    }
-    docsStream
-      .withColumn("__sigs", sigs)
-      .select(col(idCol), col(tsCol), explode(array(bandKeys: _*)).as("bandKey"))
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark("bandKey")
-  }
-
   /** Open the item table as a stream (file source over the store path). */
   def itemStream(spark: SparkSession, path: String): DataFrame =
     spark.readStream.schema(WorkItem.schema).parquet(path)

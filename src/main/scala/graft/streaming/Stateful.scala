@@ -11,28 +11,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Stateful {
 
-  final case class UserEvent(user_id: Long, event_type: String, value: Double)
-  final case class UserTotals(user_id: Long, n: Long, total: Double)
-
-  /** Running per-user event count + value total (update-mode snapshot per
-    * trigger). State is one small struct per key — bounded by key
-    * cardinality, not stream length.
-    */
-  def runningUserTotals(events: Dataset[UserEvent]): Dataset[UserTotals] = {
-    implicit val totalsEnc = Encoders.product[UserTotals]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, evs: Iterator[UserEvent], state: GroupState[UserTotals]) =>
-          val prev = state.getOption.getOrElse(UserTotals(uid, 0L, 0.0))
-          var n = prev.n
-          var total = prev.total
-          evs.foreach { e => n += 1; total += e.value }
-          val next = UserTotals(uid, n, total)
-          state.update(next)
-          next
-      }
-  }
-
   /** Output mode required by mapGroupsWithState. */
   val outputMode: OutputMode = OutputMode.Update()
 
@@ -42,8 +20,10 @@ object Stateful {
   final case class UserTotalsExact(user_id: Long, n_events: Long,
       total: Double)
 
-  /** [[runningUserTotals]] on the decimal(_,4) grid — the cross-engine-
-    * exact form the `pa_monitor_stream` gate hash-checks: state keeps the
+  /** Running per-user event count + value total on the decimal(_,4) grid
+    * (update-mode snapshot per trigger) — the cross-engine-exact form the
+    * `pa_monitor_stream` gate hash-checks. State is one small struct per
+    * key, bounded by key cardinality, not stream length: it keeps the
     * total as an exact scaled long (integer adds, order-free), and each
     * emission converts once via `BigDecimal.doubleValue` — the same
     * correctly-rounded decimal→double as the batch `sum(decimal(18,4))
@@ -68,319 +48,6 @@ object Stateful {
           state.update(ExactTotalsState(n, scaled))
           UserTotalsExact(uid, n,
             java.math.BigDecimal.valueOf(scaled, 4).doubleValue())
-      }
-  }
-
-  final case class Obs(user_id: Long, event_type: String, event_id: Long,
-      us: Long, value: Double)
-  final case class AnomalyState(ring: Seq[Long])
-  final case class ScoredObs(user_id: Long, event_type: String,
-      event_id: Long, us: Long, value: Double, n_win: Long,
-      z: Option[Double], is_anomaly: Boolean)
-
-  /** Streaming twin of [[graft.analytics.TimeSeries.rollingAnomalies]]:
-    * per-key rolling z-scores via `flatMapGroupsWithState`, state = a ring
-    * of the last `win` observations QUANTIZED to the same decimal(_,4)
-    * grid the batch operator sums (stored as scaled longs; integer sums +
-    * `BigDecimal.doubleValue` reproduce Spark's decimal→double cast
-    * bit-for-bit, which is what makes stream ≡ batch an exact assertion,
-    * not a tolerance). State per key is O(win) longs — bounded regardless
-    * of stream length.
-    *
-    * Events are scored in (us, event_id) order within each micro-batch;
-    * cross-batch order is the source's append order (parity holds when
-    * ingestion is time-ordered, the normal tail-the-log deployment — same
-    * caveat as every mapGroupsWithState pipeline).
-    */
-  def streamingAnomalies(events: Dataset[Obs], win: Int = 20,
-      minObs: Int = 5, zThreshold: Double = 3.0): Dataset[ScoredObs] = {
-    implicit val outEnc = Encoders.product[ScoredObs]
-    implicit val stateEnc = Encoders.product[AnomalyState]
-    def toScaled(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(4, java.math.RoundingMode.HALF_UP)
-        .unscaledValue().longValueExact()
-    def toDoubleAtScale(unscaled: Long, scale: Int): Double =
-      java.math.BigDecimal.valueOf(unscaled, scale).doubleValue()
-    events.groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), evs: Iterator[Obs], state: GroupState[AnomalyState]) =>
-          var ring = state.getOption.map(_.ring.toVector).getOrElse(Vector.empty)
-          val out = evs.toVector.sortBy(e => (e.us, e.event_id)).map { e =>
-            val n = ring.length.toLong
-            val z =
-              if (n >= minObs) {
-                // the scaled ring sums are the batch DECIMAL window sums;
-                // all double arithmetic below copies the batch expression
-                // order exactly
-                val s1 = toDoubleAtScale(ring.sum, 4)
-                // squared scaled values can overflow Long (|v|~7e4 sustained
-                // over the window crosses 2^63); the batch side's DECIMAL
-                // window sums don't, so accumulate in BigInt to keep the
-                // spec-asserted exact stream ≡ batch parity at any magnitude
-                val s2 = new java.math.BigDecimal(
-                  ring.map(x => BigInt(x) * BigInt(x)).sum.bigInteger, 8).doubleValue()
-                val mean = s1 / n
-                val variance = (s2 - s1 * s1 / n) / n
-                if (variance > 0.0) Some((e.value - mean) / math.sqrt(variance))
-                else None
-              } else None
-            ring = (ring :+ toScaled(e.value)).takeRight(win)
-            ScoredObs(e.user_id, e.event_type, e.event_id, e.us, e.value,
-              n, z, z.exists(zv => math.abs(zv) > zThreshold))
-          }
-          state.update(AnomalyState(ring))
-          out.iterator
-      }
-  }
-
-  final case class ShardTok(shard: Int, term: String)
-  final case class MgShardState(keys: Seq[String], counts: Seq[Long], n: Long)
-  final case class MgCandidate(shard: Int, n_shard: Long, term: String, cnt: Long)
-
-  /** Streaming twin of [[graft.text.HeavyHitters]]' candidate pass: a
-    * mergeable Misra–Gries sketch per SHARD maintained across
-    * micro-batches. Shard by a hash of the item (`pmod(hash(term), S)`) so
-    * every occurrence of a term lands in one shard: the per-shard MG
-    * retention bound (every term with shard frequency > n_shard/(cap+1)
-    * survives) then implies the GLOBAL bound, because a term's shard
-    * frequency IS its global frequency and n_shard ≤ n. The union of shard
-    * sketches is therefore a superset of the exact heavy hitters at
-    * threshold n/(cap+1) — same guarantee chain as the batch
-    * `treeAggregate`, with micro-batches playing the role of partitions
-    * (MG updates ARE the stream-merge: processing batch B into state S
-    * equals merging sketch(B) into S at unbounded intermediate capacity,
-    * and the bound survives either way).
-    *
-    * State per shard is O(cap) strings+longs — bounded for the stream's
-    * lifetime; `shards` is the parallelism knob (state ops scale out by
-    * key). Each trigger emits the shard's full snapshot (update mode):
-    * candidates with their lower-bound counters plus the shard's exact
-    * item total `n_shard`, so a downstream exact pass can threshold
-    * against Σ n_shard. Counters are lower bounds within n_shard/(cap+1)
-    * of truth (spec-asserted); the exact verify join stays a batch
-    * concern, exactly as in the two-pass batch operator.
-    */
-  def streamingHeavyHitterCandidates(toks: Dataset[ShardTok],
-      cap: Int): Dataset[MgCandidate] = {
-    implicit val outEnc = Encoders.product[MgCandidate]
-    implicit val stEnc = Encoders.product[MgShardState]
-    toks.groupByKey(_.shard)(Encoders.scalaInt)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (shard: Int, ts: Iterator[ShardTok], state: GroupState[MgShardState]) =>
-          val prev = state.getOption.getOrElse(MgShardState(Nil, Nil, 0L))
-          val m = scala.collection.mutable.HashMap.empty[String, Long]
-          prev.keys.iterator.zip(prev.counts.iterator).foreach { case (k, c) =>
-            m.update(k, c)
-          }
-          var n = prev.n
-          ts.foreach { t =>
-            graft.text.HeavyHitters.mgUpdate(m, t.term, cap)
-            n += 1
-          }
-          val snap = m.toArray
-          state.update(MgShardState(snap.map(_._1).toSeq, snap.map(_._2).toSeq, n))
-          snap.iterator.map { case (k, c) => MgCandidate(shard, n, k, c) }
-      }
-  }
-
-  final case class FunnelEvent(user_id: Long, event_type: String,
-      event_id: Long, us: Long)
-  final case class FunnelState(times: Seq[Long])
-  final case class FunnelProgress(user_id: Long, completed: Int,
-      times: Seq[Long])
-
-  /** Streaming twin of [[graft.analytics.Behavior.userStepTimes]]: per-user
-    * funnel progress via `mapGroupsWithState`. State is the completed-step
-    * timestamp prefix (O(steps) longs per user — bounded by design).
-    * Because events are applied in ascending (us, event_id) order, the
-    * FIRST qualifying event per step is exactly the batch window-min, so
-    * the final state equals the batch per-user step times EXACTLY
-    * (spec-asserted); same ingestion-order caveat as [[streamingAnomalies]].
-    */
-  def streamingFunnel(events: Dataset[FunnelEvent],
-      steps: Seq[String] = graft.analytics.Behavior.GateSteps,
-      windowMicros: Long = graft.analytics.Behavior.GateWindowMicros): Dataset[FunnelProgress] = {
-    implicit val outEnc = Encoders.product[FunnelProgress]
-    implicit val stateEnc = Encoders.product[FunnelState]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, evs: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          var times = state.getOption.map(_.times.toVector).getOrElse(Vector.empty)
-          evs.toVector.sortBy(e => (e.us, e.event_id)).foreach { e =>
-            val k = times.length
-            if (k < steps.length && e.event_type == steps(k) &&
-              (k == 0 || (e.us > times(k - 1) &&
-                e.us <= times.head + windowMicros))) {
-              times = times :+ e.us
-            }
-          }
-          state.update(FunnelState(times))
-          FunnelProgress(uid, times.length, times)
-      }
-  }
-
-  final case class SetElem(set_id: String, elem: String)
-  final case class KmvState(hashes: Seq[Long])
-  final case class KmvSnapshot(set_id: String, n_kept: Int,
-      theta: Option[Long], hashes: Seq[Long])
-
-  /** Streaming twin of the batch KMV sketch build
-    * ([[graft.analytics.Theta.sketch]]): per set, maintain the k smallest
-    * DISTINCT element hashes across micro-batches. State is ≤ k longs per
-    * set — bounded by design, independent of stream length — and the
-    * maintained sketch equals the batch sketch over the same elements
-    * EXACTLY (spec-asserted): min-k of a set is insensitive to arrival
-    * order, so no ingestion-order caveat applies, unlike the ring-buffer
-    * twins above. Emits the post-batch snapshot (k minima ascending +
-    * θ = the k-th, None while the set is still exact).
-    */
-  def streamingKmvSketch(elems: Dataset[SetElem],
-      k: Int = graft.analytics.Theta.K): Dataset[KmvSnapshot] = {
-    implicit val outEnc = Encoders.product[KmvSnapshot]
-    implicit val stEnc = Encoders.product[KmvState]
-    elems.groupByKey(_.set_id)(Encoders.STRING)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (sid: String, es: Iterator[SetElem], state: GroupState[KmvState]) =>
-          val minima = scala.collection.mutable.TreeSet.empty[Long]
-          state.getOption.foreach(_.hashes.foreach(minima.add))
-          es.foreach { e =>
-            val h = graft.analytics.Theta.h60Jvm(e.elem)
-            if (minima.size < k) minima.add(h)
-            else if (h < minima.last && minima.add(h)) minima.remove(minima.last)
-          }
-          val snap = minima.toSeq
-          state.update(KmvState(snap))
-          KmvSnapshot(sid, snap.length,
-            if (snap.length == k) Some(snap.last) else None, snap)
-      }
-  }
-
-  final case class AcObs(key: Long, event_id: Long, us: Long, value: Double)
-  /** Moment accumulators ride as decimal STRINGS: the batch side sums in
-    * DECIMAL(38) and an unbounded stream would overflow any fixed-width
-    * state field; BigInt-as-string is exact at any length and stays
-    * KB-sized (6 numbers + a lag-length ring per key).
-    */
-  final case class AcState(ring: Seq[Long], m: Long, sx: String, sy: String,
-      sxy: String, sxx: String, syy: String)
-  final case class AcSnapshot(key: Long, lag: Long, n_pairs: Long,
-      r: Option[Double])
-
-  /** Streaming twin of [[graft.analytics.TimeSeries.lagAutocorrelation]]
-    * (update mode): per key, a ring of the last `lagK` quantized values
-    * plus exact integer moment accumulators; every trigger emits the
-    * updated (key, lag, n_pairs, r) snapshot, with r computed by the
-    * batch operator's exact expression order (integer→double casts are
-    * IEEE-unique, so the final snapshot equals the batch result
-    * BIT-EXACTLY when ingestion is time-ordered — the ring-twin caveat,
-    * same as [[streamingAnomalies]]). Keys that have not yet produced a
-    * single lag pair emit NOTHING (flatMap, not map): the batch operator
-    * omits keys with fewer than lagK+1 events entirely, so a sparse-key
-    * snapshot would break the final-snapshot ≡ batch claim.
-    *
-    * EMITTED-ROW CONTRACT (changed in r7, audited r8): consumers see a
-    * key's first snapshot only after its (lagK+1)-th event, NOT on every
-    * trigger from the key's first event. No gate or spec in this repo
-    * joins on per-key presence before that point (`StatefulSpec` asserts
-    * final-snapshot ≡ batch, which requires exactly this behavior); a
-    * downstream that needs early per-key liveness should key off the raw
-    * event stream, not this aggregate.
-    */
-  def streamingAutocorrelation(events: Dataset[AcObs],
-      lagK: Int = 1): Dataset[AcSnapshot] = {
-    implicit val outEnc = Encoders.product[AcSnapshot]
-    implicit val stEnc = Encoders.product[AcState]
-    def toScaled(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(4, java.math.RoundingMode.HALF_UP)
-        .unscaledValue().longValueExact()
-    events.groupByKey(_.key)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[AcObs], state: GroupState[AcState]) =>
-          val st = state.getOption.getOrElse(
-            AcState(Seq.empty, 0L, "0", "0", "0", "0", "0"))
-          var ring = st.ring.toVector
-          var m = st.m
-          var sx = BigInt(st.sx); var sy = BigInt(st.sy)
-          var sxy = BigInt(st.sxy); var sxx = BigInt(st.sxx)
-          var syy = BigInt(st.syy)
-          evs.toVector.sortBy(e => (e.us, e.event_id)).foreach { e =>
-            val x = toScaled(e.value)
-            if (ring.length == lagK) {
-              val y = ring.head // the value lagK steps back
-              m += 1
-              sx += x; sy += y
-              sxy += BigInt(x) * BigInt(y)
-              sxx += BigInt(x) * BigInt(x)
-              syy += BigInt(y) * BigInt(y)
-            }
-            ring = (ring :+ x).takeRight(lagK)
-          }
-          state.update(AcState(ring, m, sx.toString, sy.toString,
-            sxy.toString, sxx.toString, syy.toString))
-          val bm = BigInt(m)
-          val num = bm * sxy - sx * sy
-          val dx = bm * sxx - sx * sx
-          val dy = bm * syy - sy * sy
-          val r =
-            if (dx > 0 && dy > 0)
-              // the batch expression order exactly: double(num) /
-              // (sqrt(double(dx)) * sqrt(double(dy)))
-              Some(new java.math.BigDecimal(num.bigInteger).doubleValue() /
-                (math.sqrt(new java.math.BigDecimal(dx.bigInteger).doubleValue()) *
-                  math.sqrt(new java.math.BigDecimal(dy.bigInteger).doubleValue())))
-            else None
-          if (m == 0) Iterator.empty
-          else Iterator.single(AcSnapshot(key, lagK.toLong, m, r))
-      }
-  }
-
-  final case class IntervalRow(key: Long, iid: Long, s: Long, e: Long)
-  final case class CoverageState(starts: Seq[Long], ends: Seq[Long])
-  final case class Coverage(key: Long, n_blocks: Long, covered_us: Long)
-
-  /** Merge `[s, e)` into a sorted, pairwise non-touching block list —
-    * same touch semantics as the batch sweep
-    * ([[graft.analytics.Sessions.intervalCoverage]]: a new block starts
-    * iff `s` strictly exceeds the running max end, so `s == end` merges).
-    */
-  private[streaming] def insertMerge(blocks: Vector[(Long, Long)], s: Long,
-      e: Long): Vector[(Long, Long)] = {
-    val (before, tail) = blocks.span(_._2 < s)
-    val (mid, after) = tail.span(_._1 <= e)
-    val merged =
-      if (mid.isEmpty) (s, e)
-      else (math.min(s, mid.head._1), math.max(e, mid.last._2))
-    (before :+ merged) ++ after
-  }
-
-  /** Streaming twin of [[graft.analytics.Sessions.intervalCoverage]]
-    * (update mode): per key, the merged-interval block list is maintained
-    * incrementally — each arriving interval splices into the sorted
-    * disjoint blocks — and every trigger emits the updated per-key
-    * snapshot (block count + covered micros). Unlike the ring-buffer
-    * twins, NO ingestion-order caveat: interval union is
-    * order-insensitive, so the final snapshot equals the batch sweep over
-    * the same rows exactly (spec-asserted), whatever the batch
-    * boundaries. State per key is the merged block list — bounded by the
-    * key's distinct coverage blocks, not its interval count.
-    */
-  def streamingIntervalCoverage(
-      intervals: Dataset[IntervalRow]): Dataset[Coverage] = {
-    implicit val outEnc = Encoders.product[Coverage]
-    implicit val stEnc = Encoders.product[CoverageState]
-    intervals.groupByKey(_.key)(Encoders.scalaLong)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[IntervalRow], state: GroupState[CoverageState]) =>
-          var blocks = state.getOption
-            .map(st => st.starts.zip(st.ends).toVector)
-            .getOrElse(Vector.empty)
-          rows.foreach { r => blocks = insertMerge(blocks, r.s, r.e) }
-          state.update(CoverageState(blocks.map(_._1), blocks.map(_._2)))
-          Coverage(key, blocks.length.toLong,
-            blocks.iterator.map(b => b._2 - b._1).sum)
       }
   }
 }

@@ -485,16 +485,14 @@ class MainSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/ss")
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
       === Set((1L, 2L)))
-    // --hashed variant agrees
-    Main.run(spark, "corpus", s"$dir/corpus",
-      Map("op" -> "substring", "length" -> "20", "hashed" -> "true",
-        "output" -> s"$dir/ssh"))
-    assert(spark.read.parquet(s"$dir/ssh")
-      .select($"doc_a", $"doc_b", $"n_shared").as[(Long, Long, Long)]
-      .collect().toSet ===
-      spark.read.parquet(s"$dir/ss")
-        .select($"doc_a", $"doc_b", $"n_shared").as[(Long, Long, Long)]
-        .collect().toSet)
+    // the retired --hashed switch fails loudly and writes nothing
+    val hashed = intercept[IllegalArgumentException](
+      Main.run(spark, "corpus", s"$dir/corpus",
+        Map("op" -> "substring", "length" -> "20", "hashed" -> "true",
+          "output" -> s"$dir/ssh")))
+    assert(hashed.getMessage.contains("--hashed") &&
+      hashed.getMessage.contains("substringPairs"), hashed.getMessage)
+    assert(!new java.io.File(s"$dir/ssh").exists())
     // incremental: build the gram index from --corpus, pair a batch
     Main.run(spark, "corpus", s"$dir/batch",
       Map("op" -> "substring", "length" -> "20", "index-dir" -> s"$dir/ssix",

@@ -13,12 +13,9 @@ object GraftProps extends Properties("graft") {
 
   property("charHash stays in [0, 2^31-1) for any string") =
     forAll { (s: String) =>
-      val h = Dedup.charHashJvm(s)
+      val h = Similarity.charHash(s)
       h >= 0L && h < Dedup.HashMod
     }
-
-  property("charHash agrees with the Similarity plane-seed hash") =
-    forAll { (s: String) => Dedup.charHashJvm(s) == Similarity.charHash(s) }
 
   property("plane numerators bounded and deterministic") =
     forAll(Gen.choose(0, 64), Gen.choose(1, 128)) { (p, d) =>

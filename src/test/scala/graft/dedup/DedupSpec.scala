@@ -193,34 +193,6 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.keySet.exists(k => k._1 == 5L || k._2 == 5L))
   }
 
-  test("hash-keyed substring pairs ≡ raw-gram join form on the planted corpus") {
-    val joinForm = Dedup.substringPairs(corpus, "doc_id", "text",
-      DedupSurface.SubstringL)
-      .as[(Long, Long, Long)].collect().toSet
-    val hashed = Dedup.substringPairsHashed(corpus, "doc_id", "text",
-      DedupSurface.SubstringL)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(hashed === joinForm)
-    assert(joinForm.nonEmpty)
-  }
-
-  test("capped substring pairs ≡ join form, including under forced tiny caps") {
-    val joinForm = Dedup.substringPairs(corpus, "doc_id", "text",
-      DedupSurface.SubstringL)
-      .as[(Long, Long, Long)].collect().toSet
-    // full sampling + tiny cap: every shared-gram bucket splits into salt
-    // cells, so the equality exercises diagonal AND cross cells
-    val capped = Dedup.substringPairsCapped(corpus, "doc_id", "text",
-      DedupSurface.SubstringL, bucketCap = 2, skewSampleRate = 1.0)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(capped === joinForm)
-    // default (sampled) configuration agrees too
-    val defaults = Dedup.substringPairsCapped(corpus, "doc_id", "text",
-      DedupSurface.SubstringL)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(defaults === joinForm)
-  }
-
   test("substring pairs find the planted exact and tail-perturbed copies") {
     val pairs = Dedup.substringPairs(corpus, "doc_id", "text",
       DedupSurface.SubstringL)
@@ -388,28 +360,15 @@ class DedupSpec extends SparkSpec {
   test("JVM fast paths are bit-identical to the expression forms") {
     import org.apache.spark.sql.functions._
     val sample = corpus.limit(60)
-    val tokens = array_distinct(split(graft.text.TextAnalysis.normalized($"text"), " "))
     val grams = array_distinct(Dedup.ngrams($"text", 3))
     val mismatches = sample.select(
-        Dedup.simhash16($"text").as("sh_expr"),
-        Dedup.simhash16Udf(tokens).as("sh_udf"),
         Dedup.bandKeys(grams, 6, 2).as("bk_expr"),
         Dedup.bandKeysUdf(6, 2)(grams).as("bk_udf"),
         grams.as("g_expr"),
         Dedup.distinctNgramsUdf(3)(graft.text.TextAnalysis.normalized($"text")).as("g_udf"))
-      .filter($"sh_expr" =!= $"sh_udf" || $"bk_expr" =!= $"bk_udf" ||
-        $"g_expr" =!= $"g_udf")
+      .filter($"bk_expr" =!= $"bk_udf" || $"g_expr" =!= $"g_udf")
       .count()
     assert(mismatches === 0)
-  }
-
-  test("hamming-band simhash pairs are identical to blocked all-pairs (pigeonhole recall 1.0)") {
-    val allPairs = Dedup.simhashPairs(corpus, "doc_id", "text", "lang", 1)
-      .select($"doc_a", $"doc_b", $"hamming").as[(Long, Long, Long)].collect().toSet
-    val banded = Dedup.simhashBandPairs(corpus, "doc_id", "text", "lang", 1)
-      .select($"doc_a", $"doc_b", $"hamming").as[(Long, Long, Long)].collect().toSet
-    assert(banded === allPairs)
-    assert(banded.nonEmpty)
   }
 
   test("48-bit banded simhash equals brute-force within-lang pairs and finds exact copies") {
@@ -483,7 +442,7 @@ class DedupSpec extends SparkSpec {
     val famIx = Dedup.prefixIndex(corpus, "doc_id", "text", 0.8)
     for (df <- Seq(
         Dedup.lshCosinePairs(vecs, "vec_id", "v", 0.999, 8, 64),
-        Dedup.simhashBandPairs(corpus, "doc_id", "text", "lang", 1),
+        Dedup.simhashBandPairs48(corpus, "doc_id", "text", "lang", 3),
         Dedup.lshVerifiedPairs(corpus, "doc_id", "text", 0.5),
         Dedup.ppjoinAgainstFamilyPairs(famIx,
           DedupSurface.incBatch(spark, sf0001), "doc_id", "text", 0.8))) {
@@ -550,57 +509,6 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect()
     assert(comps.length === 1000)
     comps.foreach { case (id, c) => assert(c === 0L, s"vertex $id -> $c") }
-  }
-
-  test("multi-probe cosine LSH recovers plane-straddling near-dups (recall >= 0.95)") {
-    import org.apache.spark.sql.functions._
-    val dims = graft.sim.SimSurface.Dims
-    val planes = graft.sim.SimSurface.Planes
-    // angular perturbation (v + eps*rotated(v)): unlike the corpus's scaled
-    // copies, these CAN land on the far side of a hyperplane
-    val base = graft.Tables.embeddings(spark, sf0001)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
-    val pert = base.select(($"vec_id" + 500000).as("vec_id"),
-      zip_with($"v", concat(slice($"v", 2, dims - 1), slice($"v", 1, 1)),
-        (x, y) => x + lit(0.08) * y).as("v"))
-    val union = base.unionByName(pert)
-    val brute = Dedup.cosinePairs(union, "vec_id", "v", 0.99)
-      .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
-    val planted = brute.filter { case (a, b) => b - a == 500000L }
-    assert(planted.size >= 30, s"weak plant: ${planted.size}")
-    val single = Dedup.lshCosinePairs(union, "vec_id", "v", 0.99, planes, dims)
-      .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
-    val multi = Dedup.lshCosinePairsMultiProbe(
-        union, "vec_id", "v", 0.99, planes, dims, 3)
-      .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
-    assert(multi.subsetOf(brute)) // probing widens candidates, verify stays exact
-    assert(single.subsetOf(multi)) // probing only ever ADDS recall
-    val recallS = planted.intersect(single).size.toDouble / planted.size
-    val recallM = planted.intersect(multi).size.toDouble / planted.size
-    assert(recallM >= 0.95, s"multi-probe recall $recallM (single-probe $recallS)")
-  }
-
-  test("multi-probe lshTopK finds at least the single-probe neighbors, no duplicates") {
-    val vecs = DedupSurface.vecs(spark, sf0001)
-    val queries = vecs.filter($"vec_id" < 10)
-    val sim = graft.sim.Similarity
-    def hits(df: org.apache.spark.sql.DataFrame) =
-      df.select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-    val truth = hits(sim.bruteForceTopK(queries, vecs, "vec_id", "v", 10)).toSet
-    val single = hits(sim.lshTopK(queries, vecs, "vec_id", "v", 10,
-      graft.sim.SimSurface.Planes, graft.sim.SimSurface.Dims))
-    val multi = hits(sim.lshTopKMultiProbe(queries, vecs, "vec_id", "v", 10,
-      graft.sim.SimSurface.Planes, graft.sim.SimSurface.Dims, 3))
-    // a corpus vector lives in ONE bucket and probe sets are distinct, so
-    // no (query, neighbor) pair can appear twice
-    assert(multi.length === multi.toSet.size)
-    val recallS = single.toSet.intersect(truth).size.toDouble / truth.size
-    val recallM = multi.toSet.intersect(truth).size.toDouble / truth.size
-    // ANN against ARBITRARY top-k truth (not planted near-dups) is
-    // legitimately lossy at 8 planes; the operator's claim is that probing
-    // recovers strictly more of it at (1+probes)x candidate cost
-    assert(recallM >= recallS, s"multi $recallM < single $recallS")
-    assert(recallM >= 0.35, s"multi-probe top-k recall $recallM")
   }
 
   test("incremental dedupAgainst: corpus matches, batch-internal clusters, no corpus re-pairing") {
@@ -670,14 +578,6 @@ class DedupSpec extends SparkSpec {
     assert(!contained.keySet.exists { case (a, b) => a == 4L || b == 4L })
   }
 
-  test("simhash is stable on identical text and near on perturbed text") {
-    val sh = corpus.select($"doc_id", Dedup.simhash16($"text").as("sh"))
-      .as[(Long, Long)].collect().toMap
-    assert(sh(0L) === sh(100000L)) // exact copy -> identical simhash
-    val hamming = java.lang.Long.bitCount(sh(5L) ^ sh(200005L))
-    assert(hamming <= 3, s"near copy hamming $hamming")
-  }
-
   test("electByScore keeps the highest-score member, ties to the lowest id") {
     val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L),
       (20L, 20L)).toDF("doc_id", "survivor_id")
@@ -725,30 +625,5 @@ class DedupSpec extends SparkSpec {
     val byDoc = out.as[(Long, Long)].collect().toMap
     assert(byDoc(100000L) === byDoc(0L))
     assert(byDoc(0L) <= 100000L)
-  }
-
-  test("planBands minimizes the S-curve FP+FN area; thresholds steer bands vs rows") {
-    // values verified against an independent integration of
-    // P(s) = 1 - (1 - s^r)^b over the same grid
-    assert(Dedup.planBands(0.5, 12) === ((4, 3)))
-    assert(Dedup.planBands(0.8, 12) === ((2, 6))) // higher t -> more rows
-    assert(Dedup.planBands(0.3, 12) === ((6, 2))) // lower t -> more bands
-    // the gate's hand-tuned (6,2) at t=0.5 is exactly the RECALL-weighted
-    // optimum — the planner makes that trade-off explicit
-    assert(Dedup.planBands(0.5, 12, fnWeight = 0.9) === ((6, 2)))
-    assert(Dedup.planBands(0.5, 12, fnWeight = 0.1) === ((2, 5)))
-    // a bigger budget buys a sharper curve, never a worse plan
-    assert(Dedup.planBands(0.9, 128) === ((5, 25)))
-  }
-
-  test("planned LSH pairs equal the explicit-parameter call") {
-    val (b, r) = Dedup.planBands(0.5, 12)
-    val planned = Dedup.lshVerifiedPairsPlanned(corpus, "doc_id", "text", 0.5)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val explicit = Dedup.lshVerifiedPairs(corpus, "doc_id", "text", 0.5, b, r)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(planned === explicit)
-    // exact copies share every band under any plan
-    assert(planned.contains((0L, 100000L)))
   }
 }

@@ -13,6 +13,20 @@ class ParallelismSpec extends SparkSpec {
     assert(Parallelism.widen(scan).rdd.getNumPartitions === dp)
   }
 
+  test("widen repartitions an under-partitioned scan whose path names Exchange") {
+    // the exchange guard walks the physical plan: a scan path containing
+    // the word is still a bare scan and must be widened
+    val dir = java.nio.file.Files.createTempDirectory("ExchangeRates").toString
+    val path = s"$dir/ExchangeRates.parquet"
+    spark.read.parquet(s"$sf0001/lineitem.parquet").coalesce(1)
+      .write.parquet(path)
+    val scan = spark.read.parquet(path)
+    val dp = spark.sparkContext.defaultParallelism
+    assume(dp > 1)
+    assert(scan.rdd.getNumPartitions === 1)
+    assert(Parallelism.widen(scan).rdd.getNumPartitions === dp)
+  }
+
   test("widen leaves an already-wide input untouched (never coalesces down)") {
     val wide = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .repartition(spark.sparkContext.defaultParallelism * 2)

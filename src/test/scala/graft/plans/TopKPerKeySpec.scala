@@ -128,6 +128,36 @@ class TopKPerKeySpec extends SparkSpec {
     assert(overCap === 0L)
   }
 
+  private def boundedWith(cap: org.apache.spark.sql.Column) =
+    TopKPerKey.topKBounded(scored.withColumn("kcap", cap.cast("int")),
+      Seq("l_orderkey"),
+      Seq(("score", false), ("l_partkey", true), ("l_linenumber", true)),
+      "kcap")
+
+  /** The messages along the cause chain of the job failure. */
+  private def failure(df: org.apache.spark.sql.DataFrame): String = {
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+  }
+
+  test("variable-k: a NULL per-key cap fails loudly instead of reading as 1") {
+    val msg = failure(boundedWith(lit(null)))
+    assert(msg.contains("kcap is NULL"), msg)
+  }
+
+  test("variable-k: a per-key cap below 1 fails loudly instead of clamping") {
+    val msg = failure(boundedWith(lit(0)))
+    assert(msg.contains("kcap is 0"), msg)
+  }
+
+  test("variable-k: rows of one key that disagree on the cap fail loudly") {
+    // every order's first line asks for 1 row, its other lines for 2
+    assume(scored.groupBy($"l_orderkey").count().filter($"count" > 1).count() > 0)
+    val msg = failure(boundedWith(when($"l_linenumber" === 1, 1).otherwise(2)))
+    assert(msg.contains("disagrees within one key"), msg)
+  }
+
   test("strategy resolves through SparkSessionExtensions injection too") {
     // the extensions path registers the same strategy object
     val ext = new org.apache.spark.sql.SparkSessionExtensions

@@ -8,193 +8,6 @@ import graft.SparkSpec
 class StatefulSpec extends SparkSpec {
   import spark.implicits._
 
-  test("mapGroupsWithState running totals match the batch aggregation") {
-    val stream = eventsStream("graft-sf-events")
-      .select($"user_id", $"event_type", $"value")
-      .as[Stateful.UserEvent]
-    val q = Stateful.runningUserTotals(stream)
-      .writeStream.outputMode(Stateful.outputMode)
-      .format("memory").queryName("user_totals")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      // last update per user = final running totals = batch aggregation
-      val streamed = spark.table("user_totals")
-        .groupBy($"user_id")
-        .agg(max($"n").as("n"), max($"total").as("total"))
-        .as[(Long, Long, Double)].collect()
-        .map { case (u, n, t) => u -> ((n, math.round(t * 100))) }.toMap
-      val batch = graft.Tables.events(spark, sf0001)
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n"),
-          sum($"value".cast("decimal(18,4)")).cast("double").as("total"))
-        .as[(Long, Long, Double)].collect()
-        .map { case (u, n, t) => u -> ((n, math.round(t * 100))) }.toMap
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState streaming anomalies ≡ batch rollingAnomalies") {
-    val stream = eventsStream("graft-anom-events")
-      .select($"user_id", $"event_type", $"event_id",
-        unix_micros($"ts").as("us"), $"value")
-      .as[Stateful.Obs]
-    val q = Stateful.streamingAnomalies(stream)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("anom_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("anom_stream")
-        .as[Stateful.ScoredObs].collect()
-        .map(r => (r.user_id, r.event_type, r.event_id) -> r).toMap
-      val batch = graft.analytics.TimeSeries.rollingAnomalies(
-          graft.Tables.events(spark, sf0001),
-          Seq("user_id", "event_type"), "ts", "event_id", "value")
-        .as[(Long, String, Long, Long, Double, Long, Option[Double], Boolean)]
-        .collect()
-        .map(r => (r._1, r._2, r._3) ->
-          Stateful.ScoredObs(r._1, r._2, r._3, r._4, r._5, r._6, r._7, r._8))
-        .toMap
-      assert(streamed.nonEmpty)
-      // exact equality including the double z column: the streaming ring
-      // reproduces the batch decimal window moments bit-for-bit
-      assert(streamed === batch)
-      assert(streamed.values.exists(_.z.isDefined))
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState streaming funnel ≡ batch userStepTimes") {
-    val stream = eventsStream("graft-funnel-events")
-      .select($"user_id", $"event_type", $"event_id",
-        unix_micros($"ts").as("us"))
-      .as[Stateful.FunnelEvent]
-    val q = Stateful.streamingFunnel(stream)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("funnel_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("funnel_stream")
-        .as[Stateful.FunnelProgress].collect()
-        .map(p => p.user_id -> p.times).toMap
-      val batch = graft.analytics.Behavior.userStepTimes(
-          graft.Tables.events(spark, sf0001), "user_id", "ts", "event_type")
-        .as[(Long, Option[Long], Option[Long], Option[Long])].collect()
-        .map { case (u, t0, t1, t2) =>
-          u -> Seq(t0, t1, t2).takeWhile(_.isDefined).flatten
-        }.toMap
-      assert(streamed.nonEmpty)
-      assert(streamed === batch,
-        "streaming funnel state diverges from the batch step times")
-      assert(streamed.values.exists(_.length == 3), "some user converts fully")
-    } finally q.stop()
-  }
-
-  test("streaming MG sketch retains every exact heavy hitter; counters are valid lower bounds") {
-    val k = 64
-    val cap = 2 * k
-    val shards = 8
-    // token stream over the documents table (file stream, one batch per
-    // trigger), sharded by term hash so each term lives in one shard
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docDir = java.nio.file.Files.createTempDirectory("graft-hh-docs")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
-      docDir.resolve("documents.parquet"))
-    val docSchema = spark.read.parquet(docDir.toString).schema
-    val toks = spark.readStream.schema(docSchema).parquet(docDir.toString)
-      .select(graft.text.TextAnalysis.normalized($"text").as("ntext"))
-      .filter($"ntext".isNotNull && $"ntext" =!= "")
-      .select(explode(split($"ntext", " ")).as("term"))
-      .select(pmod(hash($"term"), lit(shards)).cast("int").as("shard"), $"term")
-      .as[Stateful.ShardTok]
-    val q = Stateful.streamingHeavyHitterCandidates(toks, cap)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("hh_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      // final snapshot per shard = the rows at that shard's max n_shard
-      val rows = spark.table("hh_stream")
-        .as[Stateful.MgCandidate].collect()
-      val lastN = rows.groupBy(_.shard).view.mapValues(_.map(_.n_shard).max).toMap
-      val fin = rows.filter(r => r.cnt > 0 && r.n_shard == lastN(r.shard))
-      val candByTerm = fin.map(r => r.term -> r.cnt).toMap
-      assert(fin.map(_.term).distinct.length === fin.length,
-        "a term must appear in exactly one shard's sketch")
-      // per-shard sketch stays within capacity
-      fin.groupBy(_.shard).foreach { case (_, rs) => assert(rs.length <= cap) }
-
-      // exact truth from the batch side
-      val exact = graft.Tables.documents(spark, sf0001)
-        .select(graft.text.TextAnalysis.normalized($"text").as("ntext"))
-        .filter($"ntext".isNotNull && $"ntext" =!= "")
-        .select(explode(split($"ntext", " ")).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .as[(String, Long)].collect().toMap
-      val n = exact.values.sum
-      val nShardByTerm = fin.map(r => r.term -> r.n_shard).toMap
-
-      // retention: every exact heavy hitter above the MG threshold survives
-      val hitters = exact.filter { case (_, c) => c * (cap + 1) > n }.keySet
-      assert(hitters.nonEmpty, "gate data must have at least one heavy hitter")
-      assert(hitters.subsetOf(candByTerm.keySet),
-        s"lost heavy hitters: ${hitters -- candByTerm.keySet}")
-      // counters are lower bounds within n_shard/(cap+1) of the truth
-      candByTerm.foreach { case (t, c) =>
-        val f = exact(t)
-        assert(c <= f, s"MG counter for $t overshoots the exact count")
-        assert(f - c <= nShardByTerm(t) / (cap + 1) + 1,
-          s"MG undercount for $t exceeds the n/(cap+1) bound")
-      }
-      // batch exact operator agrees with thresholding the stream output
-      val batchHitters = graft.text.HeavyHitters.frequentItems(
-          graft.Tables.documents(spark, sf0001)
-            .select(graft.text.TextAnalysis.normalized($"text").as("ntext"))
-            .filter($"ntext".isNotNull && $"ntext" =!= "")
-            .select(explode(split($"ntext", " ")).as("term")).as[String], k)
-        .as[(String, Long)].collect().toMap
-      assert(batchHitters.keySet.subsetOf(candByTerm.keySet),
-        "stream candidate set must cover the exact >n/k answer (cap = 2k)")
-    } finally q.stop()
-  }
-
-  test("streaming KMV sketch ≡ batch Theta.sketch over the same elements") {
-    // per-event-type (user,day) elements — the theta gate's substrate
-    val stream = eventsStream("graft-kmv-events")
-      .select($"event_type".as("set_id"),
-        concat($"user_id".cast("string"), lit(":"),
-          expr("unix_micros(ts) div 86400000000").cast("string")).as("elem"))
-      .as[Stateful.SetElem]
-    val k = 64
-    val q = Stateful.streamingKmvSketch(stream, k)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("kmv_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      // final snapshot per set: minima only shrink, so the latest is the
-      // (n_kept DESC, hashes lexicographically ASC) extremum
-      val streamed = spark.table("kmv_stream")
-        .groupBy($"set_id")
-        .agg(min(struct((-$"n_kept").as("neg"), $"hashes"))
-          .getField("hashes").as("hs"))
-        .as[(String, Seq[Long])].collect().toMap
-      val batchDf = graft.Tables.events(spark, sf0001)
-        .select($"event_type".as("t"),
-          concat($"user_id".cast("string"), lit(":"),
-            expr("unix_micros(ts) div 86400000000").cast("string")).as("e"))
-      val batch = graft.analytics.Theta.sketch(batchDf, "t", "e", k)
-        .groupBy($"set_id").agg(sort_array(collect_list($"h")).as("hs"))
-        .as[(String, Seq[Long])].collect().toMap
-      assert(streamed.nonEmpty)
-      assert(streamed === batch,
-        "maintained k-minima must equal the batch sketch exactly")
-    } finally q.stop()
-  }
-
   test("streaming window(size, slide) ≡ batch hoppingWindowAgg exactly") {
     // the batch operator's doc claims semantic identity with Structured
     // Streaming's window() groupBy — this is that claim, asserted. Same
@@ -226,96 +39,5 @@ class StatefulSpec extends SparkSpec {
       assert(streamed.nonEmpty)
       assert(streamed === batch)
     } finally q.stop()
-  }
-
-  test("streaming interval coverage ≡ batch intervalCoverage sweep exactly") {
-    // intervals derived exactly as the evt_interval_coverage gate derives
-    // them: [ts, ts + value minutes) on the micros grid
-    val toIv = (df: org.apache.spark.sql.DataFrame) => df
-      .select($"user_id".as("key"), $"event_id".as("iid"),
-        unix_micros($"ts").as("s"),
-        (unix_micros($"ts") +
-          ($"value".cast("decimal(18,4)") * 60000000).cast("long")).as("e"))
-      .filter($"e" > $"s")
-    val q = Stateful.streamingIntervalCoverage(
-        toIv(eventsStream("graft-cov-events")).as[Stateful.IntervalRow])
-      .writeStream.outputMode("update")
-      .format("memory").queryName("cov_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      // last update per key: covered_us only grows (union is monotone)
-      val streamed = spark.table("cov_stream")
-        .groupBy($"key")
-        .agg(max(struct($"covered_us", $"n_blocks")).as("m"))
-        .select($"key", $"m.n_blocks", $"m.covered_us")
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      val batch = graft.analytics.Sessions.intervalCoverage(
-          toIv(graft.Tables.events(spark, sf0001)), "key", "s", "e", "iid")
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(streamed.nonEmpty)
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("streaming autocorrelation ≡ batch lagAutocorrelation exactly") {
-    val q = Stateful.streamingAutocorrelation(
-        eventsStream("graft-ac-events")
-          .select($"user_id".as("key"), $"event_id",
-            unix_micros($"ts").as("us"), $"value")
-          .as[Stateful.AcObs], lagK = 1)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("ac_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.processAllAvailable()
-      // final snapshot per key: n_pairs only grows
-      val streamed = spark.table("ac_stream")
-        .groupBy($"key")
-        .agg(max(struct($"n_pairs", $"r")).as("m"))
-        .select($"key", $"m.n_pairs", $"m.r")
-        .as[(Long, Long, Option[Double])].collect()
-        .map(x => x._1 -> ((x._2, x._3))).toMap
-      val batch = graft.analytics.TimeSeries.lagAutocorrelation(
-          graft.Tables.events(spark, sf0001), "user_id", "ts", "event_id",
-          "value", 1)
-        .as[(Long, Long, Long, Option[Double])].collect()
-        .map(x => x._1 -> ((x._3, x._4))).toMap
-      assert(streamed.nonEmpty)
-      // exact, doubles included: the stream reproduces the batch DECIMAL
-      // moments via BigInt and the same final expression order
-      assert(streamed === batch)
-      assert(streamed.values.exists(_._2.isDefined))
-    } finally q.stop()
-  }
-
-  test("insertMerge: splice cases — disjoint, touching, spanning, nesting") {
-    // order-insensitivity is the parity argument; check the splice logic
-    // against the batch semantics on crafted cases
-    val b0 = Vector.empty[(Long, Long)]
-    val b1 = Stateful.insertMerge(b0, 10L, 20L)
-    assert(b1 === Vector((10L, 20L)))
-    // disjoint after / before
-    assert(Stateful.insertMerge(b1, 30L, 40L) === Vector((10L, 20L), (30L, 40L)))
-    assert(Stateful.insertMerge(b1, 0L, 5L) === Vector((0L, 5L), (10L, 20L)))
-    // touching merges (batch: new block iff s > running max end)
-    assert(Stateful.insertMerge(b1, 20L, 25L) === Vector((10L, 25L)))
-    assert(Stateful.insertMerge(b1, 5L, 10L) === Vector((5L, 20L)))
-    // spanning several blocks collapses them
-    val many = Vector((0L, 5L), (10L, 20L), (30L, 40L), (50L, 60L))
-    assert(Stateful.insertMerge(many, 4L, 55L) === Vector((0L, 60L)))
-    // nested inside an existing block: no-op extent
-    assert(Stateful.insertMerge(many, 12L, 15L) === many)
-    // random-order insertion equals sorted-order insertion (order-free)
-    val rnd = new scala.util.Random(42)
-    val ivs = Seq.fill(200)((rnd.nextInt(1000).toLong,
-      rnd.nextInt(50).toLong + 1L)).map { case (s, d) => (s, s + d) }
-    val a = ivs.foldLeft(Vector.empty[(Long, Long)]) {
-      case (acc, (s, e)) => Stateful.insertMerge(acc, s, e) }
-    val b = rnd.shuffle(ivs).foldLeft(Vector.empty[(Long, Long)]) {
-      case (acc, (s, e)) => Stateful.insertMerge(acc, s, e) }
-    assert(a === b)
   }
 }

@@ -61,50 +61,4 @@ class StreamingDedupSpec extends SparkSpec {
         s"expected one survivor of the dup pair + doc 4, got $ids")
     } finally q.stop()
   }
-
-  test("streaming band claims flag near-dup clusters: one full claimant per exact cluster") {
-    val bands = 6
-    val dir = java.nio.file.Files.createTempDirectory("graft-snear").toString + "/src"
-    graft.dedup.DedupSurface.corpus(spark, sf0001)
-      .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:01")))
-      .select($"doc_id", $"ts", $"text")
-      .coalesce(1)
-      .write.parquet(dir)
-    val stream = spark.readStream
-      .schema("doc_id long, ts timestamp, text string").parquet(dir)
-    val q = Monitors.runToMemory(
-      Monitors.streamingBandClaims(stream, "ts", "doc_id", "text", bands),
-      "band_claims", "append")
-    try {
-      val claims = spark.table("band_claims")
-        .groupBy($"doc_id").count().as[(Long, Long)].collect().toMap
-      val docs = graft.dedup.DedupSurface.corpus(spark, sf0001)
-        .select($"doc_id", graft.text.TextAnalysis.normalized($"text").as("nt"))
-        .as[(Long, String)].collect()
-      // each band bucket has exactly ONE claimant globally (the
-      // dropDuplicatesWithinWatermark invariant)
-      val perKey = spark.table("band_claims")
-        .groupBy($"bandKey").count().filter($"count" > 1).count()
-      assert(perKey === 0)
-      // identical texts share every band key -> AT MOST one member of each
-      // exact-dup cluster can claim all its buckets; the others are flagged
-      // (claims < bands). (Zero full claimants happens when an unrelated
-      // doc's colliding bucket claimed one of the cluster's keys first —
-      // still a correct near-dup flag for every member.)
-      val clusters = docs.groupBy(_._2).values.filter(_.length > 1).toSeq
-      assert(clusters.nonEmpty)
-      clusters.foreach { members =>
-        val full = members.map(m => claims.getOrElse(m._1, 0L)).count(_ == bands)
-        assert(full <= 1, s"cluster ${members.map(_._1).mkString(",")}: $full full claimants")
-      }
-      // the dup flag actually fires: every cluster has >= size-1 flagged members
-      val flagged = clusters.map(members =>
-        members.map(m => claims.getOrElse(m._1, 0L)).count(_ < bands))
-      clusters.zip(flagged).foreach { case (members, f) =>
-        assert(f >= members.length - 1)
-      }
-      // every doc is accounted for: claimed buckets never exceed its bands
-      claims.values.foreach(n => assert(n <= bands))
-    } finally q.stop()
-  }
 }
