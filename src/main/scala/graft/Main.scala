@@ -140,6 +140,8 @@ object Main {
   private[graft] def run(spark: SparkSession, verb: String, table: String,
       flags: Map[String, String]): Unit = verb match {
     case "import" =>
+      require(!flags.contains("queue-format"),
+        "import --queue-format is retired: parquet is the one queue layout")
       val items = Importer.importFile(spark,
         flags.getOrElse("input", sys.error("--input is required")),
         flags.getOrElse("delim", "|"),
@@ -163,8 +165,7 @@ object Main {
       flags.get("queue-dir").foreach { qd =>
         graft.store.connector.WorkQueueSource.append(
           fresh.select(col("itemID"), col("taskID"), col("itemState"),
-            col("logLength"), col("nestedTaskCount")), qd,
-          flags.getOrElse("queue-format", "csv"))
+            col("logLength"), col("nestedTaskCount")), qd)
       }
       // import tally (A9 — manager.py:376-399)
       println(s"""{"N": ${ItemStore.load(spark, table).count()}}""")
@@ -420,19 +421,19 @@ object Main {
         flags.getOrElse("files-per-partition", "1").toInt)
       println(s"""{"rows": ${ItemStore.load(spark, table).count()}}""")
     case "queue-compact" =>
-      // rewrite a connector queue dir's data files in --format (parquet by
-      // default): the migration path from the CSV demo layout to the
-      // column-pruned/footer-stat layout without downtime — only the
-      // itemState=<s>/ data files rewrite (the ledger is untouched). The
-      // new layout BUILDS inside the queue dir under a staging subdir
-      // (invisible to the source, which only lists itemState= dirs) and
-      // PUBLISHES by directory rename: any failure before the swap leaves
-      // the live queue byte-identical, the swap itself runs no Spark job
-      // (pure same-device renames), and a failure mid-swap leaves every
-      // row recoverable at the printed staging path — the previous
-      // clear-then-rewrite protocol could crash into an empty queue whose
-      // only copy sat in an unannounced /tmp dir.
-      val fmt = flags.getOrElse("format", "parquet")
+      // rewrite a connector queue dir's data files into fewer parquet files
+      // (repeated imports leave one small file per task behind) without
+      // downtime — only the itemState=<s>/ data files rewrite (the ledger
+      // is untouched). The new layout BUILDS inside the queue dir under a
+      // staging subdir (invisible to the source, which only lists
+      // itemState= dirs) and PUBLISHES by directory rename: any failure
+      // before the swap leaves the live queue byte-identical, the swap
+      // itself runs no Spark job (pure same-device renames), and a failure
+      // mid-swap leaves every row recoverable at the printed staging path
+      // — the previous clear-then-rewrite protocol could crash into an
+      // empty queue whose only copy sat in an unannounced /tmp dir.
+      require(!flags.contains("format"),
+        "queue-compact --format is retired: parquet is the one queue layout")
       val staging = new java.io.File(table,
         s"_compact-staging-${java.util.UUID.randomUUID()}")
       val stagedRows = new java.io.File(staging, "rows").toString
@@ -448,13 +449,11 @@ object Main {
           .write.parquet(stagedRows)
         // 2. build the full new layout off to the side
         graft.store.connector.WorkQueueSource.append(
-          spark.read.parquet(stagedRows), stagedQueue.toString, fmt)
+          spark.read.parquet(stagedRows), stagedQueue.toString)
         // 3. swap: clear each live state dir, rename its staged twin in
-        val stagedDirs = Option(stagedQueue.listFiles()).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith("itemState="))
-        Option(new java.io.File(table).listFiles()).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith("itemState="))
-          .foreach(rmTree)
+        val stagedDirs =
+          graft.store.connector.WorkQueueSource.stateDirs(stagedQueue.toString)
+        graft.store.connector.WorkQueueSource.stateDirs(table).foreach(rmTree)
         stagedDirs.foreach { d =>
           require(d.renameTo(new java.io.File(table, d.getName)),
             s"failed to publish ${d.getName} from staging")
@@ -470,7 +469,7 @@ object Main {
       }
       val n = spark.read.format("graft.store.connector.WorkQueueSource")
         .option("path", table).load().count()
-      println(s"""{"rows": $n, "format": "$fmt"}""")
+      println(s"""{"rows": $n}""")
     case "dedup-index-build" =>
       // build + persist a near-dup corpus index (VersionedTable-backed):
       // --table the corpus parquet, --index the index dir, --kind

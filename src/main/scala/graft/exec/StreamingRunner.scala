@@ -41,13 +41,13 @@ object StreamingRunner {
   }
 
   /** Connector-stream rows widened to the canonical [[WorkItem]] shape so
-    * the dispatchers below can consume a CONNECTOR queue stream directly
-    * (before this adapter they only composed with [[itemStream]]'s full
-    * store schema): the queue-poll projection carries the identity/state
-    * columns the claim and commit machinery needs; payload columns absent
-    * from the queue layout (scripts, logs, dates) ride as typed nulls —
-    * a null `taskScript` with no nested tasks simply yields no processes,
-    * so claim/commit semantics are exercised end to end either way.
+    * [[ledgerDispatcher]] can consume a CONNECTOR queue stream as well as
+    * [[itemStream]]'s full store schema: the queue-poll projection carries
+    * the identity/state columns the claim and commit machinery needs;
+    * payload columns absent from the queue layout (scripts, logs, dates)
+    * ride as typed nulls — a null `taskScript` with no nested tasks simply
+    * yields no processes, so claim/commit semantics are exercised end to
+    * end either way.
     */
   def queueWorkItems(stream: DataFrame): DataFrame = {
     val present = stream.columns.toSet
@@ -57,30 +57,6 @@ object StreamingRunner {
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
   }
-
-  /** foreachBatch dispatcher: run every todo item of the micro-batch,
-    * append updated items to `resultPath` (an ItemStore-shaped table whose
-    * latest row per itemID is the current state). The append is
-    * [[ItemStore.commitBatch]] keyed by `batchId` — foreachBatch is
-    * at-least-once (a crash after the write replays the batch on restart),
-    * and a blind append would record the replayed batch's outcomes twice;
-    * the idempotent commit makes the outcome table exactly-once. A batch
-    * already marked committed skips execution entirely (no re-run of its
-    * scripts either).
-    */
-  def dispatcher(
-      items: DataFrame,
-      resultPath: String,
-      config: Runner.RunConfig = Runner.RunConfig()): DataStreamWriter[org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!ItemStore.batchCommitted(batch.sparkSession, resultPath, batchId)) {
-        val (updated, outcomes) = Runner.processItems(batch, config)
-        try ItemStore.commitBatch(
-          updated.select(WorkItem.schema.fieldNames.map(col): _*), resultPath, batchId)
-        finally { outcomes.unpersist(); () }
-        ()
-      }
-    }
 
   /** The worker's claim → execute → commit loop over a micro-batch
     * stream — the reference's `lockItem`/`verifyItem` loop

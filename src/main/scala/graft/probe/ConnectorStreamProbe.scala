@@ -71,7 +71,7 @@ object ConnectorStreamProbe {
       lit(0L).as("logLength"),
       lit(null).cast("long").as("nestedTaskCount"))
       .repartition(files)
-    WorkQueueSource.append(items, queue, "parquet")
+    WorkQueueSource.append(items, queue)
     val buildS = (System.nanoTime() - t0) / 1e9
 
     // 2. the streaming dispatcher with ledger claims (no takeover: a clean

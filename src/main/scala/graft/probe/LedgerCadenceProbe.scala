@@ -95,7 +95,7 @@ object LedgerCadenceProbe {
       // and quietly restore the locality the control exists to remove
       .repartitionByRange(triggers,
         if (idShape == "random") col("taskID") else col("itemID"))
-    WorkQueueSource.append(items, queue, "parquet")
+    WorkQueueSource.append(items, queue)
     val buildS = (System.nanoTime() - t0) / 1e9
 
     val trigMs = new java.util.concurrent.ConcurrentHashMap[Long, Long]()

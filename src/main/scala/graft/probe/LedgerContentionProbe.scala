@@ -65,7 +65,7 @@ object LedgerContentionProbe {
       lit(0L).as("logLength"),
       lit(null).cast("long").as("nestedTaskCount"))
       .repartitionByRange(triggers, col("itemID"))
-    WorkQueueSource.append(items, queue, "parquet")
+    WorkQueueSource.append(items, queue)
     val buildS = (System.nanoTime() - t0) / 1e9
 
     WorkQueueLedger.claimRetries.reset()

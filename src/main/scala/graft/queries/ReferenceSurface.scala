@@ -15,7 +15,7 @@ object ReferenceSurface {
   private def items(s: SparkSession, d: String) = DerivedItems.items(s, d)
 
   /** One connector-layout materialization of the queue per dataset per JVM,
-    * so the gates below time the DSv2 read path, not a repeated CSV write.
+    * so the gates below time the DSv2 read path, not a repeated queue write.
     */
   private val queueDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def queuePath(s: SparkSession, d: String): String =

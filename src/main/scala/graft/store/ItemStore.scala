@@ -50,17 +50,31 @@ object ItemStore {
   /** Append newly imported items (`put_item` sink, batched — S8). */
   def append(items: DataFrame, path: String): Unit = save(items, path, SaveMode.Append)
 
+  /** Entry check for dispatchers: true iff batch `batchKey` fully
+    * committed (its marker landed) — a replayed batch can then skip claim
+    * + execution, not just the write. Dispatchers that share ONE outcome
+    * store across workers scope the key by claim identity
+    * (`$instance-$batchId`) — every worker's micro-batch numbering starts
+    * at 0, so an unscoped key would let worker B's batch 0 be "already
+    * committed" by worker A's, silently dropping B's outcomes. Keys must
+    * be filename-safe.
+    */
+  def batchCommitted(spark: SparkSession, path: String, batchKey: String): Boolean = {
+    val marker = new Path(new Path(path), s"_graft_commits/batch-$batchKey")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
   /** Exactly-once append for streaming `foreachBatch`: `append` replayed
     * after a post-write crash duplicates the batch (foreachBatch is
     * at-least-once — Spark replays the last uncommitted batch on restart).
-    * This commit is idempotent in `batchId`:
+    * This commit is idempotent in `batchKey`:
     *
-    *  1. a `_graft_commits/batch-<id>` marker short-circuits a replay of a
+    *  1. a `_graft_commits/batch-<key>` marker short-circuits a replay of a
     *     fully committed batch;
     *  2. rows stage to a sibling dir (overwrite mode — a replayed partial
     *     stage just rewrites it; readers of `path` never see staged files);
     *  3. staged files move into the live partition dirs under DETERMINISTIC
-    *     `batch-<id>-part-N` names, deleting any same-batch leftovers first —
+    *     `batch-<key>-part-N` names, deleting any same-batch leftovers first —
     *     so a crash between move and marker re-moves the same names instead
     *     of adding new ones;
     *  4. the marker lands last.
@@ -73,27 +87,6 @@ object ItemStore {
     * that exists to stop double-execution; here the WRITE side gets the same
     * guarantee.
     */
-  /** Entry check for dispatchers: true iff `batchId` fully committed (its
-    * marker landed) — a replayed batch can then skip claim + execution, not
-    * just the write.
-    */
-  def batchCommitted(spark: SparkSession, path: String, batchId: Long): Boolean =
-    batchCommitted(spark, path, batchId.toString)
-
-  /** String-keyed form: dispatchers that share ONE outcome store across
-    * workers scope the key by claim identity (`$instance-$batchId`) —
-    * every worker's micro-batch numbering starts at 0, so an unscoped
-    * key would let worker B's batch 0 be "already committed" by worker
-    * A's, silently dropping B's outcomes. Keys must be filename-safe.
-    */
-  def batchCommitted(spark: SparkSession, path: String, batchKey: String): Boolean = {
-    val marker = new Path(new Path(path), s"_graft_commits/batch-$batchKey")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
-  }
-
-  def commitBatch(items: DataFrame, path: String, batchId: Long): Boolean =
-    commitBatch(items, path, batchId.toString)
-
   def commitBatch(items: DataFrame, path: String, batchKey: String): Boolean = {
     val spark = items.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration

@@ -395,8 +395,8 @@ object VersionedTable {
     * per-column null totals (kept only when EVERY row group reported a
     * valid null count — a single unknown makes the column's total
     * meaningless, so it is dropped rather than understated).
-    * Strings are compared/stored as UTF-8; other types carry no stats
-    * (never pruned on).
+    * Strings are stored as UTF-8 and row groups merge in [[StringOrder]];
+    * other types carry no stats (never pruned on).
     */
   private def footerStats(p: Path,
       conf: org.apache.hadoop.conf.Configuration): (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
@@ -451,9 +451,33 @@ object VersionedTable {
   private def isNumeric(st: org.apache.parquet.column.statistics.Statistics[_]): Boolean =
     st.genericGetMin.isInstanceOf[java.lang.Number]
   private def minOf(a: String, b: String, num: Boolean): String =
-    if (num) { if (a.toLong <= b.toLong) a else b } else { if (a <= b) a else b }
+    if (num) { if (a.toLong <= b.toLong) a else b } else StringOrder.min(a, b)
   private def maxOf(a: String, b: String, num: Boolean): String =
-    if (num) { if (a.toLong >= b.toLong) a else b } else { if (a >= b) a else b }
+    if (num) { if (a.toLong >= b.toLong) a else b } else StringOrder.max(a, b)
+
+  /** Code-point order of strings: the order parquet writes string min/max
+    * in (unsigned UTF-8 bytes) and Spark's `min`/`max` use. Java's `<=` on
+    * String compares UTF-16 code units instead, which disagrees when a
+    * supplementary-plane character meets one in U+E000–U+FFFF, so every
+    * string footer-range prune compares through this order. ASCII strings
+    * compare exactly as in Java's order.
+    */
+  val StringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      var i = 0
+      while (i < a.length && i < b.length) {
+        val ca = a.codePointAt(i)
+        val cb = b.codePointAt(i)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+      }
+      Integer.compare(a.length, b.length)
+    }
+  }
+
+  /** True when a string footer range [mn, mx] may hold a value in [lo, hi]. */
+  def rangeOverlaps(mn: String, mx: String, lo: String, hi: String): Boolean =
+    StringOrder.lteq(mn, hi) && StringOrder.lteq(lo, mx)
 
   // ------------------------------------------------------------- commits
 
@@ -666,7 +690,7 @@ object VersionedTable {
 
   /** String-key variants: the bloom probes [[KeyBloom.stringKey]] (the
     * hash [[attachBlooms]] built string blooms with) and the range check
-    * compares the footer min/max strings lexically — URL / fingerprint /
+    * compares the footer min/max strings in [[StringOrder]] — URL / fingerprint /
     * natural-key point reads without a surrogate id.
     */
   def candidateFilesString(spark: SparkSession, root: String, key: String,
@@ -675,7 +699,7 @@ object VersionedTable {
     val h = KeyBloom.stringKey(value)
     s.files.filter { fe =>
       val rangeHit = (fe.mins.get(key), fe.maxs.get(key)) match {
-        case (Some(mn), Some(mx)) => mn <= value && value <= mx
+        case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, value, value)
         case _ => true
       }
       rangeHit && fe.blooms.get(key).forall(KeyBloom.mightContain(_, h))
@@ -782,7 +806,7 @@ object VersionedTable {
             fe.nullCounts.get(column).contains(0L))
         val (mixed, kept) = rest.partition(fe =>
           (fe.mins.get(column), fe.maxs.get(column)) match {
-            case (Some(mn), Some(mx)) => mn <= value && value <= mx
+            case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, value, value)
             case _ => fe.rows > 0 // no stats: conservatively rewritten
           })
         val _ = pure // dropped purely via the manifest diff below
@@ -816,11 +840,9 @@ object VersionedTable {
     val b = keys.select(col(key).cast("string").as(key))
       .filter(col(key).isNotNull).distinct().cache()
     try {
-      // ONE bounded job instead of two (see rewriteHits). Driver-side
-      // min/max of the collected set ALSO uses the same Java/String
-      // ordering as the footer-stat comparisons below — the agg form
-      // ordered by UTF-8 bytes, which disagrees with the prune
-      // comparisons on supplementary-plane keys (identical on ASCII)
+      // ONE bounded job instead of two (see rewriteHits). The collected
+      // set's min/max, the agg form's and the prune below all use
+      // code-point order (StringOrder), the order of the footer stats
       val probeRows = b.limit(BloomProbeMax + 1).collect()
       if (probeRows.isEmpty) // empty key set: nothing to rewrite, but still
         return commitLoop(spark, root) { parent => // a recorded commit
@@ -830,7 +852,7 @@ object VersionedTable {
       val probe = if (probeRows.length > BloomProbeMax) None
         else Some(probeRows.map(_.getString(0)))
       val (lo, hi) = probe match {
-        case Some(ks) => (ks.min, ks.max)
+        case Some(ks) => (ks.min(StringOrder), ks.max(StringOrder))
         case None =>
           val head = b.agg(min(col(key)), max(col(key))).head()
           (head.getString(0), head.getString(1))
@@ -839,7 +861,7 @@ object VersionedTable {
         val p = parent.getOrElse(sys.error(s"$root does not exist"))
         val (hits, kept) = p.files.partition { fe =>
           fe.rows > 0 && ((fe.mins.get(key), fe.maxs.get(key)) match {
-            case (Some(mn), Some(mx)) => mn <= hi && lo <= mx
+            case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, lo, hi)
             case _ => true // no stats: conservatively rewritten
           }) && (probe match {
             case Some(vals) => fe.blooms.get(key).forall(enc =>

@@ -1,11 +1,10 @@
 package graft.store.connector
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Batch row-insert path for [[WorkQueueSource]] — the write half that makes
   * the connector a full source/sink pair (the reference's batch `put_item`
@@ -13,36 +12,24 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * `itemState=<s>/` layout every read path already scans).
   *
   * Commit protocol (the moral of a DSv2 sink, scaled to the filesystem
-  * demo): each task streams its rows into INVISIBLE temp files (dot-prefix,
-  * no format suffix — readers only pick up `*.csv` / `*.parquet`), the
-  * task's commit message carries the temp paths, and the JOB commit renames
-  * them into visible `part-<query>-<task>-<state>.<fmt>` names —
+  * demo): each task streams its rows into INVISIBLE temp files (dot-prefix
+  * — readers skip dot files), the task's commit message carries the temp
+  * paths, and the JOB commit renames them into visible
+  * `part-<query>-<task>-<state>.parquet` names ([[WorkQueueParquet]]) —
   * same-directory renames, so a reader never observes a torn file and an
   * abort just deletes temps. A re-executed task (speculation, retry) writes
   * fresh temps under its own attempt's UUID; only the committed attempt's
   * files are published.
-  *
-  * `format` option: `csv` (default, the demo layout) or `parquet` — at
-  * 10^8 queue items the CSV layout has no column pruning or footer stats;
-  * parquet files give the scan real projection pushdown and the count
-  * scan a metadata-only row count. Both formats coexist in one queue dir
-  * (readers dispatch per file), so a queue can migrate format by
-  * compaction, not downtime.
   */
-class WorkQueueItemWrite(path: String, schema: StructType, queryId: String,
-    format: String = "csv")
+class WorkQueueItemWrite(path: String, schema: StructType, queryId: String)
     extends WriteBuilder with Write with BatchWrite {
-
-  require(format == "csv" || format == "parquet",
-    s"workqueue item format must be csv or parquet, got $format")
 
   override def build(): Write = this
   override def toBatch: BatchWrite = this
-  override def description(): String =
-    s"WorkQueueItemWrite(path=$path, format=$format)"
+  override def description(): String = s"WorkQueueItemWrite(path=$path)"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ItemWriterFactory(path, schema, queryId, format)
+    new ItemWriterFactory(path, schema, queryId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: ItemCommitMessage => m }.foreach { m =>
@@ -71,37 +58,15 @@ class WorkQueueItemWrite(path: String, schema: StructType, queryId: String,
 final case class ItemCommitMessage(tempFiles: Seq[(String, String)])
     extends WriterCommitMessage
 
-class ItemWriterFactory(path: String, schema: StructType, queryId: String,
-    format: String) extends DataWriterFactory {
+class ItemWriterFactory(path: String, schema: StructType, queryId: String)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ItemWriter(path, schema, queryId, partitionId, taskId, format)
+    new ItemWriter(path, schema, queryId, partitionId, taskId)
 }
 
-/** One open output per itemState directory, format-dispatched. */
-private[connector] sealed trait StateFile {
-  def tmp: String
-  def finalName: String
-  def write(itemID: String, taskID: String, logLength: java.lang.Long,
-      nestedTaskCount: java.lang.Long): Unit
-  def close(): Unit
-}
-
-private[connector] final class CsvStateFile(val tmp: String,
-    val finalName: String) extends StateFile {
-  private val w = Files.newBufferedWriter(Paths.get(tmp), StandardCharsets.UTF_8)
-  override def write(itemID: String, taskID: String, logLength: java.lang.Long,
-      nestedTaskCount: java.lang.Long): Unit = {
-    w.write(WorkQueueCsv.quote(itemID)); w.write(',')
-    w.write(WorkQueueCsv.quote(taskID)); w.write(',')
-    w.write(if (logLength == null) "" else logLength.toString); w.write(',')
-    w.write(if (nestedTaskCount == null) "" else nestedTaskCount.toString)
-    w.write('\n')
-  }
-  override def close(): Unit = w.close()
-}
-
+/** One open output per itemState directory. */
 private[connector] final class ParquetStateFile(val tmp: String,
-    val finalName: String) extends StateFile {
+    val finalName: String) {
   private val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
     .builder(new org.apache.hadoop.fs.Path(tmp))
     .withConf(new org.apache.hadoop.conf.Configuration())
@@ -110,18 +75,17 @@ private[connector] final class ParquetStateFile(val tmp: String,
   private val factory =
     new org.apache.parquet.example.data.simple.SimpleGroupFactory(
       WorkQueueParquet.FileSchema)
-  override def write(itemID: String, taskID: String, logLength: java.lang.Long,
+  def write(itemID: String, taskID: String, logLength: java.lang.Long,
       nestedTaskCount: java.lang.Long): Unit = {
     val g = factory.newGroup()
-    // CSV parity: null strings round-trip as "" in the line layout, so the
-    // parquet cells store the same — format choice must never change values
+    // the string cells are required: a null string is stored as ""
     g.add("itemID", if (itemID == null) "" else itemID)
     g.add("taskID", if (taskID == null) "" else taskID)
     if (logLength != null) g.add("logLength", logLength.longValue())
     if (nestedTaskCount != null) g.add("nestedTaskCount", nestedTaskCount.longValue())
     w.write(g)
   }
-  override def close(): Unit = w.close()
+  def close(): Unit = w.close()
 }
 
 /** Streams rows into one temp file per itemState directory. The stored
@@ -129,14 +93,14 @@ private[connector] final class ParquetStateFile(val tmp: String,
   * nestedTaskCount) — itemState is the directory, never a stored column.
   */
 class ItemWriter(path: String, schema: StructType, queryId: String,
-    partitionId: Int, taskId: Long, format: String = "csv")
+    partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
   private val idx = WorkQueueSource.schema.fieldNames
     .map(n => n -> (if (schema.fieldNames.contains(n)) schema.fieldIndex(n) else -1))
     .toMap
   private val attempt = java.util.UUID.randomUUID().toString
-  private val open = scala.collection.mutable.Map.empty[String, StateFile]
+  private val open = scala.collection.mutable.Map.empty[String, ParquetStateFile]
 
   private def str(row: InternalRow, field: String): String = {
     val i = idx(field)
@@ -155,9 +119,8 @@ class ItemWriter(path: String, schema: StructType, queryId: String,
       Files.createDirectories(dir)
       val base = s"$queryId-$partitionId-$taskId-$attempt"
       val tmp = dir.resolve(s".inprogress-$base").toString
-      val fin = s"part-$base-${WorkQueueSource.escapeToken(state)}.$format"
-      if (format == "parquet") new ParquetStateFile(tmp, fin)
-      else new CsvStateFile(tmp, fin)
+      new ParquetStateFile(tmp,
+        s"part-$base-${WorkQueueSource.escapeToken(state)}.parquet")
     })
     sf.write(str(row, "itemID"), str(row, "taskID"),
       lng(row, "logLength"), lng(row, "nestedTaskCount"))

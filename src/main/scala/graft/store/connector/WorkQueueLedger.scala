@@ -212,7 +212,7 @@ object WorkQueueLedger {
     val (lo, hi) = (mm.getString(0), mm.getString(1))
     val ranged = s.files.filter { fe =>
       fe.rows > 0 && ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) => mn <= hi && lo <= mx
+        case (Some(mn), Some(mx)) => VersionedTable.rangeOverlaps(mn, mx, lo, hi)
         case _ => true // no stats: conservatively kept
       })
     }
@@ -259,7 +259,8 @@ object WorkQueueLedger {
     val hs = ids.filter(_ != null).map(graft.store.KeyBloom.stringKey)
     val files = ranged.filter { fe =>
       ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) => ids.exists(id => mn <= id && id <= mx)
+        case (Some(mn), Some(mx)) =>
+          ids.exists(id => VersionedTable.rangeOverlaps(mn, mx, id, id))
         case _ => true
       }) && fe.blooms.get("itemID").forall(enc =>
         hs.exists(graft.store.KeyBloom.mightContain(enc, _)))

@@ -34,18 +34,10 @@ class WorkQueueMicroBatchStream(path: String, state: Option[String],
     extends MicroBatchStream with SupportsAdmissionControl {
 
   /** Sorted queue-relative file list at this instant, state-dir pruned. */
-  private def listNow(): Seq[String] = {
-    val base = new java.io.File(path)
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
-      .flatMap { dir =>
-        Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile &&
-            (f.getName.endsWith(".csv") || f.getName.endsWith(".parquet")))
-          .map(f => s"${dir.getName}/${f.getName}")
-      }.toSeq.sorted
-  }
+  private def listNow(): Seq[String] =
+    WorkQueueSource.stateDirs(path, state).flatMap { dir =>
+      WorkQueueSource.dataFiles(dir).map(f => s"${dir.getName}/${f.getName}")
+    }.sorted
 
   override def initialOffset(): Offset = WorkQueueOffset(Nil)
 
@@ -81,11 +73,9 @@ class WorkQueueMicroBatchStream(path: String, state: Option[String],
     val req = required
     val idF = id
     new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val p = partition.asInstanceOf[WorkQueuePartition]
-        if (p.file.endsWith(".parquet")) new WorkQueueParquetReader(p, req, idF, None)
-        else new WorkQueueReader(p, req, idF, None)
-      }
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+        new WorkQueueParquetReader(partition.asInstanceOf[WorkQueuePartition],
+          req, idF, None)
     }
   }
 

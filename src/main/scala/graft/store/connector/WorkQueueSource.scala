@@ -17,16 +17,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * source with claim semantics — DataSource V2 with SupportsPushDownFilters
   * covers it without a strategy"). This is the slot a DynamoDB connector
   * plugs into (`spark.read.format(...)`): here backed by state-partitioned
-  * CSV directories (`path/itemState=<s>/` part files) so the pushdown
-  * mechanics —
+  * parquet files (`path/itemState=<escaped>/part-*.parquet`, see
+  * [[WorkQueueParquet]]) so the pushdown mechanics —
   * the moral equivalent of choosing the reference's `ItemStateIndex` GSI
   * (`code/client.py:74-135`) — are real and testable:
   *
   *  - `SupportsPushDownFilters`: an `itemState = 'x'` equality prunes whole
   *    state directories before any file is opened (partition pruning at the
   *    source, like a GSI key-condition).
-  *  - `SupportsPushDownRequiredColumns`: only requested columns are parsed
-  *    (the reference's `ProjectionExpression`, P1).
+  *  - `SupportsPushDownRequiredColumns`: only requested columns leave the
+  *    file (the reference's `ProjectionExpression`, P1).
   *
   * Usage: `spark.read.format("graft.store.connector.WorkQueueSource")
   * .option("path", dir).load()`.
@@ -60,32 +60,59 @@ object WorkQueueSource {
     * THROUGH the connector's own DSv2 write path ([[WorkQueueItemWrite]]) —
     * the sink half of the source/sink pair. Overwrite semantics: existing
     * state directories are cleared first (driver-side, before the job).
-    * itemState must not be null; ids/values with separators round-trip via
-    * RFC-4180 quoting.
+    * itemState must not be null; any other string value round-trips.
     */
-  def write(df: org.apache.spark.sql.DataFrame, path: String,
-      format: String = "csv"): Unit = {
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete()
-        }
-        rm(d)
-      }
-    append(df, path, format)
+  def write(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(); ()
+    }
+    stateDirs(path).foreach(rm)
+    append(df, path)
   }
 
   /** Append rows into the connector's layout through the DSv2 write path.
-    * `format`: `csv` (default) or `parquet` — both readable from one queue
-    * dir, so a layout can migrate formats file by file.
+    * `format` only accepts `parquet`, the one queue layout; any other value
+    * fails instead of being ignored.
     */
   def append(df: org.apache.spark.sql.DataFrame, path: String,
-      format: String = "csv"): Unit =
+      format: String = "parquet"): Unit = {
+    requireParquet("WorkQueueSource.append format", format)
     df.select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
       .write.format("graft.store.connector.WorkQueueSource")
-      .option("path", path).option("format", format).mode("append").save()
+      .option("path", path).mode("append").save()
+  }
+
+  /** Fails a retired format switch that names anything but parquet. */
+  private[connector] def requireParquet(switch: String, format: String): Unit =
+    require(format == "parquet",
+      s"$switch=$format is retired: parquet is the one queue layout")
+
+  /** The queue's state directories (`itemState=<escaped>`) under `path`,
+    * restricted to `state` when one is given. The restriction compares the
+    * DECODED value, so states with escaped characters still prune, and an
+    * unselected state's files are never listed (the GSI key-condition
+    * analog).
+    */
+  def stateDirs(path: String, state: Option[String] = None): Seq[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty).toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
+      .filter(d => state.forall(_ == stateOf(d)))
+
+  /** The `part-*.parquet` data files of one state directory.
+    * Dot-prefixed files (a writer's in-progress temps, checksum sidecars)
+    * are invisible; any other visible file fails with its path, so a queue
+    * left in an older layout is re-imported instead of read as empty.
+    */
+  private[connector] def dataFiles(dir: java.io.File): Seq[java.io.File] = {
+    val visible = Option(dir.listFiles()).getOrElse(Array.empty).toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("."))
+    visible.find(!_.getName.endsWith(".parquet")).foreach { f =>
+      throw new IllegalStateException(s"queue file ${f.getPath} is not " +
+        "parquet, the one queue layout: re-import the queue")
+    }
+    visible
+  }
 
   /** Percent-escape an itemState for its `itemState=<escaped>` directory
     * name, one `%XX` per UTF-8 byte ([[unescapePartitionValue]] decodes
@@ -162,11 +189,11 @@ object WorkQueueSource {
     }
 }
 
-/** Parquet shape of a queue data file (the `format=parquet` write option):
-  * same stored fields and the same CSV value semantics (null strings
-  * round-trip as ""), plus what the line layout cannot give — projection
-  * pushdown into the file and a metadata-only row count for the count
-  * scan.
+/** Parquet shape of a queue data file: the stored fields are (itemID,
+  * taskID, logLength, nestedTaskCount); itemState is the directory. Null
+  * strings are stored and read back as "". Parquet gives the scan
+  * projection pushdown into the file and the count scan a metadata-only
+  * row count.
   */
 object WorkQueueParquet {
   import org.apache.parquet.schema.{MessageType, Types}
@@ -248,8 +275,9 @@ class WorkQueueTable(path: String, tableSchema: StructType = WorkQueueSource.sch
     val fields = info.schema().fieldNames.toSet
     require(fields.contains("itemID") && fields.contains("itemState"),
       s"workqueue write needs an item (itemID, itemState...) schema, got: ${fields.mkString(",")}")
-    new WorkQueueItemWrite(path, info.schema(), info.queryId(),
-      info.options().getOrDefault("format", "csv"))
+    Option(info.options().get("format")).foreach(f =>
+      WorkQueueSource.requireParquet("workqueue write option format", f))
+    new WorkQueueItemWrite(path, info.schema(), info.queryId())
   }
 }
 
@@ -311,8 +339,8 @@ class WorkQueueScanBuilder(path: String,
     required = requiredSchema
 
   /** The monitor's poll — `GROUP BY itemState` + `COUNT(*)` — is answered
-    * from the source without materializing a single item row: one line-count
-    * per state directory (the DynamoDB-connector analog is a per-GSI-key
+    * from the source without materializing a single item row: footer row
+    * counts per state directory (the DynamoDB-connector analog is a per-GSI-key
     * `Select COUNT` query, which DynamoDB serves from the index without
     * returning items). COMPLETE pushdown: the scan emits exactly one
     * pre-aggregated row per state, so Spark plans no aggregate at all over
@@ -347,10 +375,11 @@ class WorkQueueScanBuilder(path: String,
 /** Complete-pushdown scan for `COUNT(*) GROUP BY itemState`: one input
   * partition per (pruned) state directory, each emitting a single
   * `(itemState, count)` row — no row materialization, no Spark-side
-  * aggregate. Without an `itemID` filter the count is a raw line count (no
-  * CSV parsing at all); with one, each line's key field is parsed and only
-  * matches are counted — the reference's per-item state probe is a point
-  * read (`code/client.py:139-159`), and the connector answers it from the
+  * aggregate. Without an `itemID` filter the count is the sum of the
+  * files' footer row counts (no data page is read); with one, each file's
+  * `itemID` column alone is read and only matches are counted — the
+  * reference's per-item state probe is a point read
+  * (`code/client.py:139-159`), and the connector answers it from the
   * index side without shipping rows. A state whose matching count is zero
   * emits NO row (a group-by never invents empty groups).
   */
@@ -367,14 +396,11 @@ class WorkQueueCountScan(path: String, state: Option[String],
     s"WorkQueueCountScan(path=$path, pushedState=$state, pushedId=$id, " +
       "pushedAggregation=count(*) group by itemState)"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val base = new java.io.File(path)
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
-      .map(dir => WorkQueueStatePartition(dir.getAbsolutePath,
-        WorkQueueSource.stateOf(dir)): InputPartition)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    WorkQueueSource.stateDirs(path, state).map(dir =>
+      WorkQueueStatePartition(WorkQueueSource.stateOf(dir),
+        WorkQueueSource.dataFiles(dir).map(_.getAbsolutePath)): InputPartition)
+      .toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val idF = id
@@ -383,41 +409,20 @@ class WorkQueueCountScan(path: String, state: Option[String],
         val p = partition.asInstanceOf[WorkQueueStatePartition]
         new PartitionReader[InternalRow] {
           private var emitted = false
-          private lazy val n: Long =
-            Option(new java.io.File(p.dir).listFiles()).getOrElse(Array.empty)
-              .filter(f => f.isFile &&
-                (f.getName.endsWith(".csv") || f.getName.endsWith(".parquet")))
-              .map { f =>
-                if (f.getName.endsWith(".parquet")) {
-                  idF match {
-                    // footer metadata only — the parquet count never reads
-                    // a data page (the CSV layout must scan every line)
-                    case None => WorkQueueParquet.rowCount(f.getAbsolutePath)
-                    case Some(wanted) =>
-                      // key probe reads exactly one projected column
-                      val r = WorkQueueParquet.open(f.getAbsolutePath, Seq("itemID"))
-                      try {
-                        var c = 0L
-                        var g = r.read()
-                        while (g != null) {
-                          if (g.getFieldRepetitionCount("itemID") > 0 &&
-                            g.getString("itemID", 0) == wanted) c += 1
-                          g = r.read()
-                        }
-                        c
-                      } finally r.close()
-                  }
-                } else {
-                  val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
-                  try {
-                    idF match {
-                      case None => src.getLines().length.toLong
-                      case Some(wanted) => src.getLines().count(line =>
-                        WorkQueueCsv.split(line).headOption.contains(wanted)).toLong
-                    }
-                  } finally src.close()
-                }
-              }.sum
+          private lazy val n: Long = p.files.map { f =>
+            if (idF.isEmpty) WorkQueueParquet.rowCount(f)
+            else {
+              // key probe: the row reader with no output columns reads
+              // only the itemID column and enforces the pushed id
+              val r = new WorkQueueParquetReader(WorkQueuePartition(f, p.state),
+                StructType(Nil), idF)
+              try {
+                var c = 0L
+                while (r.next()) c += 1
+                c
+              } finally r.close()
+            }
+          }.sum
           override def next(): Boolean =
             if (emitted || n == 0L) false
             else {
@@ -433,51 +438,8 @@ class WorkQueueCountScan(path: String, state: Option[String],
   }
 }
 
-final case class WorkQueueStatePartition(dir: String, state: String) extends InputPartition
-
-/** Minimal RFC-4180 field splitter: handles quoted fields and doubled
-  * quotes; enough for round-tripping Spark's default CSV writer output.
-  * Shared between the row reader and the count scan's key probe.
-  */
-object WorkQueueCsv {
-  /** Writer-side field encoding: RFC-4180 quoting for separators/quotes;
-    * newlines are rejected (the layout is line-based — see
-    * [[ItemWriter]]). `split(fields.map(quote).mkString(","))` returns
-    * `fields` for any newline-free input (property-checked).
-    */
-  def quote(s: String): String =
-    if (s == null) ""
-    else {
-      require(!s.exists(c => c == '\n' || c == '\r'),
-        s"queue row values must not embed newlines: ${s.take(40)}...")
-      if (s.exists(c => c == ',' || c == '"'))
-        "\"" + s.replace("\"", "\"\"") + "\""
-      else s
-    }
-
-  def split(line: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuotes = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuotes) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur.append('"'); i += 1 }
-          else inQuotes = false
-        } else cur.append(c)
-      } else c match {
-        case '"' => inQuotes = true
-        case ',' => out += cur.result(); cur.clear()
-        case other => cur.append(other)
-      }
-      i += 1
-    }
-    out += cur.result()
-    out.toArray
-  }
-}
+final case class WorkQueueStatePartition(state: String, files: Seq[String])
+    extends InputPartition
 
 class WorkQueueScan(path: String, state: Option[String], id: Option[String],
     limit: Option[Int], required: StructType,
@@ -495,100 +457,36 @@ class WorkQueueScan(path: String, state: Option[String], id: Option[String],
     s"WorkQueueScan(path=$path, pushedState=$state, pushedId=$id, " +
       s"pushedLimit=$limit, columns=${required.fieldNames.mkString(",")})"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val base = new java.io.File(path)
-    // state equality prunes directories HERE — unselected states are never
-    // listed, the GSI-pushdown analog
-    val stateDirs = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("itemState="))
-      // compare against the UNESCAPED directory value, so pushed filters on
-      // states containing escaped chars still prune correctly
-      .filter(f => state.forall(_ == WorkQueueSource.stateOf(f)))
-    stateDirs.flatMap { dir =>
+  // state equality prunes directories HERE — unselected states are never
+  // listed, the GSI-pushdown analog
+  override def planInputPartitions(): Array[InputPartition] =
+    WorkQueueSource.stateDirs(path, state).flatMap { dir =>
       val st = WorkQueueSource.stateOf(dir)
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile &&
-          (f.getName.endsWith(".csv") || f.getName.endsWith(".parquet")))
+      WorkQueueSource.dataFiles(dir)
         .map(f => WorkQueuePartition(f.getAbsolutePath, st): InputPartition)
-    }
-  }
+    }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val req = required
     val idF = id
     val lim = limit
     new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val p = partition.asInstanceOf[WorkQueuePartition]
-        if (p.file.endsWith(".parquet"))
-          new WorkQueueParquetReader(p, req, idF, lim)
-        else new WorkQueueReader(p, req, idF, lim)
-      }
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+        new WorkQueueParquetReader(partition.asInstanceOf[WorkQueuePartition],
+          req, idF, lim)
     }
   }
 }
 
 final case class WorkQueuePartition(file: String, state: String) extends InputPartition
 
-/** Line-by-line CSV reader emitting only the pruned columns. The data files
-  * hold (itemID, taskID, logLength, nestedTaskCount); itemState comes from
-  * the directory name (a partition value, never stored). Fields are parsed
-  * with quote handling (Spark's CSV writer quotes values containing
-  * delimiter/quote chars) and empty strings decode as null.
-  */
-class WorkQueueReader(partition: WorkQueuePartition, required: StructType,
-    idFilter: Option[String] = None, limit: Option[Int] = None)
-    extends PartitionReader[InternalRow] {
-
-  private val lines =
-    scala.io.Source.fromFile(partition.file)(scala.io.Codec.UTF8) // writer emits UTF-8
-  private val it = lines.getLines()
-  private var current: InternalRow = _
-  private var emitted = 0
-
-  private[connector] def splitCsv(line: String): Array[String] =
-    WorkQueueCsv.split(line)
-
-  private def longOrNull(s: String): java.lang.Long =
-    if (s.isEmpty) null else java.lang.Long.valueOf(s.toLong)
-
-  // pushed itemID equality is enforced HERE (non-matching rows never
-  // materialize), and a pushed limit stops the reader at its per-partition
-  // bound — a satisfied point read parses up to the hit and no further
-  @annotation.tailrec
-  override final def next(): Boolean =
-    if (limit.exists(emitted >= _) || !it.hasNext) false
-    else {
-      val parts = splitCsv(it.next())
-      require(parts.length >= 4, s"malformed queue row in ${partition.file}: ${parts.length} fields")
-      if (idFilter.exists(_ != parts(0))) next()
-      else {
-        val values = required.fields.map { f =>
-          f.name match {
-            case "itemID" => UTF8String.fromString(parts(0))
-            case "taskID" => UTF8String.fromString(parts(1))
-            case "itemState" => UTF8String.fromString(partition.state)
-            case "logLength" => longOrNull(parts(2))
-            case "nestedTaskCount" => longOrNull(parts(3))
-            case other => throw new IllegalArgumentException(s"unknown column $other")
-          }
-        }
-        current = InternalRow.fromSeq(values.toSeq)
-        emitted += 1
-        true
-      }
-    }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = lines.close()
-}
-
-/** Parquet twin of [[WorkQueueReader]]: the projection the scan pruned is
-  * handed to parquet-mr, so unread columns never leave the file — the
-  * pruning the CSV layout can only fake (it must parse every line whole).
-  * itemState still comes from the directory; the pushed itemID equality
-  * and limit are enforced while iterating, same as the CSV path.
+/** Row reader over one queue parquet file: the projection the scan
+  * pruned is handed to parquet-mr, so unread columns never leave the file.
+  * itemState comes from the directory (a partition value, never stored);
+  * the pushed itemID equality is enforced while iterating (non-matching
+  * rows never materialize), and a pushed limit stops the reader at its
+  * per-partition bound — a satisfied point read reads up to the hit and
+  * no further.
   */
 class WorkQueueParquetReader(partition: WorkQueuePartition,
     required: StructType, idFilter: Option[String] = None,

@@ -69,9 +69,9 @@ class MainSpec extends SparkSpec {
       .filter(_.getName.startsWith(".inprogress"))
     assert(leftovers.isEmpty, leftovers.mkString(","))
 
-    // queue-compact migrates the data files to parquet with identical rows
-    // (no downtime — the CSV->columnar path)
-    Main.run(spark, "queue-compact", qdir, Map("format" -> "parquet"))
+    // queue-compact rewrites the data files with identical rows (no
+    // downtime: staged off to the side, published by rename)
+    Main.run(spark, "queue-compact", qdir, Map.empty)
     val migrated = spark.read.format("graft.store.connector.WorkQueueSource")
       .option("path", qdir).load()
       .select($"itemID", $"itemState", $"logLength", $"nestedTaskCount")
@@ -89,6 +89,26 @@ class MainSpec extends SparkSpec {
       .getOrElse(Array.empty)
       .filter(_.getName.startsWith("_compact-staging-"))
     assert(staleStaging.isEmpty, staleStaging.mkString(","))
+  }
+
+  test("retired queue format flags fail loudly: import --queue-format, " +
+      "queue-compact --format") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cli-qfmt").toString
+    def assertRetired(e: IllegalArgumentException, flag: String): Unit =
+      assert(e.getMessage.contains(flag) &&
+        e.getMessage.contains("parquet is the one queue layout"), e.getMessage)
+    val imported = Map("input" -> writeFixture(), "delim" -> "|",
+      "nested-delim" -> ",", "queue-dir" -> s"$base/q")
+    // even naming the one layout is refused: the flag itself is gone
+    assertRetired(intercept[IllegalArgumentException](Main.run(spark, "import",
+      s"$base/t", imported + ("queue-format" -> "parquet"))), "--queue-format")
+    assert(!new java.io.File(s"$base/t").exists() &&
+      !new java.io.File(s"$base/q").exists(), "nothing runs before the check")
+    Main.run(spark, "import", s"$base/t", imported)
+    assertRetired(intercept[IllegalArgumentException](Main.run(spark,
+      "queue-compact", s"$base/q", Map("format" -> "csv"))), "--format")
+    assert(spark.read.format("graft.store.connector.WorkQueueSource")
+      .option("path", s"$base/q").load().count() === 2)
   }
 
   test("work verb: streaming worker drains a queue with ledger claims, exactly once") {

@@ -107,15 +107,4 @@ object GraftProps extends Properties("graft") {
       heavy.forall(whole.contains) && heavy.forall(merged.contains) &&
         whole.size <= cap && merged.size <= cap
     }
-
-  property("workqueue CSV quote/split round-trips any newline-free fields") = {
-    val field = Gen.listOf(Gen.oneOf(
-      Gen.alphaNumChar, Gen.oneOf(',', '"', ' ', '%', '|', '\t', '=')))
-      .map(_.mkString)
-    forAll(Gen.nonEmptyListOf(field)) { fields =>
-      val line = fields
-        .map(graft.store.connector.WorkQueueCsv.quote).mkString(",")
-      graft.store.connector.WorkQueueCsv.split(line).toList == fields
-    }
-  }
 }

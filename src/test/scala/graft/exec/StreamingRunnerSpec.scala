@@ -21,8 +21,9 @@ class StreamingRunnerSpec extends SparkSpec {
     val results = dir.toPath.resolve("results").toString
     ItemStore.save(Importer.importFile(spark, f.getAbsolutePath, "|", Some(",")), store)
 
-    val q = StreamingRunner.dispatcher(
-      StreamingRunner.itemStream(spark, store), results)
+    val q = StreamingRunner.ledgerDispatcher(
+      StreamingRunner.itemStream(spark, store), results,
+      dir.toPath.resolve("ledger").toString, "t1")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", dir.toPath.resolve("ckpt").toString)
       .start()
@@ -44,14 +45,17 @@ class StreamingRunnerSpec extends SparkSpec {
     def rows(ids: (String, String)*) = ids.toSeq.toDF("itemID", "itemState")
       .selectExpr("itemID", "itemID AS taskID", "itemState",
         "CAST(null AS LONG) AS logLength", "CAST(null AS LONG) AS nestedTaskCount")
-    // two appends → at least two todo data files; a done file is POISONED
-    // (malformed row): with state-dir pruning it is never listed, never
-    // opened — the stream would throw otherwise
+    // two appends → at least two todo data files; the done directory is
+    // POISONED: listing it fails on the non-parquet file, opening its
+    // parquet-named file fails on the garbage bytes. With state-dir pruning
+    // it is never listed, never opened — the stream would throw otherwise
     WorkQueueSource.append(rows("A" -> "todo", "B" -> "todo").coalesce(1), queue)
     WorkQueueSource.append(rows("C" -> "todo").coalesce(1), queue)
     val doneDir = new java.io.File(queue, "itemState=done"); doneDir.mkdirs()
     java.nio.file.Files.writeString(
       new java.io.File(doneDir, "poison.csv").toPath, "only,three,fields\n")
+    java.nio.file.Files.writeString(
+      new java.io.File(doneDir, "poison.parquet").toPath, "not parquet\n")
 
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -94,20 +98,20 @@ class StreamingRunnerSpec extends SparkSpec {
       .selectExpr("cast(id as string) as itemID", "'done' as itemState")
     def count() = spark.read.parquet(store).count()
 
-    assert(ItemStore.commitBatch(batch(5), store, 0L))
+    assert(ItemStore.commitBatch(batch(5), store, "0"))
     assert(count() === 5)
     // straight replay (crash after marker): short-circuits, no second copy
-    assert(!ItemStore.commitBatch(batch(5), store, 0L))
+    assert(!ItemStore.commitBatch(batch(5), store, "0"))
     assert(count() === 5)
     // crash BETWEEN file publish and marker: delete the marker to simulate,
     // replay must converge to one copy (deterministic names replace, not add)
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(store, "_graft_commits/batch-0"), false)
-    assert(ItemStore.commitBatch(batch(5), store, 0L))
+    assert(ItemStore.commitBatch(batch(5), store, "0"))
     assert(count() === 5)
     // a NEW batch still appends
-    assert(ItemStore.commitBatch(batch(3), store, 1L))
+    assert(ItemStore.commitBatch(batch(3), store, "1"))
     assert(count() === 8)
   }
 
@@ -122,24 +126,27 @@ class StreamingRunnerSpec extends SparkSpec {
     val results = dir.toPath.resolve("results").toString
     ItemStore.save(Importer.importFile(spark, f.getAbsolutePath, "|", Some(",")), store)
 
-    val q = StreamingRunner.dispatcher(
-      StreamingRunner.itemStream(spark, store), results)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", dir.toPath.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val ckpt = dir.toPath.resolve("ckpt").toFile
+    def drain(): Unit = {
+      val q = StreamingRunner.ledgerDispatcher(
+        StreamingRunner.itemStream(spark, store), results,
+        dir.toPath.resolve("ledger").toString, "replay")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain()
     assert(ItemStore.load(spark, results).count() === 1)
 
-    // simulate the at-least-once replay foreachBatch performs after a
-    // crash between the outcome write and the checkpoint commit: invoke the
-    // same micro-batch body again with the same batchId
-    val replayed = ItemStore.load(spark, store)
-    if (!ItemStore.batchCommitted(spark, results, 0L)) {
-      val (updated, outcomes) = Runner.processItems(replayed)
-      try ItemStore.commitBatch(
-        updated.select(graft.model.WorkItem.schema.fieldNames.map(col): _*), results, 0L)
-      finally { outcomes.unpersist(); () }
-    }
+    // the at-least-once replay foreachBatch performs after a crash between
+    // the outcome write and the checkpoint commit: drop batch 0's commit
+    // record, and the restarted query runs batch 0 again
+    val commit0 = new java.io.File(ckpt, "commits/0")
+    assert(commit0.delete())
+    new java.io.File(ckpt, "commits/.0.crc").delete()
+    drain()
+    assert(commit0.exists(), "the restart must replay batch 0")
     val out = ItemStore.load(spark, results)
     assert(out.count() === 1, "replayed batch must not duplicate outcomes")
     assert(out.select($"itemState").as[String].head() === "done")

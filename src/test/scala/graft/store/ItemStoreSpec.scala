@@ -105,7 +105,7 @@ class ItemStoreSpec extends SparkSpec {
       .selectExpr("cast(id as string) as itemID", s"'$state' as itemState")
     // 6 micro-batches -> >= 6 data files across the state partitions
     (0L until 6L).foreach { b =>
-      ItemStore.commitBatch(batch(10, if (b % 2 == 0) "done" else "todo"), p, b)
+      ItemStore.commitBatch(batch(10, if (b % 2 == 0) "done" else "todo"), p, b.toString)
     }
     def dataFiles() = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
       .filter(f => f.toString.endsWith(".parquet")).count()
@@ -119,7 +119,7 @@ class ItemStoreSpec extends SparkSpec {
 
     // exactly-once SURVIVES compaction: a replayed committed batch is
     // still a no-op even though its named files were compacted away
-    assert(!ItemStore.commitBatch(batch(10, "done"), p, 0L))
+    assert(!ItemStore.commitBatch(batch(10, "done"), p, "0"))
     assert(spark.read.parquet(p).count() === 60)
   }
 }

@@ -251,4 +251,92 @@ class VersionedTableSpec extends SparkSpec {
     // files of v1 still on disk (not vacuumed) — the pinned plan still reads v1
     assert(pinned.as[(Long, String)].collect().toSeq === Seq((1L, "a")))
   }
+
+  // "a\uFF01" (fullwidth '!') sorts BEFORE "a\uD83D\uDE00" (an emoji, one
+  // supplementary-plane code point) in code-point / UTF-8 byte order — the
+  // order of parquet's footer min/max — but AFTER it in Java's UTF-16
+  // order, where the emoji is a surrogate pair starting at 0xD83D
+  private val (fw, emoji) = ("a\uFF01", "a\uD83D\uDE00")
+
+  /** One table file holding rows (1, fw) and (2, emoji), its footer
+    * range (fw, emoji).
+    */
+  private def mixedOrderTable(): String = {
+    val root = tmp()
+    VersionedTable.create(spark, root,
+      Seq(("1", fw), ("2", emoji)).toDF("id", "k").coalesce(1))
+    val ranges = VersionedTable.snapshot(spark, root).files
+      .map(f => (f.mins("k"), f.maxs("k")))
+    assert(ranges === Seq((fw, emoji)), "fixture: one file ranging fw..emoji")
+    root
+  }
+
+  test("string point lookups find keys whose UTF-16 and code-point orders differ") {
+    val root = mixedOrderTable()
+    Seq(fw, emoji).foreach { k =>
+      assert(VersionedTable.candidateFilesString(spark, root, "k", k).size === 1, k)
+      assert(VersionedTable.pointLookupString(spark, root, "k", k)
+        .select($"k").as[String].collect().toSeq === Seq(k), k)
+    }
+  }
+
+  test("deleteByKeysString deletes keys whose UTF-16 and code-point orders " +
+      "differ, under and over the bloom-probe cap") {
+    // under the cap: lo/hi come from the collected keys
+    val under = mixedOrderTable()
+    VersionedTable.deleteByKeysString(spark, under, Seq(emoji).toDF("k"), "k")
+    assert(VersionedTable.read(spark, under).select($"k").as[String]
+      .collect().toSeq === Seq(fw))
+    // over the cap: lo/hi come from a Spark min/max aggregate
+    val over = mixedOrderTable()
+    val keys = spark.range(0, VersionedTable.BloomProbeMax + 1)
+      .select(format_string("k%05d", $"id").as("k"))
+      .union(Seq(fw).toDF("k"))
+    VersionedTable.deleteByKeysString(spark, over, keys, "k")
+    assert(VersionedTable.read(spark, over).select($"k").as[String]
+      .collect().toSeq === Seq(emoji))
+  }
+
+  test("deleteStringEquals rewrites a mixed file whose range holds the value " +
+      "only in code-point order") {
+    val root = mixedOrderTable()
+    assert(VersionedTable.deleteStringEquals(spark, root, "k", fw, "del-fw"))
+    assert(VersionedTable.read(spark, root).as[(String, String)]
+      .collect().toSeq === Seq(("2", emoji)))
+  }
+
+  test("footer stats merge string row-group extremes in code-point order") {
+    val root = tmp()
+    // one row per row group: the file's range is the merge of two groups
+    spark.conf.set("parquet.block.row.count.limit", "1")
+    try VersionedTable.create(spark, root,
+      Seq(("1", fw), ("2", emoji)).toDF("id", "k").coalesce(1))
+    finally spark.conf.unset("parquet.block.row.count.limit")
+    val Seq(file) = VersionedTable.snapshot(spark, root).files
+    val groups = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$root/${file.path}"),
+        spark.sparkContext.hadoopConfiguration))
+    try assert(groups.getRowGroups.size === 2, "fixture: two row groups")
+    finally groups.close()
+    assert((file.mins("k"), file.maxs("k")) === ((fw, emoji)))
+    assert(VersionedTable.pointLookupString(spark, root, "k", emoji)
+      .count() === 1)
+  }
+
+  test("StringOrder is code-point order: it agrees with UTF-8 byte order") {
+    val order = VersionedTable.StringOrder
+    assert(order.lt(fw, emoji) && fw > emoji)
+    assert(order.lt("a", "b") && order.lt("ab", "abc") && order.equiv("x", "x"))
+    val rnd = new scala.util.Random(7)
+    val pool = Seq("a", "z", "\u00E9", "\uFF01", "\uE000", "\uD83D\uDE00",
+      "\uD800\uDC00", "\uFFFF")
+    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    for (_ <- 1 to 500) {
+      val Seq(a, b) = Seq.fill(2)(Seq.fill(rnd.nextInt(4))(
+        pool(rnd.nextInt(pool.size))).mkString)
+      assert(math.signum(order.compare(a, b)) === math.signum(
+        java.util.Arrays.compareUnsigned(bytes(a), bytes(b))), s"$a vs $b")
+    }
+  }
 }

@@ -157,6 +157,21 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(won(WorkQueueLedger.notDone(spark, root, ids("zz"))) === Set("zz"))
   }
 
+  test("notDone drops done ids whose UTF-16 and code-point orders differ") {
+    val done = tmp() + "-done"
+    // "a\uFF01" sorts before the emoji "a\uD83D\uDE00" in code-point order
+    // (parquet's footer order) and after it in Java's UTF-16 order
+    val (fw, emoji) = ("a\uFF01", "a\uD83D\uDE00")
+    assert(WorkQueueLedger.markDone(spark, done, ids(fw, emoji).coalesce(1), "t-0"))
+    assert(VersionedTable.snapshot(spark, done).files.filter(_.rows > 0)
+      .map(f => (f.mins("itemID"), f.maxs("itemID"))) === Seq((fw, emoji)),
+      "fixture: one done file ranging fw..emoji")
+    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, ids(emoji))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw, emoji))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw, emoji, "b"))) === Set("b"))
+  }
+
   test("ledgerDispatcher end-to-end over a connector queue: exactly-once outcomes") {
     import graft.exec.StreamingRunner
     val dir = java.nio.file.Files.createTempDirectory("graft-leddisp").toFile

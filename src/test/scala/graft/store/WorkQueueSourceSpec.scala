@@ -21,6 +21,12 @@ class WorkQueueSourceSpec extends SparkSpec {
     .option("path", path).load()
 
   test("connector round-trips the queue with correct values") {
+    // the write published parquet part files only: no in-progress temps
+    val files = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("itemState=")).flatMap(_.listFiles())
+    assert(files.nonEmpty && files.forall(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")),
+      files.map(_.getName).mkString(","))
     val viaConnector = queue.select($"itemID", $"itemState", $"logLength")
       .as[(String, String, Long)].collect().toSet
     val direct = DerivedItems.items(spark, sf0001)
@@ -122,86 +128,81 @@ class WorkQueueSourceSpec extends SparkSpec {
     assert(q.collect().isEmpty)
   }
 
-  test("item sink: separators round-trip, embedded newlines fail loudly") {
+  test("item sink: separators, nulls and embedded newlines round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("graft-queue-sink").toString + "/q"
     val rows = Seq(
       ("id,with,commas", "task\"quoted\"", "todo", 3L, Some(5L)),
-      ("plain", "t1", "s,tate", 0L, None))
+      ("plain", null.asInstanceOf[String], "s,tate", 0L, None),
+      ("id\nnew\r\nline", "t\nx", "to\ndo", 1L, Some(0L)))
       .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount")
     WorkQueueSource.write(rows, dir)
     val back = spark.read.format("graft.store.connector.WorkQueueSource")
       .option("path", dir).load()
       .as[(String, String, String, Long, Option[Long])].collect().toSet
+    // a null string is stored and read back as ""; a null count stays null
     assert(back === Set(
       ("id,with,commas", "task\"quoted\"", "todo", 3L, Some(5L)),
-      ("plain", "t1", "s,tate", 0L, None)))
-    // a newline in a value cannot round-trip a line-based layout: reject
-    val bad = Seq(("id\nnewline", "t", "todo", 0L, Some(0L)))
-      .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount")
-    val e = intercept[Exception](WorkQueueSource.write(bad, dir + "2"))
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(e).exists(c =>
-      Option(c.getMessage).exists(_.contains("must not embed newlines"))), e.toString)
+      ("plain", "", "s,tate", 0L, None),
+      ("id\nnew\r\nline", "t\nx", "to\ndo", 1L, Some(0L))))
   }
 
-  test("format=parquet: round-trip, pushdown and metadata count match the CSV layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-queue-pq").toString + "/q"
-    val items = DerivedItems.items(spark, sf0001)
-      .select($"itemID", $"taskID", $"itemState", $"logLength", $"nestedTaskCount")
-    WorkQueueSource.write(items, dir, format = "parquet")
-    // only parquet data files landed, none invisible/in-progress
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("itemState=")).flatMap(_.listFiles())
-      .filterNot(_.getName.startsWith("."))
-    assert(files.nonEmpty && files.forall(_.getName.endsWith(".parquet")),
-      files.map(_.getName).mkString(","))
-    val pq = spark.read.format("graft.store.connector.WorkQueueSource")
+  test("retired format switches fail loudly: append's format and the DSv2 " +
+      "format write option") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-queue-fmt").toString + "/q"
+    val rows = Seq(("i1", "t1", "todo", 0L, Option.empty[Long]))
+      .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount")
+    val viaAppend = intercept[IllegalArgumentException](
+      WorkQueueSource.append(rows, dir, "csv"))
+    assert(viaAppend.getMessage.contains("append format=csv") &&
+      viaAppend.getMessage.contains("parquet is the one queue layout"),
+      viaAppend.getMessage)
+    val viaOption = intercept[Exception](rows.write
+      .format("graft.store.connector.WorkQueueSource")
+      .option("path", dir).option("format", "csv").mode("append").save())
+    val messages = Iterator.iterate[Throwable](viaOption)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("write option format=csv") &&
+      m.contains("parquet is the one queue layout")), messages.mkString(" | "))
+    assert(!new java.io.File(dir).exists(), "a refused write writes nothing")
+    // naming the one layout is still accepted
+    WorkQueueSource.append(rows, dir, "parquet")
+    assert(spark.read.format("graft.store.connector.WorkQueueSource")
+      .option("path", dir).load().count() === 1)
+  }
+
+  test("a visible non-parquet file in a state directory fails the batch scan, " +
+      "the count scan and the stream; dot-prefixed temps stay invisible") {
+    val base = java.nio.file.Files.createTempDirectory("graft-queue-old").toFile
+    val dir = new java.io.File(base, "q").toString
+    WorkQueueSource.write(Seq(("i1", "t1", "todo", 0L, Option.empty[Long]))
+      .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount"), dir)
+    val todo = new java.io.File(dir, "itemState=todo")
+    // an in-progress temp of a live writer is not part of the queue
+    java.nio.file.Files.writeString(
+      new java.io.File(todo, ".inprogress-x").toPath, "not parquet")
+    def load() = spark.read.format("graft.store.connector.WorkQueueSource")
       .option("path", dir).load()
-    // identical values to the CSV layout of the same rows
-    assert(pq.select($"itemID", $"itemState", $"logLength")
-        .as[(String, String, Long)].collect().toSet ===
-      queue.select($"itemID", $"itemState", $"logLength")
-        .as[(String, String, Long)].collect().toSet)
-    // pushdown surface identical: state prune + point lookup + limit
-    val anyId = items.filter($"itemState" === "todo")
-      .select($"itemID").as[String].head()
-    val point = pq.filter($"itemState" === "todo" && $"itemID" === anyId)
-      .select($"itemID").limit(1)
-    val plan = point.queryExecution.executedPlan.toString
-    assert(plan.contains("pushedState=Some(todo)") &&
-      plan.contains(s"pushedId=Some($anyId)") &&
-      plan.contains("pushedLimit=Some(1)"), plan.take(800))
-    assert(point.as[String].head() === anyId)
-    // complete count pushdown answers from parquet footers
-    val counts = pq.groupBy($"itemState").count()
-    assert(counts.queryExecution.executedPlan.toString.contains("WorkQueueCountScan"))
-    assert(counts.as[(String, Long)].collect().toMap ===
-      items.groupBy($"itemState").count().as[(String, Long)].collect().toMap)
-    // ... and honors a pushed itemID filter
-    assert(pq.filter($"itemID" === anyId).groupBy($"itemState").count()
-      .as[(String, Long)].collect().toMap === Map("todo" -> 1L))
-    // mixed layout: CSV appended next to parquet reads as one queue
-    WorkQueueSource.append(items.limit(5), dir, format = "csv")
-    assert(pq.count() === items.count() + 5)
-  }
-
-  test("format=parquet: null/separator value semantics identical to CSV") {
-    val rows = Seq(
-      ("id,with,commas", "task\"quoted\"", "todo", 3L, Some(5L)),
-      ("plain", null.asInstanceOf[String], "s,tate", 0L, None))
-      .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount")
-    def roundTrip(format: String): Set[(String, String, String, Long, Option[Long])] = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft-q-$format")
-        .toString + "/q"
-      WorkQueueSource.write(rows, d, format)
-      spark.read.format("graft.store.connector.WorkQueueSource")
-        .option("path", d).load()
-        .as[(String, String, String, Long, Option[Long])].collect().toSet
+    assert(load().count() === 1)
+    // a part file of an older line-based layout: reading past it would
+    // silently drop its items from every poll
+    val old = new java.io.File(todo, "part-old.csv")
+    java.nio.file.Files.writeString(old.toPath, "i2,t2,0,\n")
+    def assertNamesFile(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(m => m.contains(old.getPath) &&
+        m.contains("re-import the queue")), messages.mkString(" | "))
     }
-    // format choice must never change values — including the null-string ->
-    // "" convention the line layout imposes
-    assert(roundTrip("parquet") === roundTrip("csv"))
+    assertNamesFile(load().collect())
+    assertNamesFile(load().groupBy($"itemState").count().collect())
+    assertNamesFile {
+      val q = graft.exec.StreamingRunner.queueStream(spark, dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
   }
 
   test("escapeToken/unescapePartitionValue round-trip any value, including non-Latin-1") {
@@ -244,8 +245,10 @@ class WorkQueueSourceSpec extends SparkSpec {
       .toDF("itemID", "taskID", "itemState", "logLength", "nestedTaskCount"), dir)
     val bad = new java.io.File(dir, "itemState=caf%E9")
     bad.mkdirs()
-    java.nio.file.Files.write(new java.io.File(bad, "part-x.csv").toPath,
-      "i2,t2,0,\n".getBytes("UTF-8"))
+    // a well-formed part file: only the directory name is wrong
+    val part = new java.io.File(dir, "itemState=todo").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, new java.io.File(bad, part.getName).toPath)
     val e = intercept[Exception](spark.read
       .format("graft.store.connector.WorkQueueSource")
       .option("path", dir).load().collect())
