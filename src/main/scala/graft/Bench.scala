@@ -1,33 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with total + per-query
-  * seconds. local[32] + 32 shuffle partitions + AQE, matching the target
-  * deployment shape scaled down to one node.
+  * seconds, on the [[SparkEntry.session]] shape (local[32] + 32 shuffle
+  * partitions + AQE by default: the target deployment scaled down to one
+  * node).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // comma-separated allowlist for quick single-query iteration
+    val gates = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val spark = SparkEntry.session("graft-bench")
     // median of 3 runs per query: the first run pays JVM/codegen warm-up
     // (and whichever query sorts first pays session init), which made
     // round-over-round per-query deltas lie by 2-3x; the median is the
     // steady-state number. Override for quick local iteration.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // comma-separated allowlist for quick single-query iteration
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // The graph gates share a parquet-materialized pair substrate
     // (Graph.pairSupport) built once per (session, sfDir). Its one-time
     // build is timed HERE as its own entry so the amortization across the
@@ -61,7 +50,7 @@ object Bench {
       trace.toSeq
     }
     val substrateEntry =
-      if (only.forall(sel => sel.exists(graphGates))) {
+      if (gates.exists { case (name, _) => graphGates(name) }) {
         // the settle guard above already paid session warm-up; without it a
         // single-shot entry timed first absorbs all JVM/codegen/scan init
         // (measured ~4 s of the 8.2 s attributed to the build in r8)
@@ -87,8 +76,7 @@ object Bench {
     // gate, whose HLL registers only feed output columns). The DuckDB
     // comparison fetches full results, so the honest number is full
     // execution with the output discarded.
-    def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOnce(name: String, fn: SparkEntry.Gate): Double = {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -104,9 +92,7 @@ object Bench {
     }
     val results = substrateEntry.map { case (n, t) =>
       perRep(n) = Seq(t); n -> t
-    } ++ SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    } ++ gates.sortBy(_._1).map { case (name, fn) =>
       def rep(): Double = runOnce(name, fn)
       val original = (1 to reps).map(_ => rep())
       // heavy or unstable gates get extra reps: a >=1s query whose steady
@@ -144,7 +130,7 @@ object Bench {
     // 32-core artifact, which emptied the driver's PERF per-query table.
     // An explicit SPARK_GRAFT_BENCH_OUT still pins the name exactly.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"bench_out_c${cpus}_${new java.text.SimpleDateFormat("yyyyMMdd-HHmmss")
+      s"bench_out_c${SparkEntry.cpus}_${new java.text.SimpleDateFormat("yyyyMMdd-HHmmss")
         .format(new java.util.Date())}.json")
     val prevFile: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_PREV")
       .orElse {

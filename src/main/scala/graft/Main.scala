@@ -124,15 +124,7 @@ object Main {
     val verb = args.head
     val flags = parseFlags(args.tail.toSeq)
     val table = flags.getOrElse("table", sys.error("--table is required"))
-    val spark = SparkSession.builder()
-      .appName(s"graft-$verb")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(s"graft-$verb")
     try run(spark, verb, table, flags)
     finally spark.stop()
   }

@@ -49,16 +49,7 @@ object ScaleInvariants {
     val sfDir = args(0)
     val wanted = args.lift(1).map(_.split(",").toSet)
       .getOrElse(Set("survivors", "pagerank", "fuzzy"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-scale-invariants")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-scale-invariants")
     try {
       // print per family as it completes — a multi-hour 100× run that dies
       // in family 3 must not lose families 1–2's certificates

@@ -13,13 +13,36 @@ import graft.queries.{ExecutionSurface, MutationSurface, ReferenceSurface}
   */
 object SparkEntry {
 
+  type Gate = (SparkSession, String) => DataFrame
+
+  /** Cores a session is sized for: `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session shape every `main` runs under: the launcher's
+    * `spark.master` when it set one (spark-submit, `-Dspark.master`), else
+    * `local[cpus]`; `cpus` shuffle partitions, AQE, UTC session time and
+    * [[functions.GraftExtensions]]. `spark.ui.enabled` stays the
+    * launcher's (build.sbt turns it off for every forked run and test).
+    */
+  def session(app: String): SparkSession = {
+    val builder = SparkSession.builder().appName(app)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new functions.GraftExtensions)
+    if (!sys.props.contains("spark.master")) builder.master(s"local[$cpus]")
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     analytics.Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
+  def queries: Map[String, Gate] =
+    Map[String, Gate](
     "pa_items_snapshot" -> ((s, d) =>
       store.DerivedItems.items(s, d).drop("log").orderBy("itemID")),
     "pa_nested_tasks" -> ((s, d) =>
@@ -47,6 +70,22 @@ object SparkEntry {
     pipeline.PipelineSurface.queries ++ pipeline.Snapshots.queries ++
     store.VersionedTable.queries ++ store.Ivm.queries ++
     streaming.MonitorStream.queries
+
+  /** The gates of a comma-list, in list order; with no list, every gate in
+    * name order. Fails before any gate runs, naming every unknown name: a
+    * typo must not select nothing and report an empty run.
+    */
+  def select(names: Option[String]): Seq[(String, Gate)] = {
+    val all = queries
+    names.map(_.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq) match {
+      case None => all.toSeq.sortBy(_._1)
+      case Some(wanted) =>
+        val unknown = wanted.filterNot(all.contains)
+        require(wanted.nonEmpty, "empty gate selection")
+        require(unknown.isEmpty, s"unknown gate name(s): ${unknown.mkString(", ")}")
+        wanted.map(n => n -> all(n))
+    }
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

@@ -1,6 +1,5 @@
 package graft.probe
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, DedupIndex}
@@ -42,16 +41,7 @@ object DedupCompactProbe {
     val sfDir = args(0)
     val tau = args.lift(1).map(_.toDouble).getOrElse(0.8)
     val mode = args.lift(2).getOrElse("dup")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-compact-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-compact-probe")
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f
       (r, (System.nanoTime() - t0) / 1e9)

@@ -1,7 +1,6 @@
 package graft.probe
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler for single gates (optimization guide §1: measure first).
   *
@@ -19,20 +18,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GateProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val gates = args.lift(1).map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(sys.error("pass a comma-list of gate names"))
+    require(args.length >= 2, "usage: GateProfile <sfDir> <gate1,gate2> [reps]")
+    val sfDir = args(0)
+    val gates = graft.SparkEntry.select(Some(args(1)))
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-gate-profile")
 
     final case class StageRow(id: Int, name: String, sec: Double, tasks: Int,
       shufReadMb: Double, shufWriteMb: Double, inputMb: Double, rows: Long)
@@ -61,9 +51,7 @@ object GateProfile {
       }
     }
 
-    gates.foreach { gate =>
-      val fn = graft.SparkEntry.queries.getOrElse(gate,
-        sys.error(s"unknown gate $gate"))
+    gates.foreach { case (gate, fn) =>
       var lastSec = 0.0
       (1 to reps).foreach { rep =>
         if (rep == reps) {

@@ -36,8 +36,8 @@ import graft.store.VersionedTable
   *
   * Trade-offs, stated honestly: claims are wave-atomic, so contending
   * claimers serialize on the table CAS (fine for dispatcher-per-queue
-  * deployments, the streaming shape; `LedgerContentionProbe` puts numbers
-  * on the contention curve). There are no per-ITEM leases; crashed-
+  * deployments, the streaming shape; `probe.LedgerProbe` with K
+  * dispatchers puts numbers on the contention curve). There are no per-ITEM leases; crashed-
   * dispatcher recovery is per-WAVE: operator-driven [[release]] (the
   * `work-release` CLI verb) or the opt-in heartbeat [[takeoverStale]]
   * (`work --takeover-after`).

@@ -11,4 +11,15 @@ class EntrySpec extends SparkSpec {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
+
+  test("gate selection: unknown names fail, a known list selects exactly it, none selects all") {
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("q_topk_operator,q_topk_operatr,nope")))
+    assert(err.getMessage.contains("q_topk_operatr, nope"), err.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
+    assert(SparkEntry.select(Some("txt_top_ngrams, q_topk_operator")).map(_._1) ===
+      Seq("txt_top_ngrams", "q_topk_operator"))
+    val all = SparkEntry.select(None).map(_._1)
+    assert(all === SparkEntry.queries.keys.toSeq.sorted)
+  }
 }

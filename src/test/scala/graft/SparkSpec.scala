@@ -36,4 +36,22 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Run `f` on a [[SparkEntry.session]] — the extended session shape
+    * every `main` runs under — over the shared context. getOrCreate hands
+    * back the shared session, extensions ignored, unless the active and
+    * default sessions are cleared first; both are restored after.
+    */
+  def withEntrySession[A](f: SparkSession => A): A = {
+    val base = session
+    val (prevActive, prevDefault) =
+      (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f(SparkEntry.session("graft-test-entry"))
+    finally {
+      SparkSession.setActiveSession(prevActive.getOrElse(base))
+      SparkSession.setDefaultSession(prevDefault.getOrElse(base))
+    }
+  }
 }

@@ -1,24 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("extensions inject cosine_sim into a fresh session's SQL namespace") {
-    // touch the shared context first so we piggyback on the same JVM context
     val base = graft.SparkSpec.session
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    // getOrCreate returns the default session (ignoring extensions) unless
-    // both active and default are cleared
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val extended = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    graft.SparkSpec.withEntrySession { extended =>
       val r = extended
         .sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
         .collect().head.getDouble(0)
@@ -27,9 +15,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .sql("SELECT cosine_sim(array(1.0d, 0.0d), array(0.0d, 1.0d)) AS c")
         .collect().head.getDouble(0)
       assert(r2 === 0.0)
-    } finally {
-      prevActive.foreach(SparkSession.setActiveSession)
-      prevDefault.foreach(SparkSession.setDefaultSession)
+      // the rest of the entry session shape
+      assert(extended.conf.get("spark.sql.session.timeZone") === "UTC")
+      assert(extended.conf.get("spark.sql.adaptive.enabled") === "true")
+      assert(extended.conf.get("spark.sql.shuffle.partitions") === graft.SparkEntry.cpus)
     }
     // base session must NOT see the function unless registered explicitly
     val err = intercept[Exception] {

@@ -56,16 +56,7 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites row_number()<=k window plans onto the operator") {
-    val base = graft.SparkSpec.session
-    val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
-    val prevDefault = org.apache.spark.sql.SparkSession.getDefaultSession
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val extended = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
+    graft.SparkSpec.withEntrySession { extended =>
       val rows = extended.read.parquet(s"$sf0001/lineitem.parquet")
         .select($"l_orderkey", $"l_partkey",
           ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("score"))
@@ -92,9 +83,6 @@ class TopKPerKeySpec extends SparkSpec {
         .as[(Long, Long, Int)].collect().toSet
       assert(got === expected)
       assert(got.nonEmpty)
-    } finally {
-      prevActive.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
-      prevDefault.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
     }
   }
 

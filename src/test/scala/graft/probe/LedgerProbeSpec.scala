@@ -1,0 +1,31 @@
+package graft.probe
+
+import graft.SparkSpec
+
+/** The ledger probe's exactly-once bounds at gate scale (4 triggers × 50
+  * items), for each shape the probe runs at scale: one dispatcher, two
+  * contending dispatchers, and the random-id negative control.
+  */
+class LedgerProbeSpec extends SparkSpec {
+
+  private def drainsExactlyOnce(dispatchers: Int, ids: String): Unit = {
+    val r = LedgerProbe.run(spark, 4, 50, dispatchers, ids)
+    assert(r.items === 200L)
+    assert(r.violations.isEmpty, r.json)
+    assert(r.resultRows.length === dispatchers, r.json)
+    assert(r.resultRows.sum === 200L && r.done === 200L &&
+      r.doneDistinct === 200L && r.ledgerLeft === 0L, r.json)
+  }
+
+  test("one dispatcher drains a monotone queue exactly once") {
+    drainsExactlyOnce(1, "monotone")
+  }
+
+  test("two contending dispatchers drain one queue exactly once") {
+    drainsExactlyOnce(2, "monotone")
+  }
+
+  test("random ids (the negative control) drain exactly once") {
+    drainsExactlyOnce(1, "random")
+  }
+}
