@@ -112,7 +112,7 @@ object PlanDump {
       out.append("look for is noted per query; regenerate after plan-affecting changes.\n")
       gates.foreach { case (name, fn) =>
         out.append(s"\n## $name\n\n_${notes(name)}_\n\n```\n")
-        out.append(finalPlan(spark, fn, sfDir).take(6000))
+        out.append(clip(finalPlan(spark, fn, sfDir)))
         out.append("\n```\n")
       }
       Files.write(Paths.get("PLANS.md"), out.toString.getBytes(UTF_8))
@@ -120,6 +120,19 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** `plan` cut to at most `limit` chars at a line break, with a closing
+    * marker line saying how much is shown, so a clipped plan never reads
+    * as complete (a bare cut left no trace, often mid-line).
+    */
+  def clip(plan: String, limit: Int = 6000): String =
+    if (plan.length <= limit) plan
+    else {
+      val nl = plan.lastIndexOf('\n', limit - 1)
+      val kept = if (nl > 0) nl else limit
+      plan.substring(0, kept) +
+        s"\n… [truncated: $kept of ${plan.length} chars]"
+    }
 
   /** The gate's plan after a full run through the noop sink, so AQE has
     * settled on the final plan — noop, not count(): a count prunes

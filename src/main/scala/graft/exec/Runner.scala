@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** X1 `processItems` — the reference's worker main loop
@@ -102,33 +102,32 @@ object Runner {
           when(col("n_done") + col("n_failed") === 0 && col("n_wte") > 0, col("itemState"))
             .when(newLogLength === col("nestedTaskCount"), "done")
             .otherwise("Wall_Time_Exceeded"))
-    merged
-      // materialize the derived values BEFORE overwriting the columns they
-      // read (logLength/itemState), else the later withColumns would
-      // re-evaluate them against already-mutated columns
-      .withColumn("__newLL", newLogLength)
-      .withColumn("__term", terminalState)
-      .withColumn("nestedTasks",
+    // ONE projection over the joined frame: every expression reads the
+    // joined row as it came in (logLength and itemState before their
+    // update), and each item column is written once, in the joined order
+    val updated: Map[String, Column] = Map(
+      "nestedTasks" ->
         when(ran && col("nestedTasks").isNotNull,
           transform_values(col("nestedTasks"),
             (k, v) => when(array_contains(col("done_keys"), k),
               struct(lit("done").as("status"), v.getField("script").as("script")))
               .otherwise(v)))
-          .otherwise(col("nestedTasks")))
-      .withColumn("log",
+          .otherwise(col("nestedTasks")),
+      "log" ->
         when(ran, map_concat(
           map_filter(col("log"), (k, _) => !array_contains(map_keys(col("new_log")), k)),
           col("new_log")))
-          .otherwise(col("log")))
-      .withColumn("logLength", when(ran, col("__newLL")).otherwise(col("logLength")))
-      .withColumn("itemState", when(ran, col("__term")).otherwise(col("itemState")))
-      .withColumn("instanceID", when(ran, col("run_instanceID")).otherwise(col("instanceID")))
-      .withColumn("lockDate", when(ran, current_timestamp()).otherwise(col("lockDate")))
-      .withColumn("doneDate",
-        when(ran && col("__term").isin("done", "Wall_Time_Exceeded"), current_timestamp())
-          .otherwise(col("doneDate")))
-      .withColumn("errorDate", when(ran, col("n_failed") > 0).otherwise(col("errorDate")))
-      .drop("n_done", "n_failed", "n_wte", "run_instanceID", "done_keys", "new_log",
-        "__newLL", "__term")
+          .otherwise(col("log")),
+      "logLength" -> when(ran, newLogLength).otherwise(col("logLength")),
+      "itemState" -> when(ran, terminalState).otherwise(col("itemState")),
+      "instanceID" -> when(ran, col("run_instanceID")).otherwise(col("instanceID")),
+      "lockDate" -> when(ran, current_timestamp()).otherwise(col("lockDate")),
+      "doneDate" ->
+        when(ran && terminalState.isin("done", "Wall_Time_Exceeded"), current_timestamp())
+          .otherwise(col("doneDate")),
+      "errorDate" -> when(ran, col("n_failed") > 0).otherwise(col("errorDate")))
+    val outcomeCols = perItem.columns.toSet - "itemID"
+    merged.select(merged.columns.filterNot(outcomeCols).toSeq.map(c =>
+      updated.get(c).fold(col(c))(_.as(c))): _*)
   }
 }

@@ -87,6 +87,21 @@ object StreamingRunner {
     * r14 silent-loss defect; the `work` verb now derives its default
     * identity from the checkpoint path).
     *
+    * The steady trigger takes its WAVE ONCE:
+    * [[graft.store.connector.WorkQueueLedger.notDone]] collects the
+    * batch's todo ids in one bounded collect (at most
+    * [[graft.store.VersionedTable.BloomProbeMax]] + 1 rows), and from that
+    * array the driver computes the done filter (range and digest), the
+    * claim rows, the win set's emptiness, the id set that selects the
+    * claimed rows and the ids to retire — each step hands the next its
+    * ids in hand ([[graft.store.connector.WorkQueueLedger.idsInHand]]).
+    * The claim wave and the done ids commit as one-file versions written
+    * with no Spark job, and the ledger and the done set are created
+    * manifest-only, so a steady trigger runs the collect plus the outcome
+    * commit: at most 8 jobs (StreamingRunnerSpec pins it; TUNING.md lists
+    * them). A wave past the cap keeps the distributed path — anti-join
+    * claim, distributed done commit — as do the budget split and replay.
+    *
     * Retirement is OUTCOME-AWARE (round 16 — the r15 VERDICT defect):
     * [[Runner.processItems]] deliberately keeps fully budget-skipped
     * items `todo` ("was never claimed"), so done-marking the whole win
@@ -215,7 +230,13 @@ object StreamingRunner {
           if (graft.store.VersionedTable.latestVersion(spark, done) == doneV0)
             won
           else WorkQueueLedger.notDone(spark, done, won)
-        val claimed = batch.join(exec, Seq("itemID"), "left_semi")
+        // a wave in hand selects its rows by value: a semi join against
+        // the local relation adds a broadcast job wherever the claimed
+        // rows are read (two more jobs per trigger, measured)
+        val claimed = WorkQueueLedger.idsInHand(exec) match {
+          case Some(ids) => batch.filter(col("itemID").isin(ids: _*))
+          case None => batch.join(exec, Seq("itemID"), "left_semi")
+        }
         val (updated, outcomes) = Runner.processItems(claimed, config)
         // split the win set by OUTCOME while the task cache is still
         // live (materializing after unpersist would re-fork every

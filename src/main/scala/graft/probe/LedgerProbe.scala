@@ -27,7 +27,9 @@ import graft.store.connector.{WorkQueueLedger, WorkQueueSource}
   * retries).
   *
   * Prints one JSON line: build/wall seconds, items/s, early/mid/late
-  * window median and p90 trigger ms, CAS retries, exactly-once accounting
+  * window median and p90 trigger ms, the median number of Spark jobs a
+  * trigger runs (`jobs_per_batch`, counted by a listener from the batch id
+  * each stream thread stamps on its jobs), CAS retries, exactly-once accounting
   * (total and per-dispatcher result rows, done, distinct done, ledger
   * entries left), ledger and done-set `_log` file counts (vacuum-bounded)
   * and checkpoint bytes (O(files), not O(items)). Exits 1 when the
@@ -40,9 +42,9 @@ object LedgerProbe {
 
   final case class Record(triggers: Int, items: Long, dispatchers: Int,
       ids: String, buildS: Double, wallS: Double, triggerMs: Seq[Long],
-      casRetries: Long, resultRows: Seq[Long], done: Long, doneDistinct: Long,
-      ledgerLeft: Long, ledgerLogFiles: Int, doneLogFiles: Int,
-      ckptBytes: Long) {
+      jobsPerBatch: Seq[Long], casRetries: Long, resultRows: Seq[Long],
+      done: Long, doneDistinct: Long, ledgerLeft: Long, ledgerLogFiles: Int,
+      doneLogFiles: Int, ckptBytes: Long) {
 
     /** Every broken exactly-once bound: each item committed once, claimed
       * done once, and no claim left behind by a clean drain. */
@@ -72,7 +74,9 @@ object LedgerProbe {
         s""""ids": "$ids"""", f""""build_s": $buildS%.1f""",
         f""""wall_s": $wallS%.1f""", s""""items_per_sec": ${(items / wallS).toLong}""") ++
         medians ++ p90s ++
-        Seq(f""""late_over_early": $ratio%.2f""", s""""cas_retries": $casRetries""",
+        Seq(f""""late_over_early": $ratio%.2f""",
+          s""""jobs_per_batch": ${at(jobsPerBatch, 5)}""",
+          s""""cas_retries": $casRetries""",
           s""""result_rows": ${resultRows.sum}""",
           s""""result_rows_per_dispatcher": ${resultRows.mkString("[", ",", "]")}""",
           s""""done": $done""", s""""done_distinct": $doneDistinct""",
@@ -138,6 +142,21 @@ object LedgerProbe {
 
     // keyed by (run, batch): K dispatchers each number their batches from 0
     val trigMs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
+    // Spark jobs per (query, batch), from the ids the stream thread stamps
+    // on every job it submits; triggers with input are listed as they end
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val jobCounter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          val (query, batch) = (p.getProperty("sql.streaming.queryId"),
+            p.getProperty("streaming.sql.batchId"))
+          if (query != null && batch != null) {
+            jobs.merge((query, batch.toLong), 1L, (a: Long, b: Long) => a + b); ()
+          }
+        }
+    }
     val listener = new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -146,13 +165,15 @@ object LedgerProbe {
         val d = e.progress.durationMs.get("triggerExecution")
         // idle (no-data) progress events are not triggers
         if (d != null && e.progress.numInputRows > 0) {
-          trigMs.put((e.progress.runId.toString, e.progress.batchId), d.longValue); ()
+          trigMs.put((e.progress.runId.toString, e.progress.batchId), d.longValue)
+          ended.add((e.progress.id.toString, e.progress.batchId)); ()
         }
       }
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
+    spark.sparkContext.addSparkListener(jobCounter)
     WorkQueueLedger.claimRetries.reset()
     val t1 = System.nanoTime()
     // each query runs on its own stream thread: start all K, then wait for
@@ -164,12 +185,20 @@ object LedgerProbe {
           s"$base/results-$k", ledger, s"probe-$k")
         .option("checkpointLocation", s"$base/ckpt-$k").start()
     }
+    var t2 = 0L
     try queries.foreach(_.processAllAvailable())
     finally {
       queries.foreach(_.stop())
+      t2 = System.nanoTime()
+      // listener delivery is async: wait until the job count is stable
+      var (seen, spins) = (-1L, 0)
+      while (jobs.values.asScala.sum != seen && spins < 50) {
+        seen = jobs.values.asScala.sum; Thread.sleep(100); spins += 1
+      }
+      spark.sparkContext.removeSparkListener(jobCounter)
       spark.streams.removeListener(listener)
     }
-    val wallS = (System.nanoTime() - t1) / 1e9
+    val wallS = (t2 - t1) / 1e9
 
     val resultRows = (0 until dispatchers).map { k =>
       val p = s"$base/results-$k"
@@ -184,6 +213,7 @@ object LedgerProbe {
       else f.length()
     Record(triggers, n, dispatchers, ids, buildS, wallS,
       trigMs.asScala.toSeq.sortBy { case ((run, batch), _) => (batch, run) }.map(_._2),
+      ended.asScala.toSeq.map(k => jobs.getOrDefault(k, 0L)),
       WorkQueueLedger.claimRetries.sum(), resultRows,
       done.count(), done.distinct().count(),
       WorkQueueLedger.entries(spark, ledger).count(),

@@ -48,5 +48,5 @@ object JobStates {
       .join(broadcast(jobs), Seq("jobID"), "left")
       .groupBy(classify(col("job_status")).as("job_state"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("job_state"))
+      .transform(StateQueries.sortedInOne(col("job_state")))
 }

@@ -47,7 +47,17 @@ object StateQueries {
         count(col("nestedTaskCount")).as("n_nested"),
         min(col("itemID")).as("min_item"),
         max(col("itemID")).as("max_item"))
-      .orderBy(col("itemState"))
+      .transform(sortedInOne(col("itemState")))
+
+  /** Total order for an aggregate with a BOUNDED number of groups (item
+    * states, progress buckets, job states): the handful of rows sort in
+    * one partition, where a range-partitioned `orderBy` would run a
+    * sampling job and a shuffle for them. Outputs that grow with the
+    * table keep `orderBy`.
+    */
+  private[queries] def sortedInOne(by: org.apache.spark.sql.Column*)(
+      df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(by: _*)
 
   /** A1's id-list shape, made scale-safe: top-k itemIDs per state via window
     * rank (bounded rows out, no unbounded `collect_list`).
@@ -71,7 +81,7 @@ object StateQueries {
       .agg(count(lit(1)).as("n"),
         min(col("itemID")).as("min_item"),
         max(col("itemID")).as("max_item"))
-      .orderBy(col("bucket"))
+      .transform(sortedInOne(col("bucket")))
 
   /** The shared pct/bucket projection (single source of truth for the
     * bucket boundaries — the streaming monitor builds on the same

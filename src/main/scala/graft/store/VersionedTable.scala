@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** A no-dependency transactional table: atomic versioned commits over plain
   * parquet, snapshot-isolated reads, time travel, and stats-pruned
@@ -390,6 +390,56 @@ object VersionedTable {
     }
   }
 
+  /** Rows held on the driver as ONE data file, written with no Spark job
+    * (a parquet writer on the driver) — the commit shape of a small wave
+    * whose ids are already in hand, where a distributed write would cost
+    * a scheduler wave for a few KB. Stats come from the footer like
+    * [[writeData]]'s; each bloom column's [[KeyBloom]] is built from the
+    * rows in hand, bit-identical to what [[attachBlooms]] derives for the
+    * same keys in a one-file commit. No rows writes no file. String
+    * columns only (the ledger and done-set shapes).
+    */
+  private def writeRows(spark: SparkSession, root: String, schema: StructType,
+      rows: Seq[Row], bloomCols: Seq[String]): Seq[FileEntry] = {
+    require(schema.fields.forall(_.dataType == StringType),
+      s"writeRows takes string columns only, got ${schema.simpleString}")
+    if (rows.isEmpty) return Seq.empty
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
+    val msg = schema.fieldNames.foldLeft(
+        Types.buildMessage(): Types.GroupBuilder[org.apache.parquet.schema.MessageType])(
+        (b, n) => b.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(n))
+      .named("spark_schema")
+    val rel =
+      s"data/txn-${UUID.randomUUID()}/part-00000-${UUID.randomUUID()}.snappy.parquet"
+    val p = new Path(root, rel)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(p, conf))
+      .withConf(conf).withType(msg)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      for (i <- schema.fields.indices if !r.isNullAt(i))
+        g.append(schema.fields(i).name, r.getString(i))
+      writer.write(g)
+    } finally writer.close()
+    val (n, mins, maxs, nulls) = footerStats(p, conf)
+    val m = KeyBloom.bitsFor(n)
+    val blooms =
+      if (m < 0) Map.empty[String, String]
+      else bloomCols.filter(schema.fieldNames.contains).map { c =>
+        val i = schema.fieldIndex(c)
+        val words = rows.iterator.filterNot(_.isNullAt(i))
+          .foldLeft(new Array[Long](m / 64))((w, r) =>
+            KeyBloom.add(w, m, KeyBloom.stringKey(r.getString(i))))
+        c -> KeyBloom.encode(m, words)
+      }.toMap
+    Seq(FileEntry(rel, n, mins, maxs, blooms, nulls))
+  }
+
   /** One footer read per just-written file (bounded by files-per-commit):
     * per-file row count + min/max for int/long/string leaf columns, plus
     * per-column null totals (kept only when EVERY row group reported a
@@ -544,6 +594,21 @@ object VersionedTable {
     }
   }
 
+  /** Create an EMPTY table at `root` (version 1) as a manifest-only
+    * commit: the schema and bloom columns are recorded, no data file is
+    * written and no Spark job runs. [[read]] serves a file-less version
+    * as an empty frame of the schema, so the table behaves like one
+    * created from an empty frame.
+    */
+  def createEmpty(spark: SparkSession, root: String, schema: StructType,
+      bloomKeys: Seq[String] = Nil): Long = {
+    require(latestVersion(spark, root).isEmpty, s"$root already exists")
+    commitLoop(spark, root, setBloomCols = Some(bloomKeys)) { parent =>
+      require(parent.isEmpty, s"$root already exists")
+      ("create", Nil, schema)
+    }
+  }
+
   /** Append `df` — data is written once; only the manifest rebases on a
     * lost race (appends never conflict with each other).
     *
@@ -586,7 +651,26 @@ object VersionedTable {
     val head = if (latestVersion(spark, root).isDefined)
       Some(snapshot(spark, root)) else None
     if (head.exists(_.tags.contains(tag))) return false
-    val files = writeData(df, root, head.map(_.bloomCols).getOrElse(Nil))
+    commitTagged(spark, root, tag,
+      writeData(df, root, head.map(_.bloomCols).getOrElse(Nil)))
+  }
+
+  /** [[appendBatch]] of rows held on the driver, written by [[writeRows]]
+    * as one file with no Spark job (none for an empty set: the tagged
+    * commit is then manifest-only). Returns the committed data files, or
+    * None when the tag was already applied.
+    */
+  private[store] def appendRowsBatch(spark: SparkSession, root: String,
+      rows: Seq[Row], tag: String): Option[Seq[FileEntry]] = {
+    val head = snapshot(spark, root)
+    if (head.tags.contains(tag)) return None
+    val files = writeRows(spark, root, head.schema, rows, head.bloomCols)
+    if (commitTagged(spark, root, tag, files)) Some(files) else None
+  }
+
+  /** The tag-guarded append commit of already-written `files`. */
+  private def commitTagged(spark: SparkSession, root: String, tag: String,
+      files: Seq[FileEntry]): Boolean =
     try {
       commitLoop(spark, root, Some(tag)) { parent =>
         val p = parent.getOrElse(sys.error(s"$root does not exist"))
@@ -594,7 +678,6 @@ object VersionedTable {
       }
       true
     } catch { case _: TagAlreadyApplied => false }
-  }
 
   /** CONDITIONAL append: commit `df` as the child of EXACTLY
     * `expectedParent` — one CAS attempt, NO rebase-and-retry. Returns
@@ -613,13 +696,28 @@ object VersionedTable {
     * read. Callers loop themselves: re-read, re-validate, re-attempt.
     */
   def appendIfVersion(spark: SparkSession, root: String, df: DataFrame,
-      expectedParent: Long, tag: Option[String] = None): Boolean = {
+      expectedParent: Long, tag: Option[String] = None): Boolean =
+    commitIfVersion(spark, root, expectedParent, tag)(parent =>
+      writeData(df, root, parent.bloomCols))
+
+  /** [[appendIfVersion]] of rows held on the driver, written by
+    * [[writeRows]] as one file with no Spark job (none for an empty set:
+    * the conditional commit is then manifest-only).
+    */
+  private[store] def appendRowsIfVersion(spark: SparkSession, root: String,
+      rows: Seq[Row], expectedParent: Long, tag: Option[String]): Boolean =
+    commitIfVersion(spark, root, expectedParent, tag)(parent =>
+      writeRows(spark, root, parent.schema, rows, parent.bloomCols))
+
+  private def commitIfVersion(spark: SparkSession, root: String,
+      expectedParent: Long, tag: Option[String])(
+      write: Snapshot => Seq[FileEntry]): Boolean = {
     val f = fs(spark, root)
     val head = listVersions(f, root).lastOption
     if (!head.contains(expectedParent)) return false
     val parent = snapshot(spark, root, Some(expectedParent))
     if (tag.exists(parent.tags.contains)) return false
-    val files = writeData(df, root, parent.bloomCols)
+    val files = write(parent)
     val v = expectedParent + 1
     val m = DeltaManifest(v, "append", parent.schema.json, files.toList,
       Nil, tag.toList, parent.bloomCols.toList)

@@ -1,7 +1,8 @@
 package graft.store.connector
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.store.VersionedTable
 
@@ -44,14 +45,21 @@ import graft.store.VersionedTable
   */
 object WorkQueueLedger {
 
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.range(0).select(
-      lit("").as("itemID"), lit("").as("instanceID"),
-      lit("").as("lockID"), lit("").as("tag"))
+  private val idsOnly = StructType(Seq(StructField("itemID", StringType)))
 
+  private val ledgerSchema = StructType(
+    Seq("itemID", "instanceID", "lockID", "tag").map(StructField(_, StringType)))
+
+  /** Create the ledger on first use — a manifest-only empty version
+    * ([[VersionedTable.createEmpty]]: no data file, no Spark job).
+    */
   private def ensure(spark: SparkSession, root: String): Unit =
+    ensureTable(spark, root, ledgerSchema, Nil)
+
+  private def ensureTable(spark: SparkSession, root: String,
+      schema: StructType, bloomKeys: Seq[String]): Unit =
     if (VersionedTable.latestVersion(spark, root).isEmpty)
-      try { VersionedTable.create(spark, root, emptyLedger(spark)); () }
+      try { VersionedTable.createEmpty(spark, root, schema, bloomKeys); () }
       catch {
         // lost the create race to a concurrent claimer: the table exists,
         // which is all ensure() promises
@@ -59,9 +67,58 @@ object WorkQueueLedger {
             if e.getMessage != null && e.getMessage.contains("already exists") =>
       }
 
+  // ------------------------------------------------------- the wave in hand
+
+  /** The ids of `ids` (column `itemID`) when they are already held on the
+    * driver — a local relation, as [[notDone]] and [[claim]] return for a
+    * wave of at most [[VersionedTable.BloomProbeMax]] rows — read with no
+    * Spark job; None for a distributed frame.
+    */
+  def idsInHand(ids: DataFrame): Option[Array[String]] = {
+    val df = ids.select("itemID")
+    df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(df.collect().map(_.getString(0)))
+      case _ => None
+    }
+  }
+
+  private def inHand(spark: SparkSession, ids: Seq[String]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(ids.map(Row(_)): _*), idsOnly)
+
+  /** The wave's distinct ids on the driver: free when they are in hand,
+    * else ONE bounded collect of at most [[VersionedTable.BloomProbeMax]]
+    * + 1 rows, de-duplicated on the driver — None when the wave has more
+    * rows than the cap (it stays distributed). The collect is a plain
+    * limit, not a distinct: a wave far past the cap stops after its first
+    * partition instead of shuffling every id to learn that it is big.
+    */
+  private def takeWave(ids: DataFrame): Option[Array[String]] =
+    idsInHand(ids).orElse {
+      val probe = ids.select("itemID")
+        .limit(VersionedTable.BloomProbeMax + 1).collect().map(_.getString(0))
+      if (probe.length <= VersionedTable.BloomProbeMax) Some(probe) else None
+    }.map(_.distinct)
+
+  /** Process-wide count of claim-commit CAS retries (lost races), for
+    * probes and operability dashboards: contention between dispatchers
+    * over one ledger shows up here long before it shows in throughput.
+    */
+  val claimRetries = new java.util.concurrent.atomic.LongAdder()
+
   /** Claim every id in `wantIds` (column `itemID`) not already claimed.
     * Returns the win set (itemID rows, materialized). `tag` makes the wave
     * idempotent: a replay returns the original wins without re-appending.
+    *
+    * A wave whose ids are IN HAND ([[idsInHand]] — what [[notDone]]
+    * returns for a wave of at most [[VersionedTable.BloomProbeMax]] rows)
+    * is claimed on the driver: its ids are anti-joined against the
+    * ledger at version v only when that snapshot has data (one filtered
+    * scan; the steady single-dispatcher ledger is empty after every
+    * release), the claim rows are committed as ONE file written with no
+    * Spark job, and the wins come back in hand. A distributed want-set
+    * is claimed by a distributed anti-join and write.
     *
     * A lost commit race re-reads, re-validates and retries with
     * exponential backoff — UNBOUNDED by default (`maxRetries <= 0`): the
@@ -71,39 +128,53 @@ object WorkQueueLedger {
     * freed eagerly so executor storage holds one wave, not the retry
     * history.
     */
-  /** Process-wide count of claim-commit CAS retries (lost races), for
-    * probes and operability dashboards: contention between dispatchers
-    * over one ledger shows up here long before it shows in throughput.
-    */
-  val claimRetries = new java.util.concurrent.atomic.LongAdder()
-
   def claim(spark: SparkSession, root: String, wantIds: DataFrame,
       instanceId: String, tag: String, maxRetries: Int = 0): DataFrame = {
     ensure(spark, root)
+    val local = idsInHand(wantIds).map(_.distinct)
     var tries = 0
     while (maxRetries <= 0 || tries < maxRetries) {
       val head = VersionedTable.snapshot(spark, root)
-      if (head.tags.contains(tag))
+      if (head.tags.contains(tag)) {
         // replayed wave: its rows are already in the ledger, exactly once
-        return VersionedTable.read(spark, root)
+        val wave = VersionedTable.read(spark, root)
           .filter(col("tag") === tag).select("itemID")
-          .transform(graft.plans.Lineage.cut)
-      val ledger = VersionedTable.read(spark, root, Some(head.version))
-      // materialize the wave BEFORE the commit attempt: appendIfVersion
-      // writes `mine`'s rows to data files first, and a lazily-planned
-      // anti-join re-evaluated during the write must not see a newer
-      // ledger state than the version the commit is conditioned on
-      val mine = wantIds.select(col("itemID")).distinct()
-        .join(ledger.select("itemID"), Seq("itemID"), "left_anti")
-        .select(col("itemID"), lit(instanceId).as("instanceID"),
-          concat(lit(s"$tag-"), col("itemID")).as("lockID"),
-          lit(tag).as("tag"))
-        .transform(graft.plans.Lineage.cut)
-      if (VersionedTable.appendIfVersion(spark, root, mine,
-          head.version, Some(tag)))
-        return mine.select("itemID")
-      // lost the race: free this attempt's blocks, back off, re-validate
-      graft.plans.Lineage.free(mine)
+        return if (local.isDefined)
+          inHand(spark, wave.collect().map(_.getString(0)).toSeq)
+        else wave.transform(graft.plans.Lineage.cut)
+      }
+      local match {
+        case Some(want) =>
+          val held =
+            if (!head.files.exists(_.rows > 0)) Set.empty[String]
+            else VersionedTable.read(spark, root, Some(head.version))
+              .select("itemID").filter(col("itemID").isin(want: _*))
+              .collect().map(_.getString(0)).toSet
+          val mine = want.filterNot(held)
+          val rows = mine.map(id =>
+            Row(id, instanceId, if (id == null) null else s"$tag-$id", tag))
+          if (VersionedTable.appendRowsIfVersion(spark, root, rows.toSeq,
+              head.version, Some(tag)))
+            return inHand(spark, mine.toSeq)
+        case None =>
+          val ledger = VersionedTable.read(spark, root, Some(head.version))
+          // materialize the wave BEFORE the commit attempt: appendIfVersion
+          // writes `mine`'s rows to data files first, and a lazily-planned
+          // anti-join re-evaluated during the write must not see a newer
+          // ledger state than the version the commit is conditioned on
+          val mine = wantIds.select(col("itemID")).distinct()
+            .join(ledger.select("itemID"), Seq("itemID"), "left_anti")
+            .select(col("itemID"), lit(instanceId).as("instanceID"),
+              concat(lit(s"$tag-"), col("itemID")).as("lockID"),
+              lit(tag).as("tag"))
+            .transform(graft.plans.Lineage.cut)
+          if (VersionedTable.appendIfVersion(spark, root, mine,
+              head.version, Some(tag)))
+            return mine.select("itemID")
+          // lost the race: free this attempt's blocks
+          graft.plans.Lineage.free(mine)
+      }
+      // lost the race: back off, re-validate
       claimRetries.increment()
       tries += 1
       val pause = math.min(25L << math.min(tries, 6), 1000L)
@@ -145,44 +216,56 @@ object WorkQueueLedger {
   private def emptyDone(spark: SparkSession): DataFrame =
     spark.range(0).select(lit("").as("itemID"))
 
+  /** Create the done set on first use — manifest-only, like [[ensure]],
+    * with `itemID` declared as its bloom column.
+    */
   private def ensureDone(spark: SparkSession, root: String): Unit =
-    if (VersionedTable.latestVersion(spark, root).isEmpty)
-      try {
-        VersionedTable.create(spark, root, emptyDone(spark),
-          bloomKeys = Seq("itemID"))
-        ()
-      } catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("already exists") =>
-      }
+    ensureTable(spark, root, idsOnly, Seq("itemID"))
 
   /** Record a finished wave's ids in the done set — one idempotent
     * commit per wave (`tag`-guarded, so a replayed batch appends
     * nothing). The done set is the PERMANENT exactly-once record and the
     * minimal one: itemID-only rows with per-file range stats and blooms,
     * vs the ledger's full claim rows. Returns false on replay.
+    *
+    * Ids in hand ([[idsInHand]]: the steady trigger's retirable wave)
+    * commit as ONE file written with no Spark job; its per-file bloom is
+    * built from the ids on the driver, and the ids fold straight into
+    * this process's done digest, so the next [[notDone]] need not read
+    * the new file back. A distributed id frame takes
+    * [[VersionedTable.appendBatch]].
     */
   def markDone(spark: SparkSession, doneRoot: String, ids: DataFrame,
       tag: String): Boolean = {
     ensureDone(spark, doneRoot)
-    VersionedTable.appendBatch(spark, doneRoot, ids.select("itemID"),
-      s"done-$tag")
+    idsInHand(ids) match {
+      case Some(local) =>
+        VersionedTable.appendRowsBatch(spark, doneRoot,
+            local.toSeq.map(Row(_)), s"done-$tag") match {
+          case Some(files) => foldIntoDigest(spark, doneRoot, files, local); true
+          case None => false
+        }
+      case None =>
+        VersionedTable.appendBatch(spark, doneRoot, ids.select("itemID"),
+          s"done-$tag")
+    }
   }
 
-  /** `wantIds` minus the done set, file-pruned in three stages, none of
-    * them an unconditional scan:
+  /** `wantIds` minus the done set (itemID rows). The wave's ids are taken
+    * to the driver ONCE — one bounded collect of at most
+    * [[VersionedTable.BloomProbeMax]] + 1 rows, free when they are already
+    * in hand — and a wave within the cap is filtered there, in three
+    * stages, none of them an unconditional scan:
     *
-    *  1. RANGE — one min/max aggregate over the wave (a driver-safe
-    *     two-value job, never a collect) drops every done file whose
-    *     itemID footer range cannot overlap the wave's. With time-ordered
-    *     ids a new wave overlaps no finished wave's files at all, so the
-    *     anti-join against a lifetime-sized done set reads ZERO done
-    *     files — per-trigger cost tracks the TRIGGER, not lifetime
-    *     throughput (the r14 O(ledger)-per-wave term, killed
-    *     structurally).
+    *  1. RANGE — the wave's min/max drops every done file whose itemID
+    *     footer range cannot overlap it. With time-ordered ids a new wave
+    *     overlaps no finished wave's files at all, so a lifetime-sized
+    *     done set costs ZERO reads — per-trigger cost tracks the
+    *     TRIGGER, not lifetime throughput (the r14 O(ledger)-per-wave
+    *     term, killed structurally).
     *  2. DIGEST (round 16 — the r15 negative control priced the
     *     random-id degradation at +65%): an aggregate bloom over the
-    *     WHOLE done set, broadcast and probed per wave id. Ids the
+    *     WHOLE done set, probed per wave id on the driver. Ids the
     *     digest proves absent — the overwhelming majority of any genuine
     *     new wave, whatever its key shape — never touch done data; only
     *     the bloom-positive "suspects" (true re-offers plus
@@ -191,73 +274,88 @@ object WorkQueueLedger {
     *     than the done set has files (every file's range admits some id),
     *     so the digest is the piece that makes arbitrary-key-shape waves
     *     wave-bounded instead of done-set-bounded.
-    *  3. BLOOM/RANGE PER SUSPECT — the surviving suspects (driver-small)
-    *     prune files by footer range and per-file bloom, and only those
-    *     files are read for the exact anti-join.
+    *  3. BLOOM/RANGE PER SUSPECT — the surviving suspects prune files by
+    *     footer range and per-file bloom, and only those files are read.
+    *
+    * The result of that path is the surviving ids IN HAND (a local
+    * relation, see [[idsInHand]]), which [[claim]] and [[markDone]] take
+    * without another job. A wave past the cap stays distributed: one
+    * min/max aggregate ranges the done files and the wave anti-joins
+    * every file the range admits.
     *
     * Exactness: the digest is a SUPERSET of the done set at the version
     * probed (checked and advanced per call; see [[digestFor]]), so stage
-    * 2 has no false negatives; stage 3 is exact. A digest that cannot be
-    * maintained (suspect overflow, concurrent shrink) falls back to the
-    * r15 range+bloom slice path — correct, just slower for random keys.
+    * 2 has no false negatives; stage 3 is exact.
     */
   def notDone(spark: SparkSession, doneRoot: String,
-      wantIds: DataFrame): DataFrame = {
-    if (VersionedTable.latestVersion(spark, doneRoot).isEmpty)
-      return wantIds
-    val want = wantIds.select("itemID")
-    val mm = want.agg(min(col("itemID")), max(col("itemID"))).head()
-    if (mm.isNullAt(0)) return wantIds // empty or all-null wave
+      wantIds: DataFrame): DataFrame =
+    takeWave(wantIds) match {
+      case Some(ids) => inHand(spark, notDone(spark, doneRoot, ids).toSeq)
+      case None => notDoneSliced(spark, doneRoot, wantIds)
+    }
+
+  /** [[notDone]] of a wave held on the driver: the range check and the
+    * digest probe run on the ids in hand, and only bloom-positive
+    * suspects cost a job — one filtered read of the done files their
+    * ranges and per-file blooms admit.
+    */
+  private def notDone(spark: SparkSession, doneRoot: String,
+      ids: Array[String]): Array[String] = {
+    val keyed = ids.filter(_ != null)
+    if (keyed.isEmpty ||
+        VersionedTable.latestVersion(spark, doneRoot).isEmpty) return ids
     val s = VersionedTable.snapshot(spark, doneRoot)
-    val (lo, hi) = (mm.getString(0), mm.getString(1))
-    val ranged = s.files.filter { fe =>
+    val ranged = overlapping(s, keyed.min(VersionedTable.StringOrder),
+      keyed.max(VersionedTable.StringOrder))
+    if (ranged.isEmpty) return ids
+    val digest = digestFor(spark, doneRoot, s)
+    val suspects = keyed.filter(digest.mightContainString)
+    if (suspects.isEmpty) return ids
+    val files = suspectFiles(ranged, suspects)
+    if (files.isEmpty) return ids
+    val done = readDone(spark, doneRoot, files)
+      .filter(col("itemID").isin(suspects: _*))
+      .collect().map(_.getString(0)).toSet
+    ids.filterNot(done)
+  }
+
+  /** The done files of `s` whose itemID footer range can hold a value in
+    * [lo, hi] (files without stats are conservatively kept).
+    */
+  private def overlapping(s: VersionedTable.Snapshot, lo: String,
+      hi: String): Seq[VersionedTable.FileEntry] =
+    s.files.filter { fe =>
       fe.rows > 0 && ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
         case (Some(mn), Some(mx)) => VersionedTable.rangeOverlaps(mn, mx, lo, hi)
         case _ => true // no stats: conservatively kept
       })
     }
+
+  /** [[notDone]] of a wave past the driver cap: one min/max aggregate
+    * over the wave ranges the done files, and the wave anti-joins every
+    * done file that range admits.
+    */
+  private def notDoneSliced(spark: SparkSession, doneRoot: String,
+      wantIds: DataFrame): DataFrame = {
+    if (VersionedTable.latestVersion(spark, doneRoot).isEmpty)
+      return wantIds
+    val mm = wantIds.select("itemID")
+      .agg(min(col("itemID")), max(col("itemID"))).head()
+    if (mm.isNullAt(0)) return wantIds // all-null wave
+    val ranged = overlapping(VersionedTable.snapshot(spark, doneRoot),
+      mm.getString(0), mm.getString(1))
     if (ranged.isEmpty) return wantIds
-    // one bounded collect serves both the digest probe and the legacy
-    // per-file bloom refinement — a wave past the cap takes the
-    // file-sliced path unconditionally
-    val probe = want.distinct()
-      .limit(VersionedTable.BloomProbeMax + 1).collect()
-    if (probe.length <= VersionedTable.BloomProbeMax) {
-      digestFor(spark, doneRoot, s).foreach { digest =>
-        // driver-side probe (the wave is already collected): no
-        // broadcast of the lifetime-sized bloom on the trigger path
-        val suspects = probe.map(_.getString(0))
-          .filter(id => id != null && digest.mightContainString(id))
-        if (suspects.isEmpty) return wantIds
-        return wantIds.join(readOverlapping(spark, doneRoot, ranged, suspects),
-          Seq("itemID"), "left_anti")
-      }
-    }
-    val files =
-      if (probe.length > VersionedTable.BloomProbeMax) ranged.map(_.path)
-      else {
-        val hs = probe.map(_.getString(0)).filter(_ != null)
-          .map(graft.store.KeyBloom.stringKey)
-        ranged.filter(fe => fe.blooms.get("itemID").forall(enc =>
-          hs.exists(graft.store.KeyBloom.mightContain(enc, _)))).map(_.path)
-      }
-    if (files.isEmpty) return wantIds
-    val done = spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(files.map(p => s"$doneRoot/$p"): _*)
-    wantIds.join(done, Seq("itemID"), "left_anti")
+    wantIds.join(readDone(spark, doneRoot, ranged.map(_.path)),
+      Seq("itemID"), "left_anti")
   }
 
-  /** Done rows from the files of `ranged` whose footer range or per-file
-    * bloom admits at least one of `ids` (a driver-small suspect set).
+  /** The files of `ranged` whose footer range or per-file bloom admits
+    * at least one of `ids` (a driver-small suspect set).
     */
-  private def readOverlapping(spark: SparkSession, doneRoot: String,
-      ranged: Seq[VersionedTable.FileEntry],
-      ids: Array[String]): DataFrame = {
+  private def suspectFiles(ranged: Seq[VersionedTable.FileEntry],
+      ids: Array[String]): Seq[String] = {
     val hs = ids.filter(_ != null).map(graft.store.KeyBloom.stringKey)
-    val files = ranged.filter { fe =>
+    ranged.filter { fe =>
       ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
         case (Some(mn), Some(mx)) =>
           ids.exists(id => VersionedTable.rangeOverlaps(mn, mx, id, id))
@@ -265,13 +363,6 @@ object WorkQueueLedger {
       }) && fe.blooms.get("itemID").forall(enc =>
         hs.exists(graft.store.KeyBloom.mightContain(enc, _)))
     }.map(_.path)
-    if (files.isEmpty)
-      spark.range(0).select(lit("").as("itemID"))
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(files.map(p => s"$doneRoot/$p"): _*)
   }
 
   // --------------------------------------------------------- done digest
@@ -304,14 +395,13 @@ object WorkQueueLedger {
     * digest's hands.
     */
   private def digestFor(spark: SparkSession, doneRoot: String,
-      snap: VersionedTable.Snapshot): Option[
-        org.apache.spark.util.sketch.BloomFilter] =
+      snap: VersionedTable.Snapshot): org.apache.spark.util.sketch.BloomFilter =
     digests.synchronized {
       val rows = snap.files.map(_.rows).sum
       val paths = snap.files.map(_.path).toSet
       val cached = Option(digests.get(doneRoot))
       cached match {
-        case Some(d) if paths.subsetOf(d.files) => Some(d.bloom)
+        case Some(d) if paths.subsetOf(d.files) => d.bloom
         case Some(d) if rows + snap.files
             .filterNot(f => d.files(f.path)).map(_.rows).sum <= d.expected =>
           // advance: fold ONLY the unseen files' ids into a compatible
@@ -329,7 +419,7 @@ object WorkQueueLedger {
           }
           digests.put(doneRoot, Digest(snap.version, d.expected,
             d.files ++ delta.map(_.path), d.bloom))
-          Some(d.bloom)
+          d.bloom
         case _ =>
           // first build, or growth past capacity: size for 4x headroom so
           // steady appends advance incrementally for a long time
@@ -341,18 +431,33 @@ object WorkQueueLedger {
             else readDone(spark, doneRoot, livePaths)
               .stat.bloomFilter("itemID", expected, DigestFpp)
           digests.put(doneRoot, Digest(snap.version, expected, paths, bloom))
-          Some(bloom)
+          bloom
+      }
+    }
+
+  /** Fold a just-committed done file's ids — still in hand — into this
+    * process's digest, so the next [[digestFor]] finds the file already
+    * seen instead of reading it back. Only while the digest has capacity
+    * for the table's rows: past it the file stays unseen and the next
+    * probe rebuilds at a larger size, as before. Adding ids of a
+    * committed file keeps the digest a superset of the done set.
+    */
+  private def foldIntoDigest(spark: SparkSession, doneRoot: String,
+      files: Seq[VersionedTable.FileEntry], ids: Array[String]): Unit =
+    digests.synchronized {
+      Option(digests.get(doneRoot)).foreach { d =>
+        val rows = VersionedTable.snapshot(spark, doneRoot).files.map(_.rows).sum
+        if (rows <= d.expected) {
+          ids.foreach(id => if (id != null) d.bloom.putString(id))
+          digests.put(doneRoot, d.copy(files = d.files ++ files.map(_.path)))
+        }
       }
     }
 
   private def readDone(spark: SparkSession, doneRoot: String,
       paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) spark.range(0).select(lit("").as("itemID"))
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(paths.map(p => s"$doneRoot/$p"): _*)
+    if (paths.isEmpty) emptyDone(spark)
+    else spark.read.schema(idsOnly).parquet(paths.map(p => s"$doneRoot/$p"): _*)
 
   private[graft] def resetDigestCacheForTests(): Unit =
     digests.clear()

@@ -22,4 +22,18 @@ class EntrySpec extends SparkSpec {
     val all = SparkEntry.select(None).map(_._1)
     assert(all === SparkEntry.queries.keys.toSeq.sorted)
   }
+
+  test("PlanDump.clip cuts long plans at a line break and marks the cut") {
+    val plan = (1 to 400).map(i => s"+- node $i").mkString("\n")
+    val clipped = PlanDump.clip(plan, limit = 100)
+    val body = clipped.linesIterator.toSeq
+    val kept = body.init.mkString("\n").length
+    assert(body.last === s"… [truncated: $kept of ${plan.length} chars]")
+    assert(body.init.forall(l => plan.linesIterator.contains(l)),
+      "every kept line must be a whole plan line")
+    assert(kept <= 100)
+    val short = "+- one\n+- two"
+    assert(PlanDump.clip(short, limit = 100) === short,
+      "a plan within the limit is kept whole")
+  }
 }

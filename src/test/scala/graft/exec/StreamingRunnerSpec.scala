@@ -151,4 +151,53 @@ class StreamingRunnerSpec extends SparkSpec {
     assert(out.count() === 1, "replayed batch must not duplicate outcomes")
     assert(out.select($"itemState").as[String].head() === "done")
   }
+
+  test("a steady ledger trigger runs at most 8 Spark jobs") {
+    import graft.store.connector.WorkQueueSource
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobbudget").toFile
+    val queue = new java.io.File(dir, "queue").toString
+    def rows(from: Int) = (from until from + 50).map(i => f"j-$i%04d").toDF("itemID")
+      .selectExpr("itemID", "itemID AS taskID", "'todo' AS itemState",
+        "CAST(0 AS LONG) AS logLength", "CAST(null AS LONG) AS nestedTaskCount")
+    WorkQueueSource.append(rows(0).coalesce(1), queue)
+    WorkQueueSource.append(rows(50).coalesce(1), queue)
+    // the second trigger is the steady one: the ledger and the done set
+    // exist, the first wave is retired. Jobs are told apart by the batch
+    // id the stream thread stamps on every job it submits.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p =>
+            p.getProperty("streaming.sql.batchId") == "1" &&
+              p.getProperty("sql.streaming.queryId") != null))
+          // name each job by the first program frame that submitted it
+          jobs.add(j.stageInfos.headOption.flatMap(_.details.linesIterator
+            .map(_.trim).find(l => l.startsWith("graft.") &&
+              !l.contains("Spec"))).getOrElse("?"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = StreamingRunner.ledgerDispatcher(
+          StreamingRunner.queueWorkItems(
+            StreamingRunner.queueStream(spark, queue, Some(1))),
+          new java.io.File(dir, "results").toString,
+          new java.io.File(dir, "ledger").toString, "budget")
+        .option("checkpointLocation", new java.io.File(dir, "ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      // listener delivery is async: wait until the count is stable
+      var (prev, spins) = (-1, 0)
+      while (jobs.size != prev && spins < 50) {
+        prev = jobs.size; Thread.sleep(100); spins += 1
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(ItemStore.load(spark, new java.io.File(dir, "results").toString)
+      .count() === 100)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(seen.nonEmpty, "the second trigger's jobs must be seen")
+    assert(seen.size <= 8,
+      s"steady trigger ran ${seen.size} jobs:\n${seen.mkString("\n")}")
+  }
 }

@@ -21,6 +21,13 @@ class LedgerProbeSpec extends SparkSpec {
     drainsExactlyOnce(1, "monotone")
   }
 
+  test("the probe counts the Spark jobs of every trigger") {
+    val r = LedgerProbe.run(spark, 3, 20, 1, "monotone")
+    assert(r.violations.isEmpty, r.json)
+    assert(r.jobsPerBatch.length === 3 && r.jobsPerBatch.forall(_ > 0), r.json)
+    assert(r.json.contains("\"jobs_per_batch\": "), r.json)
+  }
+
   test("two contending dispatchers drain one queue exactly once") {
     drainsExactlyOnce(2, "monotone")
   }

@@ -230,6 +230,42 @@ class VersionedTableSpec extends SparkSpec {
       3L -> "removed", 4L -> "added"))
   }
 
+  test("a manifest-only empty table reads back empty with its schema, passes " +
+      "fsck, takes conditional and tagged appends and survives vacuum") {
+    import org.apache.spark.sql.types._
+    val root = tmp() + "/t"
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("v", LongType)))
+    assert(VersionedTable.createEmpty(spark, root, schema) === 1L)
+    val s = VersionedTable.snapshot(spark, root)
+    assert(s.op === "create" && s.files.isEmpty)
+    assert(!new java.io.File(root, "data").exists(), "no data file may be written")
+    val empty = VersionedTable.read(spark, root)
+    assert(empty.schema === schema)
+    assert(empty.count() === 0)
+    assert(VersionedTable.fsck(spark, root).count() === 0)
+    intercept[IllegalArgumentException](
+      VersionedTable.createEmpty(spark, root, schema))
+    // vacuum of the lone manifest-only version, then of a manifest-only
+    // child that needs a checkpoint before its parent delta can go
+    VersionedTable.vacuum(spark, root, 1)
+    assert(VersionedTable.read(spark, root).count() === 0)
+    assert(VersionedTable.deleteStringEquals(spark, root, "k", "x", "del-0"))
+    VersionedTable.vacuum(spark, root, 1)
+    assert(VersionedTable.read(spark, root).schema === schema)
+    val head = VersionedTable.latestVersion(spark, root).get
+    assert(VersionedTable.appendIfVersion(spark, root,
+      Seq(("a", 1L)).toDF("k", "v"), head, Some("t-1")))
+    assert(VersionedTable.appendBatch(spark, root,
+      Seq(("b", 2L)).toDF("k", "v"), "t-2"))
+    assert(!VersionedTable.appendBatch(spark, root,
+      Seq(("b", 2L)).toDF("k", "v"), "t-2"), "the tag refuses a replay")
+    VersionedTable.vacuum(spark, root, 1)
+    assert(VersionedTable.read(spark, root).orderBy("k").as[(String, Long)]
+      .collect().toSeq === Seq(("a", 1L), ("b", 2L)))
+    assert(VersionedTable.fsck(spark, root).filter($"status" =!= "ok").count() === 0)
+  }
+
   test("fsck reports missing files and is clean on a healthy table") {
     val root = tmp()
     VersionedTable.create(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "s"))

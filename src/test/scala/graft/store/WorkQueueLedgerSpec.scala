@@ -438,6 +438,93 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(won(WorkQueueLedger.notDone(spark, done, want)) === Set.empty)
   }
 
+  test("a done wave in hand commits one file whose bloom is byte-identical " +
+      "to the distributed build, and re-offered ids still drop through the " +
+      "digest and the per-file bloom") {
+    WorkQueueLedger.resetDigestCacheForTests()
+    val keys = (0 until 300).map(i => f"bl-$i%05d")
+    val local = tmp() + "-local"
+    val dist = tmp() + "-dist"
+    assert(WorkQueueLedger.idsInHand(ids(keys: _*)).isDefined)
+    assert(WorkQueueLedger.markDone(spark, local, ids(keys: _*), "w-0"))
+    // the same keys as a distributed frame take the appendBatch path
+    val spread = ids(keys: _*).repartition(1)
+    assert(WorkQueueLedger.idsInHand(spread).isEmpty)
+    assert(WorkQueueLedger.markDone(spark, dist, spread, "w-0"))
+    def live(root: String) =
+      VersionedTable.snapshot(spark, root).files.filter(_.rows > 0)
+    val (l, d) = (live(local), live(dist))
+    assert(l.size === 1 && d.size === 1, s"one file each: $l / $d")
+    assert(l.head.blooms("itemID") === d.head.blooms("itemID"),
+      "the driver-built bloom must equal attachBlooms' encoding")
+    assert((l.head.rows, l.head.mins, l.head.maxs, l.head.nullCounts) ===
+      ((d.head.rows, d.head.mins, d.head.maxs, d.head.nullCounts)))
+    // the per-file bloom admits every done id and refuses a fresh one
+    // inside the file's range
+    assert(keys.forall(k =>
+      VersionedTable.candidateFilesString(spark, local, "itemID", k).nonEmpty))
+    assert(VersionedTable.candidateFilesString(spark, local, "itemID",
+      "bl-00150x").isEmpty)
+    // digest path (built on this probe): re-offers drop, a fresh id passes
+    val want = ids("bl-00005", "bl-00100", "bl-00150x", "bl-00151y")
+    assert(won(WorkQueueLedger.notDone(spark, local, want)) ===
+      Set("bl-00150x", "bl-00151y"))
+    // a second wave in hand folds into the live digest; its ids must drop
+    assert(WorkQueueLedger.markDone(spark, local, ids("bl-00150x"), "w-1"))
+    assert(won(WorkQueueLedger.notDone(spark, local, want)) === Set("bl-00151y"))
+    // and a cold process (no digest) reaches the same answer from the files
+    WorkQueueLedger.resetDigestCacheForTests()
+    assert(won(WorkQueueLedger.notDone(spark, local, want)) === Set("bl-00151y"))
+  }
+
+  test("a wave over the driver cap and one under it end the same way: " +
+      "outcomes exactly once, every id done, the ledger empty") {
+    import graft.exec.StreamingRunner
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledcap").toFile
+    val queue = new java.io.File(dir, "queue").toString
+    val results = new java.io.File(dir, "results").toString
+    val ledger = new java.io.File(dir, "ledger").toString
+    val cap = VersionedTable.BloomProbeMax
+    val big = spark.range(cap + 1).selectExpr("format_string('big-%06d', id) AS itemID")
+    val small = (0 until 40).map(i => f"small-$i%03d").toDF("itemID")
+    def rows(df: DataFrame) = df
+      .selectExpr("itemID", "itemID AS taskID", "'todo' AS itemState",
+        "CAST(0 AS LONG) AS logLength", "CAST(null AS LONG) AS nestedTaskCount")
+    // the split: a wave within the cap comes back in hand, one past it
+    // stays distributed
+    assert(WorkQueueLedger.idsInHand(
+      WorkQueueLedger.notDone(spark, s"$dir/probe_done", big)).isEmpty)
+    assert(WorkQueueLedger.idsInHand(
+      WorkQueueLedger.notDone(spark, s"$dir/probe_done", small)).isDefined)
+    WorkQueueSource.append(rows(big).coalesce(1), queue)
+    WorkQueueSource.append(rows(small).coalesce(1), queue)
+    val q = StreamingRunner.ledgerDispatcher(
+        StreamingRunner.queueWorkItems(
+          StreamingRunner.queueStream(spark, queue, Some(1))),
+        results, ledger, "cap-1")
+      .option("checkpointLocation", new java.io.File(dir, "ckpt").toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val n = cap + 1L + 40L
+    val out = ItemStore.load(spark, results)
+    assert(out.count() === n)
+    assert(out.select("itemID").distinct().count() === n)
+    val done = WorkQueueLedger.doneEntries(spark, s"${ledger}_done")
+    assert(done.count() === n)
+    assert(done.distinct().count() === n)
+    assert(done.join(out.select("itemID"), Seq("itemID"), "left_anti").count() === 0)
+    assert(WorkQueueLedger.entries(spark, ledger).count() === 0)
+    // a second dispatcher over the same queue finds every id done
+    val q2 = StreamingRunner.ledgerDispatcher(
+        StreamingRunner.queueWorkItems(
+          StreamingRunner.queueStream(spark, queue, Some(1))),
+        s"$dir/results2", ledger, "cap-2")
+      .option("checkpointLocation", new java.io.File(dir, "ckpt2").toString)
+      .start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(ItemStore.load(spark, s"$dir/results2").count() === 0)
+  }
+
   test("removeDone deletes exactly the listed ids; disjoint done files " +
       "carry by reference") {
     val done = tmp() + "-rm"
