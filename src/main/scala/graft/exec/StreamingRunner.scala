@@ -88,19 +88,21 @@ object StreamingRunner {
     * identity from the checkpoint path).
     *
     * The steady trigger takes its WAVE ONCE:
-    * [[graft.store.connector.WorkQueueLedger.notDone]] collects the
+    * [[graft.store.connector.WorkQueueLedger.takeWave]] collects the
     * batch's todo ids in one bounded collect (at most
-    * [[graft.store.VersionedTable.BloomProbeMax]] + 1 rows), and from that
-    * array the driver computes the done filter (range and digest), the
-    * claim rows, the win set's emptiness, the id set that selects the
-    * claimed rows and the ids to retire — each step hands the next its
-    * ids in hand ([[graft.store.connector.WorkQueueLedger.idsInHand]]).
-    * The claim wave and the done ids commit as one-file versions written
-    * with no Spark job, and the ledger and the done set are created
-    * manifest-only, so a steady trigger runs the collect plus the outcome
-    * commit: at most 8 jobs (StreamingRunnerSpec pins it; TUNING.md lists
-    * them). A wave past the cap keeps the distributed path — anti-join
-    * claim, distributed done commit — as do the budget split and replay.
+    * [[graft.store.VersionedTable.BloomProbeMax]] + 1 rows) and decides,
+    * by that size alone, whether the wave is held on the driver
+    * (`InHand`) or stays a distributed frame (`Spread`). The wave's form
+    * is then passed along, not re-derived: from the ids in hand the
+    * driver computes the done filter (range and digest), the claim rows,
+    * the win set's emptiness, the id set that selects the claimed rows
+    * and the ids to retire. The claim wave and the done ids commit as
+    * one-file versions written with no Spark job, and the ledger and the
+    * done set are created manifest-only, so a steady trigger runs the
+    * collect plus the outcome commit: at most 8 jobs (StreamingRunnerSpec
+    * pins it; TUNING.md lists them). A `Spread` wave keeps the
+    * distributed paths — done-set range aggregate, anti-join claim,
+    * distributed done commit — as do the budget split and replay.
     *
     * Retirement is OUTCOME-AWARE (round 16 — the r15 VERDICT defect):
     * [[Runner.processItems]] deliberately keeps fully budget-skipped
@@ -152,7 +154,7 @@ object StreamingRunner {
       // key would make worker B's batch 0 look already-committed by A's
       val batchKey = s"$instanceId-$batchId"
       val terminalStates = Seq("done", "Wall_Time_Exceeded")
-      def retire(terminalIds: DataFrame): Unit = {
+      def retire(terminalIds: WorkQueueLedger.Wave): Unit = {
         WorkQueueLedger.markDone(spark, done, terminalIds, tag)
         WorkQueueLedger.release(spark, ledgerPath, tag)
       }
@@ -203,8 +205,8 @@ object StreamingRunner {
             val taskless = todoRows.select("itemID").join(
               Runner.todoTasks(todoRows).toDF.select("itemID").distinct(),
               Seq("itemID"), "left_anti")
-            retire(ItemStore.batchItemIds(spark, resultPath, batchKey,
-              terminalStates).unionByName(taskless))
+            retire(WorkQueueLedger.Spread(ItemStore.batchItemIds(spark,
+              resultPath, batchKey, terminalStates).unionByName(taskless)))
           }
         }
         maintain()
@@ -215,7 +217,8 @@ object StreamingRunner {
         // proven no-op (zero extra jobs on the steady single-dispatcher
         // trigger path)
         val doneV0 = graft.store.VersionedTable.latestVersion(spark, done)
-        val todo = batch.filter(col("itemState") === "todo").select("itemID")
+        val todo = WorkQueueLedger.takeWave(
+          batch.filter(col("itemState") === "todo").select("itemID"))
         val won = WorkQueueLedger.claim(spark, ledgerPath,
           WorkQueueLedger.notDone(spark, done, todo), instanceId, tag)
         // post-claim done re-check: the pre-claim notDone and another
@@ -230,13 +233,7 @@ object StreamingRunner {
           if (graft.store.VersionedTable.latestVersion(spark, done) == doneV0)
             won
           else WorkQueueLedger.notDone(spark, done, won)
-        // a wave in hand selects its rows by value: a semi join against
-        // the local relation adds a broadcast job wherever the claimed
-        // rows are read (two more jobs per trigger, measured)
-        val claimed = WorkQueueLedger.idsInHand(exec) match {
-          case Some(ids) => batch.filter(col("itemID").isin(ids: _*))
-          case None => batch.join(exec, Seq("itemID"), "left_semi")
-        }
+        val claimed = exec.rowsOf(batch)
         val (updated, outcomes) = Runner.processItems(claimed, config)
         // split the win set by OUTCOME while the task cache is still
         // live (materializing after unpersist would re-fork every
@@ -248,10 +245,10 @@ object StreamingRunner {
         // extra jobs for the budget fix.
         val retirable =
           if (config.budgetSeconds.isEmpty) exec
-          else graft.plans.Lineage.cut(
-            exec.select("itemID").join(
+          else WorkQueueLedger.Spread(graft.plans.Lineage.cut(
+            exec.toDF(spark).join(
               Runner.todoTasks(updated).toDF.select("itemID").distinct(),
-              Seq("itemID"), "left_anti"))
+              Seq("itemID"), "left_anti")))
         try {
           // pre-commit ownership check (takeover mode only): if a stale-
           // heartbeat takeover released our wave while we ran, the thief
@@ -271,9 +268,10 @@ object StreamingRunner {
         // executor storage holds one in-flight wave, not the trigger
         // history (the ContextCleaner would get there eventually; a
         // thousand-trigger worker shouldn't wait on GC pressure)
-        graft.plans.Lineage.free(won)
-        graft.plans.Lineage.free(retirable)
-        ()
+        Seq(won, retirable).foreach {
+          case WorkQueueLedger.Spread(ids) => graft.plans.Lineage.free(ids)
+          case _ => ()
+        }
       }
     }
 

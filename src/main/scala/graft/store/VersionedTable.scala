@@ -587,11 +587,8 @@ object VersionedTable {
   def create(spark: SparkSession, root: String, df: DataFrame,
       bloomKeys: Seq[String] = Nil): Long = {
     require(latestVersion(spark, root).isEmpty, s"$root already exists")
-    val files = writeData(df, root, bloomKeys)
-    commitLoop(spark, root, setBloomCols = Some(bloomKeys)) { parent =>
-      require(parent.isEmpty, s"$root already exists")
-      ("create", files, df.schema)
-    }
+    commitCreate(spark, root, writeData(df, root, bloomKeys), df.schema,
+      bloomKeys)
   }
 
   /** Create an EMPTY table at `root` (version 1) as a manifest-only
@@ -601,13 +598,15 @@ object VersionedTable {
     * created from an empty frame.
     */
   def createEmpty(spark: SparkSession, root: String, schema: StructType,
-      bloomKeys: Seq[String] = Nil): Long = {
-    require(latestVersion(spark, root).isEmpty, s"$root already exists")
+      bloomKeys: Seq[String] = Nil): Long =
+    commitCreate(spark, root, Nil, schema, bloomKeys)
+
+  private def commitCreate(spark: SparkSession, root: String,
+      files: Seq[FileEntry], schema: StructType, bloomKeys: Seq[String]): Long =
     commitLoop(spark, root, setBloomCols = Some(bloomKeys)) { parent =>
       require(parent.isEmpty, s"$root already exists")
-      ("create", Nil, schema)
+      ("create", files, schema)
     }
-  }
 
   /** Append `df` — data is written once; only the manifest rebases on a
     * lost race (appends never conflict with each other).

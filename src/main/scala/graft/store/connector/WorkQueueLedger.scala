@@ -67,39 +67,57 @@ object WorkQueueLedger {
             if e.getMessage != null && e.getMessage.contains("already exists") =>
       }
 
-  // ------------------------------------------------------- the wave in hand
+  // ----------------------------------------------------------------- waves
 
-  /** The ids of `ids` (column `itemID`) when they are already held on the
-    * driver — a local relation, as [[notDone]] and [[claim]] return for a
-    * wave of at most [[VersionedTable.BloomProbeMax]] rows — read with no
-    * Spark job; None for a distributed frame.
+  /** A wave of item ids, its form decided ONCE, by size, in [[takeWave]]:
+    * [[InHand]] holds at most [[VersionedTable.BloomProbeMax]] distinct
+    * ids on the driver, which [[notDone]], [[claim]] and [[markDone]]
+    * filter, commit and hand on with no Spark job of their own; [[Spread]]
+    * is a frame too big to hold, which takes the distributed paths.
     */
-  def idsInHand(ids: DataFrame): Option[Array[String]] = {
-    val df = ids.select("itemID")
-    df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(df.collect().map(_.getString(0)))
-      case _ => None
-    }
+  sealed trait Wave {
+    def isEmpty: Boolean
+
+    /** The wave as an `itemID` frame. */
+    def toDF(spark: SparkSession): DataFrame
+
+    /** The rows of `rows` whose `itemID` is in the wave. */
+    def rowsOf(rows: DataFrame): DataFrame
   }
 
-  private def inHand(spark: SparkSession, ids: Seq[String]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(Row(_)): _*), idsOnly)
+  final case class InHand(ids: Array[String]) extends Wave {
+    def isEmpty: Boolean = ids.isEmpty
+    def toDF(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(ids.map(Row(_)): _*), idsOnly)
+    // by value: a semi join against a local relation adds a broadcast
+    // job wherever the selected rows are read
+    def rowsOf(rows: DataFrame): DataFrame =
+      rows.filter(col("itemID").isin(ids: _*))
+  }
 
-  /** The wave's distinct ids on the driver: free when they are in hand,
-    * else ONE bounded collect of at most [[VersionedTable.BloomProbeMax]]
-    * + 1 rows, de-duplicated on the driver — None when the wave has more
-    * rows than the cap (it stays distributed). The collect is a plain
-    * limit, not a distinct: a wave far past the cap stops after its first
-    * partition instead of shuffling every id to learn that it is big.
+  final case class Spread(ids: DataFrame) extends Wave {
+    def isEmpty: Boolean = ids.isEmpty
+    def toDF(spark: SparkSession): DataFrame = ids
+    def rowsOf(rows: DataFrame): DataFrame =
+      rows.join(ids, Seq("itemID"), "left_semi")
+  }
+
+  /** The wave of `ids` (column `itemID`), taken with ONE bounded collect
+    * of at most [[VersionedTable.BloomProbeMax]] + 1 rows: a wave within
+    * the cap comes back [[InHand]], de-duplicated on the driver; a bigger
+    * one stays [[Spread]]. The collect is a plain limit, so on a big wave
+    * it stops after the partition round that reaches one row past the
+    * cap; a wave with more rows than the cap but few distinct ids is
+    * found by [[notDone]]'s distributed sequence, which collects its
+    * distinct ids as it did before the take.
     */
-  private def takeWave(ids: DataFrame): Option[Array[String]] =
-    idsInHand(ids).orElse {
-      val probe = ids.select("itemID")
-        .limit(VersionedTable.BloomProbeMax + 1).collect().map(_.getString(0))
-      if (probe.length <= VersionedTable.BloomProbeMax) Some(probe) else None
-    }.map(_.distinct)
+  def takeWave(ids: DataFrame): Wave = {
+    val want = ids.select("itemID")
+    val probe = want.limit(VersionedTable.BloomProbeMax + 1).collect()
+      .map(_.getString(0))
+    if (probe.length <= VersionedTable.BloomProbeMax) InHand(probe.distinct)
+    else Spread(want)
+  }
 
   /** Process-wide count of claim-commit CAS retries (lost races), for
     * probes and operability dashboards: contention between dispatchers
@@ -107,18 +125,23 @@ object WorkQueueLedger {
     */
   val claimRetries = new java.util.concurrent.atomic.LongAdder()
 
-  /** Claim every id in `wantIds` (column `itemID`) not already claimed.
-    * Returns the win set (itemID rows, materialized). `tag` makes the wave
-    * idempotent: a replay returns the original wins without re-appending.
+  /** Claim every id in `wantIds` (column `itemID`) not already claimed;
+    * the wave is taken by [[takeWave]]. Returns the win set (itemID rows).
+    */
+  def claim(spark: SparkSession, root: String, wantIds: DataFrame,
+      instanceId: String, tag: String): DataFrame =
+    claim(spark, root, takeWave(wantIds), instanceId, tag).toDF(spark)
+
+  /** Claim every id of `want` not already claimed. Returns the win set,
+    * in the wave's form. `tag` makes the wave idempotent: a replay
+    * returns the original wins without re-appending.
     *
-    * A wave whose ids are IN HAND ([[idsInHand]] — what [[notDone]]
-    * returns for a wave of at most [[VersionedTable.BloomProbeMax]] rows)
-    * is claimed on the driver: its ids are anti-joined against the
-    * ledger at version v only when that snapshot has data (one filtered
-    * scan; the steady single-dispatcher ledger is empty after every
-    * release), the claim rows are committed as ONE file written with no
-    * Spark job, and the wins come back in hand. A distributed want-set
-    * is claimed by a distributed anti-join and write.
+    * A wave [[InHand]] is claimed on the driver: its ids are checked
+    * against the ledger at version v only when that snapshot has data
+    * (one filtered scan; the steady single-dispatcher ledger is empty
+    * after every release), the claim rows are committed as ONE file
+    * written with no Spark job, and the wins come back in hand. A
+    * [[Spread]] wave is claimed by a distributed anti-join and write.
     *
     * A lost commit race re-reads, re-validates and retries with
     * exponential backoff — UNBOUNDED by default (`maxRetries <= 0`): the
@@ -128,10 +151,9 @@ object WorkQueueLedger {
     * freed eagerly so executor storage holds one wave, not the retry
     * history.
     */
-  def claim(spark: SparkSession, root: String, wantIds: DataFrame,
-      instanceId: String, tag: String, maxRetries: Int = 0): DataFrame = {
+  def claim(spark: SparkSession, root: String, want: Wave,
+      instanceId: String, tag: String, maxRetries: Int = 0): Wave = {
     ensure(spark, root)
-    val local = idsInHand(wantIds).map(_.distinct)
     var tries = 0
     while (maxRetries <= 0 || tries < maxRetries) {
       val head = VersionedTable.snapshot(spark, root)
@@ -139,24 +161,25 @@ object WorkQueueLedger {
         // replayed wave: its rows are already in the ledger, exactly once
         val wave = VersionedTable.read(spark, root)
           .filter(col("tag") === tag).select("itemID")
-        return if (local.isDefined)
-          inHand(spark, wave.collect().map(_.getString(0)).toSeq)
-        else wave.transform(graft.plans.Lineage.cut)
+        return want match {
+          case InHand(_) => InHand(wave.collect().map(_.getString(0)))
+          case Spread(_) => Spread(wave.transform(graft.plans.Lineage.cut))
+        }
       }
-      local match {
-        case Some(want) =>
+      want match {
+        case InHand(ids) =>
           val held =
             if (!head.files.exists(_.rows > 0)) Set.empty[String]
             else VersionedTable.read(spark, root, Some(head.version))
-              .select("itemID").filter(col("itemID").isin(want: _*))
+              .select("itemID").filter(col("itemID").isin(ids: _*))
               .collect().map(_.getString(0)).toSet
-          val mine = want.filterNot(held)
+          val mine = ids.filterNot(held)
           val rows = mine.map(id =>
             Row(id, instanceId, if (id == null) null else s"$tag-$id", tag))
           if (VersionedTable.appendRowsIfVersion(spark, root, rows.toSeq,
               head.version, Some(tag)))
-            return inHand(spark, mine.toSeq)
-        case None =>
+            return InHand(mine)
+        case Spread(wantIds) =>
           val ledger = VersionedTable.read(spark, root, Some(head.version))
           // materialize the wave BEFORE the commit attempt: appendIfVersion
           // writes `mine`'s rows to data files first, and a lazily-planned
@@ -170,7 +193,7 @@ object WorkQueueLedger {
             .transform(graft.plans.Lineage.cut)
           if (VersionedTable.appendIfVersion(spark, root, mine,
               head.version, Some(tag)))
-            return mine.select("itemID")
+            return Spread(mine.select("itemID"))
           // lost the race: free this attempt's blocks
           graft.plans.Lineage.free(mine)
       }
@@ -222,40 +245,50 @@ object WorkQueueLedger {
   private def ensureDone(spark: SparkSession, root: String): Unit =
     ensureTable(spark, root, idsOnly, Seq("itemID"))
 
+  /** Record a finished wave's ids (column `itemID`) in the done set;
+    * the wave is taken by [[takeWave]]. Returns false on replay.
+    */
+  def markDone(spark: SparkSession, doneRoot: String, ids: DataFrame,
+      tag: String): Boolean =
+    markDone(spark, doneRoot, takeWave(ids), tag)
+
   /** Record a finished wave's ids in the done set — one idempotent
     * commit per wave (`tag`-guarded, so a replayed batch appends
     * nothing). The done set is the PERMANENT exactly-once record and the
     * minimal one: itemID-only rows with per-file range stats and blooms,
     * vs the ledger's full claim rows. Returns false on replay.
     *
-    * Ids in hand ([[idsInHand]]: the steady trigger's retirable wave)
-    * commit as ONE file written with no Spark job; its per-file bloom is
-    * built from the ids on the driver, and the ids fold straight into
-    * this process's done digest, so the next [[notDone]] need not read
-    * the new file back. A distributed id frame takes
+    * A wave [[InHand]] commits as ONE file written with no Spark job; its
+    * per-file bloom is built from the ids on the driver, and the ids fold
+    * straight into this process's done digest, so the next [[notDone]]
+    * need not read the new file back. A [[Spread]] wave takes
     * [[VersionedTable.appendBatch]].
     */
-  def markDone(spark: SparkSession, doneRoot: String, ids: DataFrame,
+  def markDone(spark: SparkSession, doneRoot: String, wave: Wave,
       tag: String): Boolean = {
     ensureDone(spark, doneRoot)
-    idsInHand(ids) match {
-      case Some(local) =>
-        VersionedTable.appendRowsBatch(spark, doneRoot,
-            local.toSeq.map(Row(_)), s"done-$tag") match {
-          case Some(files) => foldIntoDigest(spark, doneRoot, files, local); true
+    wave match {
+      case InHand(ids) =>
+        VersionedTable.appendRowsBatch(spark, doneRoot, ids.toSeq.map(Row(_)),
+            s"done-$tag") match {
+          case Some(files) => foldIntoDigest(spark, doneRoot, files, ids); true
           case None => false
         }
-      case None =>
-        VersionedTable.appendBatch(spark, doneRoot, ids.select("itemID"),
+      case Spread(df) =>
+        VersionedTable.appendBatch(spark, doneRoot, df.select("itemID"),
           s"done-$tag")
     }
   }
 
-  /** `wantIds` minus the done set (itemID rows). The wave's ids are taken
-    * to the driver ONCE — one bounded collect of at most
-    * [[VersionedTable.BloomProbeMax]] + 1 rows, free when they are already
-    * in hand — and a wave within the cap is filtered there, in three
-    * stages, none of them an unconditional scan:
+  /** `wantIds` minus the done set (itemID rows); the wave is taken by
+    * [[takeWave]].
+    */
+  def notDone(spark: SparkSession, doneRoot: String,
+      wantIds: DataFrame): DataFrame =
+    notDone(spark, doneRoot, takeWave(wantIds)).toDF(spark)
+
+  /** `wave` minus the done set. A wave [[InHand]] is filtered on the
+    * driver in three stages, none of them an unconditional scan:
     *
     *  1. RANGE — the wave's min/max drops every done file whose itemID
     *     footer range cannot overlap it. With time-ordered ids a new wave
@@ -277,21 +310,21 @@ object WorkQueueLedger {
     *  3. BLOOM/RANGE PER SUSPECT — the surviving suspects prune files by
     *     footer range and per-file bloom, and only those files are read.
     *
-    * The result of that path is the surviving ids IN HAND (a local
-    * relation, see [[idsInHand]]), which [[claim]] and [[markDone]] take
-    * without another job. A wave past the cap stays distributed: one
-    * min/max aggregate ranges the done files and the wave anti-joins
-    * every file the range admits.
+    * The surviving ids stay in hand. A [[Spread]] wave runs the
+    * distributed sequence: one min/max aggregate ranges the done files
+    * (a wave clear of them all passes whole); then one bounded distinct
+    * collect takes a wave of at most [[VersionedTable.BloomProbeMax]]
+    * distinct ids through the stages above, in hand, and a bigger one
+    * anti-joins every done file the range admits.
     *
     * Exactness: the digest is a SUPERSET of the done set at the version
     * probed (checked and advanced per call; see [[digestFor]]), so stage
     * 2 has no false negatives; stage 3 is exact.
     */
-  def notDone(spark: SparkSession, doneRoot: String,
-      wantIds: DataFrame): DataFrame =
-    takeWave(wantIds) match {
-      case Some(ids) => inHand(spark, notDone(spark, doneRoot, ids).toSeq)
-      case None => notDoneSliced(spark, doneRoot, wantIds)
+  def notDone(spark: SparkSession, doneRoot: String, wave: Wave): Wave =
+    wave match {
+      case InHand(ids) => InHand(notDone(spark, doneRoot, ids))
+      case Spread(wantIds) => notDoneSpread(spark, doneRoot, wantIds)
     }
 
   /** [[notDone]] of a wave held on the driver: the range check and the
@@ -319,6 +352,24 @@ object WorkQueueLedger {
     ids.filterNot(done)
   }
 
+  /** [[notDone]] of a [[Spread]] wave: the distributed sequence. */
+  private def notDoneSpread(spark: SparkSession, doneRoot: String,
+      wantIds: DataFrame): Wave = {
+    if (VersionedTable.latestVersion(spark, doneRoot).isEmpty)
+      return Spread(wantIds)
+    val mm = wantIds.agg(min(col("itemID")), max(col("itemID"))).head()
+    if (mm.isNullAt(0)) return Spread(wantIds) // all-null wave
+    val ranged = overlapping(VersionedTable.snapshot(spark, doneRoot),
+      mm.getString(0), mm.getString(1))
+    if (ranged.isEmpty) return Spread(wantIds)
+    val probe = wantIds.select("itemID").distinct()
+      .limit(VersionedTable.BloomProbeMax + 1).collect().map(_.getString(0))
+    if (probe.length <= VersionedTable.BloomProbeMax)
+      InHand(notDone(spark, doneRoot, probe))
+    else Spread(wantIds.join(readDone(spark, doneRoot, ranged.map(_.path)),
+      Seq("itemID"), "left_anti"))
+  }
+
   /** The done files of `s` whose itemID footer range can hold a value in
     * [lo, hi] (files without stats are conservatively kept).
     */
@@ -330,24 +381,6 @@ object WorkQueueLedger {
         case _ => true // no stats: conservatively kept
       })
     }
-
-  /** [[notDone]] of a wave past the driver cap: one min/max aggregate
-    * over the wave ranges the done files, and the wave anti-joins every
-    * done file that range admits.
-    */
-  private def notDoneSliced(spark: SparkSession, doneRoot: String,
-      wantIds: DataFrame): DataFrame = {
-    if (VersionedTable.latestVersion(spark, doneRoot).isEmpty)
-      return wantIds
-    val mm = wantIds.select("itemID")
-      .agg(min(col("itemID")), max(col("itemID"))).head()
-    if (mm.isNullAt(0)) return wantIds // all-null wave
-    val ranged = overlapping(VersionedTable.snapshot(spark, doneRoot),
-      mm.getString(0), mm.getString(1))
-    if (ranged.isEmpty) return wantIds
-    wantIds.join(readDone(spark, doneRoot, ranged.map(_.path)),
-      Seq("itemID"), "left_anti")
-  }
 
   /** The files of `ranged` whose footer range or per-file bloom admits
     * at least one of `ids` (a driver-small suspect set).

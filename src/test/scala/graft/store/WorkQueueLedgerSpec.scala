@@ -445,12 +445,11 @@ class WorkQueueLedgerSpec extends SparkSpec {
     val keys = (0 until 300).map(i => f"bl-$i%05d")
     val local = tmp() + "-local"
     val dist = tmp() + "-dist"
-    assert(WorkQueueLedger.idsInHand(ids(keys: _*)).isDefined)
-    assert(WorkQueueLedger.markDone(spark, local, ids(keys: _*), "w-0"))
+    assert(WorkQueueLedger.markDone(spark, local,
+      WorkQueueLedger.InHand(keys.toArray), "w-0"))
     // the same keys as a distributed frame take the appendBatch path
-    val spread = ids(keys: _*).repartition(1)
-    assert(WorkQueueLedger.idsInHand(spread).isEmpty)
-    assert(WorkQueueLedger.markDone(spark, dist, spread, "w-0"))
+    assert(WorkQueueLedger.markDone(spark, dist,
+      WorkQueueLedger.Spread(ids(keys: _*).repartition(1)), "w-0"))
     def live(root: String) =
       VersionedTable.snapshot(spark, root).files.filter(_.rows > 0)
     val (l, d) = (live(local), live(dist))
@@ -490,12 +489,20 @@ class WorkQueueLedgerSpec extends SparkSpec {
     def rows(df: DataFrame) = df
       .selectExpr("itemID", "itemID AS taskID", "'todo' AS itemState",
         "CAST(0 AS LONG) AS logLength", "CAST(null AS LONG) AS nestedTaskCount")
-    // the split: a wave within the cap comes back in hand, one past it
-    // stays distributed
-    assert(WorkQueueLedger.idsInHand(
-      WorkQueueLedger.notDone(spark, s"$dir/probe_done", big)).isEmpty)
-    assert(WorkQueueLedger.idsInHand(
-      WorkQueueLedger.notDone(spark, s"$dir/probe_done", small)).isDefined)
+    // the split is by size: a wave within the cap is taken in hand, one
+    // past it stays distributed
+    assert(WorkQueueLedger.takeWave(big).isInstanceOf[WorkQueueLedger.Spread])
+    assert(WorkQueueLedger.takeWave(small).isInstanceOf[WorkQueueLedger.InHand])
+    // rows past the cap but few distinct ids: the distributed done filter
+    // takes its distinct ids in hand (range overlap forces the probe)
+    val doneRoot = s"$dir/probe_done"
+    WorkQueueLedger.markDone(spark, doneRoot, ids("dup-a", "dup-c"), "p-0")
+    val dupes = spark.range(cap + 1)
+      .selectExpr("IF(id % 2 = 0, 'dup-a', 'dup-b') AS itemID")
+    WorkQueueLedger.notDone(spark, doneRoot, WorkQueueLedger.takeWave(dupes)) match {
+      case WorkQueueLedger.InHand(left) => assert(left.toSet === Set("dup-b"))
+      case other => fail(s"a few-distinct wave must come back in hand: $other")
+    }
     WorkQueueSource.append(rows(big).coalesce(1), queue)
     WorkQueueSource.append(rows(small).coalesce(1), queue)
     val q = StreamingRunner.ledgerDispatcher(
