@@ -310,21 +310,10 @@ object Main {
               if (ItemStore.batchCommitted(spark, results, key)) Some(key)
               else None
             }
-            committedKey match {
-              case Some(key) =>
-                // same retirable split as the dispatcher's replay path:
-                // terminal rows, plus todo rows with no claimable task
-                // left (budget-skipped rows stay out and re-open)
-                val todoRows = ItemStore.batchRows(spark, results, key, "todo")
-                val taskless = todoRows.select("itemID").join(
-                  graft.exec.Runner.todoTasks(todoRows).toDF
-                    .select("itemID").distinct(),
-                  Seq("itemID"), "left_anti")
-                WorkQueueLedger.markDone(spark, done,
-                  ItemStore.batchItemIds(spark, results, key,
-                    Seq("done", "Wall_Time_Exceeded")).unionByName(taskless), t)
-                retired += 1
-              case None => ()
+            committedKey.foreach { key =>
+              WorkQueueLedger.markDone(spark, done,
+                graft.exec.StreamingRunner.committedRetirable(spark, results, key), t)
+              retired += 1
             }
             WorkQueueLedger.release(spark, ledger, t)
           }

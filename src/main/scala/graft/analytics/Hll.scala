@@ -29,9 +29,9 @@ import graft.Tables
   * Raw-HLL bias note: the small-range (linear-counting) correction is
   * intentionally NOT folded in — it needs `ln`, whose cross-libm
   * final-ulp behavior would break hash parity. The gate's group sizes sit
-  * in the raw-estimator regime (n > 2.5·m); callers in the corrected
-  * regime use [[estimateCorrected]] driver-side (spec-checked error
-  * bounds, not hash-gated).
+  * in the raw-estimator regime (n > 2.5·m); a caller in the small range
+  * applies linear counting, m·ln(m / (m − present)), to the emitted
+  * `present` column.
   */
 object Hll {
 
@@ -96,19 +96,6 @@ object Hll {
       .withColumn("est",
         lit(alpha * m.toDouble * m.toDouble) *
           lit(math.pow(2.0, maxRank.toDouble)) / col("t_sum").cast("double"))
-  }
-
-  /** Driver-side corrected estimate from a (present, t_sum) row: linear
-    * counting below 2.5·m (the Flajolet small-range rule). Not hash-gated
-    * (uses `ln`); spec-checked.
-    */
-  def estimateCorrected(present: Long, tSum: Long, p: Int = GateP): Double = {
-    val m = 1 << p
-    val maxRank = 60 - p + 1
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    val raw = alpha * m * m * math.pow(2.0, maxRank.toDouble) / tSum.toDouble
-    val zeros = m - present
-    if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else raw
   }
 
   /** Gate: distinct orders per ship month from lineitem — the "distinct

@@ -48,30 +48,6 @@ object Layout {
       .sortWithinPartitions("_z")
   }
 
-  /** Write `df` as a BUCKETED table: hash-clustered into `numBuckets` by
-    * `bucketCols`, sorted within buckets on the same keys, at `path`. This
-    * is the repeated-join amortization play at 100 TB: both fact tables
-    * bucketed on the join key pay their exchange ONCE at write time, and
-    * every subsequent join/aggregation on that key is exchange-free —
-    * Spark's scan exposes the bucketing as a hash partitioning, so
-    * SortMergeJoin needs no shuffle on either side (spec-asserted against
-    * the physical plan). The lakehouse equivalent of co-located DynamoDB
-    * adjacency, expressed as table layout.
-    *
-    * Bucketed tables require the catalog (`saveAsTable`); `path` makes it
-    * an external table so the files live where the caller says.
-    */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      numBuckets: Int, bucketCols: Seq[String]): Unit = {
-    df.write.mode("overwrite")
-      .option("path", path)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-    ()
-  }
-
   /** Gate: the Z-value arithmetic itself, per lineitem row over
     * (l_partkey, l_suppkey) masked to [[GateBits]] — value-checked against
     * the oracle's identical shift/and/add chain.

@@ -20,9 +20,8 @@ import graft.Tables
   *
   * The break rule is `delta >= gap` (an event exactly `gap` later starts a
   * new session), which is precisely Structured Streaming's
-  * `session_window(ts, gap)` merge rule — so the batch operator here and
-  * the streaming aggregation in [[sessionWindowStream]] produce identical
-  * sessions (spec-asserted), and a pipeline can run either.
+  * `session_window(ts, gap)` merge rule, so a streaming `session_window`
+  * aggregation over the same events produces the same sessions.
   *
   * Scale shape: ONE shuffle on user_id; the lag + running-sum window and
   * the final per-session aggregation share that partitioning (the groupBy
@@ -64,25 +63,6 @@ object Sessions {
         min("us").as("start_us"), max("us").as("end_us"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
   }
-
-  /** The same sessions via Structured Streaming's `session_window` — the
-    * operator a live pipeline runs. Watermark bounds the session state;
-    * append mode emits each session once it can no longer grow. Returns the
-    * streaming DataFrame (caller wires the sink); the parity spec checks
-    * stream ≡ [[sessionize]] on identical data.
-    */
-  def sessionWindowStream(events: DataFrame, userCol: String, tsCol: String,
-      valueCol: String, gap: String = "30 minutes",
-      watermark: String = "0 seconds"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(userCol).as("user_id"), session_window(col(tsCol), gap))
-      .agg(count(lit(1)).as("n_events"),
-        min(unix_micros(col(tsCol))).as("start_us"),
-        max(unix_micros(col(tsCol))).as("end_us"),
-        sum(col(valueCol).cast("decimal(18,4)")).cast("double").as("total_value"))
-      .select(col("user_id"), col("n_events"), col("start_us"), col("end_us"),
-        col("total_value"))
 
   /** Markov transition counts between consecutive event types WITHIN a
     * session (same gap rule as [[sessionize]]: a gap ≥ `gapMicros` breaks

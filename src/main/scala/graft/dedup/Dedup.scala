@@ -826,12 +826,11 @@ object Dedup {
   /** Batch-side shingle sets and prefix rows ranked by the INDEX's
     * (df, gram) total order with unseen grams at df 0 — the shared-order
     * construction [[ppjoinAgainst]]'s exactness proof rests on. Exposed so
-    * the streaming twin ([[graft.streaming.StreamingPpjoin]]) can persist a
-    * micro-batch's rows into the growing index extension: because the
-    * ranking order is always the ORIGINAL index's freq, every doc ever
-    * ranked — corpus or any micro-batch — ranks its grams in one global
-    * total order, so the prefix/positional lemmas keep holding as the
-    * extension grows.
+    * [[DedupIndex]] can persist a batch's rows into the growing index:
+    * because the ranking order is always the ORIGINAL index's freq, every
+    * doc ever ranked — corpus or any appended batch — ranks its grams in
+    * one global total order, so the prefix/positional lemmas keep holding
+    * as the index grows.
     */
   private[graft] def ppjoinBatchSide(index: PrefixIndex, batch: DataFrame,
       idCol: String, textCol: String,

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.model.WorkItem
+import graft.model.{ItemState, WorkItem}
 import graft.store.ItemStore
+import graft.store.connector.WorkQueueLedger
 
 /** T1 — the reference's worker poll loop (`code/runner.py:144-238`) as a
   * Structured Streaming dispatcher: `readStream` over the item-store path,
@@ -145,7 +146,6 @@ object StreamingRunner {
       donePath: Option[String] = None,
       takeoverMillis: Option[Long] = None): DataStreamWriter[org.apache.spark.sql.Row] =
     items.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      import graft.store.connector.WorkQueueLedger
       val spark = batch.sparkSession
       val done = donePath.getOrElse(s"${ledgerPath}_done")
       val tag = s"$instanceId-batch-$batchId"
@@ -153,7 +153,6 @@ object StreamingRunner {
       // results store all number their batches from 0, and an unscoped
       // key would make worker B's batch 0 look already-committed by A's
       val batchKey = s"$instanceId-$batchId"
-      val terminalStates = Seq("done", "Wall_Time_Exceeded")
       def retire(terminalIds: WorkQueueLedger.Wave): Unit = {
         WorkQueueLedger.markDone(spark, done, terminalIds, tag)
         WorkQueueLedger.release(spark, ledgerPath, tag)
@@ -192,22 +191,13 @@ object StreamingRunner {
       }
       if (ItemStore.batchCommitted(spark, resultPath, batchKey)) {
         // post-commit replay: outcomes are already exactly-once — finish
-        // retiring the wave if a crash interrupted markDone/release. The
-        // retirable split is recomputed from the committed batch's own
-        // files, so a replay retires exactly what the original would
-        // have: terminal-state rows, plus todo rows with no claimable
-        // task left (scriptless monitoring rows).
+        // retiring the wave if a crash interrupted markDone/release, with
+        // the split recomputed from the committed batch's own files
         if (graft.store.VersionedTable.latestVersion(spark, ledgerPath).isDefined) {
           val wave = WorkQueueLedger.entries(spark, ledgerPath)
             .filter(col("tag") === tag).select("itemID")
-          if (!wave.isEmpty) {
-            val todoRows = ItemStore.batchRows(spark, resultPath, batchKey, "todo")
-            val taskless = todoRows.select("itemID").join(
-              Runner.todoTasks(todoRows).toDF.select("itemID").distinct(),
-              Seq("itemID"), "left_anti")
-            retire(WorkQueueLedger.Spread(ItemStore.batchItemIds(spark,
-              resultPath, batchKey, terminalStates).unionByName(taskless)))
-          }
+          if (!wave.isEmpty)
+            retire(committedRetirable(spark, resultPath, batchKey))
         }
         maintain()
       } else {
@@ -274,6 +264,23 @@ object StreamingRunner {
         }
       }
     }
+
+  /** The ids a committed batch retires, read back from its own outcome
+    * files: terminal-state rows, plus todo rows with no claimable task
+    * left (scriptless monitoring rows). Budget-skipped rows stay out and
+    * return to claimable. The dispatcher's post-commit replay and the
+    * `work-release` verb both retire with this, so a replay retires
+    * exactly what the original trigger would have.
+    */
+  def committedRetirable(spark: SparkSession, results: String,
+      batchKey: String): WorkQueueLedger.Wave = {
+    val todoRows = ItemStore.batchRows(spark, results, batchKey, ItemState.Todo)
+    val taskless = todoRows.select("itemID").join(
+      Runner.todoTasks(todoRows).toDF.select("itemID").distinct(),
+      Seq("itemID"), "left_anti")
+    WorkQueueLedger.Spread(ItemStore.batchItemIds(spark, results, batchKey,
+      ItemState.Terminal).unionByName(taskless))
+  }
 
   /** Cadence heartbeat period for the `work` verb's daemon beat (the
     * dispatcher also beats once per batch). `--takeover-after` bounds

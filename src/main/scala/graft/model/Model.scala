@@ -42,6 +42,8 @@ object ItemState {
   val Done = "done"
   val WallTimeExceeded = "Wall_Time_Exceeded"
   val All: Seq[String] = Seq(Todo, Locked, Done, WallTimeExceeded)
+  /** The states that end an item: a worker done-marks their ids. */
+  val Terminal: Seq[String] = Seq(Done, WallTimeExceeded)
 }
 
 object WorkItem {

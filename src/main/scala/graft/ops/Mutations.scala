@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * affected `itemState` partitions ([[graft.store.ItemStore]]).
   *
   * All verbs take a row predicate instead of the reference's Python id
-  * lists; [[idPredicate]] builds the `isin` form, and for huge id sets use
-  * the DataFrame-join forms (e.g. [[deleteItemsJoin]]) — an `isin` with
-  * millions of literals doesn't scale, a broadcast anti-join does.
+  * lists; [[idPredicate]] builds the `isin` form. An `isin` with millions
+  * of literals doesn't scale; for huge id sets a bloom-pruned anti-join
+  * does ([[graft.analytics.BloomPrune.bloomAntiJoin]]).
   */
 object Mutations {
 
@@ -187,10 +187,6 @@ object Mutations {
 
   /** M10 `delete_singleItem` / list variant (`code/manager.py:690-723`). */
   def deleteItems(items: DataFrame, pred: Column): DataFrame = items.filter(!pred)
-
-  /** M10 at scale: ids as a DataFrame (column `itemID`), broadcast anti-join. */
-  def deleteItemsJoin(items: DataFrame, ids: DataFrame): DataFrame =
-    items.join(broadcast(ids), Seq("itemID"), "left_anti")
 
   /** J2 log↔store reconciliation (`managing-item-logs.py:150-204`): upsert
     * incoming parsed-log rows into an existing table keyed by `keys`; the

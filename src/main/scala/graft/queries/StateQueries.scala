@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.model.WorkItem
+
 /** The reference's indexed query surface (SURVEY.md §2.1 S3-S5, §2.4 A1/A3/A7,
   * §2.6 O1), re-expressed as DataFrame transforms over the item table.
   *
@@ -121,11 +123,11 @@ object StateQueries {
     items.filter(col("lockDate").isNotNull)
       .select(
         col("itemID"),
-        date_format(col("lockDate"), "dd/MM/yyyy-HH:mm:ss").as("lock_date"),
+        date_format(col("lockDate"), WorkItem.DateFormat).as("lock_date"),
         when(col("doneDate").isNull, lit(null).cast("string"))
           .when(col("errorDate"),
-            concat(lit("Error-"), date_format(col("doneDate"), "dd/MM/yyyy-HH:mm:ss")))
-          .otherwise(date_format(col("doneDate"), "dd/MM/yyyy-HH:mm:ss"))
+            concat(lit("Error-"), date_format(col("doneDate"), WorkItem.DateFormat)))
+          .otherwise(date_format(col("doneDate"), WorkItem.DateFormat))
           .as("done_date"))
       .orderBy(col("itemID"))
 }

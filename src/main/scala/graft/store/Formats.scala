@@ -59,9 +59,4 @@ object Formats {
     spark.read.format(format).schema(schema)
       .options(optionsFor(format, forWrite = false)).load(path)
   }
-
-  /** Copy a table between formats, preserving the source schema. */
-  def convert(spark: SparkSession, inPath: String, inFormat: String,
-      outPath: String, outFormat: String, schema: StructType): Unit =
-    write(read(spark, inPath, inFormat, schema), outPath, outFormat)
 }

@@ -62,9 +62,9 @@ object WorkQueueLedger {
       try { VersionedTable.createEmpty(spark, root, schema, bloomKeys); () }
       catch {
         // lost the create race to a concurrent claimer: the table exists,
-        // which is all ensure() promises
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("already exists") =>
+        // which is all ensure() promises; any other refusal is an error
+        case e: IllegalArgumentException =>
+          if (VersionedTable.latestVersion(spark, root).isEmpty) throw e
       }
 
   // ----------------------------------------------------------------- waves
@@ -125,13 +125,6 @@ object WorkQueueLedger {
     */
   val claimRetries = new java.util.concurrent.atomic.LongAdder()
 
-  /** Claim every id in `wantIds` (column `itemID`) not already claimed;
-    * the wave is taken by [[takeWave]]. Returns the win set (itemID rows).
-    */
-  def claim(spark: SparkSession, root: String, wantIds: DataFrame,
-      instanceId: String, tag: String): DataFrame =
-    claim(spark, root, takeWave(wantIds), instanceId, tag).toDF(spark)
-
   /** Claim every id of `want` not already claimed. Returns the win set,
     * in the wave's form. `tag` makes the wave idempotent: a replay
     * returns the original wins without re-appending.
@@ -144,18 +137,17 @@ object WorkQueueLedger {
     * [[Spread]] wave is claimed by a distributed anti-join and write.
     *
     * A lost commit race re-reads, re-validates and retries with
-    * exponential backoff — UNBOUNDED by default (`maxRetries <= 0`): the
-    * conditional commit makes every retry safe, and a hard failure here
-    * would kill the streaming query and crash-loop it through checkpoint
-    * replay (ADVICE r14). Each losing attempt's materialized wave is
-    * freed eagerly so executor storage holds one wave, not the retry
-    * history.
+    * exponential backoff, without bound: the conditional commit makes
+    * every retry safe, and a hard failure here would kill the streaming
+    * query and crash-loop it through checkpoint replay (ADVICE r14).
+    * Each losing attempt's materialized wave is freed eagerly so executor
+    * storage holds one wave, not the retry history.
     */
   def claim(spark: SparkSession, root: String, want: Wave,
-      instanceId: String, tag: String, maxRetries: Int = 0): Wave = {
+      instanceId: String, tag: String): Wave = {
     ensure(spark, root)
-    var tries = 0
-    while (maxRetries <= 0 || tries < maxRetries) {
+    @annotation.tailrec
+    def attempt(tries: Int): Wave = {
       val head = VersionedTable.snapshot(spark, root)
       if (head.tags.contains(tag)) {
         // replayed wave: its rows are already in the ledger, exactly once
@@ -199,12 +191,12 @@ object WorkQueueLedger {
       }
       // lost the race: back off, re-validate
       claimRetries.increment()
-      tries += 1
       val pause = math.min(25L << math.min(tries, 6), 1000L)
       Thread.sleep(pause +
         java.util.concurrent.ThreadLocalRandom.current().nextLong(pause))
+      attempt(tries + 1)
     }
-    sys.error(s"ledger claim lost the commit race $maxRetries times at $root")
+    attempt(1)
   }
 
   /** Release a finished (or wedged) wave's claims. Fast path is
@@ -245,13 +237,6 @@ object WorkQueueLedger {
   private def ensureDone(spark: SparkSession, root: String): Unit =
     ensureTable(spark, root, idsOnly, Seq("itemID"))
 
-  /** Record a finished wave's ids (column `itemID`) in the done set;
-    * the wave is taken by [[takeWave]]. Returns false on replay.
-    */
-  def markDone(spark: SparkSession, doneRoot: String, ids: DataFrame,
-      tag: String): Boolean =
-    markDone(spark, doneRoot, takeWave(ids), tag)
-
   /** Record a finished wave's ids in the done set — one idempotent
     * commit per wave (`tag`-guarded, so a replayed batch appends
     * nothing). The done set is the PERMANENT exactly-once record and the
@@ -279,13 +264,6 @@ object WorkQueueLedger {
           s"done-$tag")
     }
   }
-
-  /** `wantIds` minus the done set (itemID rows); the wave is taken by
-    * [[takeWave]].
-    */
-  def notDone(spark: SparkSession, doneRoot: String,
-      wantIds: DataFrame): DataFrame =
-    notDone(spark, doneRoot, takeWave(wantIds)).toDF(spark)
 
   /** `wave` minus the done set. A wave [[InHand]] is filtered on the
     * driver in three stages, none of them an unconditional scan:

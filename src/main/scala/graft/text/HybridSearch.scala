@@ -62,28 +62,6 @@ object HybridSearch {
       .select("rank", "doc_id", "rrf_q", "r_lex", "r_vec")
   }
 
-  /** General form: fuse ANY number of (doc_id, rank) lists, each with an
-    * integer weight — contribution `w * floor(1e9/(k0+rank))`, all-BIGINT
-    * so weighted fusion stays engine-exact. `fuseRrf` is the two-list
-    * special case with unit weights (it additionally carries the
-    * per-system rank columns through). Plan shape: a union of k-row
-    * lists, one tiny aggregate — corpus-size-independent like the
-    * two-list form.
-    */
-  def fuseRrfWeighted(lists: Seq[(DataFrame, Long)], k: Int): DataFrame = {
-    require(lists.nonEmpty, "fusion needs at least one ranked list")
-    lists.map { case (df, w) =>
-      df.select(col("doc_id"),
-        (lit(w) * rrfQ(col("rank").cast("long"))).as("c"))
-    }
-      .reduce(_ unionByName _)
-      .groupBy("doc_id").agg(sum(col("c")).as("rrf_q"))
-      .orderBy(col("rrf_q").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number()
-        .over(Window.orderBy(col("rrf_q").desc, col("doc_id"))).cast("long"))
-      .select("rank", "doc_id", "rrf_q")
-  }
-
   /** One hybrid query end-to-end: BM25 top-`lexK` for `terms` over `docs`
     * fused with cosine top-`vecK` of `queryVec` (a one-row (id, vector)
     * frame) over `corpusVecs`, overall top `k` by RRF. Joining the two

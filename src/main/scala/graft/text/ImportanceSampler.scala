@@ -42,33 +42,6 @@ object ImportanceSampler {
     (c12, c1, vocab)
   }
 
-  /** Per-doc BIGINT log-likelihood sum of `docs` under `statsDocs`'s
-    * bigram model: (doc_id, n_bigrams, sum_q). Unseen bigrams smooth to
-    * `(0 + 1) / (0 + V)` via the coalesced left joins.
-    */
-  def scoreAgainst(docs: DataFrame, statsDocs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val (c12, c1, vocab) = stats(statsDocs, idCol, textCol)
-    val dBg = LanguageModel.bigrams(docs, idCol, textCol)
-    // q is a pure function of (c12, c1, V): compute it once per DISTINCT
-    // bigram of the scored stream (left joins supply the unseen-bigram
-    // smoothing), then the corpus-sized stream pays one join + one doc
-    // aggregate instead of two per-occurrence model joins
-    val q = floor(log(
-      (coalesce(col("c12"), lit(0L)).cast("double") + lit(1.0)) /
-        (coalesce(col("c1"), lit(0L)).cast("double") + col("v").cast("double")))
-      * lit(Grid)).cast("long")
-    val qTable = dBg.groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
-      .join(c12, Seq("w1", "w2"), "left")
-      .join(c1, Seq("w1"), "left")
-      .crossJoin(broadcast(vocab))
-      .select(col("w1"), col("w2"), q.as("q"))
-    dBg.join(qTable, Seq("w1", "w2"))
-      .select(col("doc_id"), col("q"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
-  }
-
   /** Importance log-ratio per raw doc: `lr_q = floor((sum_tgt − sum_raw) /
     * n_bigrams)` on the 1e-6 grid (length-normalized so long docs don't
     * dominate on sum magnitude alone).
@@ -79,9 +52,9 @@ object ImportanceSampler {
     * (vocab-sized joins that reuse the groupBy partitioning); the stream —
     * the only corpus-sized side — pays ONE join and one doc aggregate
     * instead of four per-occurrence joins, two aggregates and a doc_id
-    * re-join of two scored tables. Arithmetic per bigram is identical to
-    * [[scoreAgainst]] run twice, so results are hash-equal; only the plan
-    * shape changes.
+    * re-join of two scored tables. Per bigram, each model's log-prob is
+    * `floor(log((c12 + 1) / (c1 + V)) * Grid)`, an unseen bigram counting
+    * as c12 = c1 = 0.
     */
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String): DataFrame = {

@@ -21,20 +21,6 @@ object Search {
   val GateTerms: Seq[String] = Seq("hash", "join", "scan")
   val GateK = 20
 
-  /** The inverted index as data: one row per (term, doc_id) posting with
-    * its term frequency. ONE shuffle on (term, doc_id); at 100 TB this is
-    * the thing you'd write bucketed by term so searches are
-    * shuffle-free scans of a few buckets.
-    */
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.normalized(col(textCol)).as("ntext"))
-      .filter(col("ntext").isNotNull && col("ntext") =!= "")
-      .select(col("doc_id"), explode(split(col("ntext"), " ")).as("term"))
-      .groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"))
-
   /** Conjunctive (AND) keyword search: documents containing EVERY query
     * term, ranked by total query-term frequency (desc, doc_id tiebreak),
     * top `k`. Returns (rank, doc_id, score).
@@ -96,9 +82,7 @@ object Search {
     * stream to query-term postings BEFORE its (doc_id, term) exchange, so
     * the big shuffle carries ~|terms|/|vocab| of the corpus; df and the
     * global (N, total-token) stats are one-row/TINY broadcasts; the final
-    * top-k is TakeOrderedAndProject — no global sort. With the inverted
-    * index pre-built and bucketed by term ([[invertedIndex]]), the whole
-    * query becomes a few bucket scans.
+    * top-k is TakeOrderedAndProject — no global sort.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int): DataFrame = {

@@ -172,7 +172,8 @@ class MainSpec extends SparkSpec {
     val ckpt = s"$base/ckpt"
     val id = Main.workerIdentity(ckpt)
     WorkQueueLedger.claim(spark, s"$qdir/_ledger",
-      Seq("R1", "R2", "R3").toDF("itemID"), id, s"$id-batch-0")
+      WorkQueueLedger.takeWave(Seq("R1", "R2", "R3").toDF("itemID")),
+      id, s"$id-batch-0")
     // restart with DEFAULT flags (no --instance): must replay the dead
     // wave and execute every item — the r14 defect silently dropped all 3
     Main.run(spark, "work", qdir, Map(
@@ -196,7 +197,8 @@ class MainSpec extends SparkSpec {
     // a dead dispatcher wedged V1+V2 (claimed, never executed, never to
     // return — different identity, so no checkpoint replay will save it)
     WorkQueueLedger.claim(spark, s"$qdir/_ledger",
-      Seq("V1", "V2").toDF("itemID"), "dead-worker", "dead-worker-batch-0")
+      WorkQueueLedger.takeWave(Seq("V1", "V2").toDF("itemID")),
+      "dead-worker", "dead-worker-batch-0")
     // a live worker drains what it can: only the unclaimed V3
     Main.run(spark, "work", qdir, Map(
       "results" -> s"$base/results", "checkpoint" -> s"$base/ckpt1",
@@ -271,7 +273,8 @@ class MainSpec extends SparkSpec {
     // under the worker's batch key, retirement never ran, worker gone
     val inst = "crashed-w"
     WorkQueueLedger.claim(spark, s"$qdir/_ledger",
-      Seq("P1", "P2").toDF("itemID"), inst, s"$inst-batch-0")
+      WorkQueueLedger.takeWave(Seq("P1", "P2").toDF("itemID")),
+      inst, s"$inst-batch-0")
     val staticBatch = StreamingRunner.queueWorkItems(
       spark.read.format("graft.store.connector.WorkQueueSource")
         .option("path", qdir).load())
@@ -355,7 +358,8 @@ class MainSpec extends SparkSpec {
     WorkQueueSource.append(rows.coalesce(1), qdir)
     // a dead dispatcher (never heartbeat) wedged K1+K2
     WorkQueueLedger.claim(spark, s"$qdir/_ledger",
-      Seq("K1", "K2").toDF("itemID"), "dead-X", "dead-X-batch-0")
+      WorkQueueLedger.takeWave(Seq("K1", "K2").toDF("itemID")),
+      "dead-X", "dead-X-batch-0")
     Main.run(spark, "work", qdir, Map(
       "results" -> s"$base/results", "checkpoint" -> s"$base/ckpt",
       "once" -> "1", "takeover-after" -> "60000"))

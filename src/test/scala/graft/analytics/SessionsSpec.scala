@@ -31,32 +31,6 @@ class SessionsSpec extends SparkSpec {
     assert(u1s0._4 === 0L && u1s0._5 === 20000000L && u1s0._6 === 6.0)
   }
 
-  test("streaming session_window sessions ≡ batch sessionize on closed sessions") {
-    val raw = eventsStream("graft-sess")
-    val q = graft.streaming.Monitors.runToMemory(
-      Sessions.sessionWindowStream(raw, "user_id", "ts", "value", gap = "24 hours"),
-      "sess_stream", "append")
-    try {
-      val streamed = spark.table("sess_stream")
-        .as[(Long, Long, Long, Long, Double)].collect()
-        .map(r => (r._1, r._3) -> r).toMap
-      // append mode emits a session once the watermark (max ts, 0s delay)
-      // passes session_end + gap: compare against the batch sessions that
-      // are closed under that final watermark
-      val batchEv = graft.Tables.events(spark, sf0001)
-      val maxUs = batchEv.select(max(unix_micros($"ts"))).as[Long].head()
-      val batch = Sessions.sessionize(batchEv, "user_id", "ts", "event_id",
-        "value", Sessions.GateGapMicros)
-        .filter($"end_us" + Sessions.GateGapMicros < maxUs)
-        .select($"user_id", $"n_events", $"start_us", $"end_us", $"total_value")
-        .as[(Long, Long, Long, Long, Double)].collect()
-        .map(r => (r._1, r._3) -> r).toMap
-      assert(streamed.nonEmpty)
-      assert(streamed === batch,
-        "streaming sessions diverge from the batch operator")
-    } finally q.stop()
-  }
-
   test("intervalCoverage: overlap never double-counts; nesting, chaining, layout invariance") {
     // key 1: [0,10) ∪ [5,20) merge → [0,20); [20,30) is ADJACENT (start ==
     // prev max end, not >) so it chains in; [50,60) separate; [52,55)

@@ -95,36 +95,6 @@ class AnnIndexSpec extends SparkSpec {
       siblings.mkString(","))
   }
 
-  test("streaming ingest: micro-batched appends == one batch append") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ann-stream")
-    val dir = base.toString + "/idx"
-    val dayA = vecs.filter($"vec_id" % 2 === 0)
-    val dayB = vecs.filter($"vec_id" % 2 === 1)
-    AnnIndex.buildIvfPq(dayA, "vec_id", "v", dir, Dims, M, Ksub, Iters, Nlist)
-    // stream day-B as two parquet files -> two micro-batches
-    val src = base.resolve("src").toString
-    dayB.filter($"vec_id" % 4 === 1).write.parquet(src)
-    val q = AnnIndex.startIngest(
-      spark.readStream.schema(dayB.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      dir, base.resolve("ckpt").toString, "vec_id", "v")
-    try {
-      q.processAllAvailable()
-      dayB.filter($"vec_id" % 4 === 3).write.mode("append").parquet(src)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = AnnIndex.load(spark, dir)
-    assert(streamed.codes.count() === vecs.count())
-    // reference: the same day-B appended in ONE exactly-once drop
-    val dir2 = base.toString + "/idx2"
-    AnnIndex.buildIvfPq(dayA, "vec_id", "v", dir2, Dims, M, Ksub, Iters, Nlist)
-    AnnIndex.appendIvfPq(spark, dir2, dayB, "vec_id", "v", "one-drop")
-    val oneShot = AnnIndex.load(spark, dir2)
-    assert(
-      rows(AnnIndex.searchIvfPq(queries, streamed, "vec_id", "v", K, Nprobe)) ===
-        rows(AnnIndex.searchIvfPq(queries, oneShot, "vec_id", "v", K, Nprobe)))
-  }
-
   test("reloaded flat-PQ index search is bit-identical to in-session train+search") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-pq-spec")
       .toString + "/idx"

@@ -30,17 +30,4 @@ class FormatsSpec extends SparkSpec {
     assert(back === Seq((1L, Some("")), (2L, None),
       (3L, Some("x")), (4L, Some("a,b \"quoted\"\nnewline"))))
   }
-
-  test("convert copies between formats preserving the schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fmt-conv")
-    val ev = graft.Tables.events(spark, sf0001).drop("props")
-    Formats.write(ev, s"$dir/orc", "orc")
-    Formats.convert(spark, s"$dir/orc", "orc", s"$dir/json", "json", ev.schema)
-    val back = Formats.read(spark, s"$dir/json", "json", ev.schema)
-    assert(back.schema === ev.schema)
-    assert(back.count() === ev.count())
-    val a = ev.orderBy("event_id").collect().toSeq
-    val b = back.orderBy("event_id").collect().toSeq
-    assert(a === b)
-  }
 }

@@ -15,28 +15,33 @@ class WorkQueueLedgerSpec extends SparkSpec {
 
   private def ids(xs: String*): DataFrame = xs.toDF("itemID")
 
+  private def wave(xs: String*): WorkQueueLedger.Wave =
+    WorkQueueLedger.takeWave(ids(xs: _*))
+
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-ledger").toString + "/l"
 
   private def won(d: DataFrame): Set[String] =
     d.as[String].collect().toSet
 
+  private def won(w: WorkQueueLedger.Wave): Set[String] = won(w.toDF(spark))
+
   test("sequential contention: second claimer wins only the unclaimed ids") {
     val root = tmp()
-    val a = WorkQueueLedger.claim(spark, root, ids("1", "2", "3"), "A", "a-1")
+    val a = WorkQueueLedger.claim(spark, root, wave("1", "2", "3"), "A", "a-1")
     assert(won(a) === Set("1", "2", "3"))
-    val b = WorkQueueLedger.claim(spark, root, ids("2", "3", "4"), "B", "b-1")
+    val b = WorkQueueLedger.claim(spark, root, wave("2", "3", "4"), "B", "b-1")
     assert(won(b) === Set("4"))
     assert(WorkQueueLedger.entries(spark, root).count() === 4)
   }
 
   test("replayed wave tag returns the ORIGINAL wins and appends nothing") {
     val root = tmp()
-    val first = won(WorkQueueLedger.claim(spark, root, ids("1", "2"), "A", "a-1"))
+    val first = won(WorkQueueLedger.claim(spark, root, wave("1", "2"), "A", "a-1"))
     val vAfter = VersionedTable.latestVersion(spark, root).get
     // at-least-once replay: same tag, even a different (larger) want-set —
     // the wave must not claim anything new
-    val replay = won(WorkQueueLedger.claim(spark, root, ids("1", "2", "3"), "A", "a-1"))
+    val replay = won(WorkQueueLedger.claim(spark, root, wave("1", "2", "3"), "A", "a-1"))
     assert(replay === first)
     assert(VersionedTable.latestVersion(spark, root).get === vAfter,
       "a replayed wave must not commit a new version")
@@ -61,9 +66,9 @@ class WorkQueueLedgerSpec extends SparkSpec {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fa = Future(won(WorkQueueLedger.claim(spark, root,
-      ids(all: _*), "A", "a-race")))
+      wave(all: _*), "A", "a-race")))
     val fb = Future(won(WorkQueueLedger.claim(spark, root,
-      ids(all: _*), "B", "b-race")))
+      wave(all: _*), "B", "b-race")))
     val (wa, wb) = (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
     assert((wa & wb) === Set.empty, s"an item was won twice: ${wa & wb}")
     assert((wa | wb) === all.toSet, "every item claimed exactly once")
@@ -84,7 +89,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
       all.take(80), all.slice(20, 100), all.slice(40, 120), all)
     val futs = wants.zipWithIndex.map { case (w, i) =>
       Future(won(WorkQueueLedger.claim(spark, root,
-        ids(w: _*), s"W$i", s"w$i-race")))
+        wave(w: _*), s"W$i", s"w$i-race")))
     }
     val wins = futs.map(Await.result(_, Duration.Inf))
     for (i <- wins.indices; j <- wins.indices if i < j)
@@ -96,10 +101,10 @@ class WorkQueueLedgerSpec extends SparkSpec {
 
   test("release drops a wave's claims; ids become claimable again") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("1", "2"), "A", "a-1")
+    WorkQueueLedger.claim(spark, root, wave("1", "2"), "A", "a-1")
     assert(WorkQueueLedger.release(spark, root, "a-1"))
     assert(!WorkQueueLedger.release(spark, root, "a-1"), "release is tagged")
-    val again = won(WorkQueueLedger.claim(spark, root, ids("1", "2"), "B", "b-1"))
+    val again = won(WorkQueueLedger.claim(spark, root, wave("1", "2"), "B", "b-1"))
     assert(again === Set("1", "2"))
   }
 
@@ -114,8 +119,8 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("release is MANIFEST-ONLY for wave files: no data IO, stats-proved drop") {
     val root = tmp()
     WorkQueueLedger.claim(spark, root,
-      ids((1 to 50).map(_.toString): _*), "A", "a-1")
-    WorkQueueLedger.claim(spark, root, ids("x", "y"), "B", "b-1")
+      wave((1 to 50).map(_.toString): _*), "A", "a-1")
+    WorkQueueLedger.claim(spark, root, wave("x", "y"), "B", "b-1")
     val before = dataFiles(root)
     assert(WorkQueueLedger.release(spark, root, "a-1"))
     val after = dataFiles(root)
@@ -129,32 +134,32 @@ class WorkQueueLedgerSpec extends SparkSpec {
 
   test("releaseInstance hands back every wave a dead dispatcher holds") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("1", "2"), "dead", "dead-batch-0")
-    WorkQueueLedger.claim(spark, root, ids("3"), "dead", "dead-batch-1")
-    WorkQueueLedger.claim(spark, root, ids("4"), "alive", "alive-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("1", "2"), "dead", "dead-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("3"), "dead", "dead-batch-1")
+    WorkQueueLedger.claim(spark, root, wave("4"), "alive", "alive-batch-0")
     assert(WorkQueueLedger.releaseInstance(spark, root, "dead", "e1"))
     assert(won(WorkQueueLedger.entries(spark, root).select("itemID")) ===
       Set("4"), "the live dispatcher's wave must survive")
     val again = won(WorkQueueLedger.claim(spark, root,
-      ids("1", "2", "3"), "B", "b-take"))
+      wave("1", "2", "3"), "B", "b-take"))
     assert(again === Set("1", "2", "3"))
   }
 
   test("done set: markDone is tag-idempotent, notDone filters and file-prunes") {
     val root = tmp() + "-done"
-    val want = ids("1", "2", "3", "4")
+    val want = wave("1", "2", "3", "4")
     // empty done set: everything passes through
     assert(won(WorkQueueLedger.notDone(spark, root, want)) ===
       Set("1", "2", "3", "4"))
-    assert(WorkQueueLedger.markDone(spark, root, ids("2", "3"), "t-0"))
-    assert(!WorkQueueLedger.markDone(spark, root, ids("2", "3"), "t-0"),
+    assert(WorkQueueLedger.markDone(spark, root, wave("2", "3"), "t-0"))
+    assert(!WorkQueueLedger.markDone(spark, root, wave("2", "3"), "t-0"),
       "a replayed wave appends nothing")
     assert(won(WorkQueueLedger.notDone(spark, root, want)) === Set("1", "4"))
     assert(won(WorkQueueLedger.doneEntries(spark, root).select("itemID")) ===
       Set("2", "3"))
     // probe ids disjoint from every done file's range: the pruned path
     // reads NO done files and returns the want set unchanged
-    assert(won(WorkQueueLedger.notDone(spark, root, ids("zz"))) === Set("zz"))
+    assert(won(WorkQueueLedger.notDone(spark, root, wave("zz"))) === Set("zz"))
   }
 
   test("notDone drops done ids whose UTF-16 and code-point orders differ") {
@@ -162,14 +167,15 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // "a\uFF01" sorts before the emoji "a\uD83D\uDE00" in code-point order
     // (parquet's footer order) and after it in Java's UTF-16 order
     val (fw, emoji) = ("a\uFF01", "a\uD83D\uDE00")
-    assert(WorkQueueLedger.markDone(spark, done, ids(fw, emoji).coalesce(1), "t-0"))
+    assert(WorkQueueLedger.markDone(spark, done,
+      WorkQueueLedger.takeWave(ids(fw, emoji).coalesce(1)), "t-0"))
     assert(VersionedTable.snapshot(spark, done).files.filter(_.rows > 0)
       .map(f => (f.mins("itemID"), f.maxs("itemID"))) === Seq((fw, emoji)),
       "fixture: one done file ranging fw..emoji")
-    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw))) === Set.empty)
-    assert(won(WorkQueueLedger.notDone(spark, done, ids(emoji))) === Set.empty)
-    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw, emoji))) === Set.empty)
-    assert(won(WorkQueueLedger.notDone(spark, done, ids(fw, emoji, "b"))) === Set("b"))
+    assert(won(WorkQueueLedger.notDone(spark, done, wave(fw))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, wave(emoji))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, wave(fw, emoji))) === Set.empty)
+    assert(won(WorkQueueLedger.notDone(spark, done, wave(fw, emoji, "b"))) === Set("b"))
   }
 
   test("ledgerDispatcher end-to-end over a connector queue: exactly-once outcomes") {
@@ -219,7 +225,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // wave (ledger commit landed) and died BEFORE committing outcomes —
     // exactly the state a checkpoint restart resumes from
     val instance = "disp-stable"
-    WorkQueueLedger.claim(spark, ledger, ids("A", "B", "C"), instance,
+    WorkQueueLedger.claim(spark, ledger, wave("A", "B", "C"), instance,
       s"$instance-batch-0")
     assert(WorkQueueLedger.entries(spark, ledger).count() === 3)
     // restart under the SAME identity (the work verb derives it from the
@@ -246,7 +252,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // 6 waves of disjoint, zero-padded id ranges — one small file each
     for (w <- 0 until 6)
       WorkQueueLedger.markDone(spark, root,
-        ids((0 until 50).map(i => f"item-${w * 50 + i}%06d"): _*), s"w-$w")
+        wave((0 until 50).map(i => f"item-${w * 50 + i}%06d"): _*), s"w-$w")
     val before = VersionedTable.snapshot(spark, root).files.count(_.rows > 0)
     WorkQueueLedger.compactDone(spark, root, targetRows = 100L)
     val after = VersionedTable.snapshot(spark, root)
@@ -255,7 +261,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // membership is unchanged and still exact
     assert(WorkQueueLedger.doneEntries(spark, root).count() === 300)
     assert(won(WorkQueueLedger.notDone(spark, root,
-      ids(f"item-${7}%06d", "zzz"))) === Set("zzz"))
+      wave(f"item-${7}%06d", "zzz"))) === Set("zzz"))
     // ranges stay TIGHT after packing (range-sorted): a probe outside the
     // id space overlaps no packed file at all
     val hit = after.files.filter(fe => fe.rows > 0 &&
@@ -289,7 +295,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // claimed, outcomes committed under the dispatcher's batch key, no
     // markDone/release yet
     val instance = "ret-1"
-    WorkQueueLedger.claim(spark, ledger, ids("A", "B"), instance,
+    WorkQueueLedger.claim(spark, ledger, wave("A", "B"), instance,
       s"$instance-batch-0")
     val staticBatch = StreamingRunner.queueWorkItems(
       spark.read.format("graft.store.connector.WorkQueueSource")
@@ -380,11 +386,11 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // another dispatcher finished X: markDone committed BEFORE its release,
     // which preceded any claim we could win — so by the time our claim CAS
     // succeeds, X's done-ness is durably visible to a re-check
-    WorkQueueLedger.markDone(spark, done, ids("X"), "other-retire")
-    val wave = WorkQueueLedger.claim(spark, root, ids("X", "Y"), "B", "b-race")
-    assert(won(wave) === Set("X", "Y"),
+    WorkQueueLedger.markDone(spark, done, wave("X"), "other-retire")
+    val claimed = WorkQueueLedger.claim(spark, root, wave("X", "Y"), "B", "b-race")
+    assert(won(claimed) === Set("X", "Y"),
       "the raced claim wins both (the pre-claim filter was stale)")
-    val exec = WorkQueueLedger.notDone(spark, done, wave)
+    val exec = WorkQueueLedger.notDone(spark, done, claimed)
     assert(won(exec) === Set("Y"),
       "the post-claim re-check must drop the already-done id")
   }
@@ -396,8 +402,8 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // interleaved ids so every wave's range overlaps the done files —
     // the shape where range pruning holds nothing back (random-id analog)
     WorkQueueLedger.markDone(spark, done,
-      ids((0 until 200 by 2).map(i => f"id-$i%04d"): _*), "w-0")
-    val want1 = ids(f"id-${1}%04d", f"id-${2}%04d", f"id-${101}%04d",
+      wave((0 until 200 by 2).map(i => f"id-$i%04d"): _*), "w-0")
+    val want1 = wave(f"id-${1}%04d", f"id-${2}%04d", f"id-${101}%04d",
       f"id-${100}%04d", "id-9999")
     assert(won(WorkQueueLedger.notDone(spark, done, want1)) ===
       Set("id-0001", "id-0101", "id-9999"),
@@ -405,7 +411,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // advance: a LATER wave marks more ids done; a stale digest that
     // missed them would be a false negative — the advance must fold the
     // new files in before probing
-    WorkQueueLedger.markDone(spark, done, ids("id-0001", "id-9999"), "w-1")
+    WorkQueueLedger.markDone(spark, done, wave("id-0001", "id-9999"), "w-1")
     assert(won(WorkQueueLedger.notDone(spark, done, want1)) ===
       Set("id-0101"),
       "the digest must cover ids done-marked after it was built")
@@ -422,19 +428,18 @@ class WorkQueueLedgerSpec extends SparkSpec {
     WorkQueueLedger.resetDigestCacheForTests()
     val done = tmp() + "-dig0"
     WorkQueueLedger.markDone(spark, done,
-      ids((0 until 100 by 2).map(i => f"e-$i%04d"): _*), "w-0")
-    val want = ids("e-0001", "e-0002")
+      wave((0 until 100 by 2).map(i => f"e-$i%04d"): _*), "w-0")
+    val want = wave("e-0001", "e-0002")
     // build the digest (overlapping range forces the digest path)
     assert(won(WorkQueueLedger.notDone(spark, done, want)) === Set("e-0001"))
     // a contending dispatcher whose whole win set was raced out retires
     // an EMPTY id set — a tagged zero-row commit in the done table
-    WorkQueueLedger.markDone(spark, done,
-      Seq.empty[String].toDF("itemID"), "w-empty")
+    WorkQueueLedger.markDone(spark, done, wave(), "w-empty")
     // the digest advance over the zero-row delta must neither throw nor
     // lose exactness
     assert(won(WorkQueueLedger.notDone(spark, done, want)) === Set("e-0001"))
     // and a subsequent REAL wave still folds in
-    WorkQueueLedger.markDone(spark, done, ids("e-0001"), "w-1")
+    WorkQueueLedger.markDone(spark, done, wave("e-0001"), "w-1")
     assert(won(WorkQueueLedger.notDone(spark, done, want)) === Set.empty)
   }
 
@@ -465,11 +470,11 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(VersionedTable.candidateFilesString(spark, local, "itemID",
       "bl-00150x").isEmpty)
     // digest path (built on this probe): re-offers drop, a fresh id passes
-    val want = ids("bl-00005", "bl-00100", "bl-00150x", "bl-00151y")
+    val want = wave("bl-00005", "bl-00100", "bl-00150x", "bl-00151y")
     assert(won(WorkQueueLedger.notDone(spark, local, want)) ===
       Set("bl-00150x", "bl-00151y"))
     // a second wave in hand folds into the live digest; its ids must drop
-    assert(WorkQueueLedger.markDone(spark, local, ids("bl-00150x"), "w-1"))
+    assert(WorkQueueLedger.markDone(spark, local, wave("bl-00150x"), "w-1"))
     assert(won(WorkQueueLedger.notDone(spark, local, want)) === Set("bl-00151y"))
     // and a cold process (no digest) reaches the same answer from the files
     WorkQueueLedger.resetDigestCacheForTests()
@@ -496,7 +501,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // rows past the cap but few distinct ids: the distributed done filter
     // takes its distinct ids in hand (range overlap forces the probe)
     val doneRoot = s"$dir/probe_done"
-    WorkQueueLedger.markDone(spark, doneRoot, ids("dup-a", "dup-c"), "p-0")
+    WorkQueueLedger.markDone(spark, doneRoot, wave("dup-a", "dup-c"), "p-0")
     val dupes = spark.range(cap + 1)
       .selectExpr("IF(id % 2 = 0, 'dup-a', 'dup-b') AS itemID")
     WorkQueueLedger.notDone(spark, doneRoot, WorkQueueLedger.takeWave(dupes)) match {
@@ -536,15 +541,15 @@ class WorkQueueLedgerSpec extends SparkSpec {
       "carry by reference") {
     val done = tmp() + "-rm"
     WorkQueueLedger.markDone(spark, done,
-      ids((0 until 50).map(i => f"a-$i%03d"): _*), "w-a")
+      wave((0 until 50).map(i => f"a-$i%03d"): _*), "w-a")
     WorkQueueLedger.markDone(spark, done,
-      ids((0 until 50).map(i => f"z-$i%03d"): _*), "w-z")
+      wave((0 until 50).map(i => f"z-$i%03d"): _*), "w-z")
     val aFiles = VersionedTable.snapshot(spark, done).files
       .filter(_.maxs.get("itemID").exists(_ < "z")).map(_.path).toSet
     WorkQueueLedger.removeDone(spark, done, ids("z-000", "z-001"))
     assert(WorkQueueLedger.doneEntries(spark, done).count() === 98)
     assert(won(WorkQueueLedger.notDone(spark, done,
-      ids("z-000", "z-001", "z-002", "a-000"))) === Set("z-000", "z-001"))
+      wave("z-000", "z-001", "z-002", "a-000"))) === Set("z-000", "z-001"))
     assert(aFiles.subsetOf(
       VersionedTable.snapshot(spark, done).files.map(_.path).toSet),
       "files that cannot hold the removed ids must carry by reference")
@@ -563,9 +568,9 @@ class WorkQueueLedgerSpec extends SparkSpec {
     WorkQueueSource.append(rows("T1", "T2", "T3", "T4").coalesce(1), queue)
     // dead-A wedged T1+T2 (claimed, never beat — a crash predating its
     // first heartbeat, the worst case); live-C holds T3 and beats NOW
-    WorkQueueLedger.claim(spark, ledger, ids("T1", "T2"), "dead-A",
+    WorkQueueLedger.claim(spark, ledger, wave("T1", "T2"), "dead-A",
       "dead-A-batch-0")
-    WorkQueueLedger.claim(spark, ledger, ids("T3"), "live-C",
+    WorkQueueLedger.claim(spark, ledger, wave("T3"), "live-C",
       "live-C-batch-0")
     WorkQueueLedger.beat(spark, ledger, "live-C")
     val q = StreamingRunner.ledgerDispatcher(
@@ -599,7 +604,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // exactly the starved shape whose maintenance the old guard skipped
     val all = (0 until 70).map(i => f"s-$i%03d")
     for (id <- all) WorkQueueSource.append(rows(id).coalesce(1), queue)
-    WorkQueueLedger.markDone(spark, s"${ledger}_done", ids(all: _*), "seed")
+    WorkQueueLedger.markDone(spark, s"${ledger}_done", wave(all: _*), "seed")
     val q = StreamingRunner.ledgerDispatcher(
         StreamingRunner.queueWorkItems(
           StreamingRunner.queueStream(spark, queue, Some(1))),
@@ -644,7 +649,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("atomic heartbeat: a live beater hammered by concurrent takeover " +
       "scans is never stolen (r16 VERDICT #1)") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("L1"), "live", "live-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("L1"), "live", "live-batch-0")
     WorkQueueLedger.beat(spark, root, "live")
     @volatile var stop = false
     @volatile var beats = 0L
@@ -673,7 +678,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("a dispatcher crashing between beat-file create and first write is " +
       "reclaimable once the bound elapses (r17 ADVICE: no permanent stall)") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("C1"), "crashed", "c-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("C1"), "crashed", "c-batch-0")
     val hb = new java.io.File(new java.io.File(root), "_heartbeats")
     hb.mkdirs()
     // the worst case the fix targets: the beat FILE exists (name stamped
@@ -695,8 +700,8 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("dot-prefix sibling instances never cross-delete or cross-read " +
       "beats (r17 ADVICE: host.a vs host.a.b)") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("A1"), "host.a", "a-batch-0")
-    WorkQueueLedger.claim(spark, root, ids("B1"), "host.a.b", "b-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("A1"), "host.a", "a-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("B1"), "host.a.b", "b-batch-0")
     WorkQueueLedger.beat(spark, root, "host.a.b")
     // hammer the SHORTER sibling's beat: with bare prefix matching its
     // prune pass deleted host.a.b's live beats, so host.a.b then listed
@@ -716,7 +721,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("unreadable heartbeat reads as FRESH, not stale-since-epoch " +
       "(r16 VERDICT #1: torn read must not steal a live wave)") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("G1"), "garbled", "g-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("G1"), "garbled", "g-batch-0")
     // simulate a torn/garbled beat: the stamped file EXISTS but its
     // content does not parse
     val hb = new java.io.File(new java.io.File(root), "_heartbeats")
@@ -731,7 +736,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
       Set("G1"))
     // an instance with NO beat file at all is still takeover-eligible
     // (crash before first heartbeat — the pre-existing semantics)
-    WorkQueueLedger.claim(spark, root, ids("D1"), "dead", "d-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("D1"), "dead", "d-batch-0")
     assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
       "torn-2") === Seq("dead"))
   }
@@ -739,7 +744,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
   test("a newer torn beat is not hidden by an older complete one: the " +
       "instance reads fresh inside the bound") {
     val root = tmp()
-    WorkQueueLedger.claim(spark, root, ids("N1"), "torn", "n-batch-0")
+    WorkQueueLedger.claim(spark, root, wave("N1"), "torn", "n-batch-0")
     val hb = new java.io.File(new java.io.File(root), "_heartbeats")
     hb.mkdirs()
     // an old complete beat (120 s ago, parses) and a NEWER beat whose
