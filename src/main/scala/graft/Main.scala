@@ -1010,10 +1010,10 @@ object Main {
       println(s"""{"rows": ${spark.read.parquet(out).count()}}""")
     case "vtable" =>
       // transactional-table admin: <table> is the VersionedTable root;
-      // --op history|read|merge|delete|optimize|vacuum|feed
+      // --op history|read|merge|delete|optimize|vacuum|feed|fsck|lookup
       import graft.store.VersionedTable
       flags.getOrElse("op", sys.error(
-        "--op <history|read|merge|delete|optimize|vacuum|feed|fsck> required")) match {
+        "--op <history|read|merge|delete|optimize|vacuum|feed|fsck|lookup> required")) match {
         case "history" =>
           VersionedTable.history(spark, table).orderBy("version")
             .show(truncate = false)
@@ -1061,18 +1061,20 @@ object Main {
             .write.mode("overwrite").parquet(out)
           println(s"""{"rows": ${spark.read.parquet(out).count()}}""")
         case "lookup" =>
-          // bloom/range-pruned point read: --key column, --value long
-          val df = VersionedTable.pointLookup(spark, table,
-            flags.getOrElse("key", sys.error("--key is required")),
-            flags.getOrElse("value", sys.error("--value is required")).toLong,
-            flags.get("version").map(_.toLong))
-          val cand = VersionedTable.candidateFiles(spark, table,
-            flags.getOrElse("key", ""),
-            flags.getOrElse("value", "0").toLong,
-            flags.get("version").map(_.toLong))
+          // bloom/range-pruned point read: --key column, --value read in
+          // the column's type (a string column takes the text as it is)
+          val key = flags.getOrElse("key", sys.error("--key is required"))
+          val text = flags.getOrElse("value", sys.error("--value is required"))
+          val version = flags.get("version").map(_.toLong)
+          val value = VersionedTable.snapshot(spark, table, version)
+            .schema(key).dataType match {
+              case org.apache.spark.sql.types.StringType => text
+              case _ => text.toLongOption.getOrElse(text)
+            }
+          val df = VersionedTable.pointLookup(spark, table, key, value, version)
           flags.get("output").foreach(o =>
             df.write.mode("overwrite").parquet(o))
-          println(s"""{"rows": ${df.count()}, "files_read": ${cand.size}}""")
+          println(s"""{"rows": ${df.count()}, "files_read": ${df.inputFiles.length}}""")
         case other => sys.error(s"unknown vtable op: $other")
       }
     case other => sys.error(s"unknown verb: $other")

@@ -86,15 +86,10 @@ object CosineSimilarity {
     ColumnShim.column(CosineSimilarity(
       ColumnShim.expression(a), ColumnShim.expression(b)))
 
-  /** Builder with arity validation (used by both registration paths). */
+  /** Builder with arity validation (the SQL registration in [[GraftExtensions]]). */
   def build(exprs: Seq[Expression]): CosineSimilarity = {
     require(exprs.length == 2,
       s"cosine_sim takes exactly 2 arguments, got ${exprs.length}")
     CosineSimilarity(exprs.head, exprs(1))
   }
-
-  /** Register as a SQL function (`SELECT cosine_sim(a, b)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", build, "scala_udf")
 }

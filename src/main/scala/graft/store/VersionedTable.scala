@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructType}
 
 /** A no-dependency transactional table: atomic versioned commits over plain
   * parquet, snapshot-isolated reads, time travel, and stats-pruned
@@ -363,19 +364,15 @@ object VersionedTable {
     val words = m / 64
     val data = spark.read.parquet(dir)
     cols.foldLeft(entries) { (es, c) =>
-      // integral columns bloom their value; string columns bloom
-      // KeyBloom.stringKey (the same md5-60 a driver-side lookup derives)
-      val isString = data.schema(c).dataType ==
-        org.apache.spark.sql.types.StringType
+      // keys reach the bloom as text, hashed by the column's key type
+      val hash = keyType(data.schema, c).hash
       val keyed = data
-        .select(input_file_name().as("f"), col(c).as("k"))
+        .select(input_file_name().as("f"), col(c).cast("string").as("k"))
         .filter(col("k").isNotNull)
         .rdd
         .map { r =>
           val file = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
-          val k = if (isString) KeyBloom.stringKey(r.getString(1))
-            else r.getAs[Number](1).longValue
-          (file, k)
+          (file, hash(r.getString(1)))
         }
       val perFile = keyed
         .aggregateByKey(new Array[Long](words))(
@@ -431,10 +428,10 @@ object VersionedTable {
     val blooms =
       if (m < 0) Map.empty[String, String]
       else bloomCols.filter(schema.fieldNames.contains).map { c =>
-        val i = schema.fieldIndex(c)
+        val (i, hash) = (schema.fieldIndex(c), keyType(schema, c).hash)
         val words = rows.iterator.filterNot(_.isNullAt(i))
           .foldLeft(new Array[Long](m / 64))((w, r) =>
-            KeyBloom.add(w, m, KeyBloom.stringKey(r.getString(i))))
+            KeyBloom.add(w, m, hash(r.getString(i))))
         c -> KeyBloom.encode(m, words)
       }.toMap
     Seq(FileEntry(rel, n, mins, maxs, blooms, nulls))
@@ -469,27 +466,21 @@ object VersionedTable {
           case None => Some(st.getNumNulls)
         }
         if (st != null && !st.isEmpty && st.hasNonNullValue) {
-          val (mn, mx) = (st.genericGetMin, st.genericGetMax) match {
+          // the extremes as text, merged across row groups in the order
+          // of their key type
+          val range = (st.genericGetMin, st.genericGetMax) match {
             case (a: java.lang.Number, b: java.lang.Number)
                 if !a.isInstanceOf[java.lang.Double] && !a.isInstanceOf[java.lang.Float] =>
-              (Some(a.longValue.toString), Some(b.longValue.toString))
+              Some((IntegralKey, a.longValue.toString, b.longValue.toString))
             case (a: org.apache.parquet.io.api.Binary, b: org.apache.parquet.io.api.Binary)
                 if c.getPrimitiveType.getLogicalTypeAnnotation ==
                   org.apache.parquet.schema.LogicalTypeAnnotation.stringType() =>
-              (Some(a.toStringUsingUTF8), Some(b.toStringUsingUTF8))
-            case _ => (None, None)
+              Some((StringKey, a.toStringUsingUTF8, b.toStringUsingUTF8))
+            case _ => None
           }
-          (mn, mx) match {
-            case (Some(lo), Some(hi)) =>
-              mins.updateWith(name) {
-                case Some(cur) => Some(minOf(cur, lo, isNumeric(st)))
-                case None => Some(lo)
-              }
-              maxs.updateWith(name) {
-                case Some(cur) => Some(maxOf(cur, hi, isNumeric(st)))
-                case None => Some(hi)
-              }
-            case _ =>
+          range.foreach { case (kt, lo, hi) =>
+            mins.updateWith(name)(cur => Some(cur.fold(lo)(kt.order.min(_, lo))))
+            maxs.updateWith(name)(cur => Some(cur.fold(hi)(kt.order.max(_, hi))))
           }
         }
       }
@@ -497,13 +488,6 @@ object VersionedTable {
         (nulls -- nullsUnknown).toMap)
     } finally reader.close()
   }
-
-  private def isNumeric(st: org.apache.parquet.column.statistics.Statistics[_]): Boolean =
-    st.genericGetMin.isInstanceOf[java.lang.Number]
-  private def minOf(a: String, b: String, num: Boolean): String =
-    if (num) { if (a.toLong <= b.toLong) a else b } else StringOrder.min(a, b)
-  private def maxOf(a: String, b: String, num: Boolean): String =
-    if (num) { if (a.toLong >= b.toLong) a else b } else StringOrder.max(a, b)
 
   /** Code-point order of strings: the order parquet writes string min/max
     * in (unsigned UTF-8 bytes) and Spark's `min`/`max` use. Java's `<=` on
@@ -525,9 +509,67 @@ object VersionedTable {
     }
   }
 
-  /** True when a string footer range [mn, mx] may hold a value in [lo, hi]. */
-  def rangeOverlaps(mn: String, mx: String, lo: String, hi: String): Boolean =
-    StringOrder.lteq(mn, hi) && StringOrder.lteq(lo, mx)
+  /** How the keys of one column meet a file's footer and bloom, decided
+    * from the column's type by [[keyType]]. Keys travel as text, the form
+    * footer min/max take: an integral column compares that text as a
+    * number and blooms the value itself; a string column compares in
+    * [[StringOrder]] and blooms [[KeyBloom.stringKey]]. `holds` says
+    * whether a driver-side value belongs to the column.
+    */
+  private[store] final class KeyType(val order: Ordering[String],
+      val hash: String => Long, val holds: Any => Boolean)
+
+  private val IntegralKey = new KeyType(Ordering.by((_: String).toLong),
+    _.toLong, {
+      case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+          _: java.lang.Byte => true
+      case _ => false
+    })
+  private val StringKey = new KeyType(StringOrder, KeyBloom.stringKey,
+    _.isInstanceOf[String])
+
+  /** The key type of `column`; any type but an integral or string one is
+    * refused, naming the column.
+    */
+  private[store] def keyType(schema: StructType, column: String): KeyType =
+    schema(column).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => IntegralKey
+      case StringType => StringKey
+      case t => throw new IllegalArgumentException(
+        s"key column $column is ${t.simpleString}: keyed reads and " +
+          "rewrites take an integral or string column")
+    }
+
+  /** The one file prune of every keyed read and rewrite: the files of `s`
+    * with rows whose `key` footer range meets [lo, hi] and, when the keys
+    * are in hand (at most [[BloomProbeMax]]), that hold one and the same
+    * key both in that range and in their bloom. A file with no stats or
+    * no bloom for `key` passes that test, and a bloom has no false
+    * negatives, so a file holding one of the keys is never dropped.
+    */
+  private[store] def prune(s: Snapshot, key: String, lo: String, hi: String,
+      inHand: Option[Seq[String]] = None): Seq[FileEntry] = {
+    val kt = keyType(s.schema, key)
+    val probes = inHand.map(_.map(k => (k, kt.hash(k))))
+    s.files.filter { fe =>
+      def meets(a: String, b: String) = (fe.mins.get(key), fe.maxs.get(key)) match {
+        case (Some(mn), Some(mx)) => kt.order.lteq(mn, b) && kt.order.lteq(a, mx)
+        case _ => true
+      }
+      fe.rows > 0 && meets(lo, hi) && probes.forall(_.exists { case (k, h) =>
+        meets(k, k) && fe.blooms.get(key).forall(KeyBloom.mightContain(_, h))
+      })
+    }
+  }
+
+  /** The data files `paths` of a table at `schema`; none reads as an
+    * empty frame of the schema.
+    */
+  private def readFiles(spark: SparkSession, root: String, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(paths.map(p => s"$root/$p"): _*)
 
   // ------------------------------------------------------------- commits
 
@@ -579,7 +621,7 @@ object VersionedTable {
   }
 
   /** Create a new table at `root` from `df` (version 1). `bloomKeys`
-    * declares the integral columns every subsequent commit builds
+    * declares the key columns every subsequent commit builds
     * per-file [[KeyBloom]]s for — the point-lookup / targeted-merge
     * file-skipping index (immutable table property, like Delta's
     * dataSkipping configuration).
@@ -760,68 +802,37 @@ object VersionedTable {
   }
 
   /** The files a point lookup `key = value` must read at `version`:
-    * range-pruned by footer min/max, then bloom-pruned. With
-    * hash-distributed keys, range stats overlap on every file and prune
-    * nothing — the bloom is what turns "open every file" into "open ~1
-    * file" (FPR extras only), which is the 100 TB point-read story.
+    * [[prune]]d by footer range, then by bloom. With hash-distributed
+    * keys, range stats overlap on every file and prune nothing — the
+    * bloom is what turns "open every file" into "open ~1 file" (FPR
+    * extras only), which is the 100 TB point-read story. `value` must
+    * belong to the key column's type, as for `lit`: a Long or Int for an
+    * integral column, a String for a string one.
     */
   def candidateFiles(spark: SparkSession, root: String, key: String,
-      value: Long, version: Option[Long] = None): Seq[String] = {
+      value: Any, version: Option[Long] = None): Seq[String] = {
     val s = snapshot(spark, root, version)
-    s.files.filter(fe => mightHit(fe, key, value, value) &&
-        fe.blooms.get(key).forall(KeyBloom.mightContain(_, value)))
-      .map(_.path)
+    require(keyType(s.schema, key).holds(value),
+      s"cannot look up $value in key column $key of type " +
+        s.schema(key).dataType.simpleString)
+    val k = value.toString
+    prune(s, key, k, k, Some(Seq(k))).map(_.path)
   }
 
   /** Point lookup reading only [[candidateFiles]]. */
   def pointLookup(spark: SparkSession, root: String, key: String,
-      value: Long, version: Option[Long] = None): DataFrame = {
+      value: Any, version: Option[Long] = None): DataFrame = {
     val s = snapshot(spark, root, version)
-    val files = candidateFiles(spark, root, key, value, version)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-    else spark.read.schema(s.schema)
-      .parquet(files.map(p => s"$root/$p"): _*)
-      .filter(col(key).cast("long") === value)
-  }
-
-  /** String-key variants: the bloom probes [[KeyBloom.stringKey]] (the
-    * hash [[attachBlooms]] built string blooms with) and the range check
-    * compares the footer min/max strings in [[StringOrder]] — URL / fingerprint /
-    * natural-key point reads without a surrogate id.
-    */
-  def candidateFilesString(spark: SparkSession, root: String, key: String,
-      value: String, version: Option[Long] = None): Seq[String] = {
-    val s = snapshot(spark, root, version)
-    val h = KeyBloom.stringKey(value)
-    s.files.filter { fe =>
-      val rangeHit = (fe.mins.get(key), fe.maxs.get(key)) match {
-        case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, value, value)
-        case _ => true
-      }
-      rangeHit && fe.blooms.get(key).forall(KeyBloom.mightContain(_, h))
-    }.map(_.path)
-  }
-
-  /** Point lookup by string key reading only [[candidateFilesString]]. */
-  def pointLookupString(spark: SparkSession, root: String, key: String,
-      value: String, version: Option[Long] = None): DataFrame = {
-    val s = snapshot(spark, root, version)
-    val files = candidateFilesString(spark, root, key, value, version)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-    else spark.read.schema(s.schema)
-      .parquet(files.map(p => s"$root/$p"): _*)
-      .filter(col(key) === value)
+    readFiles(spark, root, s.schema,
+        candidateFiles(spark, root, key, value, Some(s.version)))
+      .filter(col(key) === lit(value))
   }
 
   /** Read version `version` (default: latest) as a DataFrame. */
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
     val s = snapshot(spark, root, version)
-    if (s.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-    else spark.read.schema(s.schema).parquet(s.files.map(f => s"$root/${f.path}"): _*)
+    readFiles(spark, root, s.schema, s.files.map(_.path))
   }
 
   /** Commit log as a DataFrame (version, op, n_files, n_rows). */
@@ -836,28 +847,6 @@ object VersionedTable {
 
   // ------------------------------------------- stats-pruned merge/delete
 
-  /** File-level pruning: does `fe`'s `[min, max]` of `key` possibly
-    * intersect the batch's key range? Files with no stats for `key` are
-    * conservatively kept.
-    */
-  private def mightHit(fe: FileEntry, key: String, lo: Long, hi: Long): Boolean =
-    (fe.mins.get(key), fe.maxs.get(key)) match {
-      case (Some(mn), Some(mx)) => mx.toLong >= lo && mn.toLong <= hi
-      case _ => true
-    }
-
-  /** Bloom refinement on top of range pruning: with a small probe key set
-    * (None = too many keys, stay conservative) a file survives only if
-    * some probe key might be in its bloom. Files without a bloom for `key`
-    * are kept. Never prunes a true hit (bloom has no false negatives).
-    */
-  private def bloomMightHit(fe: FileEntry, key: String,
-      probe: Option[Array[Long]]): Boolean =
-    (fe.blooms.get(key), probe) match {
-      case (Some(enc), Some(ks)) => ks.exists(KeyBloom.mightContain(enc, _))
-      case _ => true
-    }
-
   /** Max batch keys collected to the driver for bloom probing during
     * MERGE/DELETE — a targeted mutation ("fix these rows") gets per-file
     * bloom pruning; a bulk one falls back to range-only pruning and never
@@ -865,8 +854,8 @@ object VersionedTable {
     */
   val BloomProbeMax = 10000
 
-  /** Copy-on-write upsert by `key` (a long/int column): files whose footer
-    * key-range cannot contain a batch key are carried forward BY REFERENCE —
+  /** Copy-on-write upsert by `key` (an integral or string column): files
+    * that cannot hold a batch key are carried forward BY REFERENCE —
     * the 100 TB property: a merge touching one day's keys rewrites one
     * day's files, not the table. Returns the committed version.
     */
@@ -888,7 +877,7 @@ object VersionedTable {
     * releasing a wave is one commit-JSON write regardless of wave size —
     * O(1) data movement per trigger where a filtering rewrite would be
     * O(ledger) per trigger and O(N²/batch) over a worker's lifetime.
-    * Files whose [min,max] range merely ADMITS `value` (or that carry no
+    * Files whose range and bloom merely ADMIT `value` (or that carry no
     * stats — e.g. pre-nullCounts manifests) are rewritten without the
     * matching rows; null rows are never deleted (null ≠ `value`).
     */
@@ -897,134 +886,80 @@ object VersionedTable {
     try {
       commitLoop(spark, root, Some(tag)) { parent =>
         val p = parent.getOrElse(sys.error(s"$root does not exist"))
-        val (pure, rest) = p.files.partition(fe =>
+        val hits = prune(p, column, value, value, Some(Seq(value)))
+        val hit = hits.map(_.path).toSet
+        // pure files are dropped purely via the manifest diff
+        val mixed = hits.filterNot(fe =>
           fe.mins.get(column).contains(value) &&
             fe.maxs.get(column).contains(value) &&
             fe.nullCounts.get(column).contains(0L))
-        val (mixed, kept) = rest.partition(fe =>
-          (fe.mins.get(column), fe.maxs.get(column)) match {
-            case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, value, value)
-            case _ => fe.rows > 0 // no stats: conservatively rewritten
-          })
-        val _ = pure // dropped purely via the manifest diff below
         val rewritten =
           if (mixed.isEmpty) Seq.empty
           else writeData(
-            spark.read.schema(p.schema)
-              .parquet(mixed.map(f => s"$root/${f.path}"): _*)
+            readFiles(spark, root, p.schema, mixed.map(_.path))
               .filter(col(column).isNull || col(column) =!= value),
             root, p.bloomCols)
-        ("delete", kept ++ rewritten, p.schema)
+        ("delete", p.files.filterNot(fe => hit(fe.path)) ++ rewritten, p.schema)
       }
       true
     } catch { case _: TagAlreadyApplied => false }
 
-  /** Copy-on-write delete of every row whose `key` appears in `keys`. */
+  /** Copy-on-write delete of every row whose `key` (an integral or
+    * string column) appears in `keys`: deleting a handful of ids from a
+    * lifetime-sized table rewrites only the files that might hold them.
+    */
   def deleteByKeys(spark: SparkSession, root: String, keys: DataFrame,
       key: String): Long =
     rewriteHits(spark, root, keys.select(col(key)), key, "delete") { (hitRows, ks) =>
-      hitRows.join(ks.select(col(key)), Seq(key), "left_anti")
+      hitRows.join(ks, Seq(key), "left_anti")
     }
 
-  /** String-key twin of [[deleteByKeys]]: copy-on-write delete pruned by
-    * the string footer ranges and per-file blooms, so deleting a handful
-    * of ids from a lifetime-sized table rewrites only the files that
-    * might hold them (every other file carries by reference). Returns
-    * the committed version.
+  /** The keyed copy-on-write commit of [[merge]] and [[deleteByKeys]]: the
+    * files [[prune]] admits for `batch`'s keys are read and replaced by
+    * `rewrite(hitRows, batch)`; every other file carries by reference.
     */
-  def deleteByKeysString(spark: SparkSession, root: String, keys: DataFrame,
-      key: String): Long = {
-    val b = keys.select(col(key).cast("string").as(key))
-      .filter(col(key).isNotNull).distinct().cache()
-    try {
-      // ONE bounded job instead of two (see rewriteHits). The collected
-      // set's min/max, the agg form's and the prune below all use
-      // code-point order (StringOrder), the order of the footer stats
-      val probeRows = b.limit(BloomProbeMax + 1).collect()
-      if (probeRows.isEmpty) // empty key set: nothing to rewrite, but still
-        return commitLoop(spark, root) { parent => // a recorded commit
-          val p = parent.getOrElse(sys.error(s"$root does not exist"))
-          ("delete", p.files, p.schema)
-        }
-      val probe = if (probeRows.length > BloomProbeMax) None
-        else Some(probeRows.map(_.getString(0)))
-      val (lo, hi) = probe match {
-        case Some(ks) => (ks.min(StringOrder), ks.max(StringOrder))
-        case None =>
-          val head = b.agg(min(col(key)), max(col(key))).head()
-          (head.getString(0), head.getString(1))
-      }
-      commitLoop(spark, root) { parent =>
-        val p = parent.getOrElse(sys.error(s"$root does not exist"))
-        val (hits, kept) = p.files.partition { fe =>
-          fe.rows > 0 && ((fe.mins.get(key), fe.maxs.get(key)) match {
-            case (Some(mn), Some(mx)) => rangeOverlaps(mn, mx, lo, hi)
-            case _ => true // no stats: conservatively rewritten
-          }) && (probe match {
-            case Some(vals) => fe.blooms.get(key).forall(enc =>
-              vals.exists(v => KeyBloom.mightContain(enc, KeyBloom.stringKey(v))))
-            case None => true
-          })
-        }
-        val hitRows =
-          if (hits.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], p.schema)
-          else spark.read.schema(p.schema)
-            .parquet(hits.map(f => s"$root/${f.path}"): _*)
-        val out = hitRows.join(b, Seq(key), "left_anti")
-          .select(p.schema.fieldNames.map(col): _*)
-        ("delete", kept ++ writeData(out, root, p.bloomCols), p.schema)
-      }
-    } finally { b.unpersist(); () }
-  }
-
   private def rewriteHits(spark: SparkSession, root: String, batch: DataFrame,
       key: String, op: String)(
       rewrite: (DataFrame, DataFrame) => DataFrame): Long = {
-    require(Seq("long", "integer", "int", "short").exists(
-        batch.schema(key).dataType.typeName.startsWith),
-      s"stats-pruned $op needs an integral key column, got " +
-        batch.schema(key).dataType.typeName)
+    val kt = keyType(snapshot(spark, root).schema, key)
+    require(keyType(batch.schema, key) == kt,
+      s"$op key column $key is ${batch.schema(key).dataType.simpleString} " +
+        "in the batch but of another key type in the table")
     val b = batch.cache()
     try {
       // ONE bounded job instead of two (guide §2.4 — every avoided action
       // is a whole scheduler wave per mutation commit at cluster scale):
-      // collect up to BloomProbeMax+1 distinct keys; a targeted batch
-      // (the common mutation) is fully under the cap, so its min/max
-      // derive from the same collected set and the separate agg job
-      // existed only for the over-cap bulk case — which alone still pays
-      // it (and never bloom-prunes anyway)
-      val probeRows = b.select(col(key).cast("long").as("k"))
+      // collect up to BloomProbeMax+1 distinct keys, as text; a targeted
+      // batch (the common mutation) is fully under the cap, so its range
+      // derives from the same collected set and only the over-cap bulk
+      // case pays a native min/max aggregate (Spark orders strings by code
+      // point, the footer order) and never bloom-prunes
+      val probe = b.select(col(key).cast("string").as("k"))
         .filter(col("k").isNotNull).distinct()
-        .limit(BloomProbeMax + 1).collect()
-      if (probeRows.isEmpty)  // empty batch: nothing to rewrite, but still
+        .limit(BloomProbeMax + 1).collect().map(_.getString(0))
+      if (probe.isEmpty)  // empty batch: nothing to rewrite, but still
         return commitLoop(spark, root) { parent =>  // a recorded commit
           val p = parent.getOrElse(sys.error(s"$root does not exist"))
           (op, p.files, p.schema)
         }
-      val probe = if (probeRows.length > BloomProbeMax) None
-        else Some(probeRows.map(_.getLong(0)))
-      val (lo, hi) = probe match {
-        case Some(ks) => (ks.min, ks.max)
-        case None =>
-          val Row(l: Long, h: Long) = b
-            .agg(min(col(key).cast("long")), max(col(key).cast("long"))).head()
-          (l, h)
-      }
+      val (lo, hi, inHand) =
+        if (probe.length <= BloomProbeMax)
+          (probe.min(kt.order), probe.max(kt.order), Some(probe.toSeq))
+        else {
+          val r = b.agg(min(col(key)), max(col(key))).head()
+          (r.get(0).toString, r.get(1).toString, None)
+        }
       commitLoop(spark, root) { parent =>
         val p = parent.getOrElse(sys.error(s"$root does not exist"))
-        val (hits, kept) = p.files.partition(fe =>
-          mightHit(fe, key, lo, hi) && bloomMightHit(fe, key, probe))
-        val hitRows =
-          if (hits.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], p.schema)
-          else spark.read.schema(p.schema)
-            .parquet(hits.map(f => s"$root/${f.path}"): _*)
-        val out = rewrite(hitRows, b).select(p.schema.fieldNames.map(col): _*)
+        val hits = prune(p, key, lo, hi, inHand)
+        val hit = hits.map(_.path).toSet
+        val out = rewrite(readFiles(spark, root, p.schema, hits.map(_.path)), b)
+          .select(p.schema.fieldNames.map(col): _*)
         // a lost race re-runs this closure against the new parent: the
         // rewritten files of the stale attempt stay unreferenced (vacuum
         // sweeps them), so retries are safe if wasteful
-        (op, kept ++ writeData(out, root, p.bloomCols), p.schema)
+        (op, p.files.filterNot(fe => hit(fe.path)) ++
+          writeData(out, root, p.bloomCols), p.schema)
       }
     } finally { b.unpersist(); () }
   }
@@ -1194,10 +1129,7 @@ object VersionedTable {
     val toPaths = sTo.files.map(_.path).toSet
     val left = (fromPaths -- toPaths).toSeq.sorted   // rows possibly removed
     val entered = (toPaths -- fromPaths).toSeq.sorted // rows possibly added
-    def readFiles(paths: Seq[String]): DataFrame =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sTo.schema)
-      else spark.read.schema(sTo.schema).parquet(paths.map(p => s"$root/$p"): _*)
+    def readAt(paths: Seq[String]) = readFiles(spark, root, sTo.schema, paths)
     val cols = sTo.schema.fieldNames.toSeq
     val rowType = org.apache.spark.sql.types.StructType(sTo.schema.fields)
     // one-sided fast paths: an append-only span has no left files (every
@@ -1206,16 +1138,16 @@ object VersionedTable {
     // is the common case (daily appends), and the join it skips is the
     // only shuffle in the feed.
     if (left.isEmpty)
-      return readFiles(entered).select(col(key).as("key"),
+      return readAt(entered).select(col(key).as("key"),
         lit("added").as("change"), lit(null).cast(rowType).as("old"),
         struct(cols.map(col): _*).as("new"))
     if (entered.isEmpty)
-      return readFiles(left).select(col(key).as("key"),
+      return readAt(left).select(col(key).as("key"),
         lit("removed").as("change"), struct(cols.map(col): _*).as("old"),
         lit(null).cast(rowType).as("new"))
-    val o = readFiles(left)
+    val o = readAt(left)
       .select(col(key).as("key"), struct(cols.map(col): _*).as("old"))
-    val n = readFiles(entered)
+    val n = readAt(entered)
       .select(col(key).as("key"), struct(cols.map(col): _*).as("new"))
     o.join(n, Seq("key"), "full_outer")
       .withColumn("change",

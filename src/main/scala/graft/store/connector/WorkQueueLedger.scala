@@ -286,7 +286,9 @@ object WorkQueueLedger {
     *     so the digest is the piece that makes arbitrary-key-shape waves
     *     wave-bounded instead of done-set-bounded.
     *  3. BLOOM/RANGE PER SUSPECT — the surviving suspects prune files by
-    *     footer range and per-file bloom, and only those files are read.
+    *     [[VersionedTable.prune]], the store's one keyed-file rule: a
+    *     file is read only when one suspect is both in its footer range
+    *     and in its bloom.
     *
     * The surviving ids stay in hand. A [[Spread]] wave runs the
     * distributed sequence: one min/max aggregate ranges the done files
@@ -316,15 +318,15 @@ object WorkQueueLedger {
     if (keyed.isEmpty ||
         VersionedTable.latestVersion(spark, doneRoot).isEmpty) return ids
     val s = VersionedTable.snapshot(spark, doneRoot)
-    val ranged = overlapping(s, keyed.min(VersionedTable.StringOrder),
-      keyed.max(VersionedTable.StringOrder))
-    if (ranged.isEmpty) return ids
+    val (lo, hi) =
+      (keyed.min(VersionedTable.StringOrder), keyed.max(VersionedTable.StringOrder))
+    if (VersionedTable.prune(s, "itemID", lo, hi).isEmpty) return ids
     val digest = digestFor(spark, doneRoot, s)
     val suspects = keyed.filter(digest.mightContainString)
     if (suspects.isEmpty) return ids
-    val files = suspectFiles(ranged, suspects)
+    val files = VersionedTable.prune(s, "itemID", lo, hi, Some(suspects.toSeq))
     if (files.isEmpty) return ids
-    val done = readDone(spark, doneRoot, files)
+    val done = readDone(spark, doneRoot, files.map(_.path))
       .filter(col("itemID").isin(suspects: _*))
       .collect().map(_.getString(0)).toSet
     ids.filterNot(done)
@@ -337,8 +339,8 @@ object WorkQueueLedger {
       return Spread(wantIds)
     val mm = wantIds.agg(min(col("itemID")), max(col("itemID"))).head()
     if (mm.isNullAt(0)) return Spread(wantIds) // all-null wave
-    val ranged = overlapping(VersionedTable.snapshot(spark, doneRoot),
-      mm.getString(0), mm.getString(1))
+    val ranged = VersionedTable.prune(VersionedTable.snapshot(spark, doneRoot),
+      "itemID", mm.getString(0), mm.getString(1))
     if (ranged.isEmpty) return Spread(wantIds)
     val probe = wantIds.select("itemID").distinct()
       .limit(VersionedTable.BloomProbeMax + 1).collect().map(_.getString(0))
@@ -346,34 +348,6 @@ object WorkQueueLedger {
       InHand(notDone(spark, doneRoot, probe))
     else Spread(wantIds.join(readDone(spark, doneRoot, ranged.map(_.path)),
       Seq("itemID"), "left_anti"))
-  }
-
-  /** The done files of `s` whose itemID footer range can hold a value in
-    * [lo, hi] (files without stats are conservatively kept).
-    */
-  private def overlapping(s: VersionedTable.Snapshot, lo: String,
-      hi: String): Seq[VersionedTable.FileEntry] =
-    s.files.filter { fe =>
-      fe.rows > 0 && ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) => VersionedTable.rangeOverlaps(mn, mx, lo, hi)
-        case _ => true // no stats: conservatively kept
-      })
-    }
-
-  /** The files of `ranged` whose footer range or per-file bloom admits
-    * at least one of `ids` (a driver-small suspect set).
-    */
-  private def suspectFiles(ranged: Seq[VersionedTable.FileEntry],
-      ids: Array[String]): Seq[String] = {
-    val hs = ids.filter(_ != null).map(graft.store.KeyBloom.stringKey)
-    ranged.filter { fe =>
-      ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) =>
-          ids.exists(id => VersionedTable.rangeOverlaps(mn, mx, id, id))
-        case _ => true
-      }) && fe.blooms.get("itemID").forall(enc =>
-        hs.exists(graft.store.KeyBloom.mightContain(enc, _)))
-    }.map(_.path)
   }
 
   // --------------------------------------------------------- done digest
@@ -486,7 +460,7 @@ object WorkQueueLedger {
     */
   def removeDone(spark: SparkSession, doneRoot: String,
       ids: DataFrame): Long =
-    VersionedTable.deleteByKeysString(spark, doneRoot, ids, "itemID")
+    VersionedTable.deleteByKeys(spark, doneRoot, ids, "itemID")
 
   // ----------------------------------------------------------- takeover
 

@@ -801,6 +801,24 @@ class MainSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq === Seq((2L, "b")))
   }
 
+  test("vtable lookup reads --value in the key column's type: a done-set " +
+      "id looks up by its string key") {
+    import graft.store.connector.WorkQueueLedger
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-lk").toString
+    val done = s"$dir/done"
+    WorkQueueLedger.markDone(spark, done,
+      WorkQueueLedger.InHand(Array("D1", "D2", "D3")), "w-0")
+    Main.run(spark, "vtable", done,
+      Map("op" -> "lookup", "key" -> "itemID", "value" -> "D2",
+        "output" -> s"$dir/hit"))
+    assert(spark.read.parquet(s"$dir/hit").as[String].collect().toSeq ===
+      Seq("D2"))
+    Main.run(spark, "vtable", done,
+      Map("op" -> "lookup", "key" -> "itemID", "value" -> "D9",
+        "output" -> s"$dir/miss"))
+    assert(spark.read.parquet(s"$dir/miss").count() === 0L)
+  }
+
   test("kcore, ewma, transitions, overlap, and pps verbs") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cli2").toString
     // kcore: triangle + pendant chain, duplicated baskets for support 2

@@ -86,20 +86,21 @@ class LayoutSpec extends SparkSpec {
     }
     assert(zJumps > 0)
     // the native codegen'd expression computes the IDENTICAL index —
-    // through the Column API and through SQL (extension-registered)
+    // through the Column API and through SQL (registered by the
+    // GraftExtensions every main installs)
     val nativeIdx = grid.select(
         graft.functions.HilbertIndex.hilbertIndex($"a", $"b", bits).as("h"),
         $"a", $"b")
       .as[(Long, Long, Long)].collect().sortBy(r => (r._2, r._3))
     assert(nativeIdx.toSeq === idx.sortBy(r => (r._2, r._3)).toSeq)
-    graft.functions.CosineSimilarity.register(spark) // ensure registry path works
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_index", graft.functions.HilbertIndex.build, "scala_udf")
-    grid.createOrReplaceTempView("hilbert_grid")
-    val sqlIdx = spark.sql(
-      s"SELECT a, b, hilbert_index(a, b, $bits) AS h FROM hilbert_grid")
-      .as[(Long, Long, Long)].collect()
-      .map { case (a2, b2, h) => (h, a2, b2) }.sortBy(r => (r._2, r._3))
+    val sqlIdx = graft.SparkSpec.withEntrySession { extended =>
+      extended.createDataFrame(
+          (0 until n).flatMap(x => (0 until n).map(y => (x.toLong, y.toLong))))
+        .toDF("a", "b").createOrReplaceTempView("hilbert_grid")
+      extended.sql(
+        s"SELECT a, b, hilbert_index(a, b, $bits) AS h FROM hilbert_grid")
+        .as[(Long, Long, Long)].collect()
+    }.map { case (a2, b2, h) => (h, a2, b2) }.sortBy(r => (r._2, r._3))
     assert(sqlIdx.toSeq === idx.sortBy(r => (r._2, r._3)).toSeq)
   }
 }

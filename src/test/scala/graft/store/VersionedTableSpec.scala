@@ -107,7 +107,7 @@ class VersionedTableSpec extends SparkSpec {
     val lowFiles = VersionedTable.snapshot(spark, root).files
       .filter(_.maxs.get("k").exists(_ < "z")).map(_.path).toSet
 
-    VersionedTable.deleteByKeysString(spark, root,
+    VersionedTable.deleteByKeys(spark, root,
       Seq("z-000", "z-001", "z-002", "missing").toDF("k"), "k")
     val after = VersionedTable.read(spark, root)
     assert(after.count() === 197)
@@ -116,7 +116,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(lowFiles.subsetOf(
       VersionedTable.snapshot(spark, root).files.map(_.path).toSet))
     // idempotent: a second run finds no stats hit, rows unchanged
-    VersionedTable.deleteByKeysString(spark, root,
+    VersionedTable.deleteByKeys(spark, root,
       Seq("z-000").toDF("k"), "k")
     assert(VersionedTable.read(spark, root).count() === 197)
   }
@@ -310,8 +310,8 @@ class VersionedTableSpec extends SparkSpec {
   test("string point lookups find keys whose UTF-16 and code-point orders differ") {
     val root = mixedOrderTable()
     Seq(fw, emoji).foreach { k =>
-      assert(VersionedTable.candidateFilesString(spark, root, "k", k).size === 1, k)
-      assert(VersionedTable.pointLookupString(spark, root, "k", k)
+      assert(VersionedTable.candidateFiles(spark, root, "k", k).size === 1, k)
+      assert(VersionedTable.pointLookup(spark, root, "k", k)
         .select($"k").as[String].collect().toSeq === Seq(k), k)
     }
   }
@@ -320,7 +320,7 @@ class VersionedTableSpec extends SparkSpec {
       "differ, under and over the bloom-probe cap") {
     // under the cap: lo/hi come from the collected keys
     val under = mixedOrderTable()
-    VersionedTable.deleteByKeysString(spark, under, Seq(emoji).toDF("k"), "k")
+    VersionedTable.deleteByKeys(spark, under, Seq(emoji).toDF("k"), "k")
     assert(VersionedTable.read(spark, under).select($"k").as[String]
       .collect().toSeq === Seq(fw))
     // over the cap: lo/hi come from a Spark min/max aggregate
@@ -328,9 +328,83 @@ class VersionedTableSpec extends SparkSpec {
     val keys = spark.range(0, VersionedTable.BloomProbeMax + 1)
       .select(format_string("k%05d", $"id").as("k"))
       .union(Seq(fw).toDF("k"))
-    VersionedTable.deleteByKeysString(spark, over, keys, "k")
+    VersionedTable.deleteByKeys(spark, over, keys, "k")
     assert(VersionedTable.read(spark, over).select($"k").as[String]
       .collect().toSeq === Seq(emoji))
+  }
+
+  /** A bloom-indexed table of 400 keys over four files with overlapping
+    * key ranges, keyed by `k` as the id itself or as its text "k%05d".
+    */
+  private def keyedTable(asString: Boolean): String = {
+    def keyed(from: Long, to: Long) = spark.range(from, to).repartition(2)
+      .select((if (asString) format_string("k%05d", $"id") else $"id").as("k"),
+        ($"id" * 10).as("v"))
+    val root = tmp()
+    VersionedTable.create(spark, root, keyed(0, 200), bloomKeys = Seq("k"))
+    VersionedTable.append(spark, root, keyed(200, 400))
+    root
+  }
+
+  private def keysOf(asString: Boolean, ids: org.apache.spark.sql.Dataset[_]) =
+    ids.select((if (asString) format_string("k%05d", $"id") else $"id").as("k"))
+
+  test("one key path: for integral and string keys, under and over the " +
+      "bloom-probe cap, deleteByKeys equals the anti-join and candidateFiles " +
+      "keeps every file holding the key") {
+    val cap = VersionedTable.BloomProbeMax
+    for (asString <- Seq(false, true); overCap <- Seq(false, true)) {
+      val root = keyedTable(asString)
+      val snap = VersionedTable.snapshot(spark, root)
+      val holders = VersionedTable.read(spark, root)
+        .select($"k".cast("string"), input_file_name()).as[(String, String)]
+        .collect().groupBy(_._1).map { case (k, fs) =>
+          k -> fs.map(f => f._2.substring(f._2.indexOf("/data/") + 1)).toSet }
+      assert(snap.files.size >= 4 && holders.size === 400, "fixture")
+      for ((k, files) <- holders) {
+        val value: Any = if (asString) k else k.toLong
+        assert(files.subsetOf(
+          VersionedTable.candidateFiles(spark, root, "k", value).toSet), k)
+      }
+      // every ninth id, plus absent ids: 65 keys, or cap + 45 over the cap
+      val ids = spark.range(0, if (overCap) cap + 400L else 420L)
+        .filter($"id" % 9 === 0 || $"id" >= 400)
+      val keys = keysOf(asString, ids)
+      assert((keys.count() > cap) === overCap, "fixture")
+      val expected = VersionedTable.read(spark, root)
+        .join(keys, Seq("k"), "left_anti").orderBy("k").collect().toSeq
+      VersionedTable.deleteByKeys(spark, root, keys, "k")
+      assert(VersionedTable.read(spark, root).orderBy("k").collect().toSeq ===
+        expected, s"asString=$asString overCap=$overCap")
+    }
+  }
+
+  test("merge on a string key equals the relational upsert") {
+    val root = keyedTable(asString = true)
+    val upd = keysOf(asString = true, spark.range(390, 410))
+      .withColumn("v", lit(-1L))
+    val expected = VersionedTable.read(spark, root)
+      .join(upd.select("k"), Seq("k"), "left_anti").unionByName(upd)
+      .orderBy("k").collect().toSeq
+    VersionedTable.merge(spark, root, upd, "k")
+    assert(VersionedTable.read(spark, root).orderBy("k").collect().toSeq ===
+      expected)
+  }
+
+  test("a key column of another type, or a value of the wrong type, is " +
+      "refused with the column named") {
+    val root = tmp()
+    VersionedTable.create(spark, root,
+      Seq((1L, 0.5), (2L, 1.5)).toDF("k", "score"))
+    def refused(f: => Any) = intercept[IllegalArgumentException](f).getMessage
+    assert(refused(VersionedTable.candidateFiles(spark, root, "score", 1.5))
+      .contains("score"))
+    assert(refused(VersionedTable.deleteByKeys(spark, root,
+      Seq(1.5).toDF("score"), "score")).contains("score"))
+    assert(refused(VersionedTable.pointLookup(spark, root, "k", "2"))
+      .contains("key column k"))
+    assert(refused(VersionedTable.deleteByKeys(spark, root,
+      Seq("2").toDF("k"), "k")).contains("key column k"))
   }
 
   test("deleteStringEquals rewrites a mixed file whose range holds the value " +
@@ -356,7 +430,7 @@ class VersionedTableSpec extends SparkSpec {
     try assert(groups.getRowGroups.size === 2, "fixture: two row groups")
     finally groups.close()
     assert((file.mins("k"), file.maxs("k")) === ((fw, emoji)))
-    assert(VersionedTable.pointLookupString(spark, root, "k", emoji)
+    assert(VersionedTable.pointLookup(spark, root, "k", emoji)
       .count() === 1)
   }
 

@@ -466,8 +466,8 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // the per-file bloom admits every done id and refuses a fresh one
     // inside the file's range
     assert(keys.forall(k =>
-      VersionedTable.candidateFilesString(spark, local, "itemID", k).nonEmpty))
-    assert(VersionedTable.candidateFilesString(spark, local, "itemID",
+      VersionedTable.candidateFiles(spark, local, "itemID", k).nonEmpty))
+    assert(VersionedTable.candidateFiles(spark, local, "itemID",
       "bl-00150x").isEmpty)
     // digest path (built on this probe): re-offers drop, a fresh id passes
     val want = wave("bl-00005", "bl-00100", "bl-00150x", "bl-00151y")

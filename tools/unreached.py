@@ -38,23 +38,13 @@ KEEP = {
     "JdkCodec": "codec seam: specs substitute a fake codec",
     "Multimodal.MediaRow": "codec seam: specs substitute a fake codec",
     "Similarity.assignmentObjective": "the clustering specs' metric",
-    "VersionedTable.pointLookupString":
-        "only direct check of the string footer and bloom pruning that "
-        "deleteByKeysString relies on",
     "SparkEntry.entry": "the specs drive the flagship query through it",
     "StreamingRunner.itemStream":
         "the specs drive the dispatcher through a store stream",
     "Mutations.resetNestedTask":
         "the only form of the reference's M1 updateNestedItemState",
     "Dedup.cosine": "fold the native cosine_sim spec checks against",
-    "CosineSimilarity.register":
-        "registers cosine_sim on a session built without GraftExtensions, "
-        "as the specs' shared session is",
     "CountMin.merge": "the sketch's mergeability, pinned by CountMinSpec",
-    "Formats.write": "format layer with no caller left but FormatsSpec; "
-        "wire it to a verb or delete it with its spec",
-    "Formats.read": "format layer with no caller left but FormatsSpec; "
-        "wire it to a verb or delete it with its spec",
 }
 
 DECL = re.compile(
