@@ -255,12 +255,14 @@ object Graph {
       .select("src", "dst")
 
   /** Connected components of an undirected (src, dst) edge list — the
-    * public graph form of the star-contraction kernel the dedup clustering
-    * runs ([[graft.dedup.Dedup.connectedComponents]]: alternating
-    * large-star/small-star, O(log n) rounds, exact post-verification
-    * against the input edges). Vertices are the edge endpoints; returns
-    * one (node, component) row per vertex with `component` = min node id
-    * in its component.
+    * public graph form of the kernel the dedup clustering runs
+    * ([[graft.dedup.Dedup.connectedComponents]]): a graph of at most
+    * 10,000 canonical edges is labelled on the driver by union-find after
+    * one bounded collect; a bigger one runs alternating
+    * large-star/small-star contraction in O(log n) rounds. Both forms
+    * verify the labels exactly against the input edges. Vertices are the
+    * edge endpoints; returns one (node, component) row per vertex with
+    * `component` = min node id in its component.
     */
   def components(edges: DataFrame): DataFrame = {
     val verts = edges.select(col("src").cast("long").as("id"))

@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.text.TextAnalysis
 
@@ -1251,44 +1252,115 @@ object Dedup {
       nearDupSurvivors(rest, idCol, textCol, threshold, bands, rowsPerBand))
   }
 
-  /** Connected components by alternating large-star/small-star contraction
-    * (the MapReduce CC algorithm of Kiveris et al., SoCC'14 — public
-    * knowledge): each round is two join+groupBy steps and the edge set
-    * converges to a star forest (every vertex attached directly to its
-    * component minimum) in O(log n) rounds. The min-label propagation this
-    * replaces needed O(graph-diameter) rounds and died on chain-shaped pair
-    * graphs (A≈B≈C≈… tail-perturbed document chains) — a 1000-vertex chain
-    * now converges in ~10 rounds (spec-asserted).
+  /** Largest pair graph labelled on the driver: 10,000 canonical edges,
+    * about 160 KB, the ledger's in-hand wave size.
+    */
+  private[graft] val InHandEdges = 10000
+
+  /** Star rounds before the exact check; a 1000-vertex chain takes ~10. */
+  private val StarRounds = 25
+
+  /** Connected components of a pair graph. Like the ledger's
+    * [[graft.store.connector.WorkQueueLedger.takeWave]], it takes the
+    * canonical edge list (u < v, self-loops dropped, distinct) with ONE
+    * bounded collect of at most `InHandEdges` + 1 rows and picks a form:
     *
-    *  - large-star: every vertex points its strictly LARGER neighbors at
-    *    the minimum of its neighborhood (or itself);
-    *  - small-star: every vertex and its smaller neighbors contract onto
-    *    their collective minimum.
+    *  - in hand (at most `InHandEdges` edges): union-find on the driver,
+    *    each union keeping the smaller root, so a root is its component's
+    *    minimum; the labels join `vertices` as a local relation. A graph
+    *    of a few hundred edges costs the collect, not a job per star step.
+    *  - star rounds (over the cap): alternating large-star/small-star
+    *    contraction (the MapReduce CC algorithm of Kiveris et al.,
+    *    SoCC'14 — public knowledge) reaches a star forest (every vertex
+    *    attached to its component minimum) in O(log n) rounds, at most
+    *    `StarRounds`, so chain-shaped pair graphs (A≈B≈C≈… tail-perturbed
+    *    documents) need no diameter-many rounds.
+    *    - large-star: every vertex points its strictly LARGER neighbors at
+    *      the minimum of its neighborhood (or itself);
+    *    - small-star: every vertex and its smaller neighbors contract onto
+    *      their collective minimum.
+    *    Loop control is a cheap (count, xor-of-edge-hashes) signature per
+    *    round; lineage is cut per round with `localCheckpoint`.
     *
-    * Loop control uses a cheap (count, xor-of-edge-hashes) signature per
-    * round; the final labeling is then verified EXACTLY against the input
-    * edges (every input edge's endpoints must share a label), so neither a
-    * signature collision nor a maxIters overrun can ever return silently
-    * wrong components. Lineage is cut per round with `localCheckpoint` and
-    * superseded rounds are unpersisted.
+    * Both forms verify the labeling EXACTLY against the input edges —
+    * every edge's endpoints share a label and label(x) ≤ x — on the driver
+    * in hand, by a distributed join over the cap, so neither a signature
+    * collision nor a round overrun can return silently wrong components.
     *
     * Returns (`id`, `component`) where `component` = min vertex id in the
     * component. Vertices = every id in `vertices` (singletons keep their
     * own id), so the output is a total doc → canonical-survivor map.
     */
-  def connectedComponents(edges: DataFrame, vertices: DataFrame,
-      maxIters: Int = 25): DataFrame = {
+  def connectedComponents(edges: DataFrame, vertices: DataFrame): DataFrame = {
     // canonical undirected edge list (u < v), self-loops dropped
     val input = edges
       .select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
-      // LAZY cut: signature() right below is the materializing action, so
-      // the round pays ONE job (agg) instead of two (eager checkpoint +
-      // agg) — at 1000 executors each avoided action is a scheduler wave
+      // LAZY cut: the bounded collect below is the materializing action,
+      // and over the cap the star rounds read the same blocks instead of
+      // recomputing the pair graph
       .transform(graft.plans.Lineage.cutLazy)
+    val roundLog = graft.plans.RoundLog.timer(edges.sparkSession, "cc")
+    val probe = input.limit(InHandEdges + 1).collect()
+    if (probe.length > InHandEdges) starComponents(input, vertices, roundLog)
+    else {
+      graft.plans.Lineage.free(input)
+      val labels = inHandLabels(probe.map(r => (r.getLong(0), r.getLong(1))))
+      roundLog(0, s"form=in_hand edges=${probe.length}")
+      val rows = labels.iterator.map { case (x, c) => Row(x, c) }.toSeq
+      labelVertices(vertices, edges.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), LabelSchema))
+    }
+  }
 
+  private val LabelSchema = StructType(Seq(
+    StructField("u", LongType, nullable = false),
+    StructField("mn", LongType, nullable = false)))
+
+  /** Each endpoint of the canonical edges `es` mapped to its component
+    * minimum, by union-find on the driver.
+    */
+  private def inHandLabels(es: Array[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElse(root, root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    es.foreach { case (u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    val label = es.iterator.flatMap { case (u, v) => Iterator(u, v) }
+      .map(x => x -> find(x)).toMap
+    // the star rounds' exact check, on the driver over the same edges
+    es.foreach { case (u, v) =>
+      require(label(u) == label(v) && label(u) <= u,
+        s"connectedComponents in-hand labeling inconsistent on edge ($u, $v)")
+    }
+    label
+  }
+
+  /** `vertices` labelled by `nbrMin` (`u`, `mn`): the least of a vertex's
+    * own id and its `mn`; a vertex with no row keeps its own id.
+    */
+  private def labelVertices(vertices: DataFrame, nbrMin: DataFrame): DataFrame = {
+    val ids = vertices.select(col("id"))
+    ids.join(nbrMin, ids("id").cast("long") === nbrMin("u"), "left")
+      .select(ids("id"),
+        least(col("id").cast("long"), coalesce(col("mn"), col("id").cast("long")))
+          .as("component"))
+  }
+
+  /** The star-round form of [[connectedComponents]] over the canonical,
+    * lazily cut edge list `input`.
+    */
+  private def starComponents(input: DataFrame, vertices: DataFrame,
+      roundLog: (Int, String) => Unit): DataFrame = {
     def bidir(d: DataFrame): DataFrame =
       d.unionByName(d.select(col("v").as("u"), col("u").as("v")))
 
@@ -1329,8 +1401,7 @@ object Dedup {
     var sig = signature(e)
     var converged = false
     var iter = 0
-    val roundLog = graft.plans.RoundLog.timer(edges.sparkSession, "cc")
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < StarRounds) {
       // lazy cut + signature = one action per round (see `input` above)
       val next = smallStar(largeStar(e)).transform(graft.plans.Lineage.cutLazy)
       val nextSig = signature(next)
@@ -1346,13 +1417,7 @@ object Dedup {
 
     // at the star-forest fixpoint every vertex's min neighbor IS its
     // component minimum (the center's own id for the center itself)
-    val nbrMin = bidir(e).groupBy("u").agg(min("v").as("mn"))
-    val ids = vertices.select(col("id"))
-    val labels = ids
-      .join(nbrMin, ids("id").cast("long") === nbrMin("u"), "left")
-      .select(ids("id"),
-        least(col("id").cast("long"), coalesce(col("mn"), col("id").cast("long")))
-          .as("component"))
+    val labels = labelVertices(vertices, bidir(e).groupBy("u").agg(min("v").as("mn")))
 
     // a silent wrong answer is worse than an error: verify the labeling
     // exactly against the INPUT edges — label-consistent endpoints on every
@@ -1363,8 +1428,8 @@ object Dedup {
       .join(lb, input("v") === lb("rid"))
       .filter(col("ca") =!= col("cb")).limit(1).count()
     require(bad == 0,
-      s"connectedComponents labeling inconsistent after $maxIters rounds — " +
-        "raise maxIters (star contraction did not reach its fixpoint)")
+      s"connectedComponents labeling inconsistent after $iter star rounds " +
+        s"(at most $StarRounds): star contraction did not reach its fixpoint")
     input.unpersist()
     labels
   }

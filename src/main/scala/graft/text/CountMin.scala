@@ -7,8 +7,8 @@ import graft.Tables
 
 /** Count-Min sketch (Cormode & Muthukrishnan, 2005 — public technique) as
   * a persistable frequency-summary TABLE: `d` hash rows × `w` counters,
-  * built with one groupBy, merged across shards/days by cell-wise SUM
-  * (fully mergeable, like [[graft.analytics.Hll]]'s register tables), and
+  * built with one groupBy, mergeable across shards/days by a cell-wise SUM
+  * over (r, bucket) (like [[graft.analytics.Hll]]'s register tables), and
   * probed for any item's frequency upper bound with `d` lookups.
   *
   * This completes the mergeable-sketch family the engine ships for 100 TB
@@ -45,10 +45,6 @@ object CountMin {
         struct(lit(r).as("r"), col(s"b$r").as("bucket"))): _*)).as("c"))
       .groupBy(col("c.r").as("r"), col("c.bucket").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Cell-wise merge of sketch tables (same depth/width). */
-  def merge(sketches: DataFrame): DataFrame =
-    sketches.groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
 
   /** Frequency upper bounds for `probes` (column `item`): min over the d
     * row estimates.

@@ -128,6 +128,19 @@ class GraphSpec extends SparkSpec {
     val want = parent.keys.map(x => x -> find(x)).toMap
     val got = Graph.components(edgeDf(es)).as[(Long, Long)].collect().toMap
     assert(got === want)
+    // a random graph above the in-hand cap goes through the star rounds
+    val big = Seq.fill(graft.dedup.Dedup.InHandEdges + 2000)(
+        (rnd.nextInt(30000).toLong, rnd.nextInt(30000).toLong))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+    assert(big.size > graft.dedup.Dedup.InHandEdges)
+    parent.clear()
+    big.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val wantBig = parent.keys.map(x => x -> find(x)).toMap
+    assert(Graph.components(edgeDf(big)).as[(Long, Long)].collect().toMap === wantBig)
   }
 
   test("kCore peels cascades: pendant chain unravels, cycle survives intact") {

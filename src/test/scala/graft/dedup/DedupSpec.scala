@@ -509,6 +509,61 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect()
     assert(comps.length === 1000)
     comps.foreach { case (id, c) => assert(c === 0L, s"vertex $id -> $c") }
+    // one edge past the in-hand cap: the same chain shape must close
+    // through the star rounds
+    val n = Dedup.InHandEdges + 1L
+    val long = Dedup.connectedComponents(
+        spark.range(0, n).select($"id".as("doc_a"), ($"id" + 1).as("doc_b")),
+        spark.range(0, n + 1).select($"id"))
+      .as[(Long, Long)].collect()
+    assert(long.length === n + 1)
+    long.foreach { case (id, c) => assert(c === 0L, s"vertex $id -> $c") }
+  }
+
+  test("a pair graph within the cap is labelled in hand in at most 4 Spark jobs") {
+    // duplicate, reversed and self-loop pairs; vertex 99 is in no edge
+    val pairs = Seq((7L, 3L), (3L, 7L), (3L, 7L), (5L, 5L), (9L, 7L),
+      (12L, 11L), (11L, 10L), (20L, 20L), (2L, 9L))
+    val vertices = (Seq(2L, 3L, 5L, 7L, 9L, 10L, 11L, 12L, 20L, 99L)).toDF("id")
+    // driver oracle: smallest vertex reachable over the pairs
+    def oracle(x: Long): Long = {
+      var seen = Set(x)
+      var frontier = Set(x)
+      while (frontier.nonEmpty) {
+        frontier = pairs.flatMap { case (a, b) =>
+          if (frontier(a)) Seq(b) else if (frontier(b)) Seq(a) else Nil
+        }.toSet -- seen
+        seen ++= frontier
+      }
+      seen.min
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "cc-budget"))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val got = try {
+      sc.setJobGroup("cc-budget", "one in-hand connectedComponents call")
+      try Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b"), vertices)
+        .as[(Long, Long)].collect().toMap
+      finally sc.clearJobGroup()
+    } finally {
+      // listener delivery is async: wait until the count is stable
+      var (prev, spins) = (-1, 0)
+      while (jobs.get != prev && spins < 50) {
+        prev = jobs.get; Thread.sleep(100); spins += 1
+      }
+      sc.removeSparkListener(listener)
+    }
+    assert(got === vertices.as[Long].collect().map(x => x -> oracle(x)).toMap)
+    assert(got(99L) === 99L && got(5L) === 5L && got(20L) === 20L)
+    assert(jobs.get >= 1 && jobs.get <= 4,
+      s"${jobs.get} Spark jobs for the call and its collect")
   }
 
   test("incremental dedupAgainst: corpus matches, batch-internal clusters, no corpus re-pairing") {

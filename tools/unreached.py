@@ -44,7 +44,6 @@ KEEP = {
     "Mutations.resetNestedTask":
         "the only form of the reference's M1 updateNestedItemState",
     "Dedup.cosine": "fold the native cosine_sim spec checks against",
-    "CountMin.merge": "the sketch's mergeability, pinned by CountMinSpec",
 }
 
 DECL = re.compile(
